@@ -20,6 +20,7 @@ table-meta row and scalar counts are ever collected.
 from __future__ import annotations
 
 import json
+import logging
 import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -27,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .schema import PART_ID
 
 META_KEY = "__table_meta__"
+
+log = logging.getLogger(__name__)
 
 _MANIFEST_SCHEMA = (
     "part_id long, run_id string, column string, n_rows long, "
@@ -269,14 +272,17 @@ def _default_fs_is_local(spark: SparkSession | None) -> bool:
     """True when scheme-less paths resolve to the driver's local disk.
     On a cluster with fs.defaultFS=hdfs://... a bare '/warehouse/t'
     path is HDFS — the driver-side fast path must NOT shadow it with a
-    same-named local directory."""
+    same-named local directory.  Fails closed: when the Hadoop conf is
+    unreachable (e.g. a Spark Connect session) the default FS is
+    unknown, so it is NOT assumed local and callers take the Spark
+    read path."""
     if spark is None:
         return True
     try:
         fs = (spark.sparkContext._jsc.hadoopConfiguration()
               .get("fs.defaultFS", "file:///"))
     except Exception:
-        return True  # no JVM conf reachable: local-mode assumption
+        return False
     return fs.startswith("file:")
 
 
@@ -303,16 +309,21 @@ def _meta_rows(spark: SparkSession, manifest_path: str) -> list[tuple]:
     the ``column`` statistics, so only META-bearing groups are read."""
     local = _local_dir(manifest_path, spark)
     if local is not None:
-        try:
-            import pyarrow.dataset as pads
+        import pyarrow as pa
+        import pyarrow.dataset as pads
 
+        try:
             ds = pads.dataset(local, format="parquet")
             t = ds.to_table(columns=["run_id", "table_meta"],
                             filter=pads.field("column") == META_KEY)
             return list(zip(t.column("run_id").to_pylist(),
                             t.column("table_meta").to_pylist()))
-        except Exception:
-            pass  # unreadable locally (permissions, odd layout): use Spark
+        except (OSError, pa.ArrowInvalid) as e:
+            # unreadable locally (permissions, a stray non-parquet file
+            # Spark's listing skips): Spark reads what it lists
+            log.warning("manifest META rows at %s unreadable via pyarrow "
+                        "(%s: %s); falling back to a Spark read",
+                        manifest_path, type(e).__name__, e)
     rows = (
         spark.read.parquet(manifest_path)
         .filter(F.col("column") == META_KEY)

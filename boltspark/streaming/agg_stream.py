@@ -62,7 +62,7 @@ def sum_stream(
                       batch_df.select("run_id").distinct().collect())
         for run in runs:
             blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, column, predicates,
+                spark, blocks_path, manifest_path, [column], predicates,
                 run_ids=[run])
             partials = (aggmod._sum_dec_partials(blocks, predicates) if dec
                         else aggmod._sum_partials(blocks, predicates))
@@ -75,13 +75,9 @@ def sum_stream(
 
 def _decimal_scale(spark, manifest_path: str, column: str) -> int | None:
     """Scale of ``column`` when it is decimal, else None."""
-    import json as jsonmod
-
     from pyspark.sql import types as T
 
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    t = {f.name: f for f in schema.fields}[column].dataType
+    t = aggmod._fields(manifestmod.table_meta(spark, manifest_path))[column]
     return t.scale if isinstance(t, T.DecimalType) else None
 
 
@@ -117,21 +113,16 @@ def value_counts_stream(
     """readStream(manifest) -> per-run (part_id, value, cnt) partial
     histograms -> parquet sink keyed by run.  Read the running GROUP BY
     with ``read_value_counts``.  Returns the StreamingQuery."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
     predicates = aggmod._normalize_predicates(predicate)
     meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    vtype = {f.name: f for f in schema.fields}[column].dataType
+    vtype = aggmod._fields(meta)[column]
 
     def handle(batch_df, epoch_id: int) -> None:
         runs = sorted(r["run_id"] for r in
                       batch_df.select("run_id").distinct().collect())
         for run in runs:
             blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, column, predicates,
+                spark, blocks_path, manifest_path, [column], predicates,
                 run_ids=[run])
             partials = aggmod._vc_partials(spark, blocks, predicates, vtype)
             partials.write.mode("overwrite").parquet(
@@ -184,7 +175,7 @@ def distinct_stream(
                       batch_df.select("run_id").distinct().collect())
         for run in runs:
             blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, column, predicates,
+                spark, blocks_path, manifest_path, [column], predicates,
                 run_ids=[run])
             partials = aggmod._hll_partials(blocks, predicates, p)
             partials.write.mode("overwrite").parquet(
@@ -233,7 +224,7 @@ def quantile_stream(
                       batch_df.select("run_id").distinct().collect())
         for run in runs:
             blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, column, predicates,
+                spark, blocks_path, manifest_path, [column], predicates,
                 run_ids=[run])
             partials = aggmod._quantile_partials(blocks, predicates, k, task_k)
             partials.write.mode("overwrite").parquet(
@@ -277,33 +268,23 @@ def grouped_sum_stream(
     exact unscaled partials; its per-group decimal strings don't ride
     the streaming sink) — use ``sum_stream`` per group or the batch
     operator.  Returns the StreamingQuery."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    from ..engine.decode import arrow_out_type
-
     if _decimal_scale(spark, manifest_path, value_column) is not None:
         raise NotImplementedError(
             "grouped_sum_stream over decimal value columns is not "
             "supported; use batch grouped_sum or sum_stream per group")
     predicates = aggmod._normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    field = {f.name: f for f in schema.fields}[group_column]
-    is_bytes = field.dataType.typeName() in ("string", "binary")
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_t = arrow_out_type(field.dataType, tz)
+    gtype = aggmod._fields(
+        manifestmod.table_meta(spark, manifest_path))[group_column]
+    out_t = aggmod._arrow_type(spark, gtype)
 
     def handle(batch_df, epoch_id: int) -> None:
         runs = sorted(r["run_id"] for r in
                       batch_df.select("run_id").distinct().collect())
         for run in runs:
             blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, group_column, predicates,
-                value_column=value_column, run_ids=[run])
-            partials = aggmod._gsum_partials(blocks, predicates,
-                                             field.dataType, out_t, is_bytes)
+                spark, blocks_path, manifest_path,
+                [group_column, value_column], predicates, run_ids=[run])
+            partials = aggmod._gsum_partials(blocks, predicates, gtype, out_t)
             partials.write.mode("overwrite").parquet(
                 f"{out_path}/run_id={run}")
 
