@@ -78,8 +78,13 @@ def _megatext(lang: str, rng: np.random.Generator, size: int = 1 << 20) -> bytes
 
 def generate(n_rows: int, seed: int = SEED,
              median_len: int = 1536, max_len: int = 512 << 10,
-             with_nullable: bool = False) -> pa.Table:
-    """Deterministic corpus table; same (n_rows, seed) -> identical bytes."""
+             with_nullable: bool = False, row_offset: int = 0) -> pa.Table:
+    """Deterministic corpus table; same (n_rows, seed) -> identical bytes.
+
+    ``row_offset`` is the global index of the first row: the content
+    trailers (``// row-id N``) and the commit grouping (50 rows per
+    commit) count from it, so chunks generated separately stay unique
+    across chunks.  Commit keys stay distinct up to 50 M global rows."""
     rng = np.random.default_rng(seed)
 
     # repos: Zipf-ish skew over 200 repos
@@ -106,7 +111,8 @@ def generate(n_rows: int, seed: int = SEED,
     ])
 
     # commits: sha1(repo:i//50) — ~50 rows per commit, high-entropy hex
-    commit_key = repo_idx.astype(np.int64) * 1_000_000 + np.arange(n_rows) // 50
+    row_ids = np.arange(row_offset, row_offset + n_rows, dtype=np.int64)
+    commit_key = repo_idx.astype(np.int64) * 1_000_000 + row_ids // 50
     uniq, inv = np.unique(commit_key, return_inverse=True)
     uniq_hex = np.array([
         hashlib.sha1(f"{k}".encode()).hexdigest() for k in uniq
@@ -126,7 +132,6 @@ def generate(n_rows: int, seed: int = SEED,
                           n_rows)
     # build the blob vectorized per language group
     contents = np.empty(n_rows, dtype=object)
-    row_ids = np.arange(n_rows)
     for lang in LANGS:
         sel = np.nonzero(langs == lang)[0]
         if not len(sel):
@@ -164,11 +169,13 @@ def write_parquet(path: str, n_rows: int, seed: int = SEED,
     """Small row groups so Spark's scan parallelizes (one task per group).
 
     Above ``chunk_rows`` the table streams to the file in deterministic
-    per-chunk pieces (seed + 100003*chunk): generate() materializes the
-    whole corpus in driver memory (~2.6 KB/row plus a decoded copy), and
-    a 40 GB-content scale factor OOM-killed the process when built in
-    one shot.  At or below ``chunk_rows`` — every scale any previous
-    round used — output is byte-identical to the unchunked writer.
+    per-chunk pieces (seed + 100003*chunk; row ids and commit keys
+    continue from the chunk's global row offset, so both stay unique
+    across chunks): generate() materializes the whole corpus in driver
+    memory (~2.6 KB/row plus a decoded copy), and a 40 GB-content scale
+    factor OOM-killed the process when built in one shot.  At or below
+    ``chunk_rows`` — every scale any previous round used — output is
+    byte-identical to the unchunked writer.
     Returns the table for the single-shot path, None when chunked."""
     import pyarrow.parquet as pq
 
@@ -181,7 +188,8 @@ def write_parquet(path: str, n_rows: int, seed: int = SEED,
         off = 0
         while off < n_rows:
             n = min(chunk_rows, n_rows - off)
-            t = generate(n, seed + 100003 * (off // chunk_rows), **kw)
+            t = generate(n, seed + 100003 * (off // chunk_rows),
+                         row_offset=off, **kw)
             if writer is None:
                 writer = pq.ParquetWriter(path, t.schema)
             writer.write_table(t, row_group_size=row_group_rows)

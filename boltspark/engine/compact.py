@@ -10,11 +10,13 @@ block payloads move as opaque bytes, only (run_id, seq) are rewritten
 block-group identity stays unique).  Orphan rows from crashed runs are
 dropped on the way (they were never visible to decode anyway).
 
-Everything is JVM-side (one shuffle on part_id to co-locate each
+The rewrite is JVM-side (one shuffle on part_id to co-locate each
 partition's groups in one output file — which also restores the
-part_id row-group clustering that makes point queries prune).  The
-output is a NEW dataset path: swapping it in atomically is the
-caller's rename, the same contract as any table-format rewrite.
+part_id row-group clustering that makes point queries prune).  The new
+manifest rows fold on the driver from the source manifest — blocks move
+unchanged, so their totals are already known.  The output is a NEW
+dataset path: swapping it in atomically is the caller's rename, the
+same contract as any table-format rewrite.
 """
 
 from __future__ import annotations
@@ -61,8 +63,10 @@ def compact_blocks(
     compacted.write.mode("error").option("compression", "none").parquet(
         out_blocks_path)
     stats = manifestmod.commit(
-        spark, out_blocks_path, out_manifest_path, run_id=run_id,
-        columns=meta["columns"], key_cols=tuple(meta["key_cols"]),
+        spark, out_manifest_path,
+        _compacted_part_rows(spark, manifest_path, meta["columns"]),
+        run_id=run_id, columns=meta["columns"],
+        key_cols=tuple(meta["key_cols"]),
         n_parts=int(meta["n_parts"]), schema_json=meta["schema_json"],
         logical_schema_json=meta.get("logical_schema_json"),
     )
@@ -72,6 +76,53 @@ def compact_blocks(
     return {"n_groups": n_groups, "run_id": run_id,
             "raw_bytes": stats["raw_bytes"], "enc_bytes": stats["enc_bytes"],
             "wall_sec": time.time() - t0}
+
+
+def _compacted_part_rows(spark: SparkSession, manifest_path: str,
+                         columns: list[str]) -> list[tuple]:
+    """The compacted run's ``manifest.PART_ROW`` tuples, folded on the
+    driver from the SOURCE manifest (one row per (part, run, column)):
+    compaction moves every manifested group unchanged, so nothing in the
+    new blocks needs reading.
+
+    A partition's new row counts EVERY moved group for EVERY column of
+    the union — ``n_rows``/``n_blocks`` sum over all its runs, also the
+    runs that predate an evolved column (their groups carry a null leaf
+    for it) — while the byte and time sums cover only the runs that
+    encoded the column (null when none did).  codec/outer are those of
+    the earliest run (by run_id, the compacted seq order) that has the
+    column."""
+    src = (spark.read.parquet(manifest_path)
+           .filter(F.col("column") != manifestmod.META_KEY)
+           .select(PART_ID, "run_id", *manifestmod.PART_ROW[1:])
+           .collect())
+    pairs: dict[int, dict[str, dict]] = {}
+    for r in src:
+        pairs.setdefault(r[PART_ID], {}).setdefault(r["run_id"], {})[
+            r["column"]] = r
+
+    def total(vals):
+        vals = [v for v in vals if v is not None]
+        return sum(vals) if vals else None
+
+    out = []
+    for pid, runs in pairs.items():
+        order = [runs[rid] for rid in sorted(runs)]
+        # every column row of one (part, run) carries the pair's totals
+        n_rows = sum(next(iter(cr.values()))["n_rows"] for cr in order)
+        n_blocks = sum(next(iter(cr.values()))["n_blocks"] for cr in order)
+        for c in columns:
+            have = [cr[c] for cr in order if c in cr]
+            out.append((
+                pid, c, n_rows,
+                total(h["raw_bytes"] for h in have),
+                total(h["enc_bytes"] for h in have),
+                total(h["enc_ms"] for h in have),
+                n_blocks,
+                next((h["codec"] for h in have if h["codec"]), None),
+                next((h["outer"] for h in have if h["outer"]), None),
+            ))
+    return out
 
 
 def gc_orphans(

@@ -7,6 +7,12 @@ their own codec + outer compression, mirroring Parquet's
 encoding-then-compression layering) -> manifest parquet committed
 after the blocks write succeeds.
 
+The manifest rows come from the encoder tasks themselves: each task
+totals its blocks per (partition, column) and adds those rows to a
+Spark accumulator created for this call, so the commit is one tiny
+write (manifest.commit) instead of a re-scan of the blocks just
+written.
+
 Everything inside the Arrow iterator is vectorized numpy/pyarrow —
 no per-row Python.  The batch iterator bounds peak memory exactly the
 way the reference's StreamingByteBuffer bounds its read window
@@ -216,7 +222,8 @@ def _make_encoder(columns: list[str], run_id: str, block_bytes: int,
                   outer: str | None,
                   codec_override: dict[str, str] | None = None,
                   outer_level: int | None = None,
-                  prebuilt_fsst: dict[str, list[bytes]] | None = None):
+                  prebuilt_fsst: dict[str, list[bytes]] | None = None,
+                  part_rows=None):
     """Build the mapInArrow function.  Codec choices are cached per
     (partition, column) — the selector runs once per partition (north
     rule).  FSST symbol tables arrive PREBUILT from the driver
@@ -227,7 +234,12 @@ def _make_encoder(columns: list[str], run_id: str, block_bytes: int,
     partitions of the same column equally well.  Columns WITHOUT a
     prebuilt table skip the fsst trial entirely (a table-less trial
     would rebuild per call); codec_override='fsst' keeps a local-build
-    fallback."""
+    fallback.
+
+    ``part_rows`` (a ``manifest.PartRows`` accumulator) receives the
+    task's manifest rows at stream end: one ``manifest.PART_ROW`` per
+    (partition, column) it encoded, totalled over that partition's
+    blocks — the commit writes them without re-reading a block."""
 
     arrow_schema = blocks_arrow_schema(columns)
     cols_type = arrow_schema.field("cols").type
@@ -236,6 +248,8 @@ def _make_encoder(columns: list[str], run_id: str, block_bytes: int,
         choice_cache: dict[tuple[int, str], selector.CodecChoice] = {}
         fsst_tables: dict[str, list[bytes]] = dict(prebuilt_fsst or {})
         seqs: dict[int, int] = {}
+        # (part_id, column) -> [n_rows, raw, enc, ms, n_blocks, codec, outer]
+        totals: dict[tuple[int, str], list] = {}
 
         def encode_slice(part_id: int, sl: pa.RecordBatch):
             seq = seqs.get(part_id, 0)
@@ -292,7 +306,18 @@ def _make_encoder(columns: list[str], run_id: str, block_bytes: int,
                         outer=choice.outer, outer_level=outer_level,
                     )
                 dt = (time.perf_counter() - t0) * 1000
-                raw = values.nbytes if hasattr(values, "nbytes") else np.asarray(values).nbytes
+                raw = int(values.nbytes if hasattr(values, "nbytes")
+                          else np.asarray(values).nbytes)
+                tot = totals.get(key)
+                if tot is None:
+                    totals[key] = [sl.num_rows, raw, len(blk), dt, 1,
+                                   choice.codec, choice.outer]
+                else:
+                    tot[0] += sl.num_rows
+                    tot[1] += raw
+                    tot[2] += len(blk)
+                    tot[3] += dt
+                    tot[4] += 1
                 from .schema import _STATS_ARROW
 
                 col_structs.append(pa.StructArray.from_arrays(
@@ -300,7 +325,7 @@ def _make_encoder(columns: list[str], run_id: str, block_bytes: int,
                         pa.array([blk], pa.large_binary()),
                         pa.array([choice.codec], pa.string()),
                         pa.array([choice.outer], pa.string()),
-                        pa.array([int(raw)], pa.int64()),
+                        pa.array([raw], pa.int64()),
                         pa.array([len(blk)], pa.int64()),
                         pa.array([dt], pa.float64()),
                         pa.array([_column_stats(values, tag, validity)],
@@ -338,6 +363,8 @@ def _make_encoder(columns: list[str], run_id: str, block_bytes: int,
                 for lo, hi in zip(*(lambda c: (c[:-1], c[1:]))(
                         _split_points(seg, columns, block_bytes))):
                     yield encode_slice(pid, seg.slice(lo, hi - lo))
+        if part_rows is not None and totals:
+            part_rows.add([(pid, name, *t) for (pid, name), t in totals.items()])
 
     return encode_stream
 
@@ -577,21 +604,32 @@ def encode_table(
     prebuilt_fsst = (_prebuild_fsst_tables(df_sel, columns, codec_override,
                                            total_bytes)
                      if n_planned > 0 else {})
+    # fresh per call: the tasks' manifest rows for THIS run only
+    part_rows = spark.sparkContext.accumulator([], manifestmod.PartRows())
     blocks = keyed.mapInArrow(
         trimmed(_make_encoder(columns, run_id, block_bytes, outer,
-                              codec_override, outer_level, prebuilt_fsst)),
+                              codec_override, outer_level, prebuilt_fsst,
+                              part_rows)),
         blocks_spark_schema(columns),
     )
-    # payloads are self-compressed; parquet recompression would waste CPU
-    blocks.write.mode("append").option("compression", "none").parquet(out_path)
-
-    # manifest commit AFTER the blocks write: orphan blocks from crashed
-    # runs are invisible because decode joins blocks ⨝ manifest
-    stats = manifestmod.commit(
-        spark, out_path, manifest_path, run_id=run_id, columns=columns,
-        key_cols=key_cols, n_parts=n_parts, schema_json=storage_schema_json,
-        logical_schema_json=logical_schema_json,
-    )
+    try:
+        # payloads are self-compressed; parquet recompression would waste CPU
+        blocks.write.mode("append").option("compression", "none").parquet(
+            out_path)
+        # manifest commit AFTER the blocks write: orphan blocks from
+        # crashed runs are invisible because decode joins blocks ⨝ manifest.
+        # The write is a result stage, so Spark merged each task's rows
+        # exactly once per partition before it returned.
+        stats = manifestmod.commit(
+            spark, manifest_path, part_rows.value, run_id=run_id,
+            columns=columns, key_cols=key_cols, n_parts=n_parts,
+            schema_json=storage_schema_json,
+            logical_schema_json=logical_schema_json,
+        )
+    finally:
+        # PySpark's driver registry keeps every accumulator for the
+        # session's life: drop this run's rows once they are committed
+        part_rows.value = []
     return EncodeResult(
         out_path=out_path, manifest_path=manifest_path, run_id=run_id,
         n_partitions=n_parts, n_planned=n_planned,

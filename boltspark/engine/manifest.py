@@ -8,13 +8,16 @@ table-meta row carrying the original Spark schema JSON.  Resume =
 local_file_reader.rs:126-171, hops row groups from footer arithmetic
 alone — we hop partitions from the manifest alone).
 
-Nothing per-partition ever rides through the driver: the commit
-aggregation is written by Spark directly from the blocks metadata
-leaves (the wide layout means the binary payload chunks are never
-read), and decode consumes the valid (part_id, run_id) pairs as a
-broadcast-joined DataFrame.  At 100 TB / 64 MB partitions that keeps
-an ~8 M-row bookkeeping table off the driver heap; only the single
-table-meta row and scalar counts are ever collected.
+The commit is one small write.  Each encoder task totals its own
+blocks into one row per (partition, column) and hands them to the
+driver through a Spark accumulator; ``commit`` checks them, appends the
+META row and writes the lot in ONE job — the blocks just written are
+never re-scanned.  The trade, stated plainly: the driver now holds the
+manifest's own rows for the run (one per partition-column — at 100 TB
+/ 64 MB partitions and ~10 columns, ~16 M small tuples), never per-group
+rows and never payload bytes.  Readers still consume the valid
+(part_id, run_id) pairs as a broadcast-joined DataFrame, so decode
+never collects the bookkeeping table.
 """
 
 from __future__ import annotations
@@ -22,7 +25,10 @@ from __future__ import annotations
 import json
 import logging
 import re
+from collections import Counter
 
+import pyarrow as pa
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .schema import PART_ID
@@ -36,6 +42,15 @@ _MANIFEST_SCHEMA = (
     "raw_bytes long, enc_bytes long, enc_ms double, n_blocks long, "
     "codec string, outer string, table_meta string"
 )
+
+_ARROW_TYPES = {"long": pa.int64(), "double": pa.float64(),
+                "string": pa.string()}
+
+# one committed (part_id, column) row as commit() takes it: the manifest
+# columns minus run_id and table_meta.  codec/outer are those of the
+# partition's first block of the column.
+PART_ROW = ("part_id", "column", "n_rows", "raw_bytes", "enc_bytes",
+            "enc_ms", "n_blocks", "codec", "outer")
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -80,10 +95,49 @@ def completed_partitions_df(spark: SparkSession,
     )
 
 
+class PartRows(AccumulatorParam):
+    """Accumulator of manifest part rows: each encoder task adds the
+    list of its own ``PART_ROW`` tuples; the driver concatenates them."""
+
+    def zero(self, value):
+        return []
+
+    def addInPlace(self, a, b):
+        a.extend(b)
+        return a
+
+
+def check_part_rows(rows, columns: list[str]) -> list[tuple]:
+    """Validate task-reported ``PART_ROW`` tuples on the driver, sorted.
+
+    Fails closed: a (part_id, column) reported twice means a partition
+    was split across tasks or counted twice, and a reported partition
+    without every encoded column means a task lost a column — either
+    way the rows cannot describe the blocks, so nothing is merged."""
+    want = set(columns)
+    seen: dict[tuple, tuple] = {}
+    for r in rows:
+        key = (r[0], r[1])
+        if r[1] not in want:
+            raise ValueError(f"part row for unknown column {r[1]!r} "
+                             f"(partition {r[0]})")
+        if key in seen:
+            raise ValueError(f"partition {r[0]} column {r[1]!r} reported "
+                             f"twice ({seen[key]} vs {tuple(r)}); refusing "
+                             "to commit")
+        seen[key] = tuple(r)
+    per_part = Counter(pid for pid, _ in seen)
+    short = sorted(p for p, n in per_part.items() if n != len(want))
+    if short:
+        raise ValueError(f"partitions {short[:8]} lack part rows for some of "
+                         f"the {len(want)} encoded columns; refusing to commit")
+    return sorted(seen.values())
+
+
 def commit(
     spark: SparkSession,
-    blocks_path: str,
     manifest_path: str,
+    rows,
     *,
     run_id: str,
     columns: list[str],
@@ -92,47 +146,16 @@ def commit(
     schema_json: str,
     logical_schema_json: str | None = None,
 ) -> dict:
-    """Aggregate this run's blocks into manifest rows and append them.
+    """Append this run's manifest rows plus its META row — one Spark job.
 
-    The aggregation is written by Spark end to end: the blocks scan
-    reads only the metadata leaves of the wide layout (nested schema
-    pruning — no ``block`` chunk is ever touched), melts the per-column
-    structs into (partition, column) rows, aggregates, and appends.
-    Only the two byte totals are collected (two scalars).
+    ``rows`` are ``PART_ROW`` tuples, one per (part_id, column):
+    encode_table's tasks total their own blocks and deliver the rows
+    through a ``PartRows`` accumulator; compact_blocks derives them from
+    the source manifest.  They are checked (``check_part_rows``) BEFORE
+    anything is written, so a bad report leaves the manifest untouched.
+    Returns the byte totals, summed on the driver.
     """
-    melt = F.explode(F.array(*[
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("cols").getField(c).getField("raw_bytes").alias("raw_bytes"),
-            F.col("cols").getField(c).getField("enc_bytes").alias("enc_bytes"),
-            F.col("cols").getField(c).getField("enc_ms").alias("enc_ms"),
-            F.col("cols").getField(c).getField("codec").alias("codec"),
-            F.col("cols").getField(c).getField("outer").alias("outer"),
-        )
-        for c in columns
-    ])).alias("m")
-    from .schema import read_blocks
-
-    agg = (
-        # schema from THIS run's column list (read_blocks): other runs'
-        # files may carry different column sets, but their rows are
-        # filtered out by run_id and missing structs read as null
-        read_blocks(spark, blocks_path, columns)
-        .filter(F.col("run_id") == run_id)
-        .select(PART_ID, "run_id", "n_rows", melt)
-        .select(PART_ID, "run_id", "n_rows", "m.*")
-        .groupBy(PART_ID, "run_id", "column")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.sum("enc_ms").alias("enc_ms"),
-            F.count(F.lit(1)).alias("n_blocks"),
-            F.first("codec").alias("codec"),
-            F.first("outer").alias("outer"),
-        )
-        .withColumn("table_meta", F.lit(None).cast("string"))
-    )
+    data = check_part_rows(rows, columns)
     # monotonic commit sequence: row_range point queries order a
     # partition's groups by (run commit order, seq) so "encode order"
     # means APPEND order across runs, not lexicographic run_id order
@@ -159,21 +182,18 @@ def commit(
         "logical_schema_json": logical_schema_json,
         "run_seq": run_seq,
     })
-    meta_row = spark.createDataFrame(
-        [(-1, run_id, META_KEY, 0, 0, 0, 0.0, 0, "", "", meta)],
-        _MANIFEST_SCHEMA,
-    )
-    # persist the (tiny, one row per partition-column) aggregate so the
-    # byte totals fold from the cached rows instead of re-scanning the
-    # just-written manifest — one fewer job + parquet read per commit
-    agg = agg.persist()
-    try:
-        agg.unionByName(meta_row).write.mode("append").parquet(manifest_path)
-        totals = agg.agg(F.sum("raw_bytes").alias("r"),
-                         F.sum("enc_bytes").alias("e")).collect()[0]
-    finally:
-        agg.unpersist()
-    return {"raw_bytes": int(totals["r"] or 0), "enc_bytes": int(totals["e"] or 0)}
+    out = [(pid, run_id, col, *vals, None) for pid, col, *vals in data]
+    out.append((-1, run_id, META_KEY, 0, 0, 0, 0.0, 0, "", "", meta))
+    # handed over as one Arrow table (columnar, no per-row pickling) and
+    # written as one file: a single small job
+    fields = [f.split(" ") for f in _MANIFEST_SCHEMA.split(", ")]
+    table = pa.table([pa.array(list(vals), _ARROW_TYPES[t])
+                      for (_, t), vals in zip(fields, zip(*out))],
+                     names=[n for n, _ in fields])
+    (spark.createDataFrame(table, _MANIFEST_SCHEMA).coalesce(1)
+     .write.mode("append").parquet(manifest_path))
+    return {"raw_bytes": sum(r[3] or 0 for r in data),
+            "enc_bytes": sum(r[4] or 0 for r in data)}
 
 
 _INT_RANK = {"integer": 1, "long": 2}
@@ -309,7 +329,6 @@ def _meta_rows(spark: SparkSession, manifest_path: str) -> list[tuple]:
     the ``column`` statistics, so only META-bearing groups are read."""
     local = _local_dir(manifest_path, spark)
     if local is not None:
-        import pyarrow as pa
         import pyarrow.dataset as pads
 
         try:

@@ -11,8 +11,12 @@ columns mod P), so resume lineage is stable across runs.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
+
+log = logging.getLogger(__name__)
 
 PART_COL = "__bsk_part"
 SHUF_COL = "__bsk_shuf"
@@ -142,6 +146,10 @@ def _murmur3_long(v) -> np.ndarray:
     return h1.view(np.int32).astype(np.int64)
 
 
+# candidates scanned per partition before shuffle_preimages gives up
+_PREIMAGE_SCAN_FACTOR = 64
+
+
 def shuffle_preimages(n_parts: int) -> np.ndarray:
     """preimages[p] = smallest k >= 0 with pmod(murmur3(k), P) == p.
 
@@ -151,12 +159,20 @@ def shuffle_preimages(n_parts: int) -> np.ndarray:
     partitions (the straggler tail measured in bench/ab_r06.py).
     Shuffling on ``preimages[part_id]`` instead makes the placement a
     bijection: every partition gets its own reduce task, deterministic
-    and independent of the data.  Pure driver-side numpy, O(P) work."""
+    and independent of the data.  Pure driver-side numpy, O(P) work.
+
+    Bounded: the scan stops after ``_PREIMAGE_SCAN_FACTOR * P``
+    candidates (a uniform hash misses a residue there with probability
+    ~P·e^-64).  Any residue still unhit gets an unused key past the
+    scanned range and one warning is logged — placement-only, so the
+    encode stays correct and only that partition's load balance
+    degrades."""
     out = np.full(n_parts, -1, dtype=np.int64)
     need = n_parts
     start = 0
+    limit = _PREIMAGE_SCAN_FACTOR * max(n_parts, 16)
     chunk = int(min(max(64 * n_parts, 1024), 1 << 24))
-    while need > 0:
+    while need > 0 and start < limit:
         cand = np.arange(start, start + chunk, dtype=np.int64)
         b = np.mod(_murmur3_long(cand), n_parts)
         uniq, idx = np.unique(b, return_index=True)
@@ -164,6 +180,13 @@ def shuffle_preimages(n_parts: int) -> np.ndarray:
         out[uniq[mask]] = cand[idx[mask]]
         need -= int(mask.sum())
         start += chunk
+    if need > 0:
+        missing = np.nonzero(out < 0)[0]
+        out[missing] = start + np.arange(len(missing), dtype=np.int64)
+        log.warning("shuffle_preimages: %d of %d partitions have no Murmur3 "
+                    "preimage in the first %d keys; they shuffle on unused "
+                    "keys and may share a reduce task", len(missing),
+                    n_parts, start)
     return out
 
 

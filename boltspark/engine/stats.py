@@ -35,7 +35,8 @@ def validate_table(
 
     Checks (all JVM-side aggregations over metadata leaves):
     * every manifested (part_id, run_id, column) row count equals the
-      sum of its blocks' n_rows (missing/extra groups surface here);
+      sum of the (part_id, run_id) groups' n_rows (missing/extra groups
+      surface here);
     * no duplicate (part_id, run_id, seq) group identity;
     * ``crc_sample`` block payloads, drawn with a SEEDED hash-rank
       top-n over every group identity (distributed — the driver never
@@ -61,17 +62,12 @@ def validate_table(
            .filter(F.col("column") != manifestmod.META_KEY)
            .select(PART_ID, "run_id", "column",
                    F.col("n_rows").alias("m_rows")))
-    melt = F.explode(F.array(*[
-        F.struct(F.lit(c).alias("column"),
-                 F.when(F.col("cols").getField(c).isNotNull(),
-                        F.col("n_rows")).otherwise(F.lit(0)).alias("b_rows"))
-        for c in cols
-    ])).alias("m")
-    per = (blocks.select(PART_ID, "run_id", F.col("n_rows"), melt)
-           .select(PART_ID, "run_id", "m.*")
-           .groupBy(PART_ID, "run_id", "column")
-           .agg(F.sum("b_rows").alias("b_rows")))
-    bad = (man.join(per, [PART_ID, "run_id", "column"], "left")
+    # a manifest row counts every group of its (part, run) — a compacted
+    # run's groups that predate an evolved column included (they carry
+    # a null leaf for it and decode as NULLs) — so reconcile per pair
+    per = (blocks.groupBy(PART_ID, "run_id")
+           .agg(F.sum("n_rows").alias("b_rows")))
+    bad = (man.join(per, [PART_ID, "run_id"], "left")
            .filter(F.col("b_rows").isNull()
                    | (F.col("b_rows") != F.col("m_rows")))
            .limit(20).collect())

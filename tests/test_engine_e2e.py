@@ -145,6 +145,36 @@ def test_corpus_determinism():
     assert skew.max() / 500 > 0.05  # zipf head is heavy
 
 
+def test_corpus_chunks_keep_row_ids_and_commits_unique(tmp_path):
+    """The chunked writer continues row ids and commit keys across
+    chunks; at or below chunk_rows it stays byte-identical to
+    generate()."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    n, chunk = 250, 100
+    corpus.write_parquet(str(tmp_path / "c.parquet"), n, chunk_rows=chunk)
+    t = pq.read_table(str(tmp_path / "c.parquet"))
+    assert t.num_rows == n
+    ids = [int(m.group(1)) for c in t.column("content").to_pylist()
+           for m in [re.search(r"// row-id (\d+)\n$", c)] if m]
+    assert len(ids) == len(set(ids)) and len(ids) > 0.9 * n
+    assert min(ids) >= 0 and max(ids) < n and max(ids) >= 2 * chunk
+    # chunk boundaries are multiples of the 50-row commit grouping, so
+    # no commit may appear in two chunks
+    commits = t.column("commit").to_pylist()
+    per_chunk = [set(commits[i:i + chunk]) for i in range(0, n, chunk)]
+    for i, a in enumerate(per_chunk):
+        for b in per_chunk[i + 1:]:
+            assert not a & b
+
+    corpus.write_parquet(str(tmp_path / "one.parquet"), chunk,
+                         chunk_rows=chunk, with_nullable=True)
+    assert pq.read_table(str(tmp_path / "one.parquet")).equals(
+        corpus.generate(chunk, with_nullable=True))
+
+
 def test_point_query_reads_only_named_partitions(spark, corpus_df, encoded):
     from pyspark.sql import functions as F
 

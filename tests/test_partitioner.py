@@ -86,3 +86,32 @@ def test_manifest_driver_reads_tolerate_glob_metacharacters(spark, tmp_path):
     assert manifestmod.run_exists(spark, man, res.run_id)
     assert not manifestmod.run_exists(spark, man, "nope")
     assert manifestmod.table_meta(spark, man)["columns"] == ["k", "v"]
+
+
+def test_shuffle_preimages_bounded_when_a_residue_is_never_hit(
+        monkeypatch, caplog):
+    """A hash that never lands in one residue must not spin forever:
+    the scan stops at its bound, the residue gets an unused key, and
+    one warning says so."""
+    import logging
+
+    from boltspark.engine import partitioner
+
+    n_parts = 8
+    real = partitioner._murmur3_long
+
+    def skewed(v):
+        h = real(v)
+        return np.where(np.mod(h, n_parts) == 5, h + 1, h)
+
+    monkeypatch.setattr(partitioner, "_murmur3_long", skewed)
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger=partitioner.__name__):
+        pre = partitioner.shuffle_preimages(n_parts)
+    assert len(pre) == n_parts and (pre >= 0).all()
+    assert len(set(pre.tolist())) == n_parts
+    hit = np.mod(skewed(pre), n_parts)
+    assert sorted(int(p) for p in np.nonzero(hit == np.arange(n_parts))[0]) \
+        == [0, 1, 2, 3, 4, 6, 7]
+    records = [r for r in caplog.records if r.name == partitioner.__name__]
+    assert len(records) == 1 and records[0].levelno == logging.WARNING
