@@ -22,8 +22,10 @@ into Python, zone maps answer all/none without opening the block, and
 groups where only SOME rows survive reduce over a late-materialized
 selective decode (only surviving rows are ever decoded).
 
-Every operator runs on one scaffold: ``_blocks_proj`` projects the
-block leaves an operator needs, and ``_scan`` runs the per-task loop
+Every operator runs on one scaffold: ``_plan`` resolves its predicates
+and projects the block leaves it needs through decode's resolver and
+planner (``decode.resolve_predicates``/``decode._blocks_proj``, the
+ones ``decode_table`` uses), and ``_scan`` runs the per-task loop
 (predicate cascade, schema-evolution NULLs, the block-bytes crossing
 into Python, ``trimmed``).  An operator supplies only a per-group
 reducer plus, for per-partition accumulators, a stream-end flush.
@@ -47,11 +49,11 @@ from pyspark.sql import types as T
 from ..kernels import block as blockmod
 from ..kernels import dictionary, lists, strings
 from . import manifest as manifestmod
+from .decode import (_block_at, _blocks_proj, arrow_out_type, decode_table,
+                     resolve_mask, resolve_predicates)
 from .filters import Predicate, pred_columns
 from .memutil import trimmed
-from .schema import PART_ID, read_blocks as schema_read_blocks
-
-_CELL = "__cell_"  # alias prefix of the projected block columns
+from .schema import PART_ID
 
 
 def _fields(meta: dict) -> dict:
@@ -63,8 +65,6 @@ def _fields(meta: dict) -> dict:
 def _arrow_type(spark: SparkSession, dtype) -> pa.DataType:
     """The Arrow type a partial batch carries for a Spark column type
     (timestamps in the session time zone, as decode emits them)."""
-    from .decode import arrow_out_type
-
     return arrow_out_type(
         dtype, spark.conf.get("spark.sql.session.timeZone", "UTC"))
 
@@ -124,71 +124,16 @@ def _rows_batch(rows: list[tuple], schema: pa.Schema):
     return pa.record_batch([list(c) for c in zip(*rows)], schema=schema)
 
 
-def _resolve_mask(blk_cols, st_cols, i: int, predicates):
-    """The decoder's zone/mask cascade for one block group ->
-    'none' | 'all' | full-length bool mask (decode.eval_group_predicate
-    reused, so dictionary-level predicate evaluation, the ternary null
-    rule, and composite OR/NOT semantics apply identically here)."""
-    from .decode import eval_group_predicate
-
-    blk_of = lambda c, j: blk_cols[c][j]  # noqa: E731
-    st_of = lambda c, j: st_cols[c][j].as_py()  # noqa: E731
-    mask = None
-    for pred in predicates:
-        verdict, pmask = eval_group_predicate(pred, blk_of, st_of, i)
-        if verdict == "none":
-            return "none"
-        if pmask is not None:
-            mask = pmask if mask is None else (mask & pmask)
-            if not mask.any():
-                return "none"
-    return "all" if mask is None else mask
-
-
-def _normalize_predicates(predicate) -> list[Predicate]:
-    if predicate is None:
-        return []
-    return predicate if isinstance(predicate, list) else [predicate]
-
-
-def _blocks_proj(spark: SparkSession, blocks_path: str, manifest_path: str,
-                 columns: list[str], predicates: list[Predicate],
-                 run_ids: list[str] | None = None,
-                 meta: dict | None = None) -> DataFrame:
-    """The blocks frame ``_scan`` reads: the block leaf of each of
-    ``columns`` in order (the wide layout aligns them inside one parquet
-    row: same group = same rows, same order) plus the block and stats
-    leaves of every predicate column.  JVM zone prefilters drop
-    provably-dead groups before their bytes cross into Python, and the
-    manifest's valid (part_id, run_id) pairs bound the scan."""
-    if meta is None:
-        meta = manifestmod.table_meta(spark, manifest_path)
-    known = set(meta["columns"])
-    for c in list(columns) + pred_columns(predicates):
-        if c not in known:
-            raise KeyError(f"unknown column {c}; encoded: {meta['columns']}")
-
-    def leaf(c, name):
-        return F.col("cols").getField(c).getField(name)
-
-    proj = [F.col(PART_ID), F.col("run_id"), F.col("n_rows")]
-    proj += [leaf(c, "block").alias(f"{_CELL}{j}")
-             for j, c in enumerate(columns)]
-    for pc_ in pred_columns(predicates):
-        proj += [leaf(pc_, "block").alias(f"__blk_{pc_}"),
-                 leaf(pc_, "stats").alias(f"__st_{pc_}")]
-    blocks = (schema_read_blocks(spark, blocks_path, meta["columns"])
-              .select(*proj))
-    if run_ids is not None:
-        # incremental scope (streaming aggregation): only these runs'
-        # groups are read — parquet run_id stats prune the rest
-        blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
-    keeps = [k for k in (p.jvm_zone_keep_cols(lambda c: F.col(f"__st_{c}"))
-                         for p in predicates) if k is not None]
-    for k in keeps:
-        blocks = blocks.filter(k)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    return blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+def _plan(spark: SparkSession, blocks_path: str, manifest_path: str,
+          columns: list[str], predicate, run_ids: list[str] | None = None):
+    """(blocks frame, resolved predicates, table meta) of one aggregate
+    call: one manifest read, the shared predicate resolver and the
+    shared ``_blocks_proj`` planner over ``columns``."""
+    meta = manifestmod.table_meta(spark, manifest_path)
+    predicates = resolve_predicates(predicate, meta)
+    return (_blocks_proj(spark, blocks_path, manifest_path, columns,
+                         predicates, run_ids=run_ids, meta=meta),
+            predicates, meta)
 
 
 class _Group:
@@ -240,15 +185,15 @@ def _scan(blocks: DataFrame, predicates: list[Predicate], out_schema,
         for batch in batches:
             names = batch.schema.names
             cells = [batch.column(j) for j, n in enumerate(names)
-                     if n.startswith(_CELL)]
+                     if n.startswith("__blk_")]
             pids = batch.column(names.index(PART_ID)).to_pylist()
             grows = batch.column(names.index("n_rows")).to_pylist()
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
+            blk_cols = {c: batch.column(_block_at(names, c))
                         for c in pcols}
             st_cols = {c: batch.column(names.index(f"__st_{c}"))
                        for c in pcols}
             for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
+                mask = resolve_mask(predicates, blk_cols, st_cols, i)
                 if isinstance(mask, str) and mask == "none":
                     continue
                 out = per_group(_Group(
@@ -401,11 +346,9 @@ def column_sum(spark: SparkSession, blocks_path: str, manifest_path: str,
     low words for p<=18, (lo,hi) word-pair arithmetic in arbitrary-
     precision Python ints for the d128 storage) and return sum_value as
     decimal(38, s) — SQL SUM(decimal) semantics, no float rounding."""
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
+    blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
+                                     [column], predicate, run_ids)
     dt = _fields(meta)[column]
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, [column],
-                          predicates, run_ids=run_ids, meta=meta)
     if isinstance(dt, T.DecimalType):
         # per-task exact unscaled sums ride as decimal(38,0) partials
         # (loud overflow past 38 digits at the Arrow boundary — never
@@ -475,11 +418,9 @@ def column_sums(spark: SparkSession, blocks_path: str, manifest_path: str,
     result type); bytes/list columns raise."""
     if not columns:
         raise ValueError("columns must be non-empty")
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
     col_list = list(columns)
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, col_list,
-                          predicates, meta=meta)
+    blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
+                                     col_list, predicate)
     fields = _fields(meta)
     scales = {c: (fields[c].scale if isinstance(fields[c], T.DecimalType)
                   else None) for c in col_list}
@@ -552,9 +493,8 @@ def column_count(spark: SparkSession, blocks_path: str, manifest_path: str,
     ``validity[mask]``.  Returns one row:
     (column, n_values, n_rows, n_nulls) where n_values = COUNT(column)
     and n_rows = COUNT(*) of the surviving selection."""
-    predicates = _normalize_predicates(predicate)
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, [column],
-                          predicates, run_ids=run_ids)
+    blocks, predicates, _ = _plan(spark, blocks_path, manifest_path,
+                                  [column], predicate, run_ids)
     partials = _part_lanes(blocks, predicates, "count", _COUNT_LANES,
                            lambda a: (a[4], a[5]))
     return (partials.agg(
@@ -618,10 +558,8 @@ def value_counts(spark: SparkSession, blocks_path: str, manifest_path: str,
     NULL group row is emitted when the column has nulls (SQL GROUP BY
     semantics).  ``predicate`` restricts counting to surviving rows.
     Returns (value, cnt); value typed by the table schema."""
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, [column],
-                          predicates, meta=meta, run_ids=run_ids)
+    blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
+                                     [column], predicate, run_ids)
     partials = _vc_partials(spark, blocks, predicates, _fields(meta)[column])
     return (partials.groupBy("value").agg(F.sum("cnt").alias("cnt")))
 
@@ -712,11 +650,9 @@ def column_minmax(spark: SparkSession, blocks_path: str, manifest_path: str,
     only float64 zone leaves and can't filter).  Sorted dictionaries
     answer min/max in O(1); the result is typed by the table schema, so
     int64 beyond 2^53 and byte strings stay exact."""
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
+    blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
+                                     [column], predicate, run_ids)
     dt = _fields(meta)[column]
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, [column],
-                          predicates, meta=meta, run_ids=run_ids)
     out_t = _arrow_type(spark, dt)
     out_schema = T.StructType([
         T.StructField("vmin", dt, True),
@@ -777,11 +713,9 @@ def column_distinct(spark: SparkSession, blocks_path: str,
     per-block distinct sets cross the shuffle, so a 100 TB low-
     cardinality column folds to n_blocks x n_distinct tiny rows.
     Returns one column ``value``; count() it for COUNT(DISTINCT)."""
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
+    blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
+                                     [column], predicate, run_ids)
     dt = _fields(meta)[column]
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, [column],
-                          predicates, meta=meta, run_ids=run_ids)
     out_t = _arrow_type(spark, dt)
 
     def per_group(g, acc):
@@ -933,9 +867,8 @@ def column_distinct_approx(spark: SparkSession, blocks_path: str,
     variant over a growing table see streaming/agg_stream.py
     ``distinct_stream``/``read_distinct`` (same partials, same
     estimate)."""
-    predicates = _normalize_predicates(predicate)
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, [column],
-                          predicates, run_ids=run_ids)
+    blocks, predicates, _ = _plan(spark, blocks_path, manifest_path,
+                                  [column], predicate, run_ids)
     return _fold_hll(_hll_partials(blocks, predicates, p), column, p)
 
 
@@ -1077,9 +1010,8 @@ def column_quantiles(spark: SparkSession, blocks_path: str,
     the incremental variant over a growing table see
     streaming/agg_stream.py ``quantile_stream``/``read_quantiles``."""
     plist = _probs(probs)
-    predicates = _normalize_predicates(predicate)
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, [column],
-                          predicates, run_ids=run_ids)
+    blocks, predicates, _ = _plan(spark, blocks_path, manifest_path,
+                                  [column], predicate, run_ids)
     return _fold_quantiles(
         _quantile_partials(blocks, predicates, k, task_k), column, plist)
 
@@ -1154,11 +1086,9 @@ def column_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
     globally ordered."""
     if k <= 0:
         raise ValueError("k must be positive")
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
+    blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
+                                     [column], predicate, run_ids)
     dt = _fields(meta)[column]
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, [column],
-                          predicates, run_ids=run_ids, meta=meta)
     out_t = _arrow_type(spark, dt)
 
     def per_group(g, acc):
@@ -1256,12 +1186,12 @@ def topk_rows(spark: SparkSession, blocks_path: str, manifest_path: str,
     they decode-and-check); string/binary columns rank
     lexicographically via BytesRangePredicate (24-byte prefix zones
     prune).  List/map/struct order columns are not supported."""
-    from .decode import decode_table
     from .filters import ConstPredicate
 
     if k <= 0:
         raise ValueError("k must be positive")
-    dt = _fields(manifestmod.table_meta(spark, manifest_path)).get(column)
+    meta = manifestmod.table_meta(spark, manifest_path)
+    dt = _fields(meta).get(column)
     if dt is None:
         raise KeyError(f"unknown column {column}")
     if dt.typeName() in ("array", "map", "struct"):
@@ -1271,7 +1201,7 @@ def topk_rows(spark: SparkSession, blocks_path: str, manifest_path: str,
     vals = [r["value"] for r in column_topk(
         spark, blocks_path, manifest_path, column, k, ascending=ascending,
         predicate=predicate, run_ids=run_ids).collect()]
-    preds = list(_normalize_predicates(predicate))
+    preds = resolve_predicates(predicate, meta)
     if not vals:
         # order column is all-null (or empty) under the predicate: only
         # null rows can fill the LIMIT
@@ -1398,16 +1328,16 @@ def _segments(labels: np.ndarray, values: np.ndarray):
 
 
 def _grouped_blocks(spark, blocks_path, manifest_path, group_column,
-                    value_column, predicates, run_ids):
-    """(blocks frame of [group, value], group type, value type, group
-    Arrow type) — the shared set-up of the two-column grouped scans."""
-    meta = manifestmod.table_meta(spark, manifest_path)
+                    value_column, predicate, run_ids):
+    """(blocks frame of [group, value], resolved predicates, group type,
+    value type, group Arrow type) — the shared set-up of the two-column
+    grouped scans."""
+    blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
+                                     [group_column, value_column],
+                                     predicate, run_ids)
     fields = _fields(meta)
     gt, vt = fields[group_column], fields[value_column]
-    blocks = _blocks_proj(spark, blocks_path, manifest_path,
-                          [group_column, value_column], predicates,
-                          run_ids=run_ids, meta=meta)
-    return blocks, gt, vt, _arrow_type(spark, gt)
+    return blocks, predicates, gt, vt, _arrow_type(spark, gt)
 
 
 def grouped_sum(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -1426,10 +1356,9 @@ def grouped_sum(spark: SparkSession, blocks_path: str, manifest_path: str,
     table schema; only per-block distinct groups cross the final
     shuffle.  Decimal value columns sum exactly in unscaled Python ints
     (decimal(38,0) partials) and return sum_value as decimal(38, s)."""
-    predicates = _normalize_predicates(predicate)
-    blocks, gt, vt, out_t = _grouped_blocks(
+    blocks, predicates, gt, vt, out_t = _grouped_blocks(
         spark, blocks_path, manifest_path, group_column, value_column,
-        predicates, run_ids)
+        predicate, run_ids)
     scale = vt.scale if isinstance(vt, T.DecimalType) else None
     partials = _gsum_partials(blocks, predicates, gt, out_t,
                               exact_decimal=scale is not None)
@@ -1570,10 +1499,9 @@ def grouped_distinct_approx(spark: SparkSession, blocks_path: str,
     (value, approx_distinct, cnt); ``cnt`` is the group's row count."""
     from ..kernels import hll
 
-    predicates = _normalize_predicates(predicate)
-    blocks, gt, _vt, out_t = _grouped_blocks(
+    blocks, predicates, gt, _vt, out_t = _grouped_blocks(
         spark, blocks_path, manifest_path, group_column, value_column,
-        predicates, run_ids)
+        predicate, run_ids)
     out_schema = T.StructType([
         T.StructField("value", gt, True),
         T.StructField("regs", T.BinaryType(), False),
@@ -1696,10 +1624,9 @@ def grouped_quantiles(spark: SparkSession, blocks_path: str,
     from ..kernels import quantile as qk
 
     plist = _probs(probs)
-    predicates = _normalize_predicates(predicate)
-    blocks, gt, _vt, out_t = _grouped_blocks(
+    blocks, predicates, gt, _vt, out_t = _grouped_blocks(
         spark, blocks_path, manifest_path, group_column, value_column,
-        predicates, run_ids)
+        predicate, run_ids)
     out_schema = T.StructType([
         T.StructField("value", gt, True),
         T.StructField("vs", T.ArrayType(T.DoubleType()), False),
@@ -1836,10 +1763,9 @@ def grouped_minmax(spark: SparkSession, blocks_path: str,
     their own row; NULL values never rank (an all-null group's min/max
     is NULL).  decimal(p<=18) reduces unscaled; d128 and list tags
     raise.  Returns (value, min_value, max_value, cnt)."""
-    predicates = _normalize_predicates(predicate)
-    blocks, gt, vt, out_tg = _grouped_blocks(
+    blocks, predicates, gt, vt, out_tg = _grouped_blocks(
         spark, blocks_path, manifest_path, group_column, value_column,
-        predicates, run_ids)
+        predicate, run_ids)
     _reject_d128("grouped_minmax", vt, "column_minmax")
     out_tv = _arrow_type(spark, vt)
     out_schema = T.StructType([
@@ -1914,16 +1840,14 @@ def grouped_aggs(spark: SparkSession, blocks_path: str, manifest_path: str,
         raise ValueError("group_columns and value_columns must be non-empty")
     if len(set(gcols)) != len(gcols) or len(set(vcols)) != len(vcols):
         raise ValueError("duplicate columns in group/value lists")
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
+    blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
+                                     gcols + vcols, predicate, run_ids)
     fields = _fields(meta)
     for v in vcols:
         if isinstance(fields[v], T.DecimalType):
             raise NotImplementedError(
                 f"grouped_aggs over decimal column {v!r} is not supported; "
                 "use grouped_sum (exact decimal partials) per column")
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, gcols + vcols,
-                          predicates, meta=meta, run_ids=run_ids)
     ng = len(gcols)
     out_ts = [_arrow_type(spark, fields[c]) for c in gcols]
     v_out_ts = [_arrow_type(spark, fields[v]) for v in vcols]
@@ -2066,10 +1990,9 @@ def grouped_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
 
     if k <= 0:
         raise ValueError("k must be positive")
-    predicates = _normalize_predicates(predicate)
-    blocks, gt, vt, out_tg = _grouped_blocks(
+    blocks, predicates, gt, vt, out_tg = _grouped_blocks(
         spark, blocks_path, manifest_path, group_column, value_column,
-        predicates, run_ids)
+        predicate, run_ids)
     _reject_d128("grouped_topk", vt, "column_topk")
     out_tv = _arrow_type(spark, vt)
     out_schema = T.StructType([
@@ -2136,12 +2059,12 @@ def grouped_topk_rows(spark: SparkSession, blocks_path: str,
     the group column is known-narrow."""
     from pyspark.sql import Window
 
-    from .decode import decode_table
     from .filters import AndPredicate, ConstPredicate, OrPredicate
 
     if k <= 0:
         raise ValueError("k must be positive")
-    fields = _fields(manifestmod.table_meta(spark, manifest_path))
+    meta = manifestmod.table_meta(spark, manifest_path)
+    fields = _fields(meta)
     if group_column not in fields or value_column not in fields:
         raise KeyError(f"unknown column among ({group_column}, "
                        f"{value_column}); encoded: {list(fields)}")
@@ -2184,7 +2107,7 @@ def grouped_topk_rows(spark: SparkSession, blocks_path: str,
                                   _session_aware(spark, vals[-1][1]),
                                   ascending, False)
             legs.append(AndPredicate([gleg, thr]))
-    preds = list(_normalize_predicates(predicate))
+    preds = resolve_predicates(predicate, meta)
     preds.append(OrPredicate(legs) if legs else
                  ConstPredicate(column=group_column, accept=False))
     dec_cols = None

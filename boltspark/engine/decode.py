@@ -31,12 +31,14 @@ import json
 
 import numpy as np
 import pyarrow as pa
+from pyspark.sql import types as T
 
 from ..kernels import block as blockmod
 from ..kernels import bitpack, dictionary, lists, strings
 from . import manifest as manifestmod
+from . import nest
 from .memutil import trimmed
-from .filters import ALL, NONE, Predicate, pred_columns
+from .filters import ALL, NONE, Predicate, pred_columns, replace_predicate
 from .schema import PART_ID, read_blocks as schema_read_blocks
 
 _FIXED_STRUCT = {
@@ -250,11 +252,152 @@ def eval_group_predicate(pred, blk_of, st_of, i):
     return _decode_mask(s.as_py(), st_of(pred.column, i), pred)
 
 
-def _make_decoder(read_cols: list[str], out_cols: list[str], out_types: dict,
-                  predicates: list[Predicate], include_part_id: bool,
+def resolve_mask(predicates, blk_cols, st_cols, i: int, mask=None):
+    """The conjunctive cascade of one block group (row_group_reader.rs:
+    204-258) -> 'none' | 'all' | full-length bool mask.
+
+    ``blk_cols``/``st_cols`` map each predicate column to its block /
+    zone-stats Arrow column.  Each predicate narrows the surviving
+    ``mask`` in turn (start from a row window's mask, or None for every
+    row); an all-false mask short-circuits the rest.  Composite
+    predicates (OR across columns, NOT) evaluate through
+    ``eval_group_predicate``, so their leaves keep the zone/dictionary
+    fast paths."""
+    blk_of = lambda c, j: blk_cols[c][j]  # noqa: E731
+    st_of = lambda c, j: st_cols[c][j].as_py()  # noqa: E731
+    for pred in predicates:
+        verdict, pmask = eval_group_predicate(pred, blk_of, st_of, i)
+        if verdict == "none":
+            return "none"
+        if pmask is not None:
+            mask = pmask if mask is None else (mask & pmask)
+            if not mask.any():
+                return "none"
+    return "all" if mask is None else mask
+
+
+def _logical(meta: dict) -> T.StructType:
+    return T.StructType.fromJson(
+        json.loads(meta.get("logical_schema_json") or meta["schema_json"]))
+
+
+def resolve_predicates(predicate, meta: dict) -> list[Predicate]:
+    """The one predicate resolver of every reader: ``predicate`` (None,
+    one predicate, or a list ANDed as a cascade) -> a list whose dotted
+    struct-leaf paths ('meta.width') name flat storage leaves.  Raises
+    KeyError on a column the table does not encode (column resolution
+    by name, row_group_reader.rs:107-113)."""
+    predicates = ([] if predicate is None
+                  else list(predicate) if isinstance(predicate, list)
+                  else [predicate])
+    known = set(meta["columns"])
+
+    def leaf(p):
+        if p.column in known:
+            return p
+        flat = nest.resolve_leaf(p.column, _logical(meta))
+        if flat is None or flat not in known:
+            raise KeyError(f"predicate column {p.column} not encoded; "
+                           f"encoded: {meta['columns']}")
+        return replace_predicate(p, column=flat)
+
+    return [p.map_leaves(leaf) for p in predicates]
+
+
+def output_fields(meta: dict, columns: list[str] | None) -> list:
+    """The logical StructFields a read returns: ``columns`` in order, or
+    every column.  Raises KeyError on an unknown name."""
+    by_name = {f.name: f for f in _logical(meta).fields}
+    names = list(columns or by_name)
+    unknown = set(names) - set(by_name)
+    if unknown:
+        raise KeyError(f"unknown columns {unknown}; encoded: {list(by_name)}")
+    return [by_name[c] for c in names]
+
+
+def leaf_columns(fields) -> list[str]:
+    """Flat storage leaves backing logical ``fields`` (engine/nest.py)."""
+    return [leaf for f in fields
+            for leaf in nest.leaf_names(f.name, f.dataType, f.nullable)]
+
+
+def _blocks_proj(spark, blocks_path: str, manifest_path: str,
+                 columns: list[str], predicates: list[Predicate],
+                 run_ids: list[str] | None = None, meta: dict | None = None,
+                 part_ids: list[int] | None = None,
+                 seq_range: tuple[int, int] | None = None):
+    """The one blocks-frame planner of decode and every aggregate.
+
+    Projects (part_id, run_id, seq, n_rows); the ``block`` leaf of each
+    of ``columns`` in order as ``__blk_<col>`` (the output cells); the
+    ``block`` leaf of each (resolved) predicate column NOT among them as
+    ``__pblk_<col>`` — so a column that is both crosses into Python
+    once (``_block_at`` finds either); and each predicate column's
+    ``stats`` leaf as ``__st_<col>``.  Only these leaves are in the
+    parquet ReadSchema.
+
+    ``part_ids`` (point queries; prunes row groups on part_id min/max
+    stats), ``run_ids`` (incremental reads; pushed string filter) and
+    ``seq_range`` (inclusive seq interval; tasks write groups in seq
+    order) are scan-level filters.  JVM zone prefilters then drop
+    groups that provably cannot match before their block bytes cross
+    the JVM->Python boundary (Python re-checks zones for the rest;
+    null stats pass), and the manifest's valid (part_id, run_id) pairs
+    join in as a broadcast — no shuffle of the block data."""
+    from pyspark.sql import functions as F
+
+    if meta is None:
+        meta = manifestmod.table_meta(spark, manifest_path)
+    pcols = pred_columns(predicates)
+    known = set(meta["columns"])
+    for c in list(columns) + pcols:
+        if c not in known:
+            raise KeyError(f"unknown column {c}; encoded: {meta['columns']}")
+
+    def leaf(c, name):
+        return F.col("cols").getField(c).getField(name)
+
+    proj = [F.col(PART_ID), F.col("run_id"), F.col("seq"), F.col("n_rows")]
+    proj += [leaf(c, "block").alias(f"__blk_{c}") for c in columns]
+    proj += [leaf(c, "block").alias(f"__pblk_{c}")
+             for c in pcols if c not in columns]
+    proj += [leaf(c, "stats").alias(f"__st_{c}") for c in pcols]
+    # schema from the manifest's merged column list: groups from runs
+    # that predate a column read its struct leaves as null (schema
+    # evolution), without a per-call footer-merge job
+    blocks = schema_read_blocks(spark, blocks_path, meta["columns"])
+    valid = manifestmod.valid_pairs_df(spark, manifest_path)
+    if part_ids is not None:
+        blocks = blocks.filter(F.col(PART_ID).isin([int(p) for p in part_ids]))
+        valid = valid.filter(F.col(PART_ID).isin([int(p) for p in part_ids]))
+    if run_ids is not None:
+        blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
+        valid = valid.filter(F.col("run_id").isin(list(run_ids)))
+    if seq_range is not None:
+        blocks = blocks.filter((F.col("seq") >= int(seq_range[0]))
+                               & (F.col("seq") <= int(seq_range[1])))
+    blocks = blocks.select(*proj)
+    for p in predicates:
+        keep = p.jvm_zone_keep_cols(lambda c: F.col(f"__st_{c}"))
+        if keep is not None:
+            blocks = blocks.filter(keep)
+    return blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+
+
+def _block_at(names: list[str], c: str) -> int:
+    """Index of column ``c``'s block in a ``_blocks_proj`` batch: its
+    output cell, else its predicate-only block."""
+    return (names.index(f"__blk_{c}") if f"__blk_{c}" in names
+            else names.index(f"__pblk_{c}"))
+
+
+def _make_decoder(meta: dict, fields: list, predicates: list[Predicate],
+                  tz: str, include_part_id: bool = False,
                   row_window: tuple[int, int, dict] | None = None):
-    """Row-independent decoder: every input row is one complete block
-    group (all columns), so there is no regrouping state at all.
+    """Row-independent decoder of ``_blocks_proj``-shaped batches: every
+    input row is one complete block group (all columns), so there is no
+    regrouping state at all.  Emits the logical ``fields`` (nested
+    columns assembled in the task, ``nest.assemble``).
 
     ``row_window`` = (start, end, {(part_id, run_id, seq) -> global row
     offset of the group}) implements the positional slice
@@ -262,38 +405,38 @@ def _make_decoder(read_cols: list[str], out_cols: list[str], out_types: dict,
     ones, row_group_reader.rs:188-198): boundary groups decode only the
     overlapping rows via the same late-materialization gather predicates
     use."""
+    flat = {f.name: f.dataType
+            for f in T.StructType.fromJson(json.loads(meta["schema_json"])).fields}
+    leaves = leaf_columns(fields)
+    leaf_types = {c: arrow_out_type(flat[c], tz) for c in leaves}
+    out_types = [arrow_out_type(f.dataType, tz) for f in fields]
+    out_fields = [pa.field(f.name, t, True) for f, t in zip(fields, out_types)]
+    if include_part_id:
+        out_fields.append(pa.field(PART_ID, pa.int64(), False))
+    out_schema = pa.schema(out_fields)
+    pcols = pred_columns(predicates)
 
     def decode_row(blk_cols, st_cols, i: int, part_id: int, n_rows: int,
                    base_mask: np.ndarray | None = None):
-        # conjunctive cascade (row_group_reader.rs:204-258): each
-        # predicate narrows the surviving mask in turn; an all-false
-        # mask short-circuits the rest.  Composite predicates (OR
-        # across columns, NOT) evaluate through the same group-level
-        # hook, so their leaves keep the zone/dictionary fast paths.
-        mask = base_mask
-        blk_of = lambda c, j: blk_cols[c][j]  # noqa: E731
-        st_of = lambda c, j: st_cols[c][j].as_py()  # noqa: E731
-        for pred in predicates:
-            verdict, pmask = eval_group_predicate(pred, blk_of, st_of, i)
-            if verdict == "none":
+        mask = resolve_mask(predicates, blk_cols, st_cols, i, base_mask)
+        if isinstance(mask, str):
+            if mask == "none":
                 return None
-            if pmask is not None:
-                mask = pmask if mask is None else (mask & pmask)
-                if not mask.any():
-                    return None
+            mask = None
         # late materialization: when few rows survive the cascade, decode
         # only those rows of each output column (fsst random access, dict
         # code gather, byte-slice gather) instead of decode-all + filter
         late = mask is not None and int(mask.sum()) * 4 < len(mask)
-        arrays = []
-        fields = []
-        for name in out_cols:
-            target = out_types[name]
+        n_out = int(mask.sum()) if mask is not None else n_rows
+        if n_out == 0:
+            return None
+        decoded = {}
+        for name in leaves:
+            target = leaf_types[name]
             blk_scalar = blk_cols[name][i]
             if not blk_scalar.is_valid:
                 # schema evolution: rows from runs that predate this
                 # column read back as nulls
-                n_out = int(mask.sum()) if mask is not None else n_rows
                 arr = pa.nulls(n_out, target)
             elif late:
                 values, validity, tag, codec, _ = blockmod.decode_block_rows(
@@ -307,24 +450,22 @@ def _make_decoder(read_cols: list[str], out_cols: list[str], out_types: dict,
                     arr = arr.filter(pa.array(mask))
             if not arr.type.equals(target):
                 arr = arr.cast(target)
-            arrays.append(arr)
-            fields.append(pa.field(name, target, True))
-        if arrays and len(arrays[0]) == 0:
-            return None
+            decoded[name] = arr
+        arrays = [nest.assemble(f.name, f.dataType, f.nullable, t, decoded)
+                  for f, t in zip(fields, out_types)]
         if include_part_id:
-            arrays.append(pa.array(np.full(len(arrays[0]), part_id, np.int64)))
-            fields.append(pa.field(PART_ID, pa.int64(), False))
-        return pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+            arrays.append(pa.array(np.full(n_out, part_id, np.int64)))
+        return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
     def decode_stream(batches):
         for batch in batches:
             names = batch.schema.names
             part_arr = batch.column(names.index(PART_ID))
             nrows_arr = batch.column(names.index("n_rows"))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in read_cols}
+            blk_cols = {c: batch.column(_block_at(names, c))
+                        for c in dict.fromkeys(leaves + pcols)}
             st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in pred_columns(predicates)}
+                       for c in pcols}
             if row_window is not None:
                 run_arr = batch.column(names.index("run_id"))
                 seq_arr = batch.column(names.index("seq"))
@@ -399,64 +540,11 @@ def decode_table(
     back-compat); ``n_tasks`` optionally repartitions for parallelism
     when the blocks dataset has too few scan splits.
     """
-    import dataclasses
-
-    from pyspark.sql import functions as F, types as T
-
-    from . import nest
+    from pyspark.sql import functions as F
 
     meta = manifestmod.table_meta(spark, manifest_path)
-    all_cols = meta["columns"]  # flat storage names
-    logical = T.StructType.fromJson(
-        json.loads(meta.get("logical_schema_json") or meta["schema_json"]))
-    logical_by_name = {f.name: f for f in logical.fields}
-    out_logical = list(columns or [f.name for f in logical.fields])
-    unknown = set(out_logical) - set(logical_by_name)
-    if unknown:
-        # column resolution by name, unknown -> error (row_group_reader.rs:107-113)
-        raise KeyError(f"unknown columns {unknown}; encoded: "
-                       f"{list(logical_by_name)}")
-    # expand struct columns to their encoded leaves (engine/nest.py)
-    out_cols = []
-    for c in out_logical:
-        f = logical_by_name[c]
-        out_cols += nest.leaf_names(c, f.dataType, f.nullable)
-    predicates = ([] if predicate is None
-                  else predicate if isinstance(predicate, list) else [predicate])
-    read_cols = list(out_cols)
-
-    def _resolve_leaf_pred(p):
-        if p.column in all_cols:
-            return p
-        # dotted struct-leaf path ('meta.width') -> flat leaf name
-        leaf = nest.resolve_leaf(p.column, logical)
-        if leaf is None or leaf not in all_cols:
-            raise KeyError(f"predicate column {p.column} not encoded")
-        from .filters import replace_predicate
-
-        return replace_predicate(p, column=leaf)
-
-    resolved = []
-    for pred in predicates:
-        pred = pred.map_leaves(_resolve_leaf_pred)
-        resolved.append(pred)
-        for c in pred.columns:
-            if c not in read_cols:
-                read_cols.append(c)
-    predicates = resolved
-
-    schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
-    field_by_name = {f.name: f for f in schema.fields}
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_types = {}
-    out_fields = []
-    for c in out_cols:
-        t = field_by_name[c].dataType
-        out_types[c] = arrow_out_type(t, tz)
-        out_fields.append(T.StructField(c, t, True))
-    if include_part_id:
-        out_fields.append(T.StructField(PART_ID, T.LongType(), False))
-    out_schema = T.StructType(out_fields)
+    fields = output_fields(meta, columns)
+    predicates = resolve_predicates(predicate, meta)
 
     row_window = None
     if row_range is not None:
@@ -479,7 +567,7 @@ def decode_table(
         valid0 = manifestmod.valid_pairs_df(spark, manifest_path)
         if run_ids is not None:
             valid0 = valid0.filter(F.col("run_id").isin(list(run_ids)))
-        gmeta = (schema_read_blocks(spark, blocks_path, all_cols)
+        gmeta = (schema_read_blocks(spark, blocks_path, meta["columns"])
                  .select(PART_ID, "run_id", "seq", "n_rows"))
         if part_ids is not None:
             gmeta = gmeta.filter(
@@ -521,74 +609,17 @@ def decode_table(
             # pushed seq interval prunes non-overlapping groups at scan
             seq_range = (min(seqs_hit), max(seqs_hit))
 
-    # explicit leaf projection: only the requested block chunks (plus the
-    # predicate columns' stats strings) are in the ReadSchema — parquet
-    # never reads the other columns' bytes
-    proj = [F.col(PART_ID), F.col("run_id"), F.col("n_rows")]
-    if row_window is not None:
-        proj.append(F.col("seq"))
-    for c in read_cols:
-        proj.append(F.col("cols").getField(c).getField("block").alias(f"__blk_{c}"))
-    for c in pred_columns(predicates):
-        proj.append(
-            F.col("cols").getField(c).getField("stats").alias(f"__st_{c}"))
-    # schema from the manifest's merged column list (schema_read_blocks):
-    # appended runs may have added columns (schema evolution); groups
-    # from older runs read null struct leaves that decode null-fills
-    # below — same semantics as a mergeSchema footer sweep, without the
-    # per-call footer-merge job
-    blocks = schema_read_blocks(spark, blocks_path, all_cols)
-    if part_ids is not None:
-        # scan-level filter: pruning shows in PushedFilters and prunes
-        # row groups via part_id min/max stats
-        blocks = blocks.filter(F.col(PART_ID).isin([int(p) for p in part_ids]))
-    if run_ids is not None:
-        # incremental decode (streaming follower): only the named runs'
-        # blocks are read — pushed string filter prunes whole files
-        blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
-    if seq_range is not None:
-        # seq interval pushdown (mid-partition skip): tasks write groups
-        # in seq order, so parquet row-group min/max stats prune here too
-        blocks = blocks.filter(
-            (F.col("seq") >= int(seq_range[0])) & (F.col("seq") <= int(seq_range[1])))
-    blocks = blocks.select(*proj)
-    # JVM-side zone prefilter: the typed stats are real columns, so
-    # groups that provably cannot match a predicate (numeric range OR
-    # byte min/max-prefix bounds) are dropped BEFORE their block bytes
-    # cross the JVM->Python boundary (Python re-checks zones for
-    # everything that remains — this is an additional cut, never the
-    # only one).  Null stats (evolved columns, list columns)
-    # conservatively pass.
-    keeps = [k for k in (p.jvm_zone_keep_cols(lambda c: F.col(f"__st_{c}"))
-                         for p in predicates) if k is not None]
-    if keeps:
-        cond = keeps[0]
-        for k in keeps[1:]:
-            cond = cond & k
-        blocks = blocks.filter(cond)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    if part_ids is not None:
-        valid = valid.filter(F.col(PART_ID).isin([int(p) for p in part_ids]))
-    if run_ids is not None:
-        valid = valid.filter(F.col("run_id").isin(list(run_ids)))
-    blocks = blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+    blocks = _blocks_proj(spark, blocks_path, manifest_path,
+                          leaf_columns(fields), predicates, run_ids=run_ids,
+                          meta=meta, part_ids=part_ids, seq_range=seq_range)
     if n_tasks:
         blocks = blocks.repartition(n_tasks)
-    decoded = blocks.mapInArrow(
-        trimmed(_make_decoder(read_cols, out_cols, out_types, predicates,
-                      include_part_id, row_window)),
-        out_schema,
-    )
-    if any(nest.needs_flatten(logical_by_name[c].dataType)
-           for c in out_logical):
-        # reassemble struct/map/list<struct> columns from their leaves —
-        # pure JVM expressions, no Python node, no shuffle
-        sel = [
-            nest.rebuild_expr(c, logical_by_name[c].dataType,
-                              logical_by_name[c].nullable).alias(c)
-            for c in out_logical
-        ]
-        if include_part_id:
-            sel.append(F.col(PART_ID))
-        decoded = decoded.select(*sel)
-    return decoded
+    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
+    out_schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in fields]
+        + ([T.StructField(PART_ID, T.LongType(), False)]
+           if include_part_id else []))
+    return blocks.mapInArrow(
+        trimmed(_make_decoder(meta, fields, predicates, tz, include_part_id,
+                              row_window)),
+        out_schema)

@@ -38,6 +38,7 @@ from .partitioner import (
     DEFAULT_TARGET_PARTITION_BYTES,
     PART_COL,
     assign_partition_id,
+    bytes_below,
     cluster_partitions,
     estimate_bytes_fast,
     num_partitions,
@@ -392,7 +393,7 @@ _FSST_PREBUILD_MIN_BYTES = 64 << 20
 
 def _prebuild_fsst_tables(df_sel, columns: list[str],
                           codec_override: dict[str, str] | None,
-                          total_bytes: int | None = None) -> dict:
+                          total_bytes: int | None) -> dict:
     """Build FSST symbol tables ONCE on the driver from a bounded sample
     and ship them in the encoder closure — instead of once per task,
     where the pure-Python greedy construction measured 77% of encode
@@ -411,14 +412,22 @@ def _prebuild_fsst_tables(df_sel, columns: list[str],
     byte_cols = [f.name for f in df_sel.schema.fields
                  if f.name in set(columns)
                  and isinstance(f.dataType, (T.StringType, T.BinaryType))]
+    # small table: fsst can't pay for its table builds — keep only
+    # columns explicitly pinned to fsst
+    pinned = [c for c in byte_cols
+              if codec_override and codec_override.get(c) == "fsst"]
     if total_bytes is not None and total_bytes < _FSST_PREBUILD_MIN_BYTES:
-        # small table: fsst can't pay for its table builds — keep only
-        # columns explicitly pinned to fsst
-        byte_cols = [c for c in byte_cols
-                     if codec_override and codec_override.get(c) == "fsst"]
+        byte_cols = pinned
     if not byte_cols:
         return {}
     rows = df_sel.select(*byte_cols).limit(_FSST_SAMPLE_ROWS).collect()
+    if (total_bytes is None and byte_cols != pinned
+            and bytes_below(df_sel, byte_cols, _FSST_PREBUILD_MIN_BYTES,
+                            rows, _FSST_SAMPLE_ROWS)):
+        # explicit n_parts, resume or streaming: no partition-sizing
+        # estimate ran, so gate on the byte columns (the only ones fsst
+        # codes), sized from this sample
+        byte_cols = pinned
     jobs: dict[str, bytes] = {}
     for c in byte_cols:
         override = codec_override.get(c) if codec_override else None

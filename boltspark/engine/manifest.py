@@ -399,12 +399,3 @@ def valid_pairs_df(spark: SparkSession, manifest_path: str) -> DataFrame:
         .filter(F.col("column") != META_KEY)
         .select(PART_ID, "run_id").distinct()
     )
-
-
-def load(spark: SparkSession, manifest_path: str):
-    """Back-compat helper: (table_meta dict, sorted collected pairs).
-    Prefer ``table_meta`` + ``valid_pairs_df`` — this one collects."""
-    meta = table_meta(spark, manifest_path)
-    pairs = [(r[PART_ID], r["run_id"])
-             for r in valid_pairs_df(spark, manifest_path).collect()]
-    return meta, sorted(pairs)

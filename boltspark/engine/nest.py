@@ -3,8 +3,8 @@
 The reference's schema walker classifies List/Map/Struct nodes and
 tracks definition levels at depth (src/metadata/utils.rs:24-31,88-209;
 src/utils/rep_def_parser.rs:36-46).  boltspark's kernel layer encodes
-LEAF streams only — so struct columns are handled at the DataFrame
-level, where Spark does the work JVM-side:
+LEAF streams only — so nested columns are split into leaves before
+the kernels and rebuilt after them:
 
 * encode: ``struct<a,b>`` flattens to leaf columns ``s\\x1fa``/``s\\x1fb``
   (a plain ``select`` — no Python), each encoded like any other column
@@ -12,8 +12,9 @@ level, where Spark does the work JVM-side:
 * a hidden boolean leaf ``s\\x1f#defined`` records struct-level validity
   for NULLABLE structs, so a null struct and a struct of nulls decode
   back distinctly (the definition-level distinction at depth);
-* decode: leaves reassemble with ``F.struct`` under an ``F.when`` on
-  the validity leaf — pure JVM expressions, no extra shuffle;
+* decode: ``assemble`` rebuilds the logical column from its decoded
+  leaves as Arrow arrays inside the decode task (the validity leaf
+  masks null structs), so no shuffle and no rebuild expression follow;
 * predicates may target leaves by dotted path (``meta.width``), which
   resolves to the flat leaf name and pushes down exactly like a
   top-level column (zone-map skip + mask cascade).
@@ -24,6 +25,9 @@ level, where Spark does the work JVM-side:
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, functions as F, types as T
 
 SEP = "\x1f"
@@ -171,65 +175,85 @@ def leaf_names(name: str, dtype: T.DataType, nullable: bool) -> list[str]:
     return out
 
 
-def rebuild_expr(name: str, dtype: T.DataType, nullable: bool) -> Column:
-    """Expression reassembling one logical column from its decoded leaf
-    columns (pure JVM: struct/map_from_arrays/when/col — no Python
-    evaluation node)."""
+def _as(arr: pa.Array, target: pa.DataType) -> pa.Array:
+    return arr if arr.type.equals(target) else arr.cast(target)
+
+
+def _offsets(arr: pa.Array, onp: np.ndarray | None = None) -> pa.Array:
+    """int32 list offsets (``arr``'s own, or ``onp``), null where the
+    list row of ``arr`` is null — the final offset stays valid."""
+    if onp is None:
+        onp = np.asarray(arr.offsets)
+    mask = (np.append(~np.asarray(arr.is_valid()), False)
+            if arr.null_count else None)
+    return pa.array(onp, type=pa.int32(), mask=mask)
+
+
+def assemble(name: str, dtype: T.DataType, nullable: bool,
+             target: pa.DataType, leaves: dict) -> pa.Array:
+    """Decoded leaf arrays (flat leaf name -> Arrow array, all of the
+    same length) -> the logical column ``name`` as an Arrow array of
+    ``target`` — the inverse of ``flatten_exprs``, run inside the
+    decode task so no rebuild expression follows the Python node.
+
+    List leaves are re-wrapped through their raw ``values`` plus
+    ``offsets``: the pair stays consistent even for a sliced array
+    (``flatten()`` would compact the values and desync them)."""
     if isinstance(dtype, T.MapType):
-        return F.map_from_arrays(F.col(name + SEP + "#keys"),
-                                 F.col(name + SEP + "#vals"))
-    if (isinstance(dtype, T.ArrayType)
-            and isinstance(dtype.elementType, T.ArrayType)):
-        # re-slice the flattened stream by running offsets derived from
-        # the inner-lengths leaf (all JVM: aggregate/zip_with/slice).
-        # NULL length element = null inner list; NULL llen row (outer
-        # null) zips to NULL.
-        inner = dtype.elementType
-        llen = F.col(name + SEP + "#llen")
-        flat = F.col(name + SEP + "#lflat")
-        offs = F.aggregate(
-            llen,
-            F.array(F.lit(0)),
-            lambda acc, l: F.concat(acc, F.array(
-                F.element_at(acc, -1) + F.coalesce(l, F.lit(0)))),
-        )
-        starts = F.slice(offs, 1, F.size(llen))
-        out = F.zip_with(
-            llen, starts,
-            lambda l, o: F.when(l.isNull(), F.lit(None).cast(inner))
-            .otherwise(F.slice(flat, o + 1, l)),
-        )
-        return out.cast(dtype)
-    if (isinstance(dtype, T.ArrayType)
-            and isinstance(dtype.elementType, T.StructType)):
-        # parallel list leaves -> arrays_zip (aliases become zip field
-        # names) -> per-element struct rebuild; the #edef leaf restores
-        # null elements.  All-null leaves (null list row) zip to NULL.
-        est = dtype.elementType
-        zip_args = [F.col(name + SEP + "#elem" + SEP + f.name).alias(f"_f{i}")
-                    for i, f in enumerate(est.fields)]
+        # two aligned list leaves from one encode: vals shares the keys
+        # leaf's offsets, and a NULL map is a NULL list in both
+        # (map_keys(NULL) IS NULL), so the keys leaf's validity is the map's
+        keys = leaves[name + SEP + "#keys"]
+        vals = leaves[name + SEP + "#vals"]
+        if len(keys.values) != len(vals.values):
+            raise ValueError(
+                f"misaligned map leaves for {name!r}: "
+                f"{len(keys.values)} keys vs {len(vals.values)} values")
+        out = pa.MapArray.from_arrays(_offsets(keys), keys.values, vals.values)
+    elif (isinstance(dtype, T.ArrayType)
+          and isinstance(dtype.elementType, T.ArrayType)):
+        # inner lists re-slice the flattened stream by the cumulative
+        # inner lengths; the lengths leaf's own offsets are the outer's
+        llen = leaves[name + SEP + "#llen"]
+        flat = leaves[name + SEP + "#lflat"]
+        lens = llen.values  # a null length = a null inner list
+        starts = np.zeros(len(lens) + 1, dtype=np.int32)
+        np.cumsum(np.asarray(lens.fill_null(0), dtype=np.int32),
+                  out=starts[1:])
+        inner = pa.ListArray.from_arrays(
+            _offsets(lens, starts),
+            _as(flat.values, target.value_type.value_type))
+        out = pa.ListArray.from_arrays(_offsets(llen), inner)
+    elif (isinstance(dtype, T.ArrayType)
+          and isinstance(dtype.elementType, T.StructType)):
+        # parallel field leaves sharing one offsets stream; the 0/1
+        # #edef leaf restores null elements
+        elem_t = target.value_type
+        fields = [leaves[name + SEP + "#elem" + SEP + f.name]
+                  for f in dtype.elementType.fields]
+        base, mask = fields[0], None
         if dtype.containsNull:
-            zip_args.append(F.col(name + SEP + "#edef").alias("_d"))
-        z = F.arrays_zip(*zip_args)
-
-        def _elem(x):
-            inner = F.struct(*[x[f"_f{i}"].alias(f.name)
-                               for i, f in enumerate(est.fields)])
-            return (F.when(x["_d"] == 1, inner)
-                    if dtype.containsNull else inner)
-
-        return F.transform(z, _elem).cast(dtype)
-    if not isinstance(dtype, T.StructType):
-        return F.col(name)
-    inner = F.struct(*[
-        rebuild_expr(name + SEP + f.name, f.dataType, f.nullable or nullable)
-        .alias(f.name)
-        for f in dtype.fields
-    ])
-    if nullable:
-        return F.when(F.col(name + DEFINED), inner).otherwise(
-            F.lit(None).cast(dtype))
-    return inner
+            base = leaves[name + SEP + "#edef"]
+            mask = pc.equal(base.values, 0)
+        elems = pa.StructArray.from_arrays(
+            [_as(fa.values, f.type) for f, fa in zip(elem_t, fields)],
+            fields=list(elem_t), mask=mask)
+        out = pa.ListArray.from_arrays(_offsets(base), elems)
+    elif isinstance(dtype, T.StructType):
+        children = [
+            assemble(name + SEP + f.name, f.dataType, f.nullable or nullable,
+                     t.type, leaves)
+            for f, t in zip(dtype.fields, target)
+        ]
+        mask = None
+        if nullable:
+            # a NULL #defined (a group predating the column) = NULL struct
+            mask = pc.invert(leaves[name + DEFINED]).fill_null(True)
+        return pa.StructArray.from_arrays(children, fields=list(target),
+                                          mask=mask)
+    else:
+        return leaves[name]
+    return _as(out, target)
 
 
 def resolve_leaf(path: str, schema: T.StructType) -> str | None:

@@ -50,20 +50,69 @@ def estimate_bytes_fast(df: DataFrame, columns: list[str],
     return int(n * per_row)
 
 
+def bytes_below(df: DataFrame, columns: list[str], limit_bytes: int,
+                head: list, head_rows: int) -> bool:
+    """Whether the string/binary ``columns`` of ``df`` hold fewer than
+    ``limit_bytes`` bytes, decided without a full count — the size gate
+    of encodes that run no ``estimate_bytes_fast`` (explicit n_parts,
+    resume, streaming).  ``head`` is the caller's ``limit(head_rows)``
+    sample of ``columns``; a shorter one is the whole input.  Otherwise
+    mean row bytes come from the evenly spaced file slices
+    ``estimate_bytes_fast`` reads (the head when ``df`` is not a parquet
+    scan), and rows are counted only until they reach the limit: from
+    the input files' footers on the driver for a local parquet scan (an
+    upper bound when ``df`` filters rows), else by a ``limit`` count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    head_bytes = sum(len(v.encode("utf-8")) if isinstance(v, str) else len(v)
+                     for r in head for v in r if v is not None)
+    if len(head) < head_rows:
+        return head_bytes < limit_bytes
+    per_row = _per_row_bytes_from_files(df, columns, head_rows)
+    if per_row is None:
+        per_row = head_bytes / len(head)
+    if per_row <= 0:
+        return True
+    need = int(limit_bytes // per_row) + 1
+    try:
+        files = df.inputFiles()
+    except Exception:
+        files = []
+    paths = _local_parquet_files(files)
+    if paths and len(paths) == len(files):
+        rows = 0
+        try:
+            for p in paths:
+                rows += pq.ParquetFile(p).metadata.num_rows
+                if rows >= need:
+                    return False
+            return True
+        except (OSError, pa.ArrowInvalid):
+            pass  # unreadable footer: count through Spark instead
+    return df.limit(need).count() < need
+
+
+def _local_parquet_files(files: list[str]) -> list[str]:
+    """The local parquet files among ``files`` (``df.inputFiles()``),
+    sorted, as plain paths."""
+    paths = []
+    for f in sorted(f for f in files if f.endswith(".parquet")):
+        if f.startswith("file:"):
+            paths.append("/" + f.split(":", 1)[1].lstrip("/"))
+        elif "://" not in f:
+            paths.append(f)
+    return paths
+
+
 def _per_row_bytes_from_files(df: DataFrame, columns: list[str],
                               sample_rows: int) -> float | None:
     """Mean logical row bytes from bounded slices of evenly spaced
     parquet input files; None when the plan isn't a local parquet scan."""
     try:
-        files = [f for f in df.inputFiles() if f.endswith(".parquet")]
+        paths = _local_parquet_files(df.inputFiles())
     except Exception:
         return None
-    paths = []
-    for f in sorted(files):
-        if f.startswith("file:"):
-            paths.append("/" + f.split(":", 1)[1].lstrip("/"))
-        elif "://" not in f:
-            paths.append(f)
     if not paths:
         return None
     import pyarrow.parquet as pq
@@ -156,7 +205,7 @@ def shuffle_preimages(n_parts: int) -> np.ndarray:
     ``repartition(P, col)`` places rows by ``pmod(murmur3(col), P)``;
     hashing the partition id itself throws 61 balls into 61 bins —
     ~37% of reduce tasks sit idle while the unlucky ones encode 2-4
-    partitions (the straggler tail measured in bench/ab_r06.py).
+    partitions (the straggler tail recorded in OPTIMIZATION_r06.md §1).
     Shuffling on ``preimages[part_id]`` instead makes the placement a
     bijection: every partition gets its own reduce task, deterministic
     and independent of the data.  Pure driver-side numpy, O(P) work.

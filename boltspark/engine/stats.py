@@ -229,36 +229,17 @@ def explain_scan(spark: SparkSession, blocks_path: str, manifest_path: str,
     after its first predicate column's mask, so 'open' is the decoder's
     upper bound, not its exact cost.  Returns one row per verdict:
     (verdict, n_groups, n_rows)."""
-    import json
-
     import pyarrow as pa
     from pyspark.sql import types as T
 
-    from . import nest
-    from .filters import pred_columns, replace_predicate
+    from .decode import resolve_predicates
+    from .filters import pred_columns
     from .memutil import trimmed
 
-    predicates = ([] if predicate is None
-                  else predicate if isinstance(predicate, list)
-                  else [predicate])
     meta = manifestmod.table_meta(spark, manifest_path)
-    if predicates:
-        # dotted struct-leaf paths resolve to flat leaf names exactly as
-        # decode_table resolves them — explain must accept every
-        # predicate the decode it predicts accepts
-        all_cols = set(meta["columns"])
-        logical = T.StructType.fromJson(json.loads(
-            meta.get("logical_schema_json") or meta["schema_json"]))
-
-        def _resolve(p):
-            if p.column in all_cols:
-                return p
-            leaf = nest.resolve_leaf(p.column, logical)
-            if leaf is None or leaf not in all_cols:
-                raise KeyError(f"predicate column {p.column} not encoded")
-            return replace_predicate(p, column=leaf)
-
-        predicates = [p.map_leaves(_resolve) for p in predicates]
+    # the resolver decode_table uses: explain accepts every predicate
+    # the decode it predicts accepts
+    predicates = resolve_predicates(predicate, meta)
     cols = pred_columns(predicates)
     proj = [F.col(PART_ID), F.col("run_id"), F.col("n_rows")]
     for c in cols:

@@ -107,9 +107,9 @@ def build_symbol_table_best(sample: bytes,
     (engine/encode._prebuild_fsst_tables) and shipped in the encoder
     closure — the pure-Python greedy passes measured 77% of a task's
     encode CPU when every task rebuilt them.  Candidates (3, 4): the
-    g=2 candidate never won on the corpus columns (bench/ab_r06
-    measurements) and dropping it cuts the build's greedy passes from
-    9 to 7."""
+    g=2 candidate never won on the corpus columns (measurements in
+    OPTIMIZATION_r06.md) and dropping it cuts the build's greedy passes
+    from 9 to 7."""
     if not sample:
         return []
     best_table: list[bytes] = []

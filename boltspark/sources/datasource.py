@@ -21,8 +21,12 @@ for Python, Spark 4.x):
 * column pruning via ``.option("columns", "a,b")`` (the Python DSv2
   API does not yet hand the pruned schema to the reader).
 
-The primary engine path remains ``engine.decode_table`` (broadcast
-manifest join, no driver-side pair set); this source trades that for
+Each file's block groups run through the decoder ``decode_table``
+uses (the same cascade, late materialization and nested-column
+assembly); only the file listing, the pyarrow read and the valid-pair
+filter are this source's own.  The primary engine path remains
+``engine.decode_table`` (broadcast manifest join, no driver-side pair
+set); this source trades that for
 Spark-native ergonomics and is sized for manifests that fit the driver
 (documented).
 
@@ -162,49 +166,21 @@ def _to_predicate(f: Filter):
 class BoltReader(DataSourceReader):
     def __init__(self, blocks_path: str, manifest_path: str,
                  columns: list[str] | None):
-        from pyspark.sql.types import StructType as ST
-
-        from ..engine import nest
+        from ..engine import decode as dec
 
         self.blocks_path = blocks_path
         self.meta, self.valid_pairs = _read_manifest(manifest_path)
-        all_flat = self.meta["columns"]
-        self.logical = ST.fromJson(json.loads(
-            self.meta.get("logical_schema_json") or self.meta["schema_json"]))
-        by_name = {f.name: f for f in self.logical.fields}
-        self.out_cols = [c for c in (columns or list(by_name))]
-        unknown = set(self.out_cols) - set(by_name)
-        if unknown:
-            raise KeyError(f"unknown columns {unknown}; encoded: {list(by_name)}")
-        # flat storage leaves backing the logical projection
-        self.out_leaves = []
-        for c in self.out_cols:
-            f = by_name[c]
-            self.out_leaves += nest.leaf_names(c, f.dataType, f.nullable)
-        self.logical_by_name = by_name
-        self.all_flat = set(all_flat)
+        self.fields = dec.output_fields(self.meta, columns)
         self.predicates = []
 
     def pushFilters(self, filters):
-        import dataclasses
-
-        from ..engine import nest
-
-        def _resolve(p):
-            if p.column in self.all_flat:
-                return p
-            leaf = nest.resolve_leaf(p.column, self.logical)
-            if leaf is None or leaf not in self.all_flat:
-                raise KeyError(p.column)
-            from ..engine.filters import replace_predicate
-
-            return replace_predicate(p, column=leaf)
+        from ..engine import decode as dec
 
         for f in filters:
             pred = _to_predicate(f)
             if pred is not None:
                 try:
-                    pred = pred.map_leaves(_resolve)
+                    pred = dec.resolve_predicates(pred, self.meta)[0]
                 except KeyError:
                     pred = None
             if pred is not None:
@@ -224,239 +200,61 @@ class BoltReader(DataSourceReader):
         yield from trimmed(self._read)(partition)
 
     def _read(self, partition):
+        """One blocks file -> logical batches, through the decoder
+        ``decode_table`` runs: this file's groups are renamed to the
+        ``_blocks_proj`` frame layout (``__blk_``/``__pblk_``/``__st_``)
+        and fed to it."""
         import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql.types import StructType as ST
 
         from ..engine import decode as dec
-        from ..engine import nest
+        from ..engine.filters import pred_columns
 
-        flat_schema = ST.fromJson(json.loads(self.meta["schema_json"]))
-        flat_by_name = {f.name: f for f in flat_schema.fields}
-        out_types = {c: dec.arrow_out_type(flat_by_name[c].dataType, "UTC")
-                     for c in self.out_leaves}
-        logical_types = {c: dec.arrow_out_type(
-            self.logical_by_name[c].dataType, "UTC") for c in self.out_cols}
-
-        def assemble(name, dtype, nullable, leaves: dict):
-            """Leaf arrays -> logical array (recursive struct/map/
-            list<struct> rebuild)."""
-            import numpy as np
-            from pyspark.sql.types import (ArrayType as _AT, MapType as _MT,
-                                           StructType as _ST)
-
-            def _comb(a):
-                return a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a
-
-            if isinstance(dtype, _AT) and isinstance(dtype.elementType, _AT):
-                # list<list<T>> stored as (inner lengths, flattened
-                # stream) leaves: rebuild the inner ListArray from
-                # cumulative lengths (null length = null inner list),
-                # then re-wrap with the lengths leaf's outer offsets.
-                import pyarrow.compute as pc
-
-                target = dec.arrow_out_type(dtype, "UTC")
-                llen = _comb(leaves[name + nest.SEP + "#llen"])
-                flat = _comb(leaves[name + nest.SEP + "#lflat"])
-                lens = llen.values
-                lens_np = np.asarray(pc.fill_null(lens, 0),
-                                     dtype=np.int64)
-                in_offs = np.zeros(len(lens_np) + 1, dtype=np.int32)
-                np.cumsum(lens_np, out=in_offs[1:], dtype=np.int32)
-                if lens.null_count:
-                    lvalid = np.asarray(lens.is_valid())
-                    in_off_arr = pa.array(in_offs, type=pa.int32(),
-                                          mask=np.append(~lvalid, False))
-                else:
-                    in_off_arr = pa.array(in_offs, type=pa.int32())
-                elem_t = target.value_type.value_type
-                ch = flat.values
-                if not ch.type.equals(elem_t):
-                    ch = ch.cast(elem_t)
-                inner_arr = pa.ListArray.from_arrays(in_off_arr, ch)
-                onp = np.asarray(llen.offsets)
-                if llen.null_count:
-                    valid = np.asarray(llen.is_valid())
-                    offsets = pa.array(onp, type=pa.int32(),
-                                       mask=np.append(~valid, False))
-                else:
-                    offsets = pa.array(onp, type=pa.int32())
-                out = pa.ListArray.from_arrays(offsets, inner_arr)
-                return out if out.type.equals(target) else out.cast(target)
-            if isinstance(dtype, _AT) and isinstance(dtype.elementType, _ST):
-                # list<struct> stored as parallel list leaves sharing one
-                # offsets stream (engine/nest.py): rebuild a StructArray
-                # from the flattened field leaves, then re-wrap with the
-                # first leaf's offsets.  The #edef leaf (0/1) restores
-                # null elements.
-                est = dtype.elementType
-                target = dec.arrow_out_type(dtype, "UTC")
-                elem_t = target.value_type
-                field_arrs = [_comb(leaves[name + nest.SEP + "#elem"
-                                           + nest.SEP + f.name])
-                              for f in est.fields]
-                mask = None
-                base = field_arrs[0]
-                if dtype.containsNull:
-                    import pyarrow.compute as pc
-
-                    ed = _comb(leaves[name + nest.SEP + "#edef"])
-                    base = ed
-                    mask = pc.equal(ed.values, 0)
-                children = []
-                for f_t, fa in zip(list(elem_t), field_arrs):
-                    ch = fa.values
-                    if not ch.type.equals(f_t.type):
-                        ch = ch.cast(f_t.type)
-                    children.append(ch)
-                struct_arr = pa.StructArray.from_arrays(
-                    children, fields=list(elem_t), mask=mask)
-                onp = np.asarray(base.offsets)
-                if base.null_count:
-                    valid = np.asarray(base.is_valid())
-                    offsets = pa.array(onp, type=pa.int32(),
-                                       mask=np.append(~valid, False))
-                else:
-                    offsets = pa.array(onp, type=pa.int32())
-                out = pa.ListArray.from_arrays(offsets, struct_arr)
-                return out if out.type.equals(target) else out.cast(target)
-            if isinstance(dtype, _MT):
-                # map stored as two aligned list leaves (engine/nest.py):
-                # rebuild a MapArray from the keys list's offsets + both
-                # flattened child arrays.  A null map is a null list in
-                # BOTH leaves (encode used map_keys/map_values, which are
-                # NULL on NULL input), so keys-side validity is the map's.
-                keys = leaves[name + nest.SEP + "#keys"]
-                vals = leaves[name + nest.SEP + "#vals"]
-                if isinstance(keys, pa.ChunkedArray):
-                    keys = keys.combine_chunks()
-                if isinstance(vals, pa.ChunkedArray):
-                    vals = vals.combine_chunks()
-                # raw child + raw offsets form a consistent pair even when
-                # the array is a slice (flatten() would compact values and
-                # desync from .offsets); vals shares keys' offsets layout
-                # because both leaves come from one aligned encode
-                k_flat, v_flat = keys.values, vals.values
-                if len(k_flat) != len(v_flat):
-                    raise ValueError(
-                        f"misaligned map leaves for {name!r}: "
-                        f"{len(k_flat)} keys vs {len(v_flat)} values")
-                onp = np.asarray(keys.offsets)
-                if keys.null_count:
-                    # null offset entries mark null maps (last offset valid)
-                    valid = np.asarray(keys.is_valid())
-                    offsets = pa.array(onp, type=pa.int32(),
-                                       mask=np.append(~valid, False))
-                else:
-                    offsets = pa.array(onp, type=pa.int32())
-                target = dec.arrow_out_type(dtype, "UTC")
-                m = pa.MapArray.from_arrays(offsets, k_flat, v_flat)
-                return m if m.type.equals(target) else m.cast(target)
-            if not isinstance(dtype, _ST):
-                return leaves[name]
-            children = [
-                assemble(name + nest.SEP + f.name, f.dataType,
-                         f.nullable or nullable, leaves)
-                for f in dtype.fields
-            ]
-            target = dec.arrow_out_type(dtype, "UTC")
-            fields = list(target)
-            mask = None
-            if nullable:
-                import pyarrow.compute as pc
-
-                valid = leaves[name + nest.DEFINED]
-                mask = pc.invert(valid.combine_chunks() if isinstance(
-                    valid, pa.ChunkedArray) else valid)
-                if mask.null_count:
-                    mask = mask.fill_null(True)
-            return pa.StructArray.from_arrays(
-                children, fields=fields, mask=mask)
-
-        read_cols = list(self.out_leaves)
-        for p in self.predicates:
-            for c in p.columns:
-                if c not in read_cols:
-                    read_cols.append(c)
+        pcols = pred_columns(self.predicates)
+        out_cols = dec.leaf_columns(self.fields)
+        read_cols = out_cols + [c for c in pcols if c not in out_cols]
         pf = pq.ParquetFile(partition.value)
         # schema evolution: this file's run may predate some columns
         file_cols = {f.name for f in pf.schema_arrow.field("cols").type}
-        present = [c for c in read_cols if c in file_cols]
         for p in self.predicates:
             if getattr(p, "children", None) is not None:
-                continue  # composites: judged per block group below
+                continue  # composites: judged per block group
             if p.column not in file_cols and not p.null_allowed:
                 return  # whole-file skip: the column is all-null here
-        cols = ["part_id", "run_id", "n_rows"] + [f"cols.{c}" for c in present]
-        for batch in pf.iter_batches(batch_size=16, columns=cols):
-            names = batch.schema.names
-            part_arr = batch.column(names.index("part_id"))
-            run_arr = batch.column(names.index("run_id"))
-            nrows_arr = batch.column(names.index("n_rows"))
-            if "cols" in names:  # selection kept the struct nested
-                cols_arr = batch.column(names.index("cols"))
-                structs = {c: cols_arr.field(c) for c in present}
-            else:  # selection flattened the struct leaves to top level
-                structs = {c: batch.column(names.index(c)) for c in present}
+        present = [c for c in dict.fromkeys(read_cols) if c in file_cols]
+        leaves = ([f"cols.{c}.block" for c in present]
+                  + [f"cols.{c}.stats" for c in pcols if c in file_cols])
+        group_cols = ["part_id", "run_id", "n_rows"]
+        names = (group_cols + [f"__blk_{c}" for c in out_cols]
+                 + [f"__pblk_{c}" for c in read_cols[len(out_cols):]]
+                 + [f"__st_{c}" for c in pcols])
 
-            # mirror engine decode_row's rules exactly (absent column =
-            # all-null; composites recurse per child)
-            def _blk_of(c, j, structs=structs):
-                leaf = structs.get(c)
-                if leaf is None or not leaf[j].is_valid:
-                    return None
-                return leaf[j]["block"]
+        def renamed(batches):
+            for batch in batches:
+                keep = [pair in self.valid_pairs for pair in zip(
+                    batch.column("part_id").to_pylist(),
+                    batch.column("run_id").to_pylist())]
+                batch = batch.filter(pa.array(keep, pa.bool_()))
+                n = batch.num_rows
+                # flatten() folds each parent struct's nulls (a group
+                # whose run predates the column) into its children
+                cols = {}
+                if present:
+                    top = batch.column("cols")
+                    for f, col in zip(top.type, top.flatten()):
+                        cols[f.name] = {g.name: a for g, a in
+                                        zip(col.type, col.flatten())}
+                arrays = ([batch.column(c) for c in group_cols]
+                          + [cols[c]["block"] if c in cols
+                             else pa.nulls(n, pa.binary()) for c in read_cols]
+                          + [cols[c]["stats"] if c in cols else pa.nulls(n)
+                             for c in pcols])
+                yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-            def _st_of(c, j, structs=structs):
-                return structs[c][j]["stats"].as_py() or {}
-
-            for i in range(batch.num_rows):
-                if (part_arr[i].as_py(), run_arr[i].as_py()) not in self.valid_pairs:
-                    continue  # orphan blocks from a crashed run
-                mask = None
-                dead = False
-                for pred in self.predicates:
-                    verdict, pmask = dec.eval_group_predicate(
-                        pred, _blk_of, _st_of, i)
-                    if verdict == "none":
-                        dead = True
-                        break
-                    if pmask is not None:
-                        mask = pmask if mask is None else (mask & pmask)
-                        if not mask.any():
-                            dead = True
-                            break
-                if dead:
-                    continue
-                leaf_arrays = {}
-                for name in self.out_leaves:
-                    from ..kernels import block as blockmod
-
-                    target = out_types[name]
-                    if name not in structs or not structs[name][i].is_valid:
-                        # evolved column: null-fill for pre-evolution rows
-                        n_out = int(mask.sum()) if mask is not None \
-                            else nrows_arr[i].as_py()
-                        leaf_arrays[name] = pa.nulls(n_out, target)
-                        continue
-                    values, validity, tag, _, _ = blockmod.decode_block(
-                        structs[name][i]["block"].as_py())
-                    arr = dec._to_arrow_full(values, validity, tag, target)
-                    if mask is not None:
-                        arr = arr.filter(pa.array(mask))
-                    if not arr.type.equals(target):
-                        arr = arr.cast(target)
-                    leaf_arrays[name] = arr
-                arrays = [
-                    assemble(c, self.logical_by_name[c].dataType,
-                             self.logical_by_name[c].nullable, leaf_arrays)
-                    for c in self.out_cols
-                ]
-                if arrays and len(arrays[0]):
-                    yield pa.RecordBatch.from_arrays(
-                        arrays, schema=pa.schema(
-                            [pa.field(c, logical_types[c], True)
-                             for c in self.out_cols]))
+        decoder = dec._make_decoder(self.meta, self.fields, self.predicates,
+                                    "UTC")
+        yield from decoder(renamed(pf.iter_batches(
+            batch_size=16, columns=group_cols + leaves)))
 
 
 class BoltDataSource(DataSource):
@@ -464,23 +262,22 @@ class BoltDataSource(DataSource):
     def name(cls) -> str:
         return "boltspark"
 
+    def _columns(self) -> list[str] | None:
+        cols = self.options.get("columns")
+        return [c.strip() for c in cols.split(",")] if cols else None
+
     def schema(self) -> StructType:
+        from ..engine.decode import output_fields
+
         manifest = self.options.get("manifest")
         if not manifest:
             raise ValueError("boltspark source requires .option('manifest', path)")
         meta, _ = _read_manifest(manifest)
-        full = StructType.fromJson(json.loads(
-            meta.get("logical_schema_json") or meta["schema_json"]))
-        cols = self.options.get("columns")
-        if cols:
-            wanted = [c.strip() for c in cols.split(",")]
-            return StructType([f for c in wanted for f in full.fields if f.name == c])
-        return full
+        return StructType(output_fields(meta, self._columns()))
 
     def reader(self, schema: StructType) -> BoltReader:
-        cols = self.options.get("columns")
-        columns = [c.strip() for c in cols.split(",")] if cols else None
-        return BoltReader(self.options["path"], self.options["manifest"], columns)
+        return BoltReader(self.options["path"], self.options["manifest"],
+                          self._columns())
 
 
 def load(spark, blocks_path: str, manifest_path: str,

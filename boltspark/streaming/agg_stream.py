@@ -28,11 +28,13 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..engine import agg as aggmod
 from ..engine import manifest as manifestmod
+from ..engine.decode import resolve_predicates
 from ..engine.manifest import _MANIFEST_SCHEMA, META_KEY
 from ..engine.schema import PART_ID
 
 
 def _manifest_stream(spark, manifest_path: str):
+    """The manifest directory as a stream of committed runs."""
     return (spark.readStream.schema(_MANIFEST_SCHEMA)
             .parquet(manifest_path)
             .filter(f"column = '{META_KEY}'"))  # one row per committed run
@@ -54,23 +56,37 @@ def sum_stream(
     exact unscaled decimal(38,0) partials (``_sum_dec_partials``) —
     the incremental total stays digit-exact, same as batch
     ``column_sum``."""
-    predicates = aggmod._normalize_predicates(predicate)
     dec = _decimal_scale(spark, manifest_path, column) is not None
+    build = aggmod._sum_dec_partials if dec else aggmod._sum_partials
+    return _start(_manifest_stream(spark, manifest_path),
+                  _per_run(spark, blocks_path, manifest_path, [column],
+                           predicate, out_path, build),
+                  checkpoint_path, trigger_seconds)
+
+
+def _per_run(spark, blocks_path: str, manifest_path: str, columns: list[str],
+             predicate, out_path: str, build):
+    """The foreachBatch handler of every streaming aggregate: for each
+    run an epoch delivers, ``build(blocks, predicates)`` over that
+    run's ``columns`` overwrites the run's sink partition.  Predicates
+    resolve once per epoch against the manifest as committed then, so
+    one on a column a later run adds works once that run lands."""
 
     def handle(batch_df, epoch_id: int) -> None:
         runs = sorted(r["run_id"] for r in
                       batch_df.select("run_id").distinct().collect())
+        if not runs:
+            return
+        meta = manifestmod.table_meta(spark, manifest_path)
+        predicates = resolve_predicates(predicate, meta)
         for run in runs:
             blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, [column], predicates,
-                run_ids=[run])
-            partials = (aggmod._sum_dec_partials(blocks, predicates) if dec
-                        else aggmod._sum_partials(blocks, predicates))
-            partials.write.mode("overwrite").parquet(
+                spark, blocks_path, manifest_path, columns, predicates,
+                run_ids=[run], meta=meta)
+            build(blocks, predicates).write.mode("overwrite").parquet(
                 f"{out_path}/run_id={run}")
 
-    return _start(_manifest_stream(spark, manifest_path), handle,
-                  checkpoint_path, trigger_seconds)
+    return handle
 
 
 def _decimal_scale(spark, manifest_path: str, column: str) -> int | None:
@@ -113,22 +129,12 @@ def value_counts_stream(
     """readStream(manifest) -> per-run (part_id, value, cnt) partial
     histograms -> parquet sink keyed by run.  Read the running GROUP BY
     with ``read_value_counts``.  Returns the StreamingQuery."""
-    predicates = aggmod._normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    vtype = aggmod._fields(meta)[column]
-
-    def handle(batch_df, epoch_id: int) -> None:
-        runs = sorted(r["run_id"] for r in
-                      batch_df.select("run_id").distinct().collect())
-        for run in runs:
-            blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, [column], predicates,
-                run_ids=[run])
-            partials = aggmod._vc_partials(spark, blocks, predicates, vtype)
-            partials.write.mode("overwrite").parquet(
-                f"{out_path}/run_id={run}")
-
-    return _start(_manifest_stream(spark, manifest_path), handle,
+    vtype = aggmod._fields(manifestmod.table_meta(spark, manifest_path))[column]
+    return _start(_manifest_stream(spark, manifest_path),
+                  _per_run(spark, blocks_path, manifest_path, [column],
+                           predicate, out_path,
+                           lambda b, preds: aggmod._vc_partials(
+                               spark, b, preds, vtype)),
                   checkpoint_path, trigger_seconds)
 
 
@@ -168,20 +174,10 @@ def distinct_stream(
     folds n_runs x n_parts constant-size rows.  Exactly-once per run by
     the same run-keyed overwrite contract as sum_stream.  Returns the
     StreamingQuery."""
-    predicates = aggmod._normalize_predicates(predicate)
-
-    def handle(batch_df, epoch_id: int) -> None:
-        runs = sorted(r["run_id"] for r in
-                      batch_df.select("run_id").distinct().collect())
-        for run in runs:
-            blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, [column], predicates,
-                run_ids=[run])
-            partials = aggmod._hll_partials(blocks, predicates, p)
-            partials.write.mode("overwrite").parquet(
-                f"{out_path}/run_id={run}")
-
-    return _start(_manifest_stream(spark, manifest_path), handle,
+    return _start(_manifest_stream(spark, manifest_path),
+                  _per_run(spark, blocks_path, manifest_path, [column],
+                           predicate, out_path,
+                           lambda b, preds: aggmod._hll_partials(b, preds, p)),
                   checkpoint_path, trigger_seconds)
 
 
@@ -217,20 +213,11 @@ def quantile_stream(
     rows into current percentiles without rescanning old runs.
     Exactly-once per run by the same run-keyed overwrite contract as
     sum_stream.  Returns the StreamingQuery."""
-    predicates = aggmod._normalize_predicates(predicate)
-
-    def handle(batch_df, epoch_id: int) -> None:
-        runs = sorted(r["run_id"] for r in
-                      batch_df.select("run_id").distinct().collect())
-        for run in runs:
-            blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, [column], predicates,
-                run_ids=[run])
-            partials = aggmod._quantile_partials(blocks, predicates, k, task_k)
-            partials.write.mode("overwrite").parquet(
-                f"{out_path}/run_id={run}")
-
-    return _start(_manifest_stream(spark, manifest_path), handle,
+    return _start(_manifest_stream(spark, manifest_path),
+                  _per_run(spark, blocks_path, manifest_path, [column],
+                           predicate, out_path,
+                           lambda b, preds: aggmod._quantile_partials(
+                               b, preds, k, task_k)),
                   checkpoint_path, trigger_seconds)
 
 
@@ -272,23 +259,14 @@ def grouped_sum_stream(
         raise NotImplementedError(
             "grouped_sum_stream over decimal value columns is not "
             "supported; use batch grouped_sum or sum_stream per group")
-    predicates = aggmod._normalize_predicates(predicate)
     gtype = aggmod._fields(
         manifestmod.table_meta(spark, manifest_path))[group_column]
     out_t = aggmod._arrow_type(spark, gtype)
-
-    def handle(batch_df, epoch_id: int) -> None:
-        runs = sorted(r["run_id"] for r in
-                      batch_df.select("run_id").distinct().collect())
-        for run in runs:
-            blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path,
-                [group_column, value_column], predicates, run_ids=[run])
-            partials = aggmod._gsum_partials(blocks, predicates, gtype, out_t)
-            partials.write.mode("overwrite").parquet(
-                f"{out_path}/run_id={run}")
-
-    return _start(_manifest_stream(spark, manifest_path), handle,
+    return _start(_manifest_stream(spark, manifest_path),
+                  _per_run(spark, blocks_path, manifest_path,
+                           [group_column, value_column], predicate, out_path,
+                           lambda b, preds: aggmod._gsum_partials(
+                               b, preds, gtype, out_t)),
                   checkpoint_path, trigger_seconds)
 
 

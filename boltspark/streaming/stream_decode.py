@@ -17,7 +17,7 @@ appending duplicates.  Readers just ``spark.read.parquet(out_path)``
 from __future__ import annotations
 
 from ..engine import decode as decodemod
-from ..engine.manifest import _MANIFEST_SCHEMA, META_KEY
+from .agg_stream import _manifest_stream, _start
 
 
 def decode_stream(
@@ -31,9 +31,6 @@ def decode_stream(
 ):
     """readStream(manifest) -> per-run incremental decode -> parquet sink.
     Returns the StreamingQuery."""
-    man = (spark.readStream.schema(_MANIFEST_SCHEMA)
-           .parquet(manifest_path)
-           .filter(f"column = '{META_KEY}'"))  # one row per committed run
 
     def handle(batch_df, epoch_id: int) -> None:
         runs = sorted(r["run_id"] for r in
@@ -44,11 +41,5 @@ def decode_stream(
                 columns=columns, run_ids=[run])
             out.write.mode("overwrite").parquet(f"{out_path}/run_id={run}")
 
-    writer = (
-        man.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(_manifest_stream(spark, manifest_path), handle,
+                  checkpoint_path, trigger_seconds)

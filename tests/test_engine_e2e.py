@@ -1135,3 +1135,32 @@ def test_validate_table_crc_sample_reaches_last_file(spark, tmp_path):
     rep = validate_table(spark, f"{d}/b", f"{d}/m", crc_sample=8,
                          crc_seed=hit_seed)
     assert any("corrupt block" in e and "col=text" in e for e in rep["errors"])
+
+
+def test_small_explicit_n_parts_encode_skips_fsst_prebuild(spark, tmp_path,
+                                                           monkeypatch):
+    """The small-input gate on the driver-side FSST table build applies
+    when ``n_parts`` is given too: a small encode builds no table unless
+    a column is pinned with codec_override='fsst'."""
+    from boltspark.engine import encode as encmod
+
+    built = []
+    orig = encmod._prebuild_fsst_tables
+
+    def spy(*a, **kw):
+        built.append(orig(*a, **kw))
+        return built[-1]
+
+    monkeypatch.setattr(encmod, "_prebuild_fsst_tables", spy)
+    df = spark.range(2000).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("the quick brown fox "), F.col("id") % 50,
+                 F.lit(" jumps over the lazy dog")).alias("s"))
+    d = str(tmp_path)
+    encode_table(df, f"{d}/b1", f"{d}/m1", key_cols=("k",), n_parts=4,
+                 resume=False)
+    encode_table(df, f"{d}/b2", f"{d}/m2", key_cols=("k",), n_parts=4,
+                 resume=False, codec_override={"s": "fsst"})
+    assert built[0] == {}
+    assert set(built[1]) == {"s"}
+    assert decode_table(spark, f"{d}/b2", f"{d}/m2").count() == 2000

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from boltspark.engine import decode_table, encode_table
+from boltspark.engine.agg import column_count
 from boltspark.engine.filters import (BytesEqPredicate, ConstPredicate,
                                       NotPredicate, OrPredicate,
                                       RangePredicate)
@@ -99,7 +100,9 @@ def test_explain_reads_no_block_bytes(spark, zoned_table):
 
 def test_explain_resolves_struct_leaf_predicates(spark, tmp_path_factory):
     """Review fix: explain_scan must accept dotted struct-leaf
-    predicate columns exactly as decode_table does."""
+    predicate columns exactly as decode_table does — and so must the
+    aggregates, through the one shared resolver, which raises KeyError
+    on an unknown column for every reader alike."""
     df = (spark.range(2000)
           .select(F.col("id").alias("k"),
                   F.struct((F.col("id") % 50).alias("w"),
@@ -115,3 +118,11 @@ def test_explain_resolves_struct_leaf_predicates(spark, tmp_path_factory):
     assert rep.get("accept", 0) <= decoded <= \
         rep.get("accept", 0) + rep.get("open", 0)
     assert decoded == df.filter(F.col("meta.w").between(10, 20)).count() > 0
+    counted = column_count(spark, out, man, "k", predicate=pred).first()
+    assert counted["n_rows"] == decoded
+    nope = RangePredicate(column="meta.nope", lower=0)
+    for read in (lambda: decode_table(spark, out, man, predicate=nope),
+                 lambda: explain_scan(spark, out, man, predicate=nope),
+                 lambda: column_count(spark, out, man, "k", predicate=nope)):
+        with pytest.raises(KeyError):
+            read().collect()

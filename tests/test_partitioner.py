@@ -115,3 +115,35 @@ def test_shuffle_preimages_bounded_when_a_residue_is_never_hit(
         == [0, 1, 2, 3, 4, 6, 7]
     records = [r for r in caplog.records if r.name == partitioner.__name__]
     assert len(records) == 1 and records[0].levelno == logging.WARNING
+
+
+def test_bytes_below_counts_footers_then_stops_at_the_limit(spark, tmp_path):
+    """The size gate of encodes without a partition-sizing estimate:
+    over a local parquet scan it sizes the input from file footers on
+    the driver (no Spark job); over any other plan a ``limit`` count
+    bounded at the limit gives the same answers.  A head shorter than
+    its cap is the whole input."""
+    import uuid
+
+    from boltspark.engine.partitioner import bytes_below
+
+    mem = spark.range(3000, numPartitions=3).select(
+        F.concat(F.lit("é-row-"), F.col("id").cast("string")).alias("s"))
+    mem.write.parquet(str(tmp_path / "src"))
+    files = spark.read.parquet(str(tmp_path / "src"))
+    sc = spark.sparkContext
+    for df, jobs in ((files, 0), (mem, None)):
+        head = df.limit(1024).collect()
+        group = f"gate-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "bytes_below")
+        try:
+            assert bytes_below(df, ["s"], 1 << 30, head, 1024)
+            assert not bytes_below(df, ["s"], 20_000, head, 1024)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        if jobs is not None:
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    head = mem.limit(5000).collect()  # the whole input: 3000 rows
+    utf8 = sum(len(r["s"].encode("utf-8")) for r in head)
+    assert bytes_below(mem, ["s"], utf8 + 1, head, 5000)
+    assert not bytes_below(mem, ["s"], utf8, head, 5000)

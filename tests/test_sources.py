@@ -384,3 +384,75 @@ def test_boltspark_datasource_isnull_pushdown(spark, tmp_path):
         F.col(nullable).isNull()).count()
     exp = df.filter(F.col(nullable).isNull()).count()
     assert exp > 0 and got == exp
+
+
+def test_datasource_matches_decode_table_nested_evolved(spark, tmp_path):
+    """DSv2 and decode_table share one decoder: on a two-run table with
+    a nullable struct, a map, list<struct> and list<list> (the second
+    run adds a struct column), both return the same rows — unfiltered,
+    and under a predicate keeping under 25% of each group's rows, which
+    takes the late-materialization path."""
+    from pyspark.sql import functions as F
+
+    from boltspark.engine import decode_table, encode_table
+    from boltspark.engine.filters import RangePredicate
+    from boltspark.sources import datasource as ds
+
+    def table(lo, hi):
+        i = F.col("id")
+        return spark.range(lo, hi).select(
+            i.alias("doc_id"),
+            F.when(i % 7 != 0, F.struct(
+                (i % 13).cast("int").alias("w"),
+                F.when(i % 5 != 0, F.concat(F.lit("h"), i % 3)).alias("h"),
+            )).alias("meta"),
+            F.when(i % 6 == 0, F.lit(None).cast("map<string,bigint>"))
+            .when(i % 6 == 1, F.expr("map()").cast("map<string,bigint>"))
+            .otherwise(F.create_map(F.lit("a"), i, F.lit("b"), i * 2))
+            .alias("props"),
+            F.when(i % 9 == 0, F.lit(None))
+            .otherwise(F.transform(
+                F.sequence(F.lit(0), i % 4),
+                lambda j: F.when(j % 5 != 2, F.struct(
+                    (i + j).cast("int").alias("start"),
+                    (i + j * 2).cast("int").alias("end"),
+                )))).alias("spans"),
+            F.when(i % 8 == 0, F.lit(None))
+            .otherwise(F.transform(
+                F.sequence(F.lit(0), (i % 3).cast("int")),
+                lambda j: F.when(j % 4 != 2, F.transform(
+                    F.sequence(F.lit(0), j),
+                    lambda k: F.concat(F.lit("t"), i % 10, k)))))
+            .alias("toks"),
+        )
+
+    d = str(tmp_path)
+    df1 = table(0, 400)
+    df2 = table(400, 600).withColumn("extra", F.when(
+        F.col("doc_id") % 4 != 0,
+        F.struct((F.col("doc_id") % 11).alias("x"))))
+    encode_table(df1, f"{d}/b", f"{d}/m", key_cols=("doc_id",), n_parts=3,
+                 resume=False, run_id="r1")
+    encode_table(df2, f"{d}/b", f"{d}/m", key_cols=("doc_id",), n_parts=3,
+                 resume=False, run_id="r2")
+    expected = {r["doc_id"]: r for r in df1.withColumn(
+        "extra", F.lit(None).cast(df2.schema["extra"].dataType))
+        .unionByName(df2).collect()}
+
+    def rows(df):
+        got = df.collect()
+        out = {r["doc_id"]: r for r in got}
+        assert len(out) == len(got)
+        return out
+
+    engine = rows(decode_table(spark, f"{d}/b", f"{d}/m"))
+    source = rows(ds.load(spark, f"{d}/b", f"{d}/m"))
+    assert engine == source == expected
+    lo, hi = 380, 460  # 80 of 600 rows, across both runs
+    engine = rows(decode_table(
+        spark, f"{d}/b", f"{d}/m",
+        predicate=RangePredicate(column="doc_id", lower=lo, upper=hi - 1)))
+    source = rows(ds.load(spark, f"{d}/b", f"{d}/m").filter(
+        (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)))
+    assert engine == source == {k: v for k, v in expected.items()
+                                if lo <= k < hi}

@@ -428,3 +428,34 @@ def test_grouped_sum_stream_matches_batch(spark, tmp_path):
                      n_parts=2, resume=False, run_id="e0")
         grouped_sum_stream(spark, f"{d2}/b", f"{d2}/m", "lang", "decv",
                            f"{d2}/out", f"{d2}/ckpt")
+
+
+def test_distinct_stream_starts_before_its_predicate_column(spark, tmp_path):
+    """A streaming aggregate can start on a manifest with no committed
+    run yet, with a predicate on a column only a later run brings: the
+    predicate resolves per epoch against the manifest as committed
+    then, and the folded estimate equals the batch operator's."""
+    from boltspark.engine.agg import column_distinct_approx
+    from boltspark.engine.filters import RangePredicate
+    from boltspark.streaming.agg_stream import distinct_stream, read_distinct
+
+    d = str(tmp_path)
+    (tmp_path / "m").mkdir()
+    pred = RangePredicate(column="w", lower=100)
+    q = distinct_stream(spark, f"{d}/b", f"{d}/m", "v", f"{d}/out",
+                        f"{d}/ckpt", predicate=pred)
+    try:
+        q.processAllAvailable()
+        df = spark.range(400).select(F.col("id").alias("k"),
+                                     (F.col("id") % 37).alias("v"),
+                                     F.col("id").alias("w"))
+        encode_table(df, f"{d}/b", f"{d}/m", key_cols=("k",), n_parts=2,
+                     resume=False, run_id="e0")
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = read_distinct(spark, f"{d}/out", f"{d}/m", "v").collect()[0]
+    batch = column_distinct_approx(spark, f"{d}/b", f"{d}/m", "v",
+                                   predicate=pred).collect()[0]
+    assert got["approx_distinct"] == batch["approx_distinct"] == 37
+    assert got["n_rows"] == batch["n_rows"] == 300
