@@ -43,14 +43,12 @@ def compact_blocks(
     t0 = time.time()
     run_id = run_id or ("compact-" + uuid.uuid4().hex[:12])
     meta = manifestmod.table_meta(spark, manifest_path)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    blocks = (
-        # schema from the manifest union (read_blocks): runs may have
-        # evolved the column set; compaction must carry the UNION
-        # (older groups keep null leaves for the columns they predate)
-        read_blocks(spark, blocks_path, meta["columns"])
-        .join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
-    )
+    # schema from the manifest union (read_blocks): runs may have
+    # evolved the column set; compaction must carry the UNION (older
+    # groups keep null leaves for the columns they predate)
+    blocks = manifestmod.join_valid(
+        read_blocks(spark, blocks_path, meta["columns"]),
+        manifestmod.valid_pairs_df(spark, manifest_path))
     # the window's own exchange co-locates each partition's groups (no
     # separate repartition needed); the sort restores part_id clustering
     # in the written files so point queries prune row groups again
@@ -157,18 +155,18 @@ def gc_orphans(
     import time as _time
 
     cutoff = _time.time() - float(min_age_seconds)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path).withColumn(
-        "__ok", F.lit(True))
+    # top-level fields only (identical across every run's files):
+    # single-footer schema inference suffices, no mergeSchema sweep
+    groups = spark.read.parquet(blocks_path).select(
+        PART_ID, "run_id",
+        F.col("_metadata.file_path").alias("__fp"),
+        F.col("_metadata.file_size").alias("__sz"),
+        F.col("_metadata.file_modification_time").cast("double")
+        .alias("__mt"))
     per_file = (
-        # top-level fields only (identical across every run's files):
-        # single-footer schema inference suffices, no mergeSchema sweep
-        spark.read.parquet(blocks_path)
-        .select(PART_ID, "run_id",
-                F.col("_metadata.file_path").alias("__fp"),
-                F.col("_metadata.file_size").alias("__sz"),
-                F.col("_metadata.file_modification_time").cast("double")
-                .alias("__mt"))
-        .join(F.broadcast(valid), [PART_ID, "run_id"], "left")
+        manifestmod.join_valid(
+            groups, manifestmod.valid_pairs_df(spark, manifest_path),
+            mark="__ok")
         .groupBy("__fp")
         .agg(
             F.max(F.coalesce(F.col("__ok"), F.lit(False))).alias("any_valid"),

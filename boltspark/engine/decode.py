@@ -366,13 +366,12 @@ def _blocks_proj(spark, blocks_path: str, manifest_path: str,
     # that predate a column read its struct leaves as null (schema
     # evolution), without a per-call footer-merge job
     blocks = schema_read_blocks(spark, blocks_path, meta["columns"])
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
+    valid = manifestmod.valid_pairs_df(spark, manifest_path,
+                                       part_ids=part_ids, run_ids=run_ids)
     if part_ids is not None:
         blocks = blocks.filter(F.col(PART_ID).isin([int(p) for p in part_ids]))
-        valid = valid.filter(F.col(PART_ID).isin([int(p) for p in part_ids]))
     if run_ids is not None:
         blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
-        valid = valid.filter(F.col("run_id").isin(list(run_ids)))
     if seq_range is not None:
         blocks = blocks.filter((F.col("seq") >= int(seq_range[0]))
                                & (F.col("seq") <= int(seq_range[1])))
@@ -381,7 +380,24 @@ def _blocks_proj(spark, blocks_path: str, manifest_path: str,
         keep = p.jvm_zone_keep_cols(lambda c: F.col(f"__st_{c}"))
         if keep is not None:
             blocks = blocks.filter(keep)
-    return blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+    return manifestmod.join_valid(blocks, valid)
+
+
+def _part_totals(pair_rows) -> list[tuple[int, int]] | None:
+    """(part_id, rows) sorted by part_id, summed over the valid pairs'
+    manifest rows (``manifest.valid_pairs``), or None when there are
+    none to trust: the pairs came from Spark, or a pair's n_rows differ
+    between its columns (every column of a pair counts the same rows)."""
+    if pair_rows is None:
+        return None
+    totals: dict[int, int] = {}
+    for p, lo, hi in zip(pair_rows.column(PART_ID).to_pylist(),
+                         pair_rows.column("n_rows_min").to_pylist(),
+                         pair_rows.column("n_rows_max").to_pylist()):
+        if lo is None or lo != hi:
+            return None
+        totals[p] = totals.get(p, 0) + lo
+    return sorted(totals.items())
 
 
 def _block_at(names: list[str], c: str) -> int:
@@ -555,31 +571,36 @@ def decode_table(
         # within a partition in APPEND order (manifest commit order
         # run_seq, then seq).  With one part_id this is the classic
         # mid-partition point query; with several (or none = the whole
-        # table) the slice spans partition boundaries.  Two tiny
-        # metadata jobs keep the driver footprint scale-safe:
+        # table) the slice spans partition boundaries.  The driver
+        # never holds the whole table's group list:
         #   1. per-partition row totals (n_parts rows) -> prefix sums
-        #      pick the partitions OVERLAPPING [start, end);
-        #   2. group offsets are computed from ONLY those partitions'
-        #      group metadata (seq/n_rows leaves, part_id pruned) —
-        #      never the whole table's group list.
+        #      pick the partitions OVERLAPPING [start, end).  They sum
+        #      the manifest rows the valid-pairs builder already read
+        #      on the driver (no job); on its Spark path, or when a
+        #      pair's n_rows disagree across its columns, a groupBy of
+        #      the blocks' group metadata computes them instead;
+        #   2. group offsets need each group's (run, seq, n_rows),
+        #      which only the blocks hold: the one metadata job left
+        #      collects them from ONLY the overlapping partitions
+        #      (seq/n_rows leaves, part_id pruned).
         # With run_ids the offsets are RUN-RELATIVE (positions among
         # the named runs' rows), matching the scan filter below.
-        valid0 = manifestmod.valid_pairs_df(spark, manifest_path)
-        if run_ids is not None:
-            valid0 = valid0.filter(F.col("run_id").isin(list(run_ids)))
+        valid0, pair_rows = manifestmod.valid_pairs(
+            spark, manifest_path, part_ids=part_ids, run_ids=run_ids)
         gmeta = (schema_read_blocks(spark, blocks_path, meta["columns"])
                  .select(PART_ID, "run_id", "seq", "n_rows"))
         if part_ids is not None:
             gmeta = gmeta.filter(
                 F.col(PART_ID).isin([int(p) for p in part_ids]))
-        gmeta = gmeta.join(F.broadcast(valid0), [PART_ID, "run_id"], "inner")
-        per_part = (gmeta.groupBy(PART_ID)
-                    .agg(F.sum("n_rows").alias("p_rows"))
-                    .orderBy(PART_ID).collect())
+        gmeta = manifestmod.join_valid(gmeta, valid0)
+        per_part = _part_totals(pair_rows)
+        if per_part is None:
+            per_part = [(int(r[PART_ID]), int(r["p_rows"])) for r in (
+                gmeta.groupBy(PART_ID).agg(F.sum("n_rows").alias("p_rows"))
+                .orderBy(PART_ID).collect())]
         overlap = {}  # part_id -> global offset of its first row
         goff = 0
-        for r in per_part:
-            p0, pr = int(r[PART_ID]), int(r["p_rows"])
+        for p0, pr in per_part:
             if goff < end and goff + pr > start:
                 overlap[p0] = goff
             goff += pr

@@ -15,9 +15,18 @@ META row and writes the lot in ONE job — the blocks just written are
 never re-scanned.  The trade, stated plainly: the driver now holds the
 manifest's own rows for the run (one per partition-column — at 100 TB
 / 64 MB partitions and ~10 columns, ~16 M small tuples), never per-group
-rows and never payload bytes.  Readers still consume the valid
-(part_id, run_id) pairs as a broadcast-joined DataFrame, so decode
-never collects the bookkeeping table.
+rows and never payload bytes.
+
+Readers join the valid (part_id, run_id) pairs in as a broadcast
+(``valid_pairs`` builds them, ``join_valid`` joins them — every read
+path goes through the two).  When the manifest provably lives on the
+local filesystem, the driver reads it with pyarrow (``_local_table``, the
+one driver-side reader, which also serves the META rows and the DSv2
+source) and hands the pairs to Spark as an inline table: a
+``LocalRelation``, so no listing, distinct or shuffle job runs for
+them.  A non-local or unreadable manifest, or one with more than
+``_LOCAL_PAIRS_MAX`` pairs, takes the Spark read (``spark.read`` +
+``distinct``) instead — the fast path fails closed.
 """
 
 from __future__ import annotations
@@ -28,7 +37,10 @@ import re
 from collections import Counter
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.accumulators import AccumulatorParam
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .schema import PART_ID
@@ -68,8 +80,14 @@ def _exists(spark: SparkSession, path: str) -> bool:
     try:
         spark.read.parquet(path).limit(1).collect()
         return True
-    except Exception:
-        return False
+    except AnalysisException as e:
+        # absent: no such path, or no parquet file Spark lists in it
+        # (the local branch's rule).  Anything else — a corrupt file, an
+        # unreachable FS — raises: read as absent, commit would restart
+        # run_seq at 0 and resume would redo every partition.
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return False
+        raise
 
 
 def run_exists(spark: SparkSession, manifest_path: str, run_id: str) -> bool:
@@ -320,35 +338,65 @@ def _local_dir(path: str, spark: SparkSession | None = None) -> str | None:
     return p if os.path.isdir(p) else None
 
 
-def _meta_rows(spark: SparkSession, manifest_path: str) -> list[tuple]:
-    """(run_id, table_meta) for every META row — via a driver-side
-    pyarrow read when the manifest is on the local filesystem (no Spark
-    job: the META rows are one tiny row per commit, and every
-    decode/aggregate pays this lookup), falling back to a Spark read
-    for remote filesystems.  The pyarrow filter prunes row groups on
-    the ``column`` statistics, so only META-bearing groups are read."""
+def _local_table(spark: SparkSession | None, manifest_path: str,
+                 columns: list[str], where=None) -> pa.Table | None:
+    """The driver-side manifest read: ``columns`` of the rows ``where``
+    (a pyarrow dataset expression; it prunes row groups on the column
+    statistics) via pyarrow, when the manifest provably lives on the
+    local filesystem (``_local_dir``).  None when it does not, or when
+    the local read fails (permissions, a stray non-parquet file Spark's
+    listing skips) — logged, and the caller reads through Spark, which
+    reads what it lists.  ``spark=None`` (the DSv2 planner, which has no
+    session) takes scheme-less paths as local and has no fallback."""
     local = _local_dir(manifest_path, spark)
-    if local is not None:
-        import pyarrow.dataset as pads
+    if local is None:
+        return None
+    try:
+        return pads.dataset(local, format="parquet").to_table(
+            columns=columns, filter=where)
+    except (OSError, pa.ArrowInvalid) as e:
+        log.warning("manifest at %s unreadable via pyarrow (%s: %s)%s",
+                    manifest_path, type(e).__name__, e,
+                    "" if spark is None else "; falling back to a Spark read")
+        return None
 
-        try:
-            ds = pads.dataset(local, format="parquet")
-            t = ds.to_table(columns=["run_id", "table_meta"],
-                            filter=pads.field("column") == META_KEY)
-            return list(zip(t.column("run_id").to_pylist(),
-                            t.column("table_meta").to_pylist()))
-        except (OSError, pa.ArrowInvalid) as e:
-            # unreadable locally (permissions, a stray non-parquet file
-            # Spark's listing skips): Spark reads what it lists
-            log.warning("manifest META rows at %s unreadable via pyarrow "
-                        "(%s: %s); falling back to a Spark read",
-                        manifest_path, type(e).__name__, e)
+
+def _meta_rows(spark: SparkSession, manifest_path: str) -> list[tuple]:
+    """(run_id, table_meta) for every META row — driver-side
+    (``_local_table``: no Spark job; the META rows are one tiny row per
+    commit, and every decode/aggregate pays this lookup), else a Spark
+    read."""
+    t = _local_table(spark, manifest_path, ["run_id", "table_meta"],
+                     pads.field("column") == META_KEY)
+    if t is not None:
+        return list(zip(t.column("run_id").to_pylist(),
+                        t.column("table_meta").to_pylist()))
     rows = (
         spark.read.parquet(manifest_path)
         .filter(F.col("column") == META_KEY)
         .select("run_id", "table_meta").collect()
     )
     return [(r["run_id"], r["table_meta"]) for r in rows]
+
+
+def read_local(manifest_path: str) -> tuple[dict, set[tuple]]:
+    """(merged table meta, set of valid (part_id, run_id) pairs) from one
+    driver-side read, without a Spark session — the DSv2 source's
+    manifest load.  Raises FileNotFoundError when no manifest is
+    readable there."""
+    t = _local_table(None, manifest_path,
+                     [PART_ID, "run_id", "column", "table_meta"])
+    if t is None:
+        raise FileNotFoundError(f"no readable manifest at {manifest_path}")
+    is_meta = pc.equal(t.column("column"), META_KEY)
+    meta_t, part_t = t.filter(is_meta), t.filter(pc.invert(is_meta))
+    metas = sorted(zip(meta_t.column("run_id").to_pylist(),
+                       meta_t.column("table_meta").to_pylist()))
+    if not metas:
+        raise FileNotFoundError(f"no table meta in manifest at {manifest_path}")
+    pairs = set(zip(part_t.column(PART_ID).to_pylist(),
+                    part_t.column("run_id").to_pylist()))
+    return merge_metas([json.loads(tm) for _, tm in metas]), pairs
 
 
 def table_meta(spark: SparkSession, manifest_path: str) -> dict:
@@ -390,12 +438,83 @@ def runs_as_of(spark: SparkSession, manifest_path: str,
     return sorted(r for r, k in order.items() if k <= cut)
 
 
-def valid_pairs_df(spark: SparkSession, manifest_path: str) -> DataFrame:
-    """Distinct (part_id, run_id) pairs with a committed manifest entry —
+# Largest pair count the driver hands Spark as an inline table.  Its
+# cost is the SQL text's parse + analysis, which grows with the pairs;
+# the Spark read it replaces costs three small jobs at any size.  A
+# broadcast join of 2,000 rows on a 4-vCPU local[4] host, median wall:
+# 0.33 vs 0.64 s at 1,024 pairs, 0.40 vs 0.56 s at 4,096, 0.41 vs
+# 0.29 s at 8,192 and 0.58 vs 0.41 s at 12,288 (inline vs Spark read).
+_LOCAL_PAIRS_MAX = 4096
+
+_PAIR_KEYS = [PART_ID, "run_id"]
+_EMPTY_ROW = "(0L, '')"
+
+
+def _pairs_relation(spark: SparkSession, pairs) -> DataFrame:
+    """(part_id, run_id) rows as an inline VALUES table — a
+    ``LocalRelation``, so no job builds it (``createDataFrame`` would
+    run one: it goes through ``parallelize``).  Run ids travel as hex,
+    so no quoting or escape rule of the SQL parser can alter one."""
+    vals = ", ".join(f"({int(p)}L, '{r.encode().hex()}')" for p, r in pairs)
+    where = "" if vals else " WHERE false"  # VALUES needs a row
+    return spark.sql(f"SELECT {PART_ID}, CAST(unhex(h) AS STRING) AS run_id "
+                     f"FROM VALUES {vals or _EMPTY_ROW} AS t({PART_ID}, h)"
+                     + where)
+
+
+def valid_pairs(spark: SparkSession, manifest_path: str, *,
+                part_ids=None, run_ids=None) -> tuple[DataFrame,
+                                                      pa.Table | None]:
+    """The valid-pairs builder: distinct (part_id, run_id) pairs with a
+    committed manifest entry, restricted to ``part_ids``/``run_ids`` —
     the broadcast join key that makes orphan blocks from crashed runs
-    invisible to decode.  Stays a DataFrame; never collected."""
-    return (
-        spark.read.parquet(manifest_path)
-        .filter(F.col("column") != META_KEY)
-        .select(PART_ID, "run_id").distinct()
-    )
+    invisible to every reader.
+
+    Returns (pairs DataFrame, per-pair rows).  On a local manifest the
+    pairs come from one driver-side read and the frame is an inline
+    ``LocalRelation`` (no job); the per-pair rows are then an Arrow
+    table (part_id, run_id, n_rows_min, n_rows_max — the pair's n_rows
+    over its columns, equal on a consistent manifest).  Otherwise —
+    non-local or unreadable manifest, or more than ``_LOCAL_PAIRS_MAX``
+    pairs — the frame is a Spark read + ``distinct`` and the rows None.
+    """
+    where = pads.field("column") != META_KEY
+    if part_ids is not None:
+        where &= pads.field(PART_ID).isin([int(p) for p in part_ids])
+    if run_ids is not None:
+        where &= pads.field("run_id").isin(list(run_ids))
+    t = _local_table(spark, manifest_path, [PART_ID, "run_id", "n_rows"],
+                     where)
+    if t is not None:
+        rows = t.group_by(_PAIR_KEYS).aggregate(
+            [("n_rows", "min"), ("n_rows", "max")])
+        if rows.num_rows <= _LOCAL_PAIRS_MAX:
+            return _pairs_relation(spark, zip(
+                rows.column(PART_ID).to_pylist(),
+                rows.column("run_id").to_pylist())), rows
+    df = (spark.read.parquet(manifest_path)
+          .filter(F.col("column") != META_KEY))
+    if part_ids is not None:
+        df = df.filter(F.col(PART_ID).isin([int(p) for p in part_ids]))
+    if run_ids is not None:
+        df = df.filter(F.col("run_id").isin(list(run_ids)))
+    return df.select(*_PAIR_KEYS).distinct(), None
+
+
+def valid_pairs_df(spark: SparkSession, manifest_path: str, *,
+                   part_ids=None, run_ids=None) -> DataFrame:
+    """``valid_pairs``' pairs frame alone; never collected."""
+    return valid_pairs(spark, manifest_path, part_ids=part_ids,
+                       run_ids=run_ids)[0]
+
+
+def join_valid(df: DataFrame, valid: DataFrame, *,
+               mark: str | None = None) -> DataFrame:
+    """The rows of ``df`` whose (part_id, run_id) is in ``valid`` (a
+    ``valid_pairs_df`` frame), by a broadcast hash join — no shuffle of
+    ``df``.  With ``mark``, a left join that keeps every row and adds
+    the boolean column ``mark``: true for a valid pair, null otherwise."""
+    if mark is None:
+        return df.join(F.broadcast(valid), _PAIR_KEYS, "inner")
+    return df.join(F.broadcast(valid.withColumn(mark, F.lit(True))),
+                   _PAIR_KEYS, "left")

@@ -166,7 +166,7 @@ def column_minmax(
         for c in cols
     ])).alias("m")
     return (
-        blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+        manifestmod.join_valid(blocks, valid)
         .select(F.col("n_rows"), melt)
         .select("n_rows", "m.*")
         .groupBy("column")
@@ -249,8 +249,9 @@ def explain_scan(spark: SparkSession, blocks_path: str, manifest_path: str,
               .select(*proj))
     if run_ids is not None:
         blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    blocks = blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+    blocks = manifestmod.join_valid(
+        blocks, manifestmod.valid_pairs_df(spark, manifest_path,
+                                           run_ids=run_ids))
 
     out_schema = T.StructType([
         T.StructField("verdict", T.StringType(), False),

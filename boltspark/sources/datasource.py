@@ -23,12 +23,13 @@ for Python, Spark 4.x):
 
 Each file's block groups run through the decoder ``decode_table``
 uses (the same cascade, late materialization and nested-column
-assembly); only the file listing, the pyarrow read and the valid-pair
-filter are this source's own.  The primary engine path remains
-``engine.decode_table`` (broadcast manifest join, no driver-side pair
-set); this source trades that for
-Spark-native ergonomics and is sized for manifests that fit the driver
-(documented).
+assembly), and the manifest loads through the engine's driver-side
+reader (``manifest.read_local``); only the file listing, the pyarrow
+read and the valid-pair filter are this source's own.  The primary
+engine path remains ``engine.decode_table``, whose pairs fall back to
+a Spark read for remote or large manifests; this source trades that
+for Spark-native ergonomics and is sized for manifests that fit the
+driver (documented).
 
 KNOWN SHARP EDGE (upstream, Spark 4.1 Python DSv2): a relation caches
 its last-planned scan, so REUSING one DataFrame object across queries
@@ -40,7 +41,6 @@ fresh ``.load()`` per query shape is always correct).  Use the
 from __future__ import annotations
 
 import glob
-import json
 import os
 
 from pyspark.sql.datasource import (DataSource, DataSourceReader, EqualTo,
@@ -50,35 +50,6 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader, EqualTo,
                                     StringContains,
                                     StringEndsWith, StringStartsWith)
 from pyspark.sql.types import StructType
-
-META_KEY = "__table_meta__"
-
-
-def _read_manifest(manifest_path: str):
-    """Driver-side manifest load via pyarrow (no Spark session needed):
-    (table_meta dict, set of valid (part_id, run_id) pairs)."""
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(os.path.join(manifest_path, "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no manifest at {manifest_path}")
-    metas = []
-    pairs = set()
-    for f in files:
-        t = pq.read_table(f, columns=["part_id", "run_id", "column", "table_meta"])
-        cols = t.to_pydict()
-        for pid, rid, col, tm in zip(cols["part_id"], cols["run_id"],
-                                     cols["column"], cols["table_meta"]):
-            if col == META_KEY:
-                metas.append((rid, json.loads(tm)))
-            else:
-                pairs.add((pid, rid))
-    if not metas:
-        raise FileNotFoundError(f"no table meta in manifest at {manifest_path}")
-    from ..engine.manifest import merge_metas
-
-    meta = merge_metas([m for _, m in sorted(metas, key=lambda x: x[0])])
-    return meta, pairs
 
 
 def _to_predicate(f: Filter):
@@ -166,10 +137,10 @@ def _to_predicate(f: Filter):
 class BoltReader(DataSourceReader):
     def __init__(self, blocks_path: str, manifest_path: str,
                  columns: list[str] | None):
-        from ..engine import decode as dec
+        from ..engine import decode as dec, manifest as manifestmod
 
         self.blocks_path = blocks_path
-        self.meta, self.valid_pairs = _read_manifest(manifest_path)
+        self.meta, self.valid_pairs = manifestmod.read_local(manifest_path)
         self.fields = dec.output_fields(self.meta, columns)
         self.predicates = []
 
@@ -267,12 +238,13 @@ class BoltDataSource(DataSource):
         return [c.strip() for c in cols.split(",")] if cols else None
 
     def schema(self) -> StructType:
+        from ..engine import manifest as manifestmod
         from ..engine.decode import output_fields
 
         manifest = self.options.get("manifest")
         if not manifest:
             raise ValueError("boltspark source requires .option('manifest', path)")
-        meta, _ = _read_manifest(manifest)
+        meta, _ = manifestmod.read_local(manifest)
         return StructType(output_fields(meta, self._columns()))
 
     def reader(self, schema: StructType) -> BoltReader:

@@ -30,7 +30,6 @@ from ..engine import agg as aggmod
 from ..engine import manifest as manifestmod
 from ..engine.decode import resolve_predicates
 from ..engine.manifest import _MANIFEST_SCHEMA, META_KEY
-from ..engine.schema import PART_ID
 
 
 def _manifest_stream(spark, manifest_path: str):
@@ -104,8 +103,8 @@ def read_sum(spark, out_path: str, manifest_path: str,
     (superseded runs drop out).  Decimal sinks (s_dec partials) fold in
     the unscaled decimal domain and rescale once — digit-exact."""
     partials = spark.read.parquet(out_path)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    live = partials.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+    live = manifestmod.join_valid(
+        partials, manifestmod.valid_pairs_df(spark, manifest_path))
     if "s_dec" in partials.columns:
         scale = _decimal_scale(spark, manifest_path, column)
         if scale is None:
@@ -142,8 +141,8 @@ def read_value_counts(spark, out_path: str, manifest_path: str) -> DataFrame:
     """Fold the sink's per-run histogram partials into the current
     (value, cnt) GROUP BY result under the manifest's valid pairs."""
     partials = spark.read.parquet(out_path)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    live = partials.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+    live = manifestmod.join_valid(
+        partials, manifestmod.valid_pairs_df(spark, manifest_path))
     return live.groupBy("value").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -189,8 +188,8 @@ def read_distinct(spark, out_path: str, manifest_path: str,
     batch operator on the same live data, since register merge is
     commutative and the hashes are fixed)."""
     partials = spark.read.parquet(out_path)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    live = partials.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+    live = manifestmod.join_valid(
+        partials, manifestmod.valid_pairs_df(spark, manifest_path))
     return aggmod._fold_hll(live, column, p)
 
 
@@ -229,8 +228,8 @@ def read_quantiles(spark, out_path: str, manifest_path: str,
     plist = [float(p) for p in (probs if hasattr(probs, "__iter__")
                                 else [probs])]
     partials = spark.read.parquet(out_path)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    live = partials.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+    live = manifestmod.join_valid(
+        partials, manifestmod.valid_pairs_df(spark, manifest_path))
     return aggmod._fold_quantiles(live, column, plist)
 
 
@@ -276,6 +275,6 @@ def read_grouped_sum(spark, out_path: str, manifest_path: str) -> DataFrame:
     (superseded runs drop out) — identical to batch ``grouped_sum`` on
     the same live data."""
     partials = spark.read.parquet(out_path)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    live = partials.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+    live = manifestmod.join_valid(
+        partials, manifestmod.valid_pairs_df(spark, manifest_path))
     return aggmod._fold_gsum(live)

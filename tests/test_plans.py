@@ -171,12 +171,14 @@ def test_byte_predicate_stats_filter_is_jvm_side(spark, encoded):
         assert any("lang.stats" in ln for ln in filt), plan
 
 
-def test_aggregate_plan_one_tiny_exchange(spark, tmp_path_factory):
+def test_aggregate_plan_one_tiny_exchange(spark, tmp_path_factory,
+                                          monkeypatch):
     """Compressed-domain aggregates must shuffle exactly once — the
     final fold over partial rows — and their scan must prune to the
     aggregated column's block leaf (+ stats for predicates).  If a
     regroup or repartition sneaks in before the partials, the 'one tiny
     shuffle' claim is dead at 100 TB."""
+    from boltspark.engine import manifest as manifestmod
     from boltspark.engine.agg import column_sum, grouped_sum, value_counts
     from boltspark.engine.filters import RangePredicate
 
@@ -190,30 +192,47 @@ def test_aggregate_plan_one_tiny_exchange(spark, tmp_path_factory):
     bp, mp = res.out_path, res.manifest_path
     pred = RangePredicate(column="stars", lower=100, upper=None,
                           null_allowed=False)
-    plans = {
-        "column_sum": _plan(column_sum(spark, bp, mp, "stars")),
-        "column_sum_pred": _plan(column_sum(spark, bp, mp, "stars",
-                                            predicate=pred)),
-        "value_counts": _plan(value_counts(spark, bp, mp, "lang")),
-        "grouped_sum": _plan(grouped_sum(spark, bp, mp, "lang",
-                                         "stars")),
-    }
+
+    def build():
+        return {
+            "column_sum": _plan(column_sum(spark, bp, mp, "stars")),
+            "column_sum_pred": _plan(column_sum(spark, bp, mp, "stars",
+                                                predicate=pred)),
+            "value_counts": _plan(value_counts(spark, bp, mp, "lang")),
+            "grouped_sum": _plan(grouped_sum(spark, bp, mp, "lang",
+                                             "stars")),
+        }
+
     import re
 
-    for name, plan in plans.items():
-        # exactly two shuffles: the final fold over partial rows, and
-        # the metadata-scale manifest distinct that feeds the broadcast
-        # join (hashpartitioning(part_id, run_id) under
-        # BroadcastExchange).  A THIRD exchange means the blocks data
-        # itself got regrouped — dead at 100 TB.
-        n_shuffle = plan.count("Exchange hashpartitioning") + \
+    def n_shuffle(plan):
+        return plan.count("Exchange hashpartitioning") + \
             plan.count("Exchange SinglePartition") + \
             plan.count("Exchange rangepartitioning")
-        assert n_shuffle == 2, (name, plan)
-        assert re.search(r"Exchange hashpartitioning\(part_id#\d+L?, run_id#\d+",
-                         plan), (name, plan)
+
+    pairs_distinct = r"Exchange hashpartitioning\(part_id#\d+L?, run_id#\d+"
+    # on a local manifest the valid pairs are a driver-built
+    # LocalTableScan under the BroadcastExchange: the only shuffle is
+    # the final fold over partial rows.  A SECOND exchange means the
+    # blocks data itself got regrouped — dead at 100 TB.
+    plans = build()
+    for name, plan in plans.items():
+        assert n_shuffle(plan) == 1, (name, plan)
+        assert not re.search(pairs_distinct, plan), (name, plan)
+        assert "LocalTableScan" in plan, (name, plan)
         assert "BroadcastHashJoin" in plan, name
         assert "MapInArrow" in plan, name
+    # off the local FS the pairs are a Spark read: exactly two shuffles,
+    # the fold and the metadata-scale manifest distinct that feeds the
+    # broadcast join (hashpartitioning(part_id, run_id) under
+    # BroadcastExchange)
+    monkeypatch.setattr(manifestmod, "_default_fs_is_local", lambda s: False)
+    for name, plan in build().items():
+        assert n_shuffle(plan) == 2, (name, plan)
+        assert re.search(pairs_distinct, plan), (name, plan)
+        assert "BroadcastHashJoin" in plan, name
+        assert "MapInArrow" in plan, name
+    monkeypatch.undo()
     # column pruning: the sum's scan reads only the summed column's
     # block leaf, never the giant content chunk
     for name in ("column_sum", "value_counts"):

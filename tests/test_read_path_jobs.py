@@ -1,0 +1,260 @@
+"""The read path's fixed cost: on a local manifest the driver builds the
+valid (part_id, run_id) pairs from its own pyarrow read and hands them
+to Spark as a LocalRelation, so a decode runs at most 2 Spark jobs and
+an aggregate at most 3.  Every fallback — a non-local filesystem, a
+manifest pyarrow cannot read — takes the Spark read and gives the same
+answers; orphan blocks of a crashed run stay invisible either way."""
+
+from __future__ import annotations
+
+import shutil
+import uuid
+
+import pytest
+from pyspark.sql import Window, functions as F
+
+from boltspark.engine import agg, decode_table, encode_table
+from boltspark.engine import manifest as manifestmod
+from boltspark.engine.compact import compact_blocks
+from boltspark.engine.schema import PART_ID
+
+QUOTED = "r'\\1"  # a run id with a quote and a backslash
+N_PARTS = 4
+
+
+def _src(spark, lo, hi, with_w=False):
+    cols = [F.col("id").alias("k"), (F.col("id") % 7).alias("v"),
+            F.concat(F.lit("s"), (F.col("id") % 13).cast("string"))
+            .alias("s")]
+    if with_w:
+        cols.append((F.col("id") * 3).alias("w"))
+    return spark.range(lo, hi).select(*cols)
+
+
+def _jobs(spark, fn):
+    """(result of fn, number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read-path job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def table(spark, tmp_path_factory):
+    """Two committed runs (the first with a quote and a backslash in its
+    id, the second adding a column) plus the blocks of a crashed run
+    that never committed: a copy of the first run's groups under a new
+    run id."""
+    d = tmp_path_factory.mktemp("readpath")
+    b, m = str(d / "b"), str(d / "m")
+    kw = dict(key_cols=("k",), n_parts=N_PARTS, resume=False)
+    encode_table(_src(spark, 0, 400), b, m, run_id=QUOTED, **kw)
+    encode_table(_src(spark, 400, 600, with_w=True), b, m, run_id="run2",
+                 **kw)
+    first = spark.read.parquet(b).filter(F.col("run_id") == QUOTED)
+    (first.withColumn("run_id", F.lit("crashed")).write.mode("append")
+     .parquet(b))
+    return b, m
+
+
+def _answers(spark, b, m):
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    return {
+        "decode": rows(decode_table(spark, b, m)),
+        "decode_run": rows(decode_table(spark, b, m, columns=["k"],
+                                        run_ids=[QUOTED])),
+        "value_counts": rows(agg.value_counts(spark, b, m, "s")),
+        "column_sum": rows(agg.column_sum(spark, b, m, "v")),
+        "grouped_aggs": rows(agg.grouped_aggs(spark, b, m, ["s"], ["v"])),
+        "column_topk": rows(agg.column_topk(spark, b, m, "k", 5)),
+        "row_range": rows(decode_table(spark, b, m, columns=["k"],
+                                       row_range=(95, 260))),
+    }
+
+
+def test_local_manifest_job_counts(spark, table):
+    b, m = table
+    _, n = _jobs(spark, lambda: decode_table(spark, b, m).collect())
+    assert n <= 2, n
+    for name, call in (
+            ("value_counts", lambda: agg.value_counts(spark, b, m, "s")),
+            ("column_sum", lambda: agg.column_sum(spark, b, m, "v")),
+            ("grouped_aggs",
+             lambda: agg.grouped_aggs(spark, b, m, ["s"], ["v"])),
+            ("column_topk", lambda: agg.column_topk(spark, b, m, "k", 5))):
+        _, n = _jobs(spark, lambda: call().collect())
+        assert n <= 3, (name, n)
+
+
+def test_pairs_are_a_local_relation(spark, table):
+    b, m = table
+    valid = manifestmod.valid_pairs_df(spark, m)
+    plan = valid._jdf.queryExecution().executedPlan().toString()
+    assert plan.lstrip().startswith("LocalTableScan"), plan
+    pairs, n = _jobs(spark, lambda: {tuple(r) for r in valid.collect()})
+    assert n == 0
+    runs = {r for _, r in pairs}
+    # the quoted id round-trips byte for byte; the crashed run is absent
+    assert runs == {QUOTED, "run2"}
+    assert pairs == {(p, r) for p in range(N_PARTS) for r in runs}
+    scoped = manifestmod.valid_pairs_df(spark, m, part_ids=[1, 3],
+                                        run_ids=[QUOTED])
+    assert {tuple(r) for r in scoped.collect()} == {(1, QUOTED), (3, QUOTED)}
+    empty = manifestmod.valid_pairs_df(spark, m, run_ids=["nope"])
+    assert empty.collect() == []
+    assert empty.schema == valid.schema
+
+
+def test_orphans_invisible_and_quoted_run_reads(spark, table):
+    b, m = table
+    dec = decode_table(spark, b, m)
+    assert dec.count() == 600
+    assert dec.select("k").distinct().count() == 600
+    assert decode_table(spark, b, m, run_ids=[QUOTED]).count() == 400
+    assert agg.column_sum(spark, b, m, "v").first()["sum_value"] == \
+        _src(spark, 0, 600).agg(F.sum("v")).first()[0]
+
+
+def test_fallbacks_give_identical_answers(spark, table, tmp_path,
+                                          monkeypatch):
+    b, m = table
+    want = _answers(spark, b, m)
+    # a non-local default FS: the Spark read of the pairs
+    with monkeypatch.context() as mp:
+        mp.setattr(manifestmod, "_default_fs_is_local", lambda s: False)
+        plan = (manifestmod.valid_pairs_df(spark, m)._jdf.queryExecution()
+                .executedPlan().toString())
+        assert "LocalTableScan" not in plan, plan
+        assert _answers(spark, b, m) == want
+    # a manifest pyarrow cannot read: an in-flight copy Spark's listing
+    # skips and pyarrow's discovery does not
+    m2 = str(tmp_path / "m")
+    shutil.copytree(m, m2)
+    (tmp_path / "m" / "part-99999.parquet._COPYING_").write_bytes(b"junk")
+    plan = (manifestmod.valid_pairs_df(spark, m2)._jdf.queryExecution()
+            .executedPlan().toString())
+    assert "LocalTableScan" not in plan, plan
+    assert _answers(spark, b, m2) == want
+    # above the pair-count limit: the Spark read again
+    monkeypatch.setattr(manifestmod, "_LOCAL_PAIRS_MAX", 3)
+    valid, rows = manifestmod.valid_pairs(spark, m)
+    assert rows is None
+    assert {tuple(r) for r in valid.collect()} == {
+        (p, r) for p in range(N_PARTS) for r in (QUOTED, "run2")}
+
+
+def test_exists_fails_closed_on_a_corrupt_manifest(spark, tmp_path,
+                                                   monkeypatch):
+    """A corrupt manifest is not an absent one: read as absent, a commit
+    would restart run_seq at 0 and resume would redo every partition."""
+    bad = tmp_path / "m"
+    bad.mkdir()
+    (bad / "part-00000-x.snappy.parquet").write_bytes(b"not parquet")
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    # the local branch lists the file, then its read fails loudly
+    assert manifestmod._exists(spark, str(bad))
+    with pytest.raises(Exception):
+        manifestmod.run_exists(spark, str(bad), "r")
+    # the Spark branch: only a missing path (or one without parquet
+    # files) is absent; the corrupt file raises
+    monkeypatch.setattr(manifestmod, "_default_fs_is_local", lambda s: False)
+    assert not manifestmod._exists(spark, str(tmp_path / "missing"))
+    assert not manifestmod._exists(spark, str(empty))
+    with pytest.raises(Exception):
+        manifestmod._exists(spark, str(bad))
+    with pytest.raises(Exception):
+        encode_table(_src(spark, 0, 40), str(tmp_path / "b"), str(bad),
+                     key_cols=("k",), n_parts=2, resume=True)
+
+
+# --- row_range -----------------------------------------------------------
+
+
+def _slice(decoded, order, start, end):
+    """Rows [start, end) of ``decoded`` in the given global order."""
+    w = Window.orderBy(*order)
+    return sorted(r["k"] for r in (
+        decoded.withColumn("__pos", F.row_number().over(w) - 1)
+        .filter((F.col("__pos") >= start) & (F.col("__pos") < end))
+        .collect()))
+
+
+@pytest.fixture(scope="module")
+def evolved(spark, tmp_path_factory):
+    """Run 'a1' (k, v, s) then run 'b2' adding column w, 3 partitions,
+    and its compaction (one run; groups kept in (run_id, seq) order)."""
+    d = tmp_path_factory.mktemp("rowrange")
+    b, m = str(d / "b"), str(d / "m")
+    kw = dict(key_cols=("k",), n_parts=3, resume=False, block_bytes=1 << 10)
+    encode_table(_src(spark, 0, 300), b, m, run_id="a1", **kw)
+    encode_table(_src(spark, 300, 500, with_w=True), b, m, run_id="b2", **kw)
+    cb, cm = str(d / "cb"), str(d / "cm")
+    compact_blocks(spark, b, m, cb, cm)
+    return (b, m), (cb, cm)
+
+
+@pytest.mark.parametrize("which", ["evolved", "compacted"])
+def test_row_range_matches_a_catalyst_slice(spark, evolved, which):
+    b, m = evolved[0] if which == "evolved" else evolved[1]
+    # global order: part_id, then append order (run a1 before b2), then
+    # the key (an encoded partition's rows are key-sorted)
+    decoded = (decode_table(spark, b, m, include_part_id=True)
+               .withColumn("__run", (F.col("k") >= 300).cast("int")))
+    order = [PART_ID, "__run", "k"]
+    for start, end in [(0, 7), (150, 330), (160, 170), (495, 520)]:
+        got, n = _jobs(spark, lambda: sorted(
+            r["k"] for r in decode_table(
+                spark, b, m, columns=["k", "w"],
+                row_range=(start, end)).collect()))
+        assert got == _slice(decoded, order, start, end), (start, end)
+        assert n <= 4, (start, end, n)
+    # a part_ids list scopes the order to those partitions
+    sub = decoded.filter(F.col(PART_ID).isin([0, 2]))
+    got = sorted(r["k"] for r in decode_table(
+        spark, b, m, columns=["k"], part_ids=[0, 2],
+        row_range=(100, 240)).collect())
+    assert got == _slice(sub, order, 100, 240)
+
+
+def test_row_range_run_ids_are_run_relative(spark, evolved):
+    b, m = evolved[0]
+    decoded = decode_table(spark, b, m, include_part_id=True,
+                           run_ids=["b2"])
+    for start, end in [(0, 10), (60, 140), (190, 400)]:
+        got = sorted(r["k"] for r in decode_table(
+            spark, b, m, columns=["k"], run_ids=["b2"],
+            row_range=(start, end)).collect())
+        assert got == _slice(decoded, [PART_ID, "k"], start, end)
+
+
+def test_row_range_falls_back_when_manifest_rows_disagree(spark, evolved,
+                                                          monkeypatch):
+    """A pair whose n_rows differ across columns cannot give partition
+    totals; the totals then come from the blocks (the Spark job)."""
+    import pyarrow as pa
+
+    b, m = evolved[0]
+    want = sorted(r["k"] for r in decode_table(
+        spark, b, m, columns=["k"], row_range=(150, 330)).collect())
+    orig = manifestmod.valid_pairs
+
+    def skewed(*a, **kw):
+        valid, rows = orig(*a, **kw)
+        lo = rows.column("n_rows_min").to_pylist()
+        lo[0] -= 1
+        return valid, rows.set_column(
+            rows.schema.get_field_index("n_rows_min"), "n_rows_min",
+            pa.array(lo, pa.int64()))
+
+    monkeypatch.setattr(manifestmod, "valid_pairs", skewed)
+    got, n = _jobs(spark, lambda: sorted(r["k"] for r in decode_table(
+        spark, b, m, columns=["k"], row_range=(150, 330)).collect()))
+    assert got == want
+    assert n > 4  # the groupBy job ran
