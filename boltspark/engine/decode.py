@@ -247,8 +247,8 @@ def eval_group_predicate(pred, blk_of, st_of, i):
     s = blk_of(pred.column, i)
     if s is None or not s.is_valid:
         # column absent from this group's run (schema evolution): the
-        # whole column is null here
-        return ("all", None) if pred.null_allowed else ("none", None)
+        # whole column is null here — the zone rule for a missing column
+        return pred.zone_verdict_cols(lambda c: None), None
     return _decode_mask(s.as_py(), st_of(pred.column, i), pred)
 
 

@@ -79,7 +79,7 @@ def _column_stats(values, tag: str, validity) -> dict:
              "has_null": has_null, "bloom": None}
     if tag == "bytes":
         # prefix min/max keeps stats rows small but still zone-usable
-        # (filters._bytes_zone_bounds is the reader side)
+        # (filters._zone is the reader side)
         n = len(values)
         if n:
             import pyarrow.compute as pc

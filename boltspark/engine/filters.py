@@ -1,88 +1,254 @@
-"""Null-aware predicate kernels for decode-time pushdown.
+"""Null-aware predicate kernels for decode-time pushdown — the
+reference's filter module (src/filters/: range, float range, boolean,
+const; null rule ``keep = (valid & check(value)) | (null_allowed &
+~valid)``, fixed_length_filter.rs:20-165) with zone maps wired into the
+reader (its ``check_range`` never is) and evaluation once per dictionary
+distinct (dictionary_page_int32_with_filters.rs:97-177), byte arrays
+included.  numpy boolean masks are the selection vectors.
 
-Capability parity with the reference's filter module
-(/root/reference/src/filters/):
+Each ordered leaf declares once what it accepts, ``value_set()`` ->
+(domain, [(lo, lo_inclusive, hi, hi_inclusive), ...]), None = unbounded;
+the base derives ``check_zone``, ``jvm_zone_keep`` (one leg per
+interval, ORed) and, with the one ternary null rule, ``mask``,
+``dict_mask`` and ``to_spark_condition``:
 
-* ``RangePredicate`` — integer/float range with open/closed bounds,
-  mirroring ``IntegerRangeFilter`` (integer_range_filter.rs:24-170)
-  and ``FloatPointRangeFilter`` (float_point_range_filter.rs:23-231).
-* ``BooleanPredicate`` — boolean_filter.rs:21-75.
-* ``ConstPredicate`` — const_filter.rs:21-135.
-* Null semantics — fixed_length_filter.rs:20-165:
-  ``keep = (valid & check(value)) | (null_allowed & ~valid)``.
-* ``check_range(min, max, has_null)`` — the zone-map interface
-  (fixed_length_filter.rs:91-114); the reference defines it but never
-  wires it into readers — our decode path actually uses it to skip
-  whole blocks.
-* Dictionary-level evaluation — evaluate once per distinct value then
-  map over codes (dictionary_page_int32_with_filters.rs:97-177); we
-  additionally support byte-array dictionaries, which the reference
-  leaves NotYetImplemented (primitive_column_reader.rs:425-427).
+====================  ======  =========================================
+leaf                  domain  value set
+====================  ======  =========================================
+RangePredicate        num     [lower, upper], either end open or None
+BooleanPredicate      num     {value}  (stats hold 0.0 / 1.0)
+InPredicate           either  {v, ...}; bytes when every v is bytes/str
+ConstPredicate        any     whole domain (accept) / empty set
+BytesEqPredicate      bytes   {value}
+BytesPrefixPredicate  bytes   [p, succ(p))
+BytesRangePredicate   bytes   [lower, upper], either end open or None
+====================  ======  =========================================
 
-numpy boolean masks are our selection vectors (row_range_set.rs
-builds explicit ranges for the same purpose).
+Contains, suffix, ArrayContains and Decimal128Range zones stay 'some'.
+A stats row's zone (``_zone``; lower end inclusive) is num [vmin, vmax],
+a null or NaN bound meaning unknown (np.min/np.max are NaN once a block
+holds a NaN, so a known zone holds none), or bytes [vmin_pfx, vmax_pfx]
+when ``vmax_exact``, else [vmin_pfx, succ(vmax_pfx)): values sharing
+prefix p sort below succ(p), p minus trailing 0xFF bytes with its last
+byte incremented (none for an empty or all-0xFF p).  NONE when no
+interval meets the zone, ALL when one holds it, else SOME; byte point
+sets also probe the bloom (a miss is a certain skip).  Value kernels
+use Spark's float order (NaN above +inf, NaN = NaN), as Catalyst does.
+
+int vs double: stats are float64, int bounds past 2^53 widened outward
+at encode.  Python compares scalars (int-to-float comparison is exact);
+an int bound float64 cannot hold is judged as is (int column) and
+rounded (a double column meets the rounded literal in numpy and
+Catalyst), and only a verdict both agree on stands.  JVM legs compare
+against the rounded double and stay non-strict (``vmax >= lo``): a
+strict leg drops a live group once rounding moves the bound up.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import datetime as dt
+import functools
+import operator
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import functions as F
+
+from ..kernels import bloom
+from ..kernels.strings import StringColumn, to_arrow
 
 ALL = "all"
 NONE = "none"
 SOME = "some"
 
+_JVM_MAX_LEGS = 16  # bigger needle sets: not worth the expression tree
+
+
+def _nan(x) -> bool:
+    return x is not None and x != x
+
+
+def _succ(p: bytes) -> bytes | None:
+    """Smallest byte string above every string starting with ``p``
+    (None: ``p`` is empty or all 0xFF, so nothing bounds them)."""
+    p = p.rstrip(b"\xff")
+    return p[:-1] + bytes([p[-1] + 1]) if p else None
+
+
+def _zone(stats: dict, domain: str):
+    """(lo, hi, hi_inclusive) bounding a block's valid values (lo
+    inclusive, hi None = unbounded), or None when unknown."""
+    if domain == "bytes":
+        lo, hi = stats.get("vmin_pfx"), stats.get("vmax_pfx")
+        if lo is None or hi is None:
+            return None
+        exact = bool(stats.get("vmax_exact"))
+        return bytes(lo), bytes(hi) if exact else _succ(bytes(hi)), exact
+    lo, hi = stats.get("vmin"), stats.get("vmax")
+    if lo is None or hi is None or _nan(lo) or _nan(hi):
+        return None
+    return lo, hi, True
+
+
+def _meets(iv, z) -> bool:
+    """Interval ``iv`` and zone ``z`` may share a value."""
+    lo, lo_inc, hi, hi_inc = iv
+    zlo, zhi, zhi_inc = z
+    if lo is not None and zhi is not None and (
+            lo > zhi or lo == zhi and not (lo_inc and zhi_inc)):
+        return False
+    return hi is None or hi > zlo or hi == zlo and hi_inc
+
+
+def _holds(iv, z) -> bool:
+    """Interval ``iv`` contains all of zone ``z``."""
+    lo, lo_inc, hi, hi_inc = iv
+    zlo, zhi, zhi_inc = z
+    return ((lo is None or zlo > lo or zlo == lo and lo_inc)
+            and (hi is None or zhi is not None and (
+                zhi < hi or zhi == hi and (hi_inc or not zhi_inc))))
+
+
+def _verdict(ivs, z, probe=None) -> str:
+    hits = [iv for iv in ivs if _meets(iv, z)]
+    if probe is not None:
+        hits = [iv for iv in hits if probe(iv[0])]
+    if not hits:
+        return NONE
+    return ALL if any(_holds(iv, z) for iv in hits) else SOME
+
+
+def _num_ivs(ivs, rounded: bool):
+    """Numeric intervals against a known (NaN-free) zone: a NaN lower
+    end admits only NaN, so the interval drops; a NaN upper end lies
+    above every value the zone holds.  ``rounded``: bounds as float64."""
+    out = []
+    for lo, lo_inc, hi, hi_inc in ivs:
+        if rounded:
+            lo, hi = (None if b is None else float(b) for b in (lo, hi))
+        if not _nan(lo):
+            out.append((lo, lo_inc, None if _nan(hi) else hi, hi_inc))
+    return out
+
+
+def _as_double(values):
+    """Catalyst compares a float column against double literals in
+    double: widen float32 so the mask agrees."""
+    return values.astype(np.float64) if values.dtype == np.float32 else values
+
+
+def _arrow_mask(fn, col, *args, **kw) -> np.ndarray:
+    """One Arrow compute call over a byte column -> numpy bool mask."""
+    assert isinstance(col, StringColumn)
+    return np.asarray(fn(to_arrow(col), *args, **kw), dtype=bool)
+
+
+def _lit(v: bytes):
+    """A byte bound as a Spark literal: str for UTF-8 (string columns),
+    else a binary literal."""
+    try:
+        return v.decode("utf-8")
+    except UnicodeDecodeError:  # binary column: bytes literal
+        return F.lit(v)
+
+
+def _spark_between(c, lo, lo_inc, hi, hi_inc):
+    """lo <(=) c <(=) hi as a Column; a None end is unbounded."""
+    cond = F.lit(True)
+    if lo is not None:
+        cond = cond & ((c >= lo) if lo_inc else (c > lo))
+    if hi is not None:
+        cond = cond & ((c <= hi) if hi_inc else (c < hi))
+    return cond
+
+
+def _jvm_num_leg(st, lo, lo_inc, hi, hi_inc):
+    """Keep unless the numeric zone provably misses the interval —
+    non-strict against the rounded double literal whatever the ends."""
+    legs = []
+    for b, field, op in ((lo, "vmax", operator.ge), (hi, "vmin", operator.le)):
+        if b is not None:
+            s = st.getField(field)
+            legs.append(s.isNull() | F.isnan(s) | op(s, F.lit(float(b))))
+    return functools.reduce(operator.and_, legs)
+
+
+def _jvm_bytes_leg(st, lo, lo_inc, hi, hi_inc):
+    """Keep unless the byte zone provably misses the interval — the same
+    comparisons as ``_meets`` over ``_zone``; v >= succ(p) is spelled
+    v > p AND NOT startswith(v, p)."""
+    legs = []
+    if lo is not None:
+        v, pmax = F.lit(lo), st.getField("vmax_pfx")
+        exact = F.coalesce(st.getField("vmax_exact"), F.lit(False))
+        below = F.when(exact, (v > pmax) if lo_inc else (v >= pmax)) \
+            .otherwise((v > pmax) & ~v.startswith(pmax))
+        legs.append(pmax.isNull() | ~below)
+    if hi is not None:
+        v, pmin = F.lit(hi), st.getField("vmin_pfx")
+        legs.append(pmin.isNull() | ((pmin <= v) if hi_inc else (pmin < v)))
+    return functools.reduce(operator.and_, legs)
+
 
 class Predicate:
-    """Base: vectorized mask over dense values + zone-map check."""
+    """Base: one value kernel (``check``) and one value set
+    (``value_set``) per leaf; zone verdicts, the JVM prefilter, masks
+    and Spark conditions are derived here."""
 
     column: str
     null_allowed: bool = False
 
-    def check(self, values: np.ndarray) -> np.ndarray:  # dense, no nulls
-        raise NotImplementedError
+    def check(self, values) -> np.ndarray:  # dense, no nulls
+        return self.check_bytes(values)
 
-    def check_range(self, vmin, vmax, has_null: bool) -> str:
-        """Zone-map: 'all' / 'none' / 'some' rows in [vmin, vmax] survive."""
-        return SOME
+    def check_bytes(self, col) -> np.ndarray:
+        raise TypeError(f"{type(self).__name__} does not apply to byte arrays")
 
-    def check_zone(self, stats: dict) -> str:
-        """Dispatch the block's zone-map stats row to ``check_range``.
-        Byte predicates override this to use the stored min/max prefixes
-        (the reference defines check_range but never wires it into a
-        reader — fixed_length_filter.rs:91-114; we call it before ever
-        touching payload bytes)."""
-        return self.check_range(
-            stats.get("vmin"), stats.get("vmax"), stats.get("has_null", False)
-        )
-
-    def mask(self, values: np.ndarray, validity: np.ndarray | None) -> np.ndarray:
-        """Full-length keep mask with the reference's ternary-null rule."""
-        if validity is None:
-            return self.check(values)
-        keep = np.zeros(len(validity), dtype=bool)
-        keep[validity] = self.check(values)
-        if self.null_allowed:
-            keep |= ~validity
-        return keep
-
-    def jvm_zone_keep(self, st):
-        """Optional JVM-side zone prefilter: a Column over the typed
-        stats struct ``st`` that is False only for groups this predicate
-        can PROVABLY never match (conservative: null stats pass, Python
-        re-checks everything that remains).  None = no JVM prefilter."""
+    def value_set(self):
+        """(domain, intervals) this leaf accepts — domain 'num' or
+        'bytes' — or None when its values have no order to prune on."""
         return None
 
-    def dict_mask(self, uniques, codes: np.ndarray,
-                  validity: np.ndarray | None) -> np.ndarray:
-        """Dictionary fast path: predicate on distincts, gather by code."""
-        if hasattr(uniques, "offsets"):  # StringColumn
-            umask = self.check_bytes(uniques)
-        else:
-            umask = self.check(uniques)
-        dense = umask[codes]
+    def value_zone(self, stats: dict) -> str:
+        """Verdict over the block's VALID values (nulls set aside)."""
+        vs = self.value_set()
+        if vs is None:
+            return SOME
+        domain, ivs = vs
+        if not ivs:
+            return NONE
+        if any(lo is None and hi is None for lo, _, hi, _ in ivs):
+            return ALL
+        z = _zone(stats, domain)
+        if z is None:
+            return SOME
+        if domain == "bytes":
+            bl = stats.get("bloom")
+            probe = None
+            if bl is not None and all(iv[0] == iv[2] for iv in ivs):
+                probe = functools.partial(bloom.maybe_contains, bytes(bl))
+            return _verdict(ivs, z, probe)
+        exact, rounded = _num_ivs(ivs, False), _num_ivs(ivs, True)
+        v = _verdict(exact, z)
+        if rounded != exact and _verdict(rounded, z) != v:
+            return SOME
+        return v
+
+    def check_zone(self, stats: dict) -> str:
+        """Zone-map verdict from a block's stats row alone: 'all' /
+        'none' / 'some' rows pass.  Exact — 'all' means every row passes,
+        'none' that none does — because NotPredicate inverts it."""
+        v = self.value_zone(stats)  # then the ternary null rule
+        if stats.get("has_null") and v == (NONE if self.null_allowed else ALL):
+            return SOME
+        return v
+
+    def _scatter(self, dense: np.ndarray, validity) -> np.ndarray:
+        """Dense-value verdicts -> full-length keep mask with the
+        reference's ternary-null rule."""
         if validity is None:
             return dense
         keep = np.zeros(len(validity), dtype=bool)
@@ -91,8 +257,43 @@ class Predicate:
             keep |= ~validity
         return keep
 
-    def check_bytes(self, uniques) -> np.ndarray:
-        raise TypeError(f"{type(self).__name__} does not apply to byte arrays")
+    def mask(self, values, validity: np.ndarray | None) -> np.ndarray:
+        return self._scatter(self.check(values), validity)
+
+    def dict_mask(self, uniques, codes: np.ndarray,
+                  validity: np.ndarray | None) -> np.ndarray:
+        """Dictionary fast path: predicate on distincts, gather by code."""
+        if hasattr(uniques, "offsets"):  # StringColumn
+            umask = self.check_bytes(uniques)
+        else:
+            umask = self.check(uniques)
+        return self._scatter(umask[codes], validity)
+
+    def jvm_zone_keep(self, st):
+        """JVM-side zone prefilter: a Column over the typed stats struct
+        ``st`` that is False only for groups this predicate can PROVABLY
+        never match (null stats pass, Python re-checks everything that
+        remains).  None = no JVM prefilter."""
+        vs = self.value_set()
+        if vs is None or len(vs[1]) > _JVM_MAX_LEGS or any(
+                lo is None and hi is None for lo, _, hi, _ in vs[1]):
+            return None
+        leg = _jvm_bytes_leg if vs[0] == "bytes" else _jvm_num_leg
+        legs = [leg(st, *iv) for iv in vs[1]]
+        keep = functools.reduce(operator.or_, legs) if legs else F.lit(False)
+        if self.null_allowed:
+            keep = keep | F.coalesce(st.getField("has_null"), F.lit(True))
+        return keep
+
+    def _spark_value(self, c):
+        """The leaf's value condition on Column ``c`` (nulls aside)."""
+        raise NotImplementedError(f"{type(self).__name__} has no Spark form")
+
+    def to_spark_condition(self):
+        """Equivalent Column expression — for parity tests vs Catalyst."""
+        c = F.col(self.column)
+        cond = self._spark_value(c)
+        return (cond | c.isNull()) if self.null_allowed else (cond & c.isNotNull())
 
     @property
     def columns(self) -> list[str]:
@@ -109,16 +310,20 @@ class Predicate:
         yields the typed stats struct Column for any leaf column."""
         return self.jvm_zone_keep(st_for(self.column))
 
+    def zone_verdict_cols(self, st_for) -> str:
+        """``check_zone`` generalized to composites: ``st_for(col)``
+        yields a leaf column's stats dict, or None when the group
+        predates the column (schema evolution: every row is null)."""
+        st = st_for(self.column)
+        if st is None:
+            return ALL if self.null_allowed else NONE
+        return self.check_zone(st)
+
 
 def pred_columns(predicates) -> list[str]:
     """Ordered dedup of every leaf column a predicate list touches
     (composite predicates span several columns)."""
-    out: list[str] = []
-    for p in predicates:
-        for c in p.columns:
-            if c not in out:
-                out.append(c)
-    return out
+    return list(dict.fromkeys(c for p in predicates for c in p.columns))
 
 
 def _utc(v):
@@ -126,8 +331,6 @@ def _utc(v):
     datetime convention, applied identically on the storage side and
     the Spark-literal side so engine/Catalyst parity holds on non-UTC
     hosts)."""
-    import datetime as dt
-
     return v.replace(tzinfo=dt.timezone.utc) if v.tzinfo is None else v
 
 
@@ -138,8 +341,6 @@ def _storage_bound(v):
     through.  Integer timedelta division, NOT timestamp()*1e6: the
     float path is off by 1 us for ~1% of microsecond-precision
     stamps."""
-    import datetime as dt
-
     if isinstance(v, dt.datetime):  # before date: datetime IS a date
         epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
         return (_utc(v) - epoch) // dt.timedelta(microseconds=1)
@@ -153,8 +354,6 @@ def _spark_bound(v):
     datetimes get the same UTC interpretation _storage_bound applies
     (Spark would otherwise read a naive literal in the SESSION
     timezone and parity would silently break off-UTC)."""
-    import datetime as dt
-
     return _utc(v) if isinstance(v, dt.datetime) else v
 
 
@@ -179,68 +378,34 @@ class RangePredicate(Predicate):
     def __post_init__(self):
         # keep the user's values for to_spark_condition (Spark compares
         # timestamp columns against datetime literals, not epoch ints)
-        self._spark_lower = self.lower
-        self._spark_upper = self.upper
-        self.lower = _storage_bound(self.lower)
-        self.upper = _storage_bound(self.upper)
+        self._spark_lower, self._spark_upper = self.lower, self.upper
+        self.lower, self.upper = map(_storage_bound, (self.lower, self.upper))
 
     def check(self, values: np.ndarray) -> np.ndarray:
-        keep = np.ones(len(values), dtype=bool)
-        if self.lower is not None:
-            keep &= (values >= self.lower) if self.lower_inclusive else (values > self.lower)
-        if self.upper is not None:
-            keep &= (values <= self.upper) if self.upper_inclusive else (values < self.upper)
-        return keep
-
-    def check_range(self, vmin, vmax, has_null: bool) -> str:
-        if vmin is None or vmax is None:
-            return SOME
-        test = self.check(np.array([vmin, vmax]))
-        lo_in, hi_in = bool(test[0]), bool(test[1])
-        if lo_in and hi_in:
-            # whole zone inside the range only if range covers [vmin, vmax]
-            return ALL if not has_null or self.null_allowed else SOME
-        if not lo_in and not hi_in:
-            # zone may still straddle the range interior
-            below = self.upper is not None and vmin > self.upper
-            above = self.lower is not None and vmax < self.lower
-            if (below or above) and not (has_null and self.null_allowed):
-                return NONE
-        return SOME
-
-    def to_spark_condition(self):
-        """Equivalent Column expression — for parity tests vs Catalyst."""
-        from pyspark.sql import functions as F
-
-        c = F.col(self.column)
-        lo = _spark_bound(getattr(self, "_spark_lower", self.lower))
-        hi = _spark_bound(getattr(self, "_spark_upper", self.upper))
-        cond = F.lit(True)
+        # Spark's float order: NaN above every bound but NaN, NaN = NaN
+        v = _as_double(values)
+        nan = np.isnan(v) if v.dtype.kind == "f" else np.zeros(len(v), bool)
+        lo, hi, lo_inc, hi_inc = (self.lower, self.upper,
+                                  self.lower_inclusive, self.upper_inclusive)
+        keep = np.ones(len(v), dtype=bool)
         if lo is not None:
-            cond = cond & ((c >= lo) if self.lower_inclusive else (c > lo))
-        if hi is not None:
-            cond = cond & ((c <= hi) if self.upper_inclusive else (c < hi))
-        if self.null_allowed:
-            cond = cond | c.isNull()
-        else:
-            cond = cond & c.isNotNull()
-        return cond
-
-    def jvm_zone_keep(self, st):
-        from pyspark.sql import functions as F
-
-        if self.lower is None and self.upper is None:
-            return None
-        keep = F.lit(True)
-        if self.lower is not None:
-            keep = keep & (st.getField("vmax").isNull()
-                           | (st.getField("vmax") >= float(self.lower)))
-        if self.upper is not None:
-            keep = keep & (st.getField("vmin").isNull()
-                           | (st.getField("vmin") <= float(self.upper)))
-        if self.null_allowed:
-            keep = keep | F.coalesce(st.getField("has_null"), F.lit(True))
+            keep &= (v >= lo if lo_inc else v > lo) | (
+                nan & (lo_inc or not _nan(lo)))
+        if hi is not None:  # every non-NaN value sorts below a NaN bound
+            keep &= (~nan | hi_inc) if _nan(hi) else (
+                v <= hi if hi_inc else v < hi)
         return keep
+
+    def value_set(self):
+        return "num", [(self.lower, self.lower_inclusive,
+                        self.upper, self.upper_inclusive)]
+
+    def _spark_value(self, c):
+        return _spark_between(
+            c, _spark_bound(getattr(self, "_spark_lower", self.lower)),
+            self.lower_inclusive,
+            _spark_bound(getattr(self, "_spark_upper", self.upper)),
+            self.upper_inclusive)
 
 
 def _split128(x: int) -> tuple[int, int]:
@@ -277,31 +442,20 @@ class Decimal128RangePredicate(Predicate):
 
     def check(self, values: np.ndarray) -> np.ndarray:
         v = np.ascontiguousarray(values, dtype=np.int64)
-        if v.ndim == 1:
-            # precision-widened tables mix storages: runs written at
-            # p<=18 store 1-D unscaled int64 — sign-extend to word
-            # pairs so ONE predicate class filters the whole column
-            pairs = np.empty((len(v), 2), dtype=np.int64)
-            pairs[:, 0] = v
-            pairs[:, 1] = v >> 63
-            v = pairs
-        else:
-            v = v.reshape(-1, 2)
+        # precision-widened tables mix storages: runs written at p<=18
+        # store 1-D unscaled int64 — sign-extend to word pairs so ONE
+        # predicate class filters the whole column
+        v = np.stack([v, v >> 63], axis=1) if v.ndim == 1 else v.reshape(-1, 2)
         lo_u = v[:, 0].view(np.uint64)
         hi = v[:, 1]
         keep = np.ones(len(v), dtype=bool)
-        if self.lower is not None:
-            b_lo, b_hi = _split128(int(self.lower))
-            tie = hi == b_hi
-            cmp = (lo_u >= np.uint64(b_lo)) if self.lower_inclusive \
-                else (lo_u > np.uint64(b_lo))
-            keep &= (hi > b_hi) | (tie & cmp)
-        if self.upper is not None:
-            b_lo, b_hi = _split128(int(self.upper))
-            tie = hi == b_hi
-            cmp = (lo_u <= np.uint64(b_lo)) if self.upper_inclusive \
-                else (lo_u < np.uint64(b_lo))
-            keep &= (hi < b_hi) | (tie & cmp)
+        for b, inc, strict, weak in (
+                (self.lower, self.lower_inclusive, operator.gt, operator.ge),
+                (self.upper, self.upper_inclusive, operator.lt, operator.le)):
+            if b is not None:
+                b_lo, b_hi = _split128(int(b))
+                cmp = (weak if inc else strict)(lo_u, np.uint64(b_lo))
+                keep &= strict(hi, b_hi) | ((hi == b_hi) & cmp)
         return keep
 
 
@@ -314,16 +468,11 @@ class BooleanPredicate(Predicate):
     def check(self, values: np.ndarray) -> np.ndarray:
         return values == self.value
 
-    def check_range(self, vmin, vmax, has_null: bool) -> str:
-        if vmin is None or vmax is None:
-            return SOME
-        if vmin == vmax:
-            hit = bool(vmin) == self.value
-            if hit and not has_null:
-                return ALL
-            if not hit and not (has_null and self.null_allowed):
-                return NONE
-        return SOME
+    def value_set(self):
+        return "num", [(self.value, True, self.value, True)]
+
+    def _spark_value(self, c):
+        return c == self.value
 
 
 @dataclass
@@ -339,52 +488,18 @@ class ConstPredicate(Predicate):
     # comparison filter, so this reaches d128 columns routinely via DSv2
     supports_d128 = True
 
-    def check(self, values: np.ndarray) -> np.ndarray:
-        return np.full(len(values), self.accept, dtype=bool)
-
-    def check_bytes(self, col) -> np.ndarray:
+    def check(self, values) -> np.ndarray:
         # value-independent: applies to any physical type (accept=True,
         # null_allowed=False is the universal IS NOT NULL predicate)
-        return np.full(len(col), self.accept, dtype=bool)
+        return np.full(len(values), self.accept, dtype=bool)
 
-    def check_range(self, vmin, vmax, has_null: bool) -> str:
-        if self.accept:
-            return ALL if not has_null or self.null_allowed else SOME
-        return SOME if (has_null and self.null_allowed) else NONE
+    check_bytes = check
 
+    def value_set(self):
+        return None, ([(None, True, None, True)] if self.accept else [])
 
-def _jvm_bytes_not_above(v, st):
-    """JVM keep-leg: NOT (v[:len(vmax_pfx)] > vmax_pfx), sharpened to
-    v > vmax_pfx when the stored max is exact.  Uses the identity
-    v[:len(p)] > p  ⟺  v > p AND NOT startswith(v, p), which avoids a
-    per-row-length substring."""
-    from pyspark.sql import functions as F
-
-    pmax = st.getField("vmax_pfx")
-    exact = F.coalesce(st.getField("vmax_exact"), F.lit(False))
-    above = F.when(exact, v > pmax).otherwise((v > pmax) & ~v.startswith(pmax))
-    return pmax.isNull() | ~above
-
-
-def _jvm_bytes_not_below_eq(v, st):
-    """JVM keep-leg for equality needles: NOT (v < vmin_pfx); prefix <=
-    full value, so v < vmin_pfx implies v < vmin."""
-    pmin = st.getField("vmin_pfx")
-    return pmin.isNull() | (v >= pmin)
-
-
-def _bytes_zone_bounds(stats: dict):
-    """Read the byte-column zone-map stats written by the encoder:
-    (vmin_pfx, vmax_pfx, vmin_exact, vmax_exact, has_null) or None.
-    ``*_pfx`` are the first 24 bytes of the true min/max; ``*_exact``
-    says the value fit entirely (so the prefix IS the bound)."""
-    pmin, pmax = stats.get("vmin_pfx"), stats.get("vmax_pfx")
-    if pmin is None or pmax is None:
-        return None
-    return (bytes(pmin), bytes(pmax),
-            bool(stats.get("vmin_exact") or False),
-            bool(stats.get("vmax_exact") or False),
-            bool(stats.get("has_null") or False))
+    def _spark_value(self, c):
+        return F.lit(self.accept)
 
 
 @dataclass
@@ -398,71 +513,14 @@ class BytesEqPredicate(Predicate):
     value: bytes = b""
     null_allowed: bool = False
 
-    def check(self, values) -> np.ndarray:
-        return self.check_bytes(values)
-
-    def check_zone(self, stats: dict) -> str:
-        z = _bytes_zone_bounds(stats)
-        if z is None:
-            return SOME
-        vmin_pfx, vmax_pfx, vmin_exact, vmax_exact, has_null = z
-        v = self.value
-        # below the zone: v < vmin_pfx implies v < vmin (prefix <= full);
-        # above the zone: v's own prefix > vmax_pfx implies v > any value
-        # sharing that prefix (exact bound sharpens the comparison)
-        below = v < vmin_pfx
-        above = v > vmax_pfx if vmax_exact else v[: len(vmax_pfx)] > vmax_pfx
-        nulls_keep = has_null and self.null_allowed
-        if (below or above) and not nulls_keep:
-            return NONE
-        if (vmin_exact and vmax_exact and vmin_pfx == vmax_pfx == v
-                and (not has_null or self.null_allowed)):
-            return ALL
-        # equality bloom (parquet-bloom analog): a miss is a certain skip
-        bl = stats.get("bloom")
-        if bl is not None and not nulls_keep and not below and not above:
-            from ..kernels import bloom
-
-            if not bloom.maybe_contains(bytes(bl), v):
-                return NONE
-        return SOME
-
     def check_bytes(self, col) -> np.ndarray:
-        from ..kernels.strings import StringColumn
+        return _arrow_mask(pc.equal, col, self.value)
 
-        assert isinstance(col, StringColumn)
-        vlen = len(self.value)
-        out = col.lengths() == vlen
-        if vlen:
-            idx = np.nonzero(out)[0]
-            pv = np.frombuffer(self.value, dtype=np.uint8)
-            src = np.frombuffer(col.data, dtype=np.uint8)
-            starts = col.offsets[idx]
-            ok = np.ones(len(idx), dtype=bool)
-            for k in range(vlen):
-                ok &= src[starts + k] == pv[k]
-            out[idx] = ok
-        return out
+    def value_set(self):
+        return "bytes", [(self.value, True, self.value, True)]
 
-    def to_spark_condition(self):
-        from pyspark.sql import functions as F
-
-        c = F.col(self.column)
-        cond = c == self.value.decode("utf-8")
-        if self.null_allowed:
-            cond = cond | c.isNull()
-        else:
-            cond = cond & c.isNotNull()
-        return cond
-
-    def jvm_zone_keep(self, st):
-        from pyspark.sql import functions as F
-
-        v = F.lit(self.value)
-        keep = _jvm_bytes_not_below_eq(v, st) & _jvm_bytes_not_above(v, st)
-        if self.null_allowed:
-            keep = keep | F.coalesce(st.getField("has_null"), F.lit(True))
-        return keep
+    def _spark_value(self, c):
+        return c == _lit(self.value)
 
 
 @dataclass
@@ -483,93 +541,27 @@ class InPredicate(Predicate):
     def check(self, values) -> np.ndarray:
         if hasattr(values, "offsets"):
             return self.check_bytes(values)
-        if not self.values:
-            return np.zeros(len(values), dtype=bool)
-        return np.isin(values, np.asarray(list(self.values)))
+        values = _as_double(values)
+        keep = np.isin(values, np.asarray(list(self.values)))
+        if values.dtype.kind == "f" and any(_nan(v) for v in self.values):
+            keep |= np.isnan(values)  # Spark: NaN IN (NaN)
+        return keep
 
     def check_bytes(self, col) -> np.ndarray:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ..kernels.strings import to_arrow
-
-        if not self.values:
-            return np.zeros(len(col), dtype=bool)
         vals = pa.array(self._byte_values(), pa.large_binary())
-        return np.asarray(pc.is_in(to_arrow(col), value_set=vals))
+        return _arrow_mask(pc.is_in, col, value_set=vals)
 
-    def check_zone(self, stats: dict) -> str:
-        nulls_keep = stats.get("has_null", False) and self.null_allowed
-        if not self.values:
-            return SOME if nulls_keep else NONE
-        z = _bytes_zone_bounds(stats)
-        if z is not None:
-            vmin_pfx, vmax_pfx, vmin_exact, vmax_exact, _ = z
-            bl = stats.get("bloom")
-
-            def possible(v: bytes) -> bool:
-                below = v < vmin_pfx
-                above = v > vmax_pfx if vmax_exact else v[: len(vmax_pfx)] > vmax_pfx
-                if below or above:
-                    return False
-                if bl is not None:
-                    from ..kernels import bloom
-
-                    return bloom.maybe_contains(bytes(bl), v)
-                return True
-
-            if not nulls_keep and not any(possible(v) for v in self._byte_values()):
-                return NONE
-            return SOME
-        vmin, vmax = stats.get("vmin"), stats.get("vmax")
-        if vmin is None or vmax is None:
-            return SOME
-        try:
-            if not nulls_keep and all(v < vmin or v > vmax for v in self.values):
-                return NONE
-        except TypeError:
-            return SOME
-        return SOME
-
-    def to_spark_condition(self):
-        from pyspark.sql import functions as F
-
-        c = F.col(self.column)
-        vals = [v.decode("utf-8") if isinstance(v, bytes) else v
-                for v in self.values]
-        cond = c.isin(vals)
-        if self.null_allowed:
-            cond = cond | c.isNull()
-        else:
-            cond = cond & c.isNotNull()
-        return cond
-
-    def jvm_zone_keep(self, st):
-        from pyspark.sql import functions as F
-
-        if not self.values or len(self.values) > 16:
-            return None  # big needle sets: not worth the expression tree
+    def value_set(self):
         if all(isinstance(v, (bytes, str)) for v in self.values):
-            legs = [
-                _jvm_bytes_not_below_eq(F.lit(v), st)
-                & _jvm_bytes_not_above(F.lit(v), st)
-                for v in self._byte_values()
-            ]
-        elif all(isinstance(v, (int, float)) and not isinstance(v, bool)
-                 for v in self.values):
-            legs = [
-                (st.getField("vmax").isNull() | (st.getField("vmax") >= float(v)))
-                & (st.getField("vmin").isNull() | (st.getField("vmin") <= float(v)))
-                for v in self.values
-            ]
-        else:
-            return None
-        keep = legs[0]
-        for leg in legs[1:]:
-            keep = keep | leg
-        if self.null_allowed:
-            keep = keep | F.coalesce(st.getField("has_null"), F.lit(True))
-        return keep
+            return "bytes", [(v, True, v, True) for v in self._byte_values()]
+        if all(isinstance(v, (int, float, np.integer, np.floating))
+               for v in self.values):
+            return "num", [(v, True, v, True) for v in self.values]
+        return None
+
+    def _spark_value(self, c):
+        return c.isin([v.decode("utf-8") if isinstance(v, bytes) else v
+                       for v in self.values])
 
 
 @dataclass
@@ -590,7 +582,7 @@ class ArrayContainsPredicate(Predicate):
         if hasattr(vals, "offsets"):  # byte elements
             v = self.value if isinstance(self.value, bytes) \
                 else str(self.value).encode()
-            hits = BytesEqPredicate(column=self.column, value=v).check_bytes(vals)
+            hits = _arrow_mask(pc.equal, vals, v)
         else:
             hits = np.asarray(vals) == self.value
         ev = col.elem_validity
@@ -604,18 +596,10 @@ class ArrayContainsPredicate(Predicate):
         np.cumsum(hits, out=cz[1:])
         return (cz[col.offsets[1:]] - cz[col.offsets[:-1]]) > 0
 
-    def to_spark_condition(self):
-        from pyspark.sql import functions as F
-
-        c = F.col(self.column)
+    def _spark_value(self, c):
         v = self.value.decode("utf-8") if isinstance(self.value, bytes) \
             else self.value
-        cond = F.array_contains(c, v)
-        if self.null_allowed:
-            cond = cond | c.isNull()
-        else:
-            cond = cond & c.isNotNull()
-        return cond
+        return F.array_contains(c, v)
 
 
 @dataclass
@@ -627,116 +611,32 @@ class BytesPrefixPredicate(Predicate):
     prefix: bytes = b""
     null_allowed: bool = False
 
-    def check(self, values) -> np.ndarray:
-        return self.check_bytes(values)
-
-    def check_zone(self, stats: dict) -> str:
-        z = _bytes_zone_bounds(stats)
-        if z is None:
-            return SOME
-        vmin_pfx, vmax_pfx, vmin_exact, vmax_exact, has_null = z
-        p = self.prefix
-        # any match is >= p, so p > vmax means NONE; vmin already past
-        # the prefix's cover (vmin[:len(p)] > p) also means NONE.  The
-        # prefix comparisons are only conclusive while p fits inside the
-        # stored 24-byte prefixes.
-        above = p > vmax_pfx if vmax_exact else p[: len(vmax_pfx)] > vmax_pfx
-        below = vmin_pfx[: len(p)] > p if len(p) <= len(vmin_pfx) or vmin_exact else False
-        if (above or below) and not (has_null and self.null_allowed):
-            return NONE
-        # both bounds start with p => every value in [vmin, vmax] does
-        if (len(p) <= min(len(vmin_pfx), len(vmax_pfx))
-                and vmin_pfx[: len(p)] == p == vmax_pfx[: len(p)]
-                and (not has_null or self.null_allowed)):
-            return ALL
-        return SOME
-
     def check_bytes(self, col) -> np.ndarray:
-        from ..kernels.strings import StringColumn
+        return _arrow_mask(pc.starts_with, col, pattern=self.prefix)
 
-        assert isinstance(col, StringColumn)
-        plen = len(self.prefix)
-        out = col.lengths() >= plen
-        if plen:
-            idx = np.nonzero(out)[0]
-            pv = np.frombuffer(self.prefix, dtype=np.uint8).astype(np.uint64)
-            src = np.frombuffer(col.data, dtype=np.uint8)
-            starts = col.offsets[idx]
-            ok = np.ones(len(idx), dtype=bool)
-            for k in range(plen):
-                ok &= src[starts + k] == pv[k]
-            out[idx] = ok
-        return out
+    def value_set(self):
+        return "bytes", [(self.prefix, True, _succ(self.prefix), False)]
 
-    def to_spark_condition(self):
-        from pyspark.sql import functions as F
+    def _spark_value(self, c):
+        return c.startswith(_lit(self.prefix))
 
-        c = F.col(self.column)
-        cond = c.startswith(self.prefix.decode("utf-8"))
-        if self.null_allowed:
-            cond = cond | c.isNull()
-        else:
-            cond = cond & c.isNotNull()
-        return cond
-
-    def jvm_zone_keep(self, st):
-        from pyspark.sql import functions as F
-
-        if not self.prefix:
-            return None
-        p = F.lit(self.prefix)
-        pmin = st.getField("vmin_pfx")
-        # below leg is conclusive only while the stored prefix covers the
-        # needle (or the stored min is exact) — check_zone mirrors this
-        conclusive = ((F.octet_length(pmin) >= len(self.prefix))
-                      | F.coalesce(st.getField("vmin_exact"), F.lit(False)))
-        below = conclusive & (F.substring(pmin, 1, len(self.prefix)) > p)
-        keep = (pmin.isNull() | ~below) & _jvm_bytes_not_above(p, st)
-        if self.null_allowed:
-            keep = keep | F.coalesce(st.getField("has_null"), F.lit(True))
-        return keep
 
 @dataclass
 class BytesContainsPredicate(Predicate):
     """Byte-array predicate: value contains ``needle`` (SQL LIKE
-    '%needle%'), byte-level.  Substring has no order relation so zone
-    min/max prefixes can never prune — ``check_zone`` stays SOME — but
-    the dictionary path still evaluates the scan once per DISTINCT
-    value and maps over codes (the filter-over-dictionary strategy of
-    dictionary_page_int32_with_filters.rs:97-177, applied to the
-    byte-array dictionaries the reference leaves NotYetImplemented)."""
+    '%needle%'), byte-level.  Substring has no order relation, so zones
+    never prune, but dictionary blocks still scan once per DISTINCT
+    value and map over codes."""
 
     column: str
     needle: bytes = b""
     null_allowed: bool = False
 
-    def check(self, values) -> np.ndarray:
-        return self.check_bytes(values)
-
     def check_bytes(self, col) -> np.ndarray:
-        import pyarrow.compute as pc
+        return _arrow_mask(pc.match_substring, col, self.needle)
 
-        from ..kernels import strings
-
-        if not self.needle:
-            return np.ones(len(col), dtype=bool)
-        got = pc.match_substring(strings.to_arrow(col), self.needle)
-        return np.asarray(got, dtype=bool)
-
-    def to_spark_condition(self):
-        from pyspark.sql import functions as F
-
-        c = F.col(self.column)
-        try:
-            needle = self.needle.decode("utf-8")
-        except UnicodeDecodeError:  # binary column: bytes literal
-            needle = F.lit(self.needle)
-        cond = c.contains(needle)
-        if self.null_allowed:
-            cond = cond | c.isNull()
-        else:
-            cond = cond & c.isNotNull()
-        return cond
+    def _spark_value(self, c):
+        return c.contains(_lit(self.needle))
 
 
 @dataclass
@@ -750,33 +650,53 @@ class BytesSuffixPredicate(Predicate):
     suffix: bytes = b""
     null_allowed: bool = False
 
-    def check(self, values) -> np.ndarray:
-        return self.check_bytes(values)
+    def check_bytes(self, col) -> np.ndarray:
+        return _arrow_mask(pc.ends_with, col, pattern=self.suffix)
+
+    def _spark_value(self, c):
+        return c.endswith(_lit(self.suffix))
+
+
+@dataclass
+class BytesRangePredicate(Predicate):
+    """Lexicographic byte-array range: lower <(=) value <(=) upper —
+    the SQL ``path >= 'a/' AND path < 'b/'`` prefix-partition range
+    scan.  str bounds are encoded UTF-8 at construction.  Zones come
+    off the stored 24-byte min/max prefixes (module docstring);
+    dictionary blocks evaluate once per distinct, the dense path is a
+    vectorized Arrow binary compare.  DSv2 pushes string
+    GreaterThan[OrEqual]/LessThan[OrEqual] here."""
+
+    column: str
+    lower: bytes | None = None
+    upper: bytes | None = None
+    lower_inclusive: bool = True
+    upper_inclusive: bool = True
+    null_allowed: bool = False
+
+    def __post_init__(self):
+        self.lower, self.upper = (b.encode() if isinstance(b, str) else b
+                                  for b in (self.lower, self.upper))
+        if self.lower is None and self.upper is None:
+            raise ValueError("BytesRangePredicate needs a bound")
 
     def check_bytes(self, col) -> np.ndarray:
-        import pyarrow.compute as pc
+        keep = np.ones(len(col), dtype=bool)
+        for b, op in (
+                (self.lower, pc.greater_equal if self.lower_inclusive else pc.greater),
+                (self.upper, pc.less_equal if self.upper_inclusive else pc.less)):
+            if b is not None:
+                keep &= _arrow_mask(op, col, b)
+        return keep
 
-        from ..kernels import strings
+    def value_set(self):
+        return "bytes", [(self.lower, self.lower_inclusive,
+                          self.upper, self.upper_inclusive)]
 
-        if not self.suffix:
-            return np.ones(len(col), dtype=bool)
-        got = pc.ends_with(strings.to_arrow(col), pattern=self.suffix)
-        return np.asarray(got, dtype=bool)
-
-    def to_spark_condition(self):
-        from pyspark.sql import functions as F
-
-        c = F.col(self.column)
-        try:
-            suffix = self.suffix.decode("utf-8")
-        except UnicodeDecodeError:  # binary column: bytes literal
-            suffix = F.lit(self.suffix)
-        cond = c.endswith(suffix)
-        if self.null_allowed:
-            cond = cond | c.isNull()
-        else:
-            cond = cond & c.isNotNull()
-        return cond
+    def _spark_value(self, c):
+        lo, hi = (None if b is None else _lit(b) for b in (self.lower, self.upper))
+        return _spark_between(c, lo, self.lower_inclusive,
+                              hi, self.upper_inclusive)
 
 
 def replace_predicate(pred, **kw):
@@ -797,22 +717,48 @@ class _CompositePredicate(Predicate):
     """Shared plumbing for OR/AND nodes (subclasses declare the
     ``children`` dataclass field; its presence is how the engine
     detects composites).  Evaluation is recursive
-    (decode.eval_group_predicate), so every leaf keeps its zone-map /
-    bloom / dictionary short-circuits; the single-column Predicate API
-    (check/mask/check_zone) is deliberately unimplemented here."""
+    (decode.eval_group_predicate, ``zone_verdict_cols``), so every leaf
+    keeps its zone-map / bloom / dictionary short-circuits; the
+    single-column API (check/mask/check_zone) does not apply here."""
+
+    def __post_init__(self):
+        if not self.children:
+            raise ValueError(f"{type(self).__name__} needs at least one child")
 
     @property
     def columns(self) -> list[str]:
-        out: list[str] = []
-        for ch in self.children:
-            for c in ch.columns:
-                if c not in out:
-                    out.append(c)
-        return out
+        return pred_columns(self.children)
 
     def map_leaves(self, fn):
         return dataclasses.replace(
             self, children=[ch.map_leaves(fn) for ch in self.children])
+
+    def zone_verdict_cols(self, st_for) -> str:
+        """Zone-only combine (no payload read): OR is 'all' once a child
+        is and 'none' when every child is; AND is the dual."""
+        short, rest = (ALL, NONE) if self.combine == "or" else (NONE, ALL)
+        out = rest
+        for ch in self.children:
+            v = ch.zone_verdict_cols(st_for)
+            if v == short:
+                return short
+            if v == SOME:
+                out = SOME
+        return out
+
+    def jvm_zone_keep_cols(self, st_for):
+        keeps = [ch.jvm_zone_keep_cols(st_for) for ch in self.children]
+        if self.combine == "or":
+            if any(k is None for k in keeps):
+                return None  # one child can never prune -> the union can't
+            return functools.reduce(operator.or_, keeps)
+        keeps = [k for k in keeps if k is not None]
+        return functools.reduce(operator.and_, keeps) if keeps else None
+
+    def to_spark_condition(self):
+        op = operator.or_ if self.combine == "or" else operator.and_
+        return functools.reduce(
+            op, [ch.to_spark_condition() for ch in self.children])
 
 
 @dataclass
@@ -832,28 +778,6 @@ class OrPredicate(_CompositePredicate):
 
     combine = "or"
 
-    def __post_init__(self):
-        if not self.children:
-            raise ValueError("OrPredicate needs at least one child")
-
-    def jvm_zone_keep_cols(self, st_for):
-        keeps = []
-        for ch in self.children:
-            k = ch.jvm_zone_keep_cols(st_for)
-            if k is None:
-                return None  # one child can never prune -> the union can't
-            keeps.append(k)
-        out = keeps[0]
-        for k in keeps[1:]:
-            out = out | k
-        return out
-
-    def to_spark_condition(self):
-        out = self.children[0].to_spark_condition()
-        for ch in self.children[1:]:
-            out = out | ch.to_spark_condition()
-        return out
-
 
 @dataclass
 class AndPredicate(_CompositePredicate):
@@ -865,26 +789,6 @@ class AndPredicate(_CompositePredicate):
 
     combine = "and"
 
-    def __post_init__(self):
-        if not self.children:
-            raise ValueError("AndPredicate needs at least one child")
-
-    def jvm_zone_keep_cols(self, st_for):
-        keeps = [k for k in (ch.jvm_zone_keep_cols(st_for)
-                             for ch in self.children) if k is not None]
-        if not keeps:
-            return None
-        out = keeps[0]
-        for k in keeps[1:]:
-            out = out & k
-        return out
-
-    def to_spark_condition(self):
-        out = self.children[0].to_spark_condition()
-        for ch in self.children[1:]:
-            out = out & ch.to_spark_condition()
-        return out
-
 
 @dataclass
 class NotPredicate(Predicate):
@@ -893,12 +797,12 @@ class NotPredicate(Predicate):
     rows are dropped unless this predicate's own ``null_allowed``.
 
     Zone verdicts invert EXACTLY: the child's value-domain verdict is
-    computed with nulls set aside (a null_allowed=False copy), then
-    nulls re-enter under this predicate's null_allowed — so NOT still
-    skips blocks unopened (``NOT x = 'a'`` skips a block whose zone
-    proves every value is 'a', and accepts whole blocks whose zone or
-    bloom proves 'a' absent).  Composite children are rejected — apply
-    De Morgan and push NOT to the leaves."""
+    computed with nulls set aside, then nulls re-enter under this
+    predicate's null_allowed — so NOT still skips blocks unopened
+    (``NOT x = 'a'`` skips a block whose zone proves every value is
+    'a', and accepts whole blocks whose zone or bloom proves 'a'
+    absent).  Composite children are rejected — apply De Morgan and
+    push NOT to the leaves."""
 
     child: Predicate
     null_allowed: bool = False
@@ -912,9 +816,9 @@ class NotPredicate(Predicate):
             raise TypeError("NOT NOT p: use p.child directly")
         self.column = self.child.column
         self.supports_d128 = getattr(self.child, "supports_d128", False)
-        # the child's VALUE verdicts with nulls set aside — its own
-        # null_allowed must not leak into the inversion
-        # (replace_predicate keeps _spark_* temporal-literal hints)
+        # the child with nulls set aside — its own null_allowed must not
+        # leak into the inversion (replace_predicate keeps _spark_*
+        # temporal-literal hints)
         self._vchild = (self.child if not self.child.null_allowed
                         else replace_predicate(self.child,
                                                null_allowed=False))
@@ -928,152 +832,9 @@ class NotPredicate(Predicate):
     def check_bytes(self, col) -> np.ndarray:
         return ~self._vchild.check_bytes(col)
 
-    def check_zone(self, stats: dict) -> str:
-        v = self._vchild.check_zone(stats)
-        has_null = bool(stats.get("has_null", False))
-        if v == ALL:   # every valid value passes the child -> none pass NOT
-            return SOME if (has_null and self.null_allowed) else NONE
-        if v == NONE:  # no valid value passes the child -> all valid pass
-            return ALL if (not has_null or self.null_allowed) else SOME
-        return SOME
+    def value_zone(self, stats: dict) -> str:
+        v = self._vchild.value_zone(stats)
+        return {ALL: NONE, NONE: ALL}.get(v, SOME)
 
-    def to_spark_condition(self):
-        from pyspark.sql import functions as F
-
-        c = F.col(self.column)
-        cond = (~self._vchild.to_spark_condition()) & c.isNotNull()
-        if self.null_allowed:
-            cond = cond | c.isNull()
-        return cond
-
-
-@dataclass
-class BytesRangePredicate(Predicate):
-    """Lexicographic byte-array range: lower <(=) value <(=) upper —
-    the SQL ``path >= 'a/' AND path < 'b/'`` prefix-partition range
-    scan.  str bounds are encoded UTF-8 at construction.
-
-    Zone semantics over the stored 24-byte min/max prefixes (prefix <=
-    full value; ``*_exact`` = the prefix IS the bound):
-
-    * provably BELOW the range (all values < lower): lower's own
-      prefix sorts above vmax_pfx (then lower > any value sharing that
-      prefix), or the max is exact and < lower;
-    * provably ABOVE the range (all values > upper): vmin_pfx > upper
-      (v >= vmin_pfx regardless of exactness);
-    * whole block INSIDE only when both stored bounds prove it
-      (vmin_pfx >= lower; max side needs exactness or a prefix
-      strictly below upper).
-
-    Dictionary blocks evaluate once per distinct; the dense path is a
-    vectorized Arrow binary compare.  DSv2 pushes string
-    GreaterThan[OrEqual]/LessThan[OrEqual] here."""
-
-    column: str
-    lower: bytes | None = None
-    upper: bytes | None = None
-    lower_inclusive: bool = True
-    upper_inclusive: bool = True
-    null_allowed: bool = False
-
-    def __post_init__(self):
-        if isinstance(self.lower, str):
-            self.lower = self.lower.encode()
-        if isinstance(self.upper, str):
-            self.upper = self.upper.encode()
-        if self.lower is None and self.upper is None:
-            raise ValueError("BytesRangePredicate needs a bound")
-
-    def check(self, values) -> np.ndarray:
-        return self.check_bytes(values)
-
-    def check_bytes(self, col) -> np.ndarray:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ..kernels import strings
-
-        arr = strings.to_arrow(col)
-        keep = np.ones(len(arr), dtype=bool)
-        if self.lower is not None:
-            op = pc.greater_equal if self.lower_inclusive else pc.greater
-            keep &= np.asarray(op(arr, pa.scalar(self.lower, arr.type)),
-                               dtype=bool)
-        if self.upper is not None:
-            op = pc.less_equal if self.upper_inclusive else pc.less
-            keep &= np.asarray(op(arr, pa.scalar(self.upper, arr.type)),
-                               dtype=bool)
-        return keep
-
-    def check_zone(self, stats: dict) -> str:
-        z = _bytes_zone_bounds(stats)
-        if z is None:
-            return SOME
-        vmin_pfx, vmax_pfx, vmin_exact, vmax_exact, has_null = z
-        nulls_keep = has_null and self.null_allowed
-        below = above = False
-        if self.lower is not None:
-            # all values < lower?  v <= max; max starts with vmax_pfx
-            lo = self.lower
-            below = lo[: len(vmax_pfx)] > vmax_pfx or (
-                vmax_exact and (vmax_pfx < lo if self.lower_inclusive
-                                else vmax_pfx <= lo))
-        if self.upper is not None:
-            # all values > upper?  v >= min >= vmin_pfx
-            up = self.upper
-            above = (vmin_pfx > up if self.upper_inclusive
-                     else vmin_pfx >= up)
-        if (below or above) and not nulls_keep:
-            return NONE
-        if below or above:
-            return SOME
-        # min >= vmin_pfx always (a prefix sorts <= its full value), so
-        # vmin_pfx > lower proves min > lower, and >= proves >= —
-        # exactness not needed on the lower side
-        lower_ok = self.lower is None or vmin_pfx > self.lower or (
-            self.lower_inclusive and vmin_pfx >= self.lower)
-        upper_ok = self.upper is None or (
-            self.upper[: len(vmax_pfx)] > vmax_pfx) or (
-            vmax_exact and (vmax_pfx <= self.upper if self.upper_inclusive
-                            else vmax_pfx < self.upper))
-        if lower_ok and upper_ok and (not has_null or self.null_allowed):
-            return ALL
-        return SOME
-
-    def to_spark_condition(self):
-        from pyspark.sql import functions as F
-
-        c = F.col(self.column)
-
-        def lit(v):
-            try:
-                return v.decode("utf-8")
-            except UnicodeDecodeError:  # binary column: bytes literal
-                return F.lit(v)
-
-        cond = F.lit(True)
-        if self.lower is not None:
-            lo = lit(self.lower)
-            cond = cond & ((c >= lo) if self.lower_inclusive else (c > lo))
-        if self.upper is not None:
-            up = lit(self.upper)
-            cond = cond & ((c <= up) if self.upper_inclusive else (c < up))
-        if self.null_allowed:
-            cond = cond | c.isNull()
-        else:
-            cond = cond & c.isNotNull()
-        return cond
-
-    def jvm_zone_keep(self, st):
-        from pyspark.sql import functions as F
-
-        keep = F.lit(True)
-        if self.lower is not None:
-            # drop groups provably below the range: lower above the max
-            keep = keep & _jvm_bytes_not_above(F.lit(self.lower), st)
-        if self.upper is not None:
-            # drop groups provably above the range: upper below the min
-            keep = keep & _jvm_bytes_not_below_eq(F.lit(self.upper), st)
-        if self.null_allowed:
-            keep = keep | F.coalesce(st.getField("has_null"), F.lit(True))
-        return keep
+    def _spark_value(self, c):
+        return ~self._vchild._spark_value(c)

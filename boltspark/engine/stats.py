@@ -182,36 +182,6 @@ def column_minmax(
     )
 
 
-def _zone_verdict(pred, st_of, i: int) -> str:
-    """'all' | 'none' | 'some' from zone-map stats ALONE (no payload
-    read) — the zone half of decode.eval_group_predicate, recursing
-    into composite OR/AND children.  Absent column (null stats struct:
-    schema evolution) follows the decoder's all-null rule."""
-    kids = getattr(pred, "children", None)
-    if kids is not None:
-        if pred.combine == "or":
-            out = "none"
-            for ch in kids:
-                v = _zone_verdict(ch, st_of, i)
-                if v == "all":
-                    return "all"
-                if v == "some":
-                    out = "some"
-            return out
-        out = "all"
-        for ch in kids:
-            v = _zone_verdict(ch, st_of, i)
-            if v == "none":
-                return "none"
-            if v == "some":
-                out = "some"
-        return out
-    st = st_of(pred.column, i)
-    if st is None:
-        return "all" if pred.null_allowed else "none"
-    return pred.check_zone(st)
-
-
 def explain_scan(spark: SparkSession, blocks_path: str, manifest_path: str,
                  predicate=None, run_ids: list[str] | None = None
                  ) -> DataFrame:
@@ -274,7 +244,7 @@ def explain_scan(spark: SparkSession, blocks_path: str, manifest_path: str,
             for i in range(batch.num_rows):
                 verdict = "accept"
                 for pred in predicates:
-                    v = _zone_verdict(pred, st_of, i)
+                    v = pred.zone_verdict_cols(lambda c: st_of(c, i))
                     if v == "none":
                         verdict = "skip"
                         break
