@@ -22,6 +22,7 @@ way the reference's StreamingByteBuffer bounds its read window
 from __future__ import annotations
 
 import json
+import logging
 import time
 import uuid
 from dataclasses import dataclass
@@ -46,6 +47,8 @@ from .partitioner import (
 )
 from .schema import (PART_ID, blocks_arrow_schema, blocks_spark_schema,
                      storage_cast, tag_for_arrow_type)
+
+log = logging.getLogger(__name__)
 
 DEFAULT_BLOCK_BYTES = 4 << 20
 DEFAULT_KEY_COLS = ("repo", "path", "commit")
@@ -297,9 +300,14 @@ def _make_encoder(columns: list[str], run_id: str, block_bytes: int,
                         outer=choice.outer, fsst_table=fsst_tables.get(name),
                         outer_level=outer_level,
                     )
-                except (TypeError, ValueError):
+                except (TypeError, ValueError) as e:
                     # stale per-partition choice (e.g. negatives appeared
                     # after a non-negative sample): fall back to plain
+                    # for the rest of this partition's column
+                    log.info("partition %d column %r: cached codec %r "
+                             "rejected a later block (%s: %s); plain from "
+                             "here on", part_id, name, choice.codec,
+                             type(e).__name__, e)
                     choice_cache[key] = choice = selector.CodecChoice(
                         "plain", choice.outer, choice.stats, 1.0)
                     blk = blockmod.encode_block(
@@ -498,10 +506,12 @@ def encode_table(
 ) -> EncodeResult:
     """Encode ``columns`` of ``df`` into a blocks dataset + manifest.
 
-    Resumable: partitions already present in the manifest are skipped
-    via a broadcast left-anti join (the reference's ``skip`` analog —
-    local_file_reader.rs:126-171 hops whole row groups from footer
-    arithmetic alone; we hop whole partitions from the manifest alone).
+    Resumable: partitions already present in the manifest are dropped
+    before the shuffle — a filter when the driver reads a local
+    manifest, else a broadcast left-anti join (the reference's ``skip``
+    analog — local_file_reader.rs:126-171 hops whole row groups from
+    footer arithmetic alone; we hop whole partitions from the manifest
+    alone).
 
     ``outer_level`` overrides the outer compressor's level (None ->
     DEFAULT_OUTER_LEVEL = zstd 3; decode speed is unchanged and the
@@ -542,13 +552,15 @@ def encode_table(
                             time.time() - t_start)
 
     n_done = 0
-    done_df = None
+    done = None
     if resume:
-        done_df = manifestmod.completed_partitions_df(spark, manifest_path)
-        if done_df is not None:
+        done = manifestmod.completed_partitions(spark, manifest_path)
+        if isinstance(done, list):
+            n_done = len(done)
+        elif done is not None:
             # the manifest is tiny (one row per partition-column); this
             # count is the only driver-side number resume needs
-            n_done = done_df.count()
+            n_done = done.count()
         if n_done and n_parts is None:
             # partition assignment must be the pure function of the data
             # it was on the first run: reuse the recorded partition count
@@ -597,14 +609,18 @@ def encode_table(
     if n_done:
         from pyspark.sql import functions as F
 
-        # broadcast anti-join against the manifest's completed partitions
-        # BEFORE the shuffle, so finished partitions' bytes never enter
-        # the exchange; no partition list ever rides through the driver
-        # (at 100 TB that list is millions of entries)
-        keyed = keyed.join(
-            F.broadcast(done_df.withColumnRenamed(PART_ID, PART_COL)),
-            PART_COL, "left_anti",
-        )
+        # drop the manifest's completed partitions BEFORE the shuffle, so
+        # finished partitions' bytes never enter the exchange: a filter
+        # when the driver read the (bounded) list, else a broadcast
+        # anti-join — a large list (millions of entries at 100 TB) never
+        # rides through the driver
+        if isinstance(done, list):
+            keyed = keyed.filter(~F.col(PART_COL).isin(done))
+        else:
+            keyed = keyed.join(
+                F.broadcast(done.withColumnRenamed(PART_ID, PART_COL)),
+                PART_COL, "left_anti",
+            )
     keyed = cluster_partitions(keyed, n_parts, key_cols, sort_cols)
     n_planned = n_parts - n_done
 

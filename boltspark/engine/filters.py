@@ -538,12 +538,18 @@ class InPredicate(Predicate):
         return [v if isinstance(v, bytes) else str(v).encode()
                 for v in self.values]
 
+    def _storage_values(self) -> list:
+        """Needles in the column's storage domain (temporal -> epoch
+        ints, as ``RangePredicate`` bounds)."""
+        return [_storage_bound(v) for v in self.values]
+
     def check(self, values) -> np.ndarray:
         if hasattr(values, "offsets"):
             return self.check_bytes(values)
         values = _as_double(values)
-        keep = np.isin(values, np.asarray(list(self.values)))
-        if values.dtype.kind == "f" and any(_nan(v) for v in self.values):
+        needles = self._storage_values()
+        keep = np.isin(values, np.asarray(needles))
+        if values.dtype.kind == "f" and any(_nan(v) for v in needles):
             keep |= np.isnan(values)  # Spark: NaN IN (NaN)
         return keep
 
@@ -554,14 +560,15 @@ class InPredicate(Predicate):
     def value_set(self):
         if all(isinstance(v, (bytes, str)) for v in self.values):
             return "bytes", [(v, True, v, True) for v in self._byte_values()]
+        needles = self._storage_values()
         if all(isinstance(v, (int, float, np.integer, np.floating))
-               for v in self.values):
-            return "num", [(v, True, v, True) for v in self.values]
+               for v in needles):
+            return "num", [(v, True, v, True) for v in needles]
         return None
 
     def _spark_value(self, c):
-        return c.isin([v.decode("utf-8") if isinstance(v, bytes) else v
-                       for v in self.values])
+        return c.isin([v.decode("utf-8") if isinstance(v, bytes)
+                       else _spark_bound(v) for v in self.values])
 
 
 @dataclass

@@ -14,6 +14,8 @@ from __future__ import annotations
 import logging
 
 import numpy as np
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, functions as F
 
 log = logging.getLogger(__name__)
@@ -43,7 +45,8 @@ def estimate_bytes_fast(df: DataFrame, columns: list[str],
     n = df.count()
     if n == 0:
         return 0
-    per_row = _per_row_bytes_from_files(df, columns, sample_rows)
+    per_row = _per_row_bytes_from_files(
+        _local_parquet_files(_input_files(df)), columns, sample_rows)
     if per_row is None:
         sample = df.limit(sample_rows)
         per_row = estimate_bytes(sample, columns) / min(n, sample_rows)
@@ -69,17 +72,14 @@ def bytes_below(df: DataFrame, columns: list[str], limit_bytes: int,
                      for r in head for v in r if v is not None)
     if len(head) < head_rows:
         return head_bytes < limit_bytes
-    per_row = _per_row_bytes_from_files(df, columns, head_rows)
+    files = _input_files(df)
+    paths = _local_parquet_files(files)
+    per_row = _per_row_bytes_from_files(paths, columns, head_rows)
     if per_row is None:
         per_row = head_bytes / len(head)
     if per_row <= 0:
         return True
     need = int(limit_bytes // per_row) + 1
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    paths = _local_parquet_files(files)
     if paths and len(paths) == len(files):
         rows = 0
         try:
@@ -88,9 +88,21 @@ def bytes_below(df: DataFrame, columns: list[str], limit_bytes: int,
                 if rows >= need:
                     return False
             return True
-        except (OSError, pa.ArrowInvalid):
-            pass  # unreadable footer: count through Spark instead
+        except (OSError, pa.ArrowException) as e:
+            log.warning("input footer unreadable (%s: %s); counting rows "
+                        "through Spark", type(e).__name__, e)
     return df.limit(need).count() < need
+
+
+def _input_files(df: DataFrame) -> list[str]:
+    """``df.inputFiles()``, or [] when Spark cannot list them (logged:
+    the caller then sizes from a sample and counts through Spark)."""
+    try:
+        return list(df.inputFiles())
+    except (Py4JError, PySparkException) as e:
+        log.warning("input files of the encode source not listable (%s: %s);"
+                    " sizing without them", type(e).__name__, e)
+        return []
 
 
 def _local_parquet_files(files: list[str]) -> list[str]:
@@ -105,16 +117,14 @@ def _local_parquet_files(files: list[str]) -> list[str]:
     return paths
 
 
-def _per_row_bytes_from_files(df: DataFrame, columns: list[str],
+def _per_row_bytes_from_files(paths: list[str], columns: list[str],
                               sample_rows: int) -> float | None:
-    """Mean logical row bytes from bounded slices of evenly spaced
-    parquet input files; None when the plan isn't a local parquet scan."""
-    try:
-        paths = _local_parquet_files(df.inputFiles())
-    except Exception:
-        return None
+    """Mean logical row bytes from bounded slices of evenly spaced local
+    parquet input ``paths``; None when there are none, or they lack
+    ``columns`` or cannot be read (logged)."""
     if not paths:
         return None
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     picks = paths[:: max(1, len(paths) // 8)][:8]
@@ -132,7 +142,9 @@ def _per_row_bytes_from_files(df: DataFrame, columns: list[str],
                 continue
             rows += batch.num_rows
             nbytes += sum(a.nbytes for a in batch.columns)
-    except Exception:
+    except (OSError, pa.ArrowException) as e:
+        log.warning("input file sample unreadable (%s: %s); sizing from "
+                    "the head sample", type(e).__name__, e)
         return None
     if not rows:
         return None

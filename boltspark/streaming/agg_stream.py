@@ -13,13 +13,13 @@ Exactly-once per run across restarts: the sink path is keyed by run id
 and written with ``mode("overwrite")``, so a replayed micro-batch
 re-derives byte-identical partials instead of double counting.
 
-Validity: partials carry ``part_id``, and the read-side fold
-inner-joins the manifest's CURRENT valid (part_id, run_id) pairs, so
-stale sink directories (a run whose manifest rows were removed, or
-leftovers from a crashed manual write into the sink) never contribute
-to the total.  ``compact_blocks`` writes a NEW table (new blocks +
-manifest paths); point a fresh stream at the compacted table rather
-than expecting in-place supersede.
+Validity: partials carry ``part_id``, and the read-side fold keeps
+only the manifest's CURRENT valid (part_id, run_id) pairs
+(``manifest.join_valid``), so stale sink directories (a run whose
+manifest rows were removed, or leftovers from a crashed manual write
+into the sink) never contribute to the total.  ``compact_blocks``
+writes a NEW table (new blocks + manifest paths); point a fresh stream
+at the compacted table rather than expecting in-place supersede.
 """
 
 from __future__ import annotations

@@ -78,13 +78,27 @@ def test_manifest_aggregation_never_reads_payloads(spark, encoded):
     assert schemas and all("block:binary" not in s for s in schemas), schemas
 
 
-def test_decode_plan_has_no_shuffle(spark, encoded):
+def test_decode_plan_has_no_shuffle(spark, encoded, monkeypatch):
     """The wide layout makes every blocks row a self-contained group:
-    the block DATA must never shuffle.  The manifest side joins in as a
-    broadcast (its own tiny distinct may shuffle a few hundred metadata
-    rows — that's the footer, not the data)."""
-    decoded = decode_table(spark, encoded.out_path, encoded.manifest_path)
-    plan = _plan(decoded)
+    the block DATA must never shuffle.  On a local manifest the valid
+    pairs are a filter fused into the blocks scan (no join, no
+    exchange at all) and reach parquet's PushedFilters; off the local
+    FS they join in as a broadcast (its own tiny distinct may shuffle a
+    few hundred metadata rows — that's the footer, not the data)."""
+    from boltspark.engine import manifest as manifestmod
+
+    plan = _plan(decode_table(spark, encoded.out_path, encoded.manifest_path))
+    for word in ("Join", "BroadcastExchange", "Exchange"):
+        assert word not in plan, (word, plan)
+    scans = [ln for ln in plan.splitlines() if "cols:struct" in ln]
+    assert scans, plan
+    for ln in scans:
+        pushed = ln.split("PushedFilters:", 1)[1].split("ReadSchema:")[0]
+        assert "run_id" in pushed and "part_id" in pushed, ln
+    assert any("Filter" in ln and "run_id" in ln and "part_id" in ln
+               for ln in plan.splitlines()), plan
+    monkeypatch.setattr(manifestmod, "_default_fs_is_local", lambda s: False)
+    plan = _plan(decode_table(spark, encoded.out_path, encoded.manifest_path))
     assert "BroadcastHashJoin" in plan, plan
     for ln in plan.splitlines():
         # left-branch (blocks/probe side) lines carry a ':' gutter in the
@@ -211,16 +225,19 @@ def test_aggregate_plan_one_tiny_exchange(spark, tmp_path_factory,
             plan.count("Exchange rangepartitioning")
 
     pairs_distinct = r"Exchange hashpartitioning\(part_id#\d+L?, run_id#\d+"
-    # on a local manifest the valid pairs are a driver-built
-    # LocalTableScan under the BroadcastExchange: the only shuffle is
-    # the final fold over partial rows.  A SECOND exchange means the
-    # blocks data itself got regrouped — dead at 100 TB.
+    # on a local manifest the valid pairs are a filter on the blocks
+    # scan — no join, no broadcast: the only shuffle is the final fold
+    # over partial rows.  A SECOND exchange means the blocks data itself
+    # got regrouped — dead at 100 TB.
     plans = build()
     for name, plan in plans.items():
         assert n_shuffle(plan) == 1, (name, plan)
+        assert plan.count("Exchange") == 1, (name, plan)
         assert not re.search(pairs_distinct, plan), (name, plan)
-        assert "LocalTableScan" in plan, (name, plan)
-        assert "BroadcastHashJoin" in plan, name
+        assert "Join" not in plan and "BroadcastExchange" not in plan, \
+            (name, plan)
+        pushed = r"PushedFilters: \[[^\]]*(In|EqualTo)\(run_id"
+        assert re.search(pushed, plan), (name, plan)
         assert "MapInArrow" in plan, name
     # off the local FS the pairs are a Spark read: exactly two shuffles,
     # the fold and the metadata-scale manifest distinct that feeds the

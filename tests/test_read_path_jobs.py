@@ -1,8 +1,9 @@
-"""The read path's fixed cost: on a local manifest the driver builds the
-valid (part_id, run_id) pairs from its own pyarrow read and hands them
-to Spark as a LocalRelation, so a decode runs at most 2 Spark jobs and
-an aggregate at most 3.  Every fallback — a non-local filesystem, a
-manifest pyarrow cannot read — takes the Spark read and gives the same
+"""The read path's fixed cost: on a local manifest the driver reads the
+valid (part_id, run_id) pairs itself and applies them as a filter on
+the blocks scan, so a decode runs 1 Spark job, an aggregate at most 2
+and a row_range decode at most 2.  Every fallback — a non-local
+filesystem, a manifest pyarrow cannot read, a pairs filter over the
+bound — takes the Spark read + broadcast join and gives the same
 answers; orphan blocks of a crashed run stay invisible either way."""
 
 from __future__ import annotations
@@ -81,7 +82,7 @@ def _answers(spark, b, m):
 def test_local_manifest_job_counts(spark, table):
     b, m = table
     _, n = _jobs(spark, lambda: decode_table(spark, b, m).collect())
-    assert n <= 2, n
+    assert n <= 1, n
     for name, call in (
             ("value_counts", lambda: agg.value_counts(spark, b, m, "s")),
             ("column_sum", lambda: agg.column_sum(spark, b, m, "v")),
@@ -89,26 +90,100 @@ def test_local_manifest_job_counts(spark, table):
              lambda: agg.grouped_aggs(spark, b, m, ["s"], ["v"])),
             ("column_topk", lambda: agg.column_topk(spark, b, m, "k", 5))):
         _, n = _jobs(spark, lambda: call().collect())
-        assert n <= 3, (name, n)
+        assert n <= 2, (name, n)
+    _, n = _jobs(spark, lambda: decode_table(
+        spark, b, m, columns=["k"], row_range=(95, 260)).collect())
+    assert n <= 2, n
 
 
-def test_pairs_are_a_local_relation(spark, table):
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pairs_are_a_driver_side_filter(spark, table, monkeypatch):
     b, m = table
-    valid = manifestmod.valid_pairs_df(spark, m)
-    plan = valid._jdf.queryExecution().executedPlan().toString()
-    assert plan.lstrip().startswith("LocalTableScan"), plan
-    pairs, n = _jobs(spark, lambda: {tuple(r) for r in valid.collect()})
+    valid, n = _jobs(spark, lambda: manifestmod.valid_pairs_df(spark, m))
     assert n == 0
-    runs = {r for _, r in pairs}
     # the quoted id round-trips byte for byte; the crashed run is absent
-    assert runs == {QUOTED, "run2"}
-    assert pairs == {(p, r) for p in range(N_PARTS) for r in runs}
+    assert valid == {(p, r) for p in range(N_PARTS) for r in (QUOTED, "run2")}
+    groups = spark.read.parquet(b).select(PART_ID, "run_id", "seq")
+    kept = manifestmod.join_valid(groups, valid)
+    plan = _plan(kept)
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    assert {(r[PART_ID], r["run_id"]) for r in kept.collect()} == valid
+    marked = manifestmod.join_valid(groups, valid, mark="ok")
+    got = {(r["run_id"], r["ok"]) for r in marked.collect()}
+    assert got == {(QUOTED, True), ("run2", True), ("crashed", None)}
     scoped = manifestmod.valid_pairs_df(spark, m, part_ids=[1, 3],
                                         run_ids=[QUOTED])
-    assert {tuple(r) for r in scoped.collect()} == {(1, QUOTED), (3, QUOTED)}
+    assert scoped == {(1, QUOTED), (3, QUOTED)}
+    assert {tuple(r) for r in manifestmod.join_valid(
+        groups, scoped).select(PART_ID, "run_id").collect()} == scoped
     empty = manifestmod.valid_pairs_df(spark, m, run_ids=["nope"])
-    assert empty.collect() == []
-    assert empty.schema == valid.schema
+    assert empty == frozenset()
+    none = manifestmod.join_valid(groups, empty)
+    assert none.collect() == []
+    assert none.schema == kept.schema
+    # the Spark path keeps and marks the same rows, in the same schema
+    monkeypatch.setattr(manifestmod, "_default_fs_is_local", lambda s: False)
+    spark_valid = manifestmod.valid_pairs_df(spark, m)
+    joined = manifestmod.join_valid(groups, spark_valid)
+    assert sorted(joined.collect()) == sorted(kept.collect())
+    assert joined.schema == kept.schema
+    assert {(r["run_id"], r["ok"]) for r in manifestmod.join_valid(
+        groups, spark_valid, mark="ok").collect()} == got
+
+
+def test_many_part_sets_plan_and_match_the_spark_path(spark, tmp_path,
+                                                      monkeypatch):
+    """Every run with its own part set, up to the filter bound: the
+    filter is one OR leg per run (a balanced tree), which must plan and
+    keep exactly the rows the broadcast join keeps; one run more takes
+    the Spark path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def size(ps):
+        return manifestmod._filter_size(manifestmod._part_set_groups(ps))
+
+    # runs of 1, 2, 3 consecutive parts, so no two share a part set
+    pairs, p0, r = [], 0, 0
+    while True:
+        leg = [(p, f"run{r}'\\") for p in range(p0, p0 + r % 3 + 1)]
+        if size(pairs + leg) > manifestmod._LOCAL_PAIRS_MAX:
+            break
+        pairs, p0, r = pairs + leg, p0 + len(leg), r + 1
+    assert r >= 16, r
+
+    def manifest(name, ps):
+        m = tmp_path / name
+        m.mkdir()
+        pq.write_table(pa.table({
+            "part_id": pa.array([p for p, _ in ps], pa.int64()),
+            "run_id": pa.array([x for _, x in ps]),
+            "column": pa.array(["c"] * len(ps)),
+            "n_rows": pa.array([1] * len(ps), pa.int64())}),
+            str(m / "part-0.parquet"))
+        return str(m)
+
+    m = manifest("m", pairs)
+    # groups: every valid pair, the same part under another run, and a
+    # crashed run's copy of a valid pair
+    rows = pairs + [(p, f"run{(i + 1) % r}'\\")
+                    for i, (p, _) in enumerate(pairs[::3])]
+    rows += [(p, "crashed") for p, _ in pairs[::5]]
+    groups = spark.createDataFrame(rows, f"{PART_ID} long, run_id string")
+    valid = manifestmod.valid_pairs_df(spark, m)
+    assert valid == set(pairs)
+    got = sorted(tuple(x) for x in
+                 manifestmod.join_valid(groups, valid).collect())
+    assert got == sorted(x for x in rows if x in valid), len(got)
+    over = manifest("over", pairs + leg)
+    assert manifestmod.valid_pairs(spark, over)[1] is None
+    monkeypatch.setattr(manifestmod, "_default_fs_is_local", lambda s: False)
+    want = manifestmod.join_valid(groups,
+                                  manifestmod.valid_pairs_df(spark, m))
+    assert sorted(tuple(x) for x in want.collect()) == got
 
 
 def test_orphans_invisible_and_quoted_run_reads(spark, table):
@@ -174,6 +249,37 @@ def test_exists_fails_closed_on_a_corrupt_manifest(spark, tmp_path,
                      key_cols=("k",), n_parts=2, resume=True)
 
 
+def test_resume_reads_the_done_partitions_on_the_driver(spark, tmp_path,
+                                                       monkeypatch):
+    """A half-done table resumes from the driver's own manifest read (a
+    filter, no count job, no broadcast): fewer jobs than the Spark read
+    of the done partitions, and the same rows as a one-shot encode."""
+    src = _src(spark, 0, 400)
+    half = src.filter(F.pmod(F.xxhash64("k"), F.lit(N_PARTS)) < 2)
+    kw = dict(key_cols=("k",))
+
+    def resumed(name):
+        b, m = str(tmp_path / name / "b"), str(tmp_path / name / "m")
+        encode_table(half, b, m, n_parts=N_PARTS, run_id="first",
+                     resume=False, **kw)
+        res, n = _jobs(spark, lambda: encode_table(src, b, m, run_id="rest",
+                                                   **kw))
+        assert res.n_partitions == N_PARTS and res.n_planned == N_PARTS - 2
+        return sorted(tuple(r) for r in decode_table(spark, b, m).collect()), n
+
+    got, n_local = resumed("local")
+    with monkeypatch.context() as mp:
+        # pairs over the bound: the Spark read + broadcast anti-join
+        mp.setattr(manifestmod, "_LOCAL_PAIRS_MAX", 1)
+        got_spark, n_spark = resumed("spark")
+    assert n_local < n_spark, (n_local, n_spark)
+    b, m = str(tmp_path / "one" / "b"), str(tmp_path / "one" / "m")
+    encode_table(src, b, m, n_parts=N_PARTS, resume=False, **kw)
+    want = sorted(tuple(r) for r in decode_table(spark, b, m).collect())
+    assert got == want and got_spark == want
+    assert len(want) == 400
+
+
 # --- row_range -----------------------------------------------------------
 
 
@@ -214,7 +320,7 @@ def test_row_range_matches_a_catalyst_slice(spark, evolved, which):
                 spark, b, m, columns=["k", "w"],
                 row_range=(start, end)).collect()))
         assert got == _slice(decoded, order, start, end), (start, end)
-        assert n <= 4, (start, end, n)
+        assert n <= 2, (start, end, n)
     # a part_ids list scopes the order to those partitions
     sub = decoded.filter(F.col(PART_ID).isin([0, 2]))
     got = sorted(r["k"] for r in decode_table(

@@ -75,3 +75,48 @@ def test_timestamp_filtered_aggregate(spark, ts_table):
         F.sum("v").alias("s"), F.count(F.lit(1)).alias("n")).collect()[0]
     assert got["n_rows"] == exp["n"]
     assert got["sum_value"] == float(exp["s"])
+
+
+@pytest.mark.parametrize("column, needle, outside", [
+    ("day", dt.date(2020, 3, 5), dt.date(2019, 1, 1)),
+    # a naive datetime is UTC, as for RangePredicate bounds
+    ("ts", dt.datetime.fromtimestamp(1_600_000_000 + 100 * 3600,
+                                     dt.timezone.utc).replace(tzinfo=None),
+     dt.datetime(2000, 1, 1, tzinfo=dt.timezone.utc)),
+])
+def test_in_temporal_needles_match_a_point_range(spark, ts_table, column,
+                                                 needle, outside):
+    """InPredicate needles that are dates/datetimes mean the same as the
+    point RangePredicate: same mask, same decode (and Catalyst's), same
+    explain_scan verdicts — a needle outside every zone skips them all."""
+    import numpy as np
+
+    from boltspark.engine.filters import InPredicate, _storage_bound
+    from boltspark.engine.stats import explain_scan
+
+    df, out, man = ts_table
+    v = _storage_bound(needle)
+    vals = np.array([v, v + 1], dtype=np.int64)
+    for n in (needle, outside):
+        inp = InPredicate(column=column, values=(n,))
+        rng = RangePredicate(column=column, lower=n, upper=n)
+        assert (inp.mask(vals, None).tolist()
+                == rng.mask(vals, None).tolist())
+        got = sorted(decode_table(spark, out, man, columns=["k", column],
+                                  predicate=inp).collect())
+        assert got == sorted(decode_table(spark, out, man,
+                                          columns=["k", column],
+                                          predicate=rng).collect())
+        assert got == sorted(df.select("k", column)
+                             .filter(inp.to_spark_condition()).collect())
+        assert bool(got) == (n is needle)
+
+        def report(p):
+            return sorted(tuple(r) for r in
+                          explain_scan(spark, out, man, predicate=p).collect())
+
+        assert report(inp) == report(rng)
+    assert InPredicate(column=column, values=(needle,)).mask(
+        vals, None).tolist() == [True, False]
+    assert {r[0] for r in report(InPredicate(column=column,
+                                             values=(outside,)))} == {"skip"}
