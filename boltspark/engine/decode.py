@@ -343,10 +343,11 @@ def _blocks_proj(spark, blocks_path: str, manifest_path: str,
     groups that provably cannot match before their block bytes cross
     the JVM->Python boundary (Python re-checks zones for the rest;
     null stats pass), and the manifest's valid (part_id, run_id) pairs
-    keep the rest (``manifest.join_valid``): on a local manifest a
-    filter fused into the scan stage and pushed to parquet, so a decode
-    is one Spark job; otherwise a broadcast join — no shuffle of the
-    block data either way."""
+    keep the rest (``manifest.join_valid``): on a local manifest whose
+    pairs are a cross product of runs and parts, a filter fused into
+    the scan stage and pushed to parquet, so a decode is one Spark job;
+    otherwise a broadcast join — no shuffle of the block data either
+    way."""
     from pyspark.sql import functions as F
 
     if meta is None:

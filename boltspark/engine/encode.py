@@ -552,15 +552,9 @@ def encode_table(
                             time.time() - t_start)
 
     n_done = 0
-    done = None
     if resume:
-        done = manifestmod.completed_partitions(spark, manifest_path)
-        if isinstance(done, list):
-            n_done = len(done)
-        elif done is not None:
-            # the manifest is tiny (one row per partition-column); this
-            # count is the only driver-side number resume needs
-            n_done = done.count()
+        n_done, drop_done = manifestmod.completed_partitions(
+            spark, manifest_path, PART_COL)
         if n_done and n_parts is None:
             # partition assignment must be the pure function of the data
             # it was on the first run: reuse the recorded partition count
@@ -607,20 +601,9 @@ def encode_table(
         sort_cols = (zorder_column(df_sel, tuple(zorder_cols)),)
     keyed = assign_partition_id(df_sel, key_cols, n_parts)
     if n_done:
-        from pyspark.sql import functions as F
-
         # drop the manifest's completed partitions BEFORE the shuffle, so
-        # finished partitions' bytes never enter the exchange: a filter
-        # when the driver read the (bounded) list, else a broadcast
-        # anti-join — a large list (millions of entries at 100 TB) never
-        # rides through the driver
-        if isinstance(done, list):
-            keyed = keyed.filter(~F.col(PART_COL).isin(done))
-        else:
-            keyed = keyed.join(
-                F.broadcast(done.withColumnRenamed(PART_ID, PART_COL)),
-                PART_COL, "left_anti",
-            )
+        # finished partitions' bytes never enter the exchange
+        keyed = drop_done(keyed)
     keyed = cluster_partitions(keyed, n_parts, key_cols, sort_cols)
     n_planned = n_parts - n_done
 

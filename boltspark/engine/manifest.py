@@ -21,28 +21,30 @@ Readers keep only blocks of valid (part_id, run_id) pairs
 (``valid_pairs`` builds them, ``join_valid`` applies them — every read
 path goes through the two).  On a provably local manifest the driver
 reads them with pyarrow (``_local_table``, the one driver-side reader,
-also behind the META rows and the DSv2 source) and they become a plain
-filter on the blocks scan, fused into its stage and pushed to parquet:
-no listing, distinct, broadcast or join job.  A non-local or unreadable
-manifest, or a filter over ``_LOCAL_PAIRS_MAX``, takes the Spark read
-(``spark.read`` + ``distinct``) and a broadcast join — the fast path
-fails closed.
+also behind the META rows and the DSv2 source).  When they are every
+(part, run) of their runs and parts — the usual table — they become a
+plain filter on the blocks scan, fused into its stage and pushed to
+parquet: no listing, distinct, broadcast or join job.  Any other set is
+an inline table (a ``LocalRelation``: no job builds it) joined as a
+broadcast.  A non-local or unreadable manifest, or more pairs than
+``_LOCAL_PAIRS_MAX``, takes the Spark read (``spark.read`` +
+``distinct``) and a broadcast join — the fast path fails closed.
 """
 
 from __future__ import annotations
 
 import json
 import logging
-import os
 import re
 from collections import Counter
+from typing import Callable
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.accumulators import AccumulatorParam
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .schema import PART_ID
 
@@ -69,9 +71,11 @@ PART_ROW = ("part_id", "column", "n_rows", "raw_bytes", "enc_bytes",
 def _exists(spark: SparkSession, path: str) -> bool:
     local = _local_dir(path, spark)
     if local is not None:
+        import os as _os
+
         # listdir, not glob: the path may contain glob metacharacters
         try:
-            names = os.listdir(local)
+            names = _os.listdir(local)
         except OSError:
             return False
         return any(n.endswith(".parquet") and not n.startswith(("_", "."))
@@ -94,21 +98,31 @@ def run_exists(spark: SparkSession, manifest_path: str, run_id: str) -> bool:
     Every commit appends exactly one META row (commit() is the single
     manifest writer), so run membership reads from the tiny META rows —
     driver-side for local manifests, no Spark job."""
-    return _exists(spark, manifest_path) and any(
-        rid == run_id for rid, _ in _meta_rows(spark, manifest_path))
-
-
-def completed_partitions(spark: SparkSession,
-                         manifest_path: str) -> list[int] | DataFrame | None:
-    """Distinct completed part_ids (None if no manifest): a sorted list
-    when ``valid_pairs`` reads the pairs on the driver (no job), else a
-    DataFrame consumed via broadcast anti-join — never collected."""
     if not _exists(spark, manifest_path):
-        return None
-    pairs = valid_pairs_df(spark, manifest_path)
-    if isinstance(pairs, DataFrame):
-        return pairs.select(PART_ID).distinct()
-    return sorted({p for p, _ in pairs})
+        return False
+    return any(rid == run_id for rid, _ in _meta_rows(spark, manifest_path))
+
+
+def completed_partitions(spark: SparkSession, manifest_path: str,
+                         part_col: str) -> tuple[int, Callable]:
+    """(n, drop): the number of partitions with a committed manifest
+    entry, and ``drop(df)`` that removes their rows from a frame keyed
+    by ``part_col``.  When ``valid_pairs`` reads the pairs on the driver
+    the part ids come from that read (no job) and ``drop`` is a filter;
+    otherwise n is a count of the Spark read's distinct part ids and
+    ``drop`` a broadcast left-anti join — a large list (millions of
+    entries at 100 TB) never rides through the driver."""
+    if not _exists(spark, manifest_path):
+        return 0, lambda df: df
+    pairs, rows = valid_pairs(spark, manifest_path)
+    if rows is not None:
+        done = sorted(pc.unique(rows.column(PART_ID)).to_pylist())
+        return len(done), lambda df: (
+            df.filter(F.expr(f"NOT {_in_sql(part_col, done)}")) if done
+            else df)
+    done_df = pairs.select(F.col(PART_ID).alias(part_col)).distinct()
+    return done_df.count(), lambda df: df.join(
+        F.broadcast(done_df), part_col, "left_anti")
 
 
 class PartRows(AccumulatorParam):
@@ -239,30 +253,14 @@ def _widen_type(a, b):
     return None
 
 
-def _merge_fields(runs, label: str) -> list[dict]:
-    """Ordered union by name of per-run schema field lists; a type
-    change must widen losslessly (``_widen_type``) or it raises."""
-    fields: dict[str, dict] = {}
-    for run in runs:
-        for f in run:
-            c, old = f["name"], fields.get(f["name"])
-            if old is None:
-                fields[c] = f
-            elif old["type"] != f["type"]:
-                wide = _widen_type(old["type"], f["type"])
-                if wide is None:
-                    raise ValueError(f"{label} {c!r} type conflict across "
-                                     f"runs: {old['type']} vs {f['type']}")
-                fields[c] = dict(f if f["type"] == wide else old)
-    return list(fields.values())
-
-
 def merge_metas(metas: list[dict]) -> dict:
     """Merge per-run table metas into one table view (schema evolution):
     columns = ordered union across runs (run order = sorted run ids for
-    determinism), fields merged by name (``_merge_fields``; decode casts
-    older narrower blocks to the merged type), a column missing from a
-    run null-fills at decode.  n_parts must agree across runs
+    determinism), schema fields merged by name — numeric types WIDEN
+    losslessly (int -> bigint, float -> double, decimal precision up at
+    the same scale; decode casts older narrower blocks to the merged
+    type), any other type change raises, a column missing from a run
+    simply null-fills at decode.  n_parts must agree across runs
     (partition identity is sacred)."""
     if not metas:
         raise FileNotFoundError("no table meta rows")
@@ -270,22 +268,53 @@ def merge_metas(metas: list[dict]) -> dict:
     if len(n_parts) != 1:
         raise ValueError(f"manifest mixes partition counts {sorted(n_parts)}; "
                          "appended runs must reuse the table's n_parts")
-    fields = _merge_fields(
-        ([{f["name"]: f for f in json.loads(m["schema_json"])["fields"]}[c]
-          for c in m["columns"]] for m in metas), "column")
-    # the logical (pre-flatten) schemas merge the same way; a run without
+    columns: list[str] = []
+    fields: dict[str, dict] = {}
+    for m in metas:
+        schema = json.loads(m["schema_json"])
+        by_name = {f["name"]: f for f in schema["fields"]}
+        for c in m["columns"]:
+            f = by_name[c]
+            if c not in fields:
+                columns.append(c)
+                fields[c] = f
+            elif fields[c]["type"] != f["type"]:
+                wide = _widen_type(fields[c]["type"], f["type"])
+                if wide is None:
+                    raise ValueError(
+                        f"column {c!r} type conflict across runs: "
+                        f"{fields[c]['type']} vs {f['type']}")
+                fields[c] = dict(f if f["type"] == wide else fields[c])
+    # merge the logical (pre-flatten) schemas the same way; a run without
     # one contributes its storage schema (they coincide for flat tables)
-    lfields = _merge_fields(
-        (json.loads(m.get("logical_schema_json") or m["schema_json"])["fields"]
-         for m in metas), "logical column")
+    lcolumns: list[str] = []
+    lfields: dict[str, dict] = {}
+    any_logical = False
+    for m in metas:
+        lj = m.get("logical_schema_json")
+        any_logical = any_logical or bool(lj)
+        lschema = json.loads(lj or m["schema_json"])
+        for f in lschema["fields"]:
+            c = f["name"]
+            if c not in lfields:
+                lcolumns.append(c)
+                lfields[c] = f
+            elif lfields[c]["type"] != f["type"]:
+                wide = _widen_type(lfields[c]["type"], f["type"])
+                if wide is None:
+                    raise ValueError(
+                        f"logical column {c!r} type conflict across runs: "
+                        f"{lfields[c]['type']} vs {f['type']}")
+                lfields[c] = dict(f if f["type"] == wide else lfields[c])
     return {
-        "columns": [f["name"] for f in fields],
+        "columns": columns,
         "key_cols": metas[0]["key_cols"],
         "n_parts": n_parts.pop(),
-        "schema_json": json.dumps({"type": "struct", "fields": fields}),
+        "schema_json": json.dumps(
+            {"type": "struct", "fields": [fields[c] for c in columns]}),
         "logical_schema_json": json.dumps(
-            {"type": "struct", "fields": lfields}
-        ) if any(m.get("logical_schema_json") for m in metas) else None,
+            {"type": "struct", "fields": [lfields[c] for c in lcolumns]}
+        ) if any_logical else None,
     }
 
 
@@ -309,6 +338,8 @@ def _default_fs_is_local(spark: SparkSession | None) -> bool:
 
 def _local_dir(path: str, spark: SparkSession | None = None) -> str | None:
     """Local filesystem directory for ``path``, or None (remote/absent)."""
+    import os
+
     p = path
     if p.startswith("file:"):
         p = "/" + p.split(":", 1)[1].lstrip("/")
@@ -352,9 +383,12 @@ def _meta_rows(spark: SparkSession, manifest_path: str) -> list[tuple]:
     if t is not None:
         return list(zip(t.column("run_id").to_pylist(),
                         t.column("table_meta").to_pylist()))
-    return [tuple(r) for r in spark.read.parquet(manifest_path)
-            .filter(F.col("column") == META_KEY)
-            .select("run_id", "table_meta").collect()]
+    rows = (
+        spark.read.parquet(manifest_path)
+        .filter(F.col("column") == META_KEY)
+        .select("run_id", "table_meta").collect()
+    )
+    return [(r["run_id"], r["table_meta"]) for r in rows]
 
 
 def read_local(manifest_path: str) -> tuple[dict, set[tuple]]:
@@ -383,7 +417,8 @@ def table_meta(spark: SparkSession, manifest_path: str) -> dict:
     rows = _meta_rows(spark, manifest_path)
     if not rows:
         raise FileNotFoundError(f"no table meta in manifest at {manifest_path}")
-    return merge_metas([json.loads(tm) for _, tm in sorted(rows)])
+    metas = [json.loads(tm) for _, tm in sorted(rows)]
+    return merge_metas(metas)
 
 
 def run_order(spark: SparkSession, manifest_path: str) -> dict[str, tuple]:
@@ -415,104 +450,127 @@ def runs_as_of(spark: SparkSession, manifest_path: str,
     return sorted(r for r, k in order.items() if k <= cut)
 
 
-# Largest pairs filter (``_filter_size``; ~0.6 ms of driver time a unit)
-# the driver builds; a bigger one takes the Spark read (listing, distinct,
-# broadcast: ~flat).  Joining a 2,000-row parquet frame (4-vCPU local[4],
-# median wall of 3), filter vs Spark read: runs x 64 parts, 1,024 / 4,096
-# / 8,192 pairs (size 96 / 144 / 208): 1.09 (cold) / 0.56 / 0.63 vs 0.82
-# / 0.71 / 0.64 s; 64 / 256 / 1,024 runs of 4 random parts (336 / 1,344 /
-# 5,376): 0.70 / 0.94 / 3.30 vs 0.70 / 0.45 / 0.43 s.
-_LOCAL_PAIRS_MAX = 512
+# Largest pair count the driver applies itself; more take the Spark read
+# (listing, distinct, broadcast: ~flat in the pair count).  Keeping the
+# valid rows of a 2,000-row parquet frame on a 4-vCPU local[4] host,
+# median wall of 3, driver pairs vs Spark read:
+#   filter, 1 run x 1,024 / 4,096 / 8,192 parts: 0.31 / 0.40 / 0.47 vs
+#   0.48 / 0.46 / 0.54 s; 1,024 / 4,096 / 8,192 runs x 1 part: 0.30 /
+#   0.34 / 0.57 vs 0.39 / 0.47 / 0.52 s;
+#   inline table (any other set):  0.33 vs 0.64 s at 1,024 pairs, 0.40
+#   vs 0.56 s at 4,096, 0.41 vs 0.29 s at 8,192, 0.58 vs 0.41 s at 12,288.
+_LOCAL_PAIRS_MAX = 4096
 
 _PAIR_KEYS = [PART_ID, "run_id"]
+_EMPTY_ROW = "(0L, '')"
+_PLAIN = re.compile(r"[\w.:-]*", re.ASCII)
 
 
-def _part_set_groups(pairs) -> list[tuple[list[str], list[int]]]:
-    """(runs, parts) per part-id set some runs share; pairs = U runs x parts."""
-    parts: dict[str, set] = {}
-    for p, r in pairs:
-        parts.setdefault(r, set()).add(int(p))
-    groups: dict[frozenset, list] = {}
-    for r, ps in parts.items():
-        groups.setdefault(frozenset(ps), []).append(r)
-    return sorted((sorted(rs), sorted(ps)) for ps, rs in groups.items())
+def _sql_lit(v) -> str:
+    """SQL text of an int or str literal that no quoting or escape rule
+    of the parser can alter: a string with other characters than
+    ``[A-Za-z0-9_.:-]`` travels as its UTF-8 bytes in hex."""
+    if isinstance(v, int):
+        return f"{v}L"
+    if _PLAIN.fullmatch(v):
+        return f"'{v}'"
+    return f"CAST(X'{v.encode().hex()}' AS STRING)"
 
 
-def _filter_size(groups) -> int:
-    """The pairs filter's cost in literal units: one per run or part id,
-    16 per group (two ``isin``, AND, OR and its share of analysis)."""
-    return sum(len(rs) + len(ps) + 16 for rs, ps in groups)
+def _in_sql(col: str, values) -> str:
+    """``col IN (values)`` as SQL text, so ``F.expr`` builds it in one
+    Py4J call; ``Column.isin`` makes ~3 per literal (4,096 literals:
+    2.2 s to build on a 4-vCPU host, against 7 ms to parse the text)."""
+    return f"`{col}` IN ({', '.join(map(_sql_lit, values))})"
 
 
-def _pairs_filter(pairs):
-    """The condition true for exactly ``pairs``: ``run_id IN (runs) AND
-    part_id IN (parts)`` per part-set group, ORed as a balanced tree (no
-    deep recursion however many groups).  Literals go through
-    ``Column.isin`` — no SQL text, no quoting rule to alter a run id."""
-    run, part = F.col("run_id"), F.col(PART_ID)
-    legs = [run.isin(rs) & part.isin(ps) for rs, ps in _part_set_groups(pairs)]
-    if not legs:
+def _pairs_relation(spark: SparkSession, pairs) -> DataFrame:
+    """(part_id, run_id) rows as an inline VALUES table — a
+    ``LocalRelation``, so no job builds it (``createDataFrame`` would
+    run one: it goes through ``parallelize``).  Run ids travel as hex,
+    so no quoting or escape rule of the SQL parser can alter one."""
+    vals = ", ".join(f"({int(p)}L, '{r.encode().hex()}')" for p, r in pairs)
+    where = "" if vals else " WHERE false"  # VALUES needs a row
+    return spark.sql(f"SELECT {PART_ID}, CAST(unhex(h) AS STRING) AS run_id "
+                     f"FROM VALUES {vals or _EMPTY_ROW} AS t({PART_ID}, h)"
+                     + where)
+
+
+def _local_pairs(spark: SparkSession, rows: pa.Table) -> Column | DataFrame:
+    """The driver-read pairs as ``join_valid`` applies them.  When they
+    are every (part, run) of their runs and parts — one run, or runs
+    that all wrote the same partitions: the usual table — a filter
+    ``run_id IN (runs) AND part_id IN (parts)``, which Catalyst fuses
+    into the blocks scan's stage and pushes to parquet (no join, no
+    job).  Any other set is an inline table joined as a broadcast: a
+    filter's analysis grows with its literals, and an exact one per
+    pair (~0.2 ms each) loses to the table."""
+    runs = sorted(pc.unique(rows.column("run_id")).to_pylist())
+    parts = sorted(pc.unique(rows.column(PART_ID)).to_pylist())
+    if not rows.num_rows:
         return F.lit(False)
-    while len(legs) > 1:
-        legs = [legs[i] | legs[i + 1] if i + 1 < len(legs) else legs[i]
-                for i in range(0, len(legs), 2)]
-    return legs[0]
+    if len(runs) * len(parts) == rows.num_rows:
+        return F.expr(f"{_in_sql('run_id', runs)} AND "
+                      f"{_in_sql(PART_ID, parts)}")
+    return _pairs_relation(spark, zip(rows.column(PART_ID).to_pylist(),
+                                      rows.column("run_id").to_pylist()))
 
 
 def valid_pairs(spark: SparkSession, manifest_path: str, *,
-                part_ids=None, run_ids=None) -> tuple[DataFrame | frozenset,
+                part_ids=None, run_ids=None) -> tuple[Column | DataFrame,
                                                       pa.Table | None]:
     """The valid-pairs builder: distinct (part_id, run_id) pairs with a
     committed manifest entry, restricted to ``part_ids``/``run_ids`` —
     what ``join_valid`` keeps, so orphan blocks from crashed runs stay
     invisible to every reader.
 
-    Returns (pairs, per-pair rows).  On a local manifest: a frozenset of
-    (part_id, run_id) from one driver-side read (no job), and an Arrow
-    table (part_id, run_id, n_rows_min, n_rows_max — the pair's n_rows
-    over its columns, equal on a consistent manifest).  Otherwise —
-    non-local or unreadable manifest, or a filter over
-    ``_LOCAL_PAIRS_MAX`` — a DataFrame (Spark read + distinct) and None.
+    Returns (pairs, per-pair rows).  On a local manifest with at most
+    ``_LOCAL_PAIRS_MAX`` pairs they come from one driver-side read (no
+    job; ``_local_pairs``: a filter Column or an inline table), and the
+    per-pair rows are an Arrow table (part_id, run_id, n_rows_min,
+    n_rows_max — the pair's n_rows over its columns, equal on a
+    consistent manifest).  Otherwise — non-local or unreadable manifest,
+    or more pairs — a Spark read + ``distinct`` and None.
     """
-    scope = [(c, list(v)) for c, v in (
-        (PART_ID, None if part_ids is None else map(int, part_ids)),
-        ("run_id", run_ids)) if v is not None]
     where = pads.field("column") != META_KEY
-    for c, v in scope:
-        where &= pads.field(c).isin(v)
+    if part_ids is not None:
+        where &= pads.field(PART_ID).isin([int(p) for p in part_ids])
+    if run_ids is not None:
+        where &= pads.field("run_id").isin(list(run_ids))
     t = _local_table(spark, manifest_path, [PART_ID, "run_id", "n_rows"],
                      where)
     if t is not None:
         rows = t.group_by(_PAIR_KEYS).aggregate(
             [("n_rows", "min"), ("n_rows", "max")])
-        pairs = frozenset(zip(rows.column(PART_ID).to_pylist(),
-                              rows.column("run_id").to_pylist()))
-        if _filter_size(_part_set_groups(pairs)) <= _LOCAL_PAIRS_MAX:
-            return pairs, rows
-    df = spark.read.parquet(manifest_path).filter(F.col("column") != META_KEY)
-    for c, v in scope:
-        df = df.filter(F.col(c).isin(v))
+        if rows.num_rows <= _LOCAL_PAIRS_MAX:
+            return _local_pairs(spark, rows), rows
+    df = (spark.read.parquet(manifest_path)
+          .filter(F.col("column") != META_KEY))
+    if part_ids is not None:
+        df = df.filter(F.col(PART_ID).isin([int(p) for p in part_ids]))
+    if run_ids is not None:
+        df = df.filter(F.col("run_id").isin(list(run_ids)))
     return df.select(*_PAIR_KEYS).distinct(), None
 
 
-def valid_pairs_df(spark: SparkSession, manifest_path: str,
-                   **scope) -> DataFrame | frozenset:
-    """``valid_pairs``' pairs alone, for ``join_valid``."""
-    return valid_pairs(spark, manifest_path, **scope)[0]
+def valid_pairs_df(spark: SparkSession, manifest_path: str, *,
+                   part_ids=None, run_ids=None) -> Column | DataFrame:
+    """``valid_pairs``' pairs alone, for ``join_valid``; never collected."""
+    return valid_pairs(spark, manifest_path, part_ids=part_ids,
+                       run_ids=run_ids)[0]
 
 
-def join_valid(df: DataFrame, valid: DataFrame | frozenset, *,
+def join_valid(df: DataFrame, valid: Column | DataFrame, *,
                mark: str | None = None) -> DataFrame:
     """The rows of ``df`` whose (part_id, run_id) is in ``valid`` (a
-    ``valid_pairs_df`` value): driver-side pairs as a plain filter, which
+    ``valid_pairs_df`` value): a filter Column as a plain filter, which
     Catalyst fuses into the scan and pushes to parquet, a pairs
-    DataFrame by a broadcast join — no shuffle of ``df`` either way.
-    With ``mark``, every row is kept and the boolean column ``mark``
-    added: true for a valid pair, null otherwise."""
-    if not isinstance(valid, DataFrame):
-        cond = _pairs_filter(valid)
-        return (df.filter(cond) if mark is None
-                else df.withColumn(mark, F.when(cond, F.lit(True))))
+    DataFrame by a broadcast hash join — no shuffle of ``df`` either
+    way.  With ``mark``, every row is kept and the boolean column
+    ``mark`` added: true for a valid pair, null otherwise."""
+    if isinstance(valid, Column):
+        return (df.filter(valid) if mark is None
+                else df.withColumn(mark, F.when(valid, F.lit(True))))
     if mark is None:
         return df.join(F.broadcast(valid), _PAIR_KEYS, "inner")
     return df.join(F.broadcast(valid.withColumn(mark, F.lit(True))),

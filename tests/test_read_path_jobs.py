@@ -1,10 +1,12 @@
 """The read path's fixed cost: on a local manifest the driver reads the
 valid (part_id, run_id) pairs itself and applies them as a filter on
-the blocks scan, so a decode runs 1 Spark job, an aggregate at most 2
-and a row_range decode at most 2.  Every fallback — a non-local
-filesystem, a manifest pyarrow cannot read, a pairs filter over the
-bound — takes the Spark read + broadcast join and gives the same
-answers; orphan blocks of a crashed run stay invisible either way."""
+the blocks scan (a cross product of runs and parts) or as an inline
+table joined as a broadcast (any other set), so a decode runs 1 Spark
+job, an aggregate at most 2 and a row_range decode at most 2.  Every
+fallback — a non-local filesystem, a manifest pyarrow cannot read, more
+pairs than the bound — takes the Spark read + broadcast join and gives
+the same answers; orphan blocks of a crashed run stay invisible either
+way."""
 
 from __future__ import annotations
 
@@ -12,7 +14,7 @@ import shutil
 import uuid
 
 import pytest
-from pyspark.sql import Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from boltspark.engine import agg, decode_table, encode_table
 from boltspark.engine import manifest as manifestmod
@@ -100,27 +102,33 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _pair_set(rows) -> set:
+    return set(zip(rows.column(PART_ID).to_pylist(),
+                   rows.column("run_id").to_pylist()))
+
+
 def test_pairs_are_a_driver_side_filter(spark, table, monkeypatch):
     b, m = table
-    valid, n = _jobs(spark, lambda: manifestmod.valid_pairs_df(spark, m))
+    (valid, rows), n = _jobs(spark, lambda: manifestmod.valid_pairs(spark, m))
     assert n == 0
+    assert isinstance(valid, Column)
+    want = {(p, r) for p in range(N_PARTS) for r in (QUOTED, "run2")}
     # the quoted id round-trips byte for byte; the crashed run is absent
-    assert valid == {(p, r) for p in range(N_PARTS) for r in (QUOTED, "run2")}
+    assert _pair_set(rows) == want
     groups = spark.read.parquet(b).select(PART_ID, "run_id", "seq")
     kept = manifestmod.join_valid(groups, valid)
     plan = _plan(kept)
     assert "Join" not in plan and "Exchange" not in plan, plan
-    assert {(r[PART_ID], r["run_id"]) for r in kept.collect()} == valid
+    assert {(r[PART_ID], r["run_id"]) for r in kept.collect()} == want
     marked = manifestmod.join_valid(groups, valid, mark="ok")
     got = {(r["run_id"], r["ok"]) for r in marked.collect()}
     assert got == {(QUOTED, True), ("run2", True), ("crashed", None)}
     scoped = manifestmod.valid_pairs_df(spark, m, part_ids=[1, 3],
                                         run_ids=[QUOTED])
-    assert scoped == {(1, QUOTED), (3, QUOTED)}
     assert {tuple(r) for r in manifestmod.join_valid(
-        groups, scoped).select(PART_ID, "run_id").collect()} == scoped
+        groups, scoped).select(PART_ID, "run_id").collect()} == {
+        (1, QUOTED), (3, QUOTED)}
     empty = manifestmod.valid_pairs_df(spark, m, run_ids=["nope"])
-    assert empty == frozenset()
     none = manifestmod.join_valid(groups, empty)
     assert none.collect() == []
     assert none.schema == kept.schema
@@ -134,26 +142,25 @@ def test_pairs_are_a_driver_side_filter(spark, table, monkeypatch):
         groups, spark_valid, mark="ok").collect()} == got
 
 
-def test_many_part_sets_plan_and_match_the_spark_path(spark, tmp_path,
-                                                      monkeypatch):
-    """Every run with its own part set, up to the filter bound: the
-    filter is one OR leg per run (a balanced tree), which must plan and
-    keep exactly the rows the broadcast join keeps; one run more takes
-    the Spark path."""
+def test_pair_shapes_at_the_bound_match_the_spark_path(spark, tmp_path,
+                                                       monkeypatch):
+    """``_LOCAL_PAIRS_MAX`` pairs in the two driver-side forms: runs
+    that each wrote their own part set (an inline table, joined) and two
+    runs over the same parts (a cross product: one filter of a few
+    thousand literals).  Neither runs a job to build, both keep exactly
+    the rows the Spark path keeps and mark them alike, and one pair
+    more takes the Spark path."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    def size(ps):
-        return manifestmod._filter_size(manifestmod._part_set_groups(ps))
-
+    cap = manifestmod._LOCAL_PAIRS_MAX
     # runs of 1, 2, 3 consecutive parts, so no two share a part set
-    pairs, p0, r = [], 0, 0
-    while True:
-        leg = [(p, f"run{r}'\\") for p in range(p0, p0 + r % 3 + 1)]
-        if size(pairs + leg) > manifestmod._LOCAL_PAIRS_MAX:
-            break
-        pairs, p0, r = pairs + leg, p0 + len(leg), r + 1
-    assert r >= 16, r
+    scattered, p0, r = [], 0, 0
+    while len(scattered) < cap:
+        k = min(r % 3 + 1, cap - len(scattered))
+        scattered += [(p, f"run{r}'\\") for p in range(p0, p0 + k)]
+        p0, r = p0 + k, r + 1
+    wide = [(p, run) for run in ("w1", QUOTED) for p in range(cap // 2)]
 
     def manifest(name, ps):
         m = tmp_path / name
@@ -166,24 +173,35 @@ def test_many_part_sets_plan_and_match_the_spark_path(spark, tmp_path,
             str(m / "part-0.parquet"))
         return str(m)
 
-    m = manifest("m", pairs)
-    # groups: every valid pair, the same part under another run, and a
-    # crashed run's copy of a valid pair
-    rows = pairs + [(p, f"run{(i + 1) % r}'\\")
-                    for i, (p, _) in enumerate(pairs[::3])]
-    rows += [(p, "crashed") for p, _ in pairs[::5]]
-    groups = spark.createDataFrame(rows, f"{PART_ID} long, run_id string")
-    valid = manifestmod.valid_pairs_df(spark, m)
-    assert valid == set(pairs)
-    got = sorted(tuple(x) for x in
-                 manifestmod.join_valid(groups, valid).collect())
-    assert got == sorted(x for x in rows if x in valid), len(got)
-    over = manifest("over", pairs + leg)
-    assert manifestmod.valid_pairs(spark, over)[1] is None
-    monkeypatch.setattr(manifestmod, "_default_fs_is_local", lambda s: False)
-    want = manifestmod.join_valid(groups,
-                                  manifestmod.valid_pairs_df(spark, m))
-    assert sorted(tuple(x) for x in want.collect()) == got
+    for name, pairs, form in (("scattered", scattered, DataFrame),
+                              ("wide", wide, Column)):
+        m = manifest(name, pairs)
+        (valid, rows), n = _jobs(spark,
+                                 lambda: manifestmod.valid_pairs(spark, m))
+        assert n == 0 and isinstance(valid, form), (name, n, type(valid))
+        assert _pair_set(rows) == set(pairs), name
+        # groups: every valid pair, a valid part under a run that did
+        # not write it, and a crashed run's copy of a valid pair
+        runs = sorted({x for _, x in pairs})
+        rows_ = pairs + [(p + 1, runs[i % len(runs)])
+                         for i, (p, _) in enumerate(pairs[::3])]
+        rows_ += [(p, "crashed") for p, _ in pairs[::5]]
+        groups = spark.createDataFrame(rows_,
+                                       f"{PART_ID} long, run_id string")
+        got = sorted(tuple(x) for x in
+                     manifestmod.join_valid(groups, valid).collect())
+        assert got == sorted(x for x in rows_ if x in set(pairs)), name
+        marked = sorted(tuple(x) for x in manifestmod.join_valid(
+            groups, valid, mark="ok").collect())
+        over = manifest(name + "_over", pairs + [(cap + 7, "extra")])
+        assert manifestmod.valid_pairs(spark, over)[1] is None
+        with monkeypatch.context() as mp:
+            mp.setattr(manifestmod, "_default_fs_is_local", lambda s: False)
+            spark_valid = manifestmod.valid_pairs_df(spark, m)
+            assert sorted(tuple(x) for x in manifestmod.join_valid(
+                groups, spark_valid).collect()) == got, name
+            assert sorted(tuple(x) for x in manifestmod.join_valid(
+                groups, spark_valid, mark="ok").collect()) == marked, name
 
 
 def test_orphans_invisible_and_quoted_run_reads(spark, table):
