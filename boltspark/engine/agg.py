@@ -30,6 +30,12 @@ ones ``decode_table`` uses), and ``_scan`` runs the per-task loop
 into Python, ``trimmed``).  An operator supplies only a per-group
 reducer plus, for per-partition accumulators, a stream-end flush.
 
+Reducers read blocks through two views, the only codec dispatch here:
+``_view`` (values with multiplicities, for single-column reductions)
+and ``_coded`` (per-row codes into per-block uniques, for the grouped
+scans).  Every grouped SUM / AVG / COUNT runs on one composite-code
+reducer, ``_grouped_partials``.
+
 At 100 TB the difference is structural: a GROUP BY over a dictionary-
 coded flag column moves (n_blocks x n_distinct) tiny rows through one
 final shuffle instead of n_rows values.
@@ -69,16 +75,96 @@ def _arrow_type(spark: SparkSession, dtype) -> pa.DataType:
         dtype, spark.conf.get("spark.sql.session.timeZone", "UTC"))
 
 
-def _open_dense(blk: bytes):
-    """open_block + the n_valid arithmetic every aggregate needs."""
-    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
-    n_valid = int(validity.sum()) if validity is not None else n_rows
-    return payload, meta, tag, codec, n_rows, n_valid
-
-
 def _check_tag(tag: str, what: str, bad=("d128",)):
     if tag in bad or tag in lists.LIST_TAGS:
         raise TypeError(f"{what} over tag {tag!r} is not defined")
+
+
+# ---------------------------------------------------------- block views
+
+def _open(blk: bytes, what: str, bad=("d128",)):
+    """open_block + ``_check_tag`` + the valid count ->
+    (payload, validity, meta, tag, codec, n_rows, n_valid)."""
+    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
+    _check_tag(tag, what, bad)
+    n_valid = int(validity.sum()) if validity is not None else n_rows
+    return payload, validity, meta, tag, codec, n_rows, n_valid
+
+
+def _dense(opened):
+    """Dense (valid-only) values of an ``_open``-ed block."""
+    payload, _v, meta, tag, codec, _n, n_valid = opened
+    return blockmod.decode_values(payload, meta, n_valid, tag, codec)
+
+
+def _view(blk: bytes, mask, what: str, bad=("d128",), weighted=True):
+    """A block under ``mask`` ('all' or a full-length bool row mask) ->
+    (values, weights, tag, n, n_valid): the surviving valid values with
+    multiplicities ``weights`` (None: each once); ``n`` surviving rows.
+    A row mask decodes only the surviving rows.  Unmasked, a dict block
+    gives its dictionary weighted by the code histogram, an rle block
+    of a fixed-width tag its runs weighted by length; others decode
+    dense.  ``weighted=False`` (reducers over the value set): a dict
+    block gives its dictionary alone, the code stream never decoded.
+    d128 word pairs come back as exact Python ints."""
+    if not isinstance(mask, str):
+        values, _v, tag, _c, n = blockmod.decode_block_rows(blk, mask)
+        _check_tag(tag, what, bad)
+        n_valid = len(values)
+    else:
+        opened = _open(blk, what, bad)
+        payload, _v, meta, tag, codec, n, n_valid = opened
+        if codec == "dict" and not weighted:
+            values = dictionary.decode_dictionary(payload, meta, tag)
+            return values, None, tag, n, n_valid
+        if codec == "dict":
+            values, codes, _v = _coded(opened)
+            return (values, np.bincount(codes, minlength=len(values)), tag,
+                    n, n_valid)
+        if codec == "rle" and tag != "bytes":
+            values, lengths = blockmod.decode_rle_runs(payload, meta,
+                                                       n_valid, tag)
+            return values, lengths.astype(np.int64), tag, n, n_valid
+        values = _dense(opened)
+    if tag == "d128":
+        values = _d128_ints(values)
+    return values, None, tag, n, n_valid
+
+
+def _coded(opened):
+    """An ``_open``-ed block as (uniques, codes, validity), with
+    ``uniques[codes]`` its dense values: a dict block's own code stream
+    (values never materialized), rle runs uniqued and repeated, or the
+    dense values dictionary-encoded.  Unique order is per block."""
+    payload, validity, meta, tag, codec, _n, n_valid = opened
+    if codec == "dict":
+        uniques, codes = dictionary.decode_parts(payload, meta, n_valid, tag)
+    elif codec == "rle" and tag != "bytes":
+        rv, rl = blockmod.decode_rle_runs(payload, meta, n_valid, tag)
+        uniques, inv = np.unique(np.asarray(rv), return_inverse=True)
+        codes = np.repeat(inv, rl.astype(np.int64))
+    elif tag == "bytes":
+        de = strings.to_arrow(_dense(opened)).dictionary_encode()
+        uniques, codes = strings.from_arrow(de.dictionary), de.indices
+    else:
+        uniques, codes = np.unique(np.asarray(_dense(opened)),
+                                   return_inverse=True)
+    return uniques, np.asarray(codes).astype(np.int64, copy=False), validity
+
+
+def _d128_ints(pairs) -> np.ndarray:
+    """(lo, hi) int64 word pairs -> their exact signed 128-bit values,
+    hi*2^64 + lo_u, as an object array of Python ints."""
+    pairs = np.asarray(pairs).reshape(-1, 2)
+    return ((pairs[:, 1].astype(object) << 64)
+            + pairs[:, 0].astype(np.uint64).astype(object))
+
+
+def _full(dense: np.ndarray, validity) -> np.ndarray:
+    """Dense per-valid-row values -> full block length (zero in the
+    null slots); a block without nulls is already full."""
+    return (dense if validity is None
+            else blockmod.scatter_nulls_fixed(dense, validity))
 
 
 def _dec_arr(unscaled_ints, out_t: "pa.DataType"):
@@ -212,24 +298,10 @@ def _scan(blocks: DataFrame, predicates: list[Predicate], out_schema,
 # ---------------------------------------------------------------- sums
 
 def _reduce_sum(v: np.ndarray, weights: np.ndarray | None = None):
-    if v.dtype.kind == "f":
-        w = weights.astype(np.float64) if weights is not None else None
-        return float(np.dot(v.astype(np.float64), w) if w is not None
-                     else v.sum(dtype=np.float64))
-    w = weights.astype(np.int64) if weights is not None else None
-    return int(np.dot(v.astype(np.int64), w) if w is not None
-               else v.sum(dtype=np.int64))
-
-
-def _sum_d128_pairs(pairs: np.ndarray) -> int:
-    """Exact sum of (lo, hi) int64 word pairs: value = hi*2^64 + lo_u,
-    so sum = 2^64 * sum(hi) + sum(lo_u), both folded in arbitrary-
-    precision Python ints (never overflows, never rounds)."""
-    if not len(pairs):
-        return 0
-    lo_u = pairs[:, 0].astype(np.uint64)
-    hi = pairs[:, 1]
-    return (int(hi.astype(object).sum()) << 64) + int(lo_u.astype(object).sum())
+    acc = np.float64 if v.dtype.kind == "f" else np.int64
+    v = v.astype(acc)
+    s = v.sum() if weights is None else np.dot(v, weights.astype(acc))
+    return float(s) if acc is np.float64 else int(s)
 
 
 def _block_sum(blk: bytes, mask="all", exact_decimal: bool = False):
@@ -242,30 +314,13 @@ def _block_sum(blk: bytes, mask="all", exact_decimal: bool = False):
     surviving rows (late materialization).  ``exact_decimal`` sums the
     unscaled integers of a decimal column exactly as a Python int: int64
     low words for p<=18, (lo, hi) word pairs for the d128 storage."""
-    if isinstance(mask, str):  # 'all'
-        payload, meta, tag, codec, n_rows, n_valid = _open_dense(blk)
-    else:
-        values, _v, tag, codec, n_rows = blockmod.decode_block_rows(blk, mask)
-        n_valid = len(values)
-    d128 = exact_decimal and tag == "d128"
-    if not d128:
-        _check_tag(tag, "sum", ("bytes", "d128"))
-    weights = None
-    if isinstance(mask, str):  # d128 is word-plane plain only
-        if codec == "rle":
-            values, weights = blockmod.decode_rle_runs(
-                payload, meta, n_valid, tag)
-        elif codec == "dict":
-            values, codes = dictionary.decode_parts(payload, meta, n_valid,
-                                                    tag)
-            weights = np.bincount(codes, minlength=len(values))
-        else:
-            values = blockmod.decode_values(payload, meta, n_valid, tag, codec)
+    values, weights, tag, n, n_valid = _view(
+        blk, mask, "sum", ("bytes",) if exact_decimal else ("bytes", "d128"))
     v = np.asarray(values)
-    if d128:
-        return _sum_d128_pairs(v), n_rows, n_valid
+    if tag == "d128":  # exact Python ints, never weighted (plain only)
+        return int(v.sum()), n, n_valid
     s = _reduce_sum(v, weights)
-    return (int(s) if exact_decimal else s), n_rows, n_valid
+    return (int(s) if exact_decimal else s), n, n_valid
 
 
 def _block_count(blk: bytes, mask) -> tuple[int, int]:
@@ -513,39 +568,22 @@ def _block_value_counts(blk: bytes, mask="all"):
     kernel representation (StringColumn for bytes, ndarray otherwise),
     counts int64, nulls reported separately (SQL GROUP BY semantics).
     A row mask counts a selective decode of the surviving rows."""
-    if not isinstance(mask, str):
-        values, _v, tag, codec, n_sel = blockmod.decode_block_rows(blk, mask)
-        _check_tag(tag, "value_counts")
-        return _counts_of(values, tag, n_sel - len(values))
-    payload, meta, tag, codec, n_rows, n_valid = _open_dense(blk)
-    _check_tag(tag, "value_counts")
-    n_null = n_rows - n_valid
-    if codec == "dict":
-        uniques, codes = dictionary.decode_parts(payload, meta, n_valid, tag)
-        cnt = np.bincount(codes, minlength=len(uniques)).astype(np.int64)
-        return uniques, cnt, n_null
-    if codec == "rle" and tag != "bytes":
-        run_values, run_lengths = blockmod.decode_rle_runs(
-            payload, meta, n_valid, tag)
-        u, inv = np.unique(np.asarray(run_values), return_inverse=True)
-        cnt = np.zeros(len(u), dtype=np.int64)
-        np.add.at(cnt, inv, run_lengths.astype(np.int64))
-        return u, cnt, n_null
-    values = blockmod.decode_values(payload, meta, n_valid, tag, codec)
-    return _counts_of(values, tag, n_null)
-
-
-def _counts_of(values, tag: str, n_null: int):
+    values, weights, tag, n, n_valid = _view(blk, mask, "value_counts")
+    if weights is not None and tag == "bytes":  # a dictionary: distinct
+        return values, weights, n - n_valid
     if tag == "bytes":
         vc = pc.value_counts(strings.to_arrow(values))
         varr = vc.field("values")
         if isinstance(varr, pa.ChunkedArray):
             varr = varr.combine_chunks()
-        u = strings.from_arrow(varr)
-        cnt = np.asarray(vc.field("counts")).astype(np.int64)
-        return u, cnt, n_null
-    u, cnt = np.unique(np.asarray(values), return_counts=True)
-    return u, cnt.astype(np.int64), n_null
+        return (strings.from_arrow(varr),
+                np.asarray(vc.field("counts")).astype(np.int64), n - n_valid)
+    if weights is None:
+        u, cnt = np.unique(np.asarray(values), return_counts=True)
+    else:
+        u, inv = np.unique(np.asarray(values), return_inverse=True)
+        cnt = np.bincount(inv, weights, minlength=len(u))
+    return u, cnt.astype(np.int64), n - n_valid
 
 
 def value_counts(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -591,55 +629,29 @@ def _vc_partials(spark: SparkSession, blocks: DataFrame,
     return _scan(blocks, predicates, out_schema, per_group)
 
 
-def _d128_minmax(pairs: np.ndarray) -> tuple[int, int]:
-    """(min, max) of (lo, hi) int64 word pairs as exact Python ints —
-    signed-128 order = lexicographic (hi signed, lo unsigned)."""
-    lo_u = pairs[:, 0].astype(np.uint64)
-    hi = pairs[:, 1]
-    order = np.lexsort((lo_u, hi))
-    i, j = int(order[0]), int(order[-1])
-
-    def val(k: int) -> int:
-        return (int(hi[k]) << 64) + int(lo_u[k])
-
-    return val(i), val(j)
-
-
 def _minmax_of(values, tag: str):
     if not len(values):
         return None, None
-    if tag == "d128":
-        return _d128_minmax(np.asarray(values))
     if tag == "bytes":
         mm = pc.min_max(strings.to_arrow(values))
         return mm["min"].as_py(), mm["max"].as_py()
     v = np.asarray(values)
+    nan = np.isnan(v) if v.dtype.kind == "f" else None
+    if nan is not None and nan.any():  # Spark order: NaN above +inf
+        return (v[nan][0] if nan.all() else v[~nan].min()), v[nan][0]
     return v.min(), v.max()
 
 
 def _block_minmax(blk: bytes, mask="all"):
     """(vmin, vmax, n_rows_or_selected, n_valid) for one block,
-    value-exact (unlike the float64 zone stats): sorted dict blocks
-    answer in O(1) from the dictionary's head/tail; rle blocks reduce
-    run values (O(runs)); everything else decodes dense (a row mask:
-    only the surviving rows).  Returns numpy scalars / bytes; d128
-    blocks return exact Python ints (unscaled)."""
-    if not isinstance(mask, str):
-        values, _v, tag, codec, n_sel = blockmod.decode_block_rows(blk, mask)
-        _check_tag(tag, "min/max", ())
-        return (*_minmax_of(values, tag), n_sel, len(values))
-    payload, meta, tag, codec, n_rows, n_valid = _open_dense(blk)
-    _check_tag(tag, "min/max", ())
-    if not n_valid:
-        return None, None, n_rows, 0
-    if codec == "dict":
-        u = dictionary.decode_dictionary(payload, meta, tag)
-        return u[0], u[len(u) - 1], n_rows, n_valid
-    if codec == "rle" and tag != "bytes":
-        values, _rl = blockmod.decode_rle_runs(payload, meta, n_valid, tag)
-    else:
-        values = blockmod.decode_values(payload, meta, n_valid, tag, codec)
-    return (*_minmax_of(values, tag), n_rows, n_valid)
+    value-exact (unlike the float64 zone stats): dict blocks reduce
+    their dictionary, rle blocks their run values (O(runs)), everything
+    else decodes dense (a row mask: only the surviving rows).  Floats
+    follow Spark's order (NaN is the largest value).  Returns numpy
+    scalars / bytes; d128 blocks return exact Python ints (unscaled)."""
+    values, _w, tag, n, n_valid = _view(blk, mask, "min/max", (),
+                                        weighted=False)
+    return (*_minmax_of(values, tag), n, n_valid)
 
 
 def column_minmax(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -679,23 +691,9 @@ def column_minmax(spark: SparkSession, blocks_path: str, manifest_path: str,
 
 def _block_distinct(blk: bytes, mask):
     """Distinct non-null values of one block (None when it has none):
-    a dict block's dictionary as-is (every entry occurs by
-    construction), an rle block's unique run values, np.unique / Arrow
-    unique of the (selectively) decoded values otherwise."""
-    if isinstance(mask, str):  # 'all'
-        payload, meta, tag, codec, _n, n_valid = _open_dense(blk)
-        _check_tag(tag, "distinct")
-        if not n_valid:
-            return None
-        if codec == "dict":
-            return dictionary.decode_dictionary(payload, meta, tag)
-        if codec == "rle" and tag != "bytes":
-            values, _rl = blockmod.decode_rle_runs(payload, meta, n_valid, tag)
-        else:
-            values = blockmod.decode_values(payload, meta, n_valid, tag, codec)
-    else:
-        values, _v, tag, codec, _n = blockmod.decode_block_rows(blk, mask)
-        _check_tag(tag, "distinct")
+    the unique entries of a dict block's dictionary, of an rle block's
+    run values, or of the (selectively) decoded values otherwise."""
+    values, _w, tag, _n, _nv = _view(blk, mask, "distinct", weighted=False)
     if not len(values):
         return None
     return (strings.to_arrow(values).unique() if tag == "bytes"
@@ -738,12 +736,7 @@ def _hash_values(values, tag: str) -> np.ndarray:
     from ..kernels import hll
 
     if tag == "bytes":
-        arr = (strings.to_arrow(values)
-               if isinstance(values, strings.StringColumn)
-               else pa.array(values))
-        return hll.hash_bytes(
-            [v if isinstance(v, bytes) else v.encode()
-             for v in arr.unique().to_pylist()])
+        return hll.hash_bytes(strings.to_arrow(values).unique().to_pylist())
     return hll.hash_fixed(np.asarray(values))
 
 
@@ -751,28 +744,9 @@ def _block_hashes(blk: bytes, mask):
     """(hashes or None, n_rows_or_selected, n_valid) for one block:
     dict blocks hash only their dictionary, rle blocks their run
     values, everything else the (selectively) decoded values."""
-    from ..kernels import hll
-
-    if not isinstance(mask, str):
-        values, _v, tag, codec, n_sel = blockmod.decode_block_rows(blk, mask)
-        _check_tag(tag, "approx distinct")
-        return ((_hash_values(values, tag) if len(values) else None),
-                n_sel, len(values))
-    payload, meta, tag, codec, n_rows, n_valid = _open_dense(blk)
-    _check_tag(tag, "approx distinct")
-    if not n_valid:
-        return None, n_rows, 0
-    if codec == "dict":
-        u = dictionary.decode_dictionary(payload, meta, tag)
-        h = (hll.hash_bytes(u) if tag == "bytes"
-             else hll.hash_fixed(np.asarray(u)))
-    elif codec == "rle" and tag != "bytes":
-        rv, _rl = blockmod.decode_rle_runs(payload, meta, n_valid, tag)
-        h = hll.hash_fixed(np.asarray(rv))
-    else:
-        h = _hash_values(blockmod.decode_values(payload, meta, n_valid, tag,
-                                                codec), tag)
-    return h, n_rows, n_valid
+    values, _w, tag, n, n_valid = _view(blk, mask, "approx distinct",
+                                        weighted=False)
+    return (_hash_values(values, tag) if len(values) else None), n, n_valid
 
 
 def _hll_partials(blocks: DataFrame, predicates: list[Predicate],
@@ -806,33 +780,35 @@ def _hll_partials(blocks: DataFrame, predicates: list[Predicate],
     return _scan(blocks, predicates, schema, per_group, flush)
 
 
+def _max_into(regs: np.ndarray, blob: bytes) -> None:
+    """Merge one serialized HLL register partial into ``regs``
+    (elementwise max)."""
+    part = np.frombuffer(blob, dtype=np.uint8)
+    if len(part) != len(regs):
+        raise ValueError("HLL register width mismatch in partial")
+    np.maximum(regs, part, out=regs)
+
+
+def _hll_estimate(regs: np.ndarray) -> int:
+    from ..kernels import hll
+
+    return int(round(hll.estimate(regs))) if regs.any() else 0
+
+
 def _fold_hll(partials: DataFrame, column: str, p: int) -> DataFrame:
     """Fold (regs, rows, nulls) partials into the one-row
     column_distinct_approx result (single merge task; registers merge
     by elementwise max)."""
     from ..kernels import hll
 
-    m = 1 << p
-
     def fold(batches):
-        regs = hll.empty_registers(p)
-        rows = 0
-        nulls = 0
+        regs, rows, nulls = hll.empty_registers(p), 0, 0
         for batch in batches:
-            names = batch.schema.names
-            rcol = batch.column(names.index("regs"))
-            rrows = batch.column(names.index("rows"))
-            rnulls = batch.column(names.index("nulls"))
-            for i in range(batch.num_rows):
-                part = np.frombuffer(rcol[i].as_py(), dtype=np.uint8)
-                if len(part) != m:
-                    raise ValueError("HLL register width mismatch in partial")
-                np.maximum(regs, part, out=regs)
-                rows += rrows[i].as_py()
-                nulls += rnulls[i].as_py()
-        est = int(round(hll.estimate(regs))) if regs.any() else 0
+            for r in batch.to_pylist():
+                _max_into(regs, r["regs"])
+                rows, nulls = rows + r["rows"], nulls + r["nulls"]
         yield pa.RecordBatch.from_arrays(
-            [pa.array([est], pa.int64()),
+            [pa.array([_hll_estimate(regs)], pa.int64()),
              pa.array([rows], pa.int64()),
              pa.array([nulls], pa.int64())],
             names=["approx_distinct", "n_rows", "n_nulls"])
@@ -879,27 +855,11 @@ def _block_summary(blk: bytes, mask, k: int):
     (value, multiplicity) pairs without materializing rows."""
     from ..kernels import quantile as qk
 
-    not_defined = ("bytes", "d128")
-    if not isinstance(mask, str):
-        values, _v, tag, codec, n_sel = blockmod.decode_block_rows(blk, mask)
-        _check_tag(tag, "quantiles", not_defined)
-        v = np.asarray(values)
-        return (qk.summarize(v, None, k) if len(v) else None), n_sel, len(v)
-    payload, meta, tag, codec, n_rows, n_valid = _open_dense(blk)
-    _check_tag(tag, "quantiles", not_defined)
-    if not n_valid:
-        return None, n_rows, 0
-    if codec == "rle":
-        rv, rl = blockmod.decode_rle_runs(payload, meta, n_valid, tag)
-        smry = qk.summarize(np.asarray(rv), rl.astype(np.float64), k)
-    elif codec == "dict":
-        uniques, codes = dictionary.decode_parts(payload, meta, n_valid, tag)
-        cnt = np.bincount(codes, minlength=len(uniques))
-        smry = qk.summarize(np.asarray(uniques), cnt.astype(np.float64), k)
-    else:
-        values = blockmod.decode_values(payload, meta, n_valid, tag, codec)
-        smry = qk.summarize(np.asarray(values), None, k)
-    return smry, n_rows, n_valid
+    values, w, _t, n, n_valid = _view(blk, mask, "quantiles",
+                                      ("bytes", "d128"))
+    if not len(values):
+        return None, n, n_valid
+    return qk.summarize(np.asarray(values), w, k), n, n_valid
 
 
 def _quantile_partials(blocks: DataFrame, predicates: list[Predicate],
@@ -945,21 +905,12 @@ def _fold_quantiles(partials: DataFrame, column: str,
     from ..kernels import quantile as qk
 
     def fold(batches):
-        summaries = []
-        rows = 0
-        nulls = 0
+        summaries, rows, nulls = [], 0, 0
         for batch in batches:
-            names = batch.schema.names
-            vcol = batch.column(names.index("vs"))
-            wcol = batch.column(names.index("ws"))
-            rrows = batch.column(names.index("rows"))
-            rnulls = batch.column(names.index("nulls"))
-            for i in range(batch.num_rows):
-                summaries.append((
-                    np.asarray(vcol[i].as_py(), dtype=np.float64),
-                    np.asarray(wcol[i].as_py(), dtype=np.float64)))
-                rows += rrows[i].as_py()
-                nulls += rnulls[i].as_py()
+            for r in batch.to_pylist():
+                summaries.append((np.asarray(r["vs"], dtype=np.float64),
+                                  np.asarray(r["ws"], dtype=np.float64)))
+                rows, nulls = rows + r["rows"], nulls + r["nulls"]
         v, w = qk.merge(summaries, k=None)  # lossless final fold
         if len(v):
             vals = qk.quantile(v, w, plist)
@@ -1018,48 +969,28 @@ def column_quantiles(spark: SparkSession, blocks_path: str,
 
 def _topk_candidates(blk: bytes, mask, k: int, ascending: bool):
     """(values, tag): the values of one block that can reach its top-k
-    (a row mask decodes only the surviving rows).  A sorted dictionary
-    with >= k entries hands over its k extreme entries expanded by
-    multiplicity (every entry occurs by construction), O(k) without
-    decoding the rows; other blocks decode dense."""
-    if not isinstance(mask, str):
-        values, _v, tag, codec, _n = blockmod.decode_block_rows(blk, mask)
-        _check_tag(tag, "topk", ())
+    (a row mask decodes only the surviving rows).  Weighted dict and rle
+    views hand over their k extreme values expanded by multiplicity and
+    capped at k, without materializing the rows; other blocks decode
+    dense."""
+    values, w, tag, _n, _nv = _view(blk, mask, "topk", ())
+    if w is None:
         return values, tag
-    payload, meta, tag, codec, n_rows, n_valid = _open_dense(blk)
-    _check_tag(tag, "topk", ())
-    if codec != "dict" or not n_valid:
-        return blockmod.decode_values(payload, meta, n_valid, tag, codec), tag
-    uniques, codes = dictionary.decode_parts(payload, meta, n_valid, tag)
-    nu = len(uniques)
-    if nu < k:
-        return dictionary.decode(payload, meta, n_valid, tag), tag
-    sel = np.arange(k) if ascending else np.arange(nu - k, nu)
-    # duplicates among the true top-k need the code stream: expand the
-    # k extremes by their histogram counts, capped at k
-    rep = np.repeat(sel, np.bincount(codes, minlength=nu)[sel])
+    order = (np.asarray(pc.sort_indices(strings.to_arrow(values)))
+             if tag == "bytes" else np.argsort(values, kind="stable"))
+    ext = order[:k] if ascending else order[-k:]
+    rep = np.repeat(ext, w[ext])
     rep = rep[:k] if ascending else rep[-k:]
-    return (strings.take(uniques, rep) if tag == "bytes"
-            else np.asarray(uniques)[rep]), tag
+    return (strings.take(values, rep) if tag == "bytes"
+            else np.asarray(values)[rep]), tag
 
 
 def _top_k(values, tag: str, k: int, ascending: bool, out_t):
     """The k extreme values of one block's candidates as an Arrow array
     of ``out_t``; decimals rank unscaled (same scale, so unscaled order
-    is value order) and d128 pairs rank as signed 128-bit ints."""
-    if tag == "d128":
-        pairs = np.asarray(values)
-        if not len(pairs):
-            return pa.nulls(0, out_t)
-        order = np.lexsort((pairs[:, 0].astype(np.uint64), pairs[:, 1]))
-        sel = order[:k] if ascending else order[-k:]
-        return _arrow_of([(int(pairs[j, 1]) << 64)
-                          + int(pairs[j, 0].astype(np.uint64))
-                          for j in sel], out_t)
+    is value order), d128 values as exact Python ints."""
     if tag == "bytes":
-        arr = (strings.to_arrow(values)
-               if isinstance(values, strings.StringColumn)
-               else pa.array(values))
+        arr = strings.to_arrow(values)
         if len(arr) > k:
             order = "ascending" if ascending else "descending"
             arr = arr.take(pc.select_k_unstable(
@@ -1236,38 +1167,13 @@ def _group_keys(blk: bytes | None, n_rows: int):
     """Per-ROW group labels of one group-column block -> (uniques, g1):
     g1[row] is 0 for the NULL group and code+1 otherwise, so slot 0 of
     every per-group array is the NULL group.  A None block (the group
-    predates the column) puts every row in the NULL group.  Dict blocks
-    hand their code stream over directly (the group column's strings
-    are never materialized); rle blocks label runs without expanding
-    the values; everything else decodes dense and dictionary-encodes."""
+    predates the column) puts every row in the NULL group.  The labels
+    come from the block's coded view (``_coded``): a dict-coded group
+    column never materializes its values."""
     if blk is None:
         return None, np.zeros(n_rows, dtype=np.int64)
-    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
-    _check_tag(tag, "group-by")
-    n_valid = int(validity.sum()) if validity is not None else n_rows
-    if codec == "dict":
-        uniques, codes = dictionary.decode_parts(payload, meta, n_valid, tag)
-        codes = codes.astype(np.int64)
-    elif codec == "rle" and tag != "bytes":
-        rv, rl = blockmod.decode_rle_runs(payload, meta, n_valid, tag)
-        uniques, inv = np.unique(np.asarray(rv), return_inverse=True)
-        codes = np.repeat(inv.astype(np.int64), rl.astype(np.int64))
-    else:
-        values = blockmod.decode_values(payload, meta, n_valid, tag, codec)
-        if tag == "bytes":
-            # per-block unique order is irrelevant: the final groupBy
-            # merges partials by value
-            de = strings.to_arrow(values).dictionary_encode()
-            uniques = strings.from_arrow(de.dictionary)
-            codes = np.asarray(de.indices).astype(np.int64)
-        else:
-            uniques, inv = np.unique(np.asarray(values), return_inverse=True)
-            codes = inv.astype(np.int64)
-    if validity is None:
-        return uniques, codes + 1
-    full = np.zeros(n_rows, dtype=np.int64)
-    full[validity] = codes + 1
-    return uniques, full
+    uniques, codes, validity = _coded(_open(blk, "group-by"))
+    return uniques, _full(codes + 1, validity)
 
 
 def _keys_at(uniques, out_t: "pa.DataType", labels) -> pa.Array:
@@ -1297,21 +1203,16 @@ def _dense_full(blk: bytes | None, n_rows: int, exact_decimal: bool = False):
     if blk is None:
         return (np.zeros(n_rows, dtype=object if exact_decimal else np.int64),
                 np.zeros(n_rows, dtype=bool))
-    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
-    if not (exact_decimal and tag == "d128"):
-        _check_tag(tag, "sum", ("bytes", "d128"))
-    n_valid = int(validity.sum()) if validity is not None else n_rows
-    v = np.asarray(blockmod.decode_values(payload, meta, n_valid, tag, codec))
+    opened = _open(blk, "sum",
+                   ("bytes",) if exact_decimal else ("bytes", "d128"))
+    _p, validity, _m, tag, *_ = opened
+    v = np.asarray(_dense(opened))
     if tag == "d128":
-        v = ((v[:, 1].astype(object) << 64)
-             + v[:, 0].astype(np.uint64).astype(object))
+        v = _d128_ints(v)
     elif exact_decimal:
         v = v.astype(object)
-    if validity is None:
-        return v, np.ones(n_rows, dtype=bool)
-    full = np.zeros(n_rows, dtype=v.dtype)
-    full[validity] = v
-    return full, validity.astype(bool)
+    return (_full(v, validity),
+            np.ones(len(v), bool) if validity is None else validity)
 
 
 def _segments(labels: np.ndarray, values: np.ndarray):
@@ -1338,6 +1239,124 @@ def _grouped_blocks(spark, blocks_path, manifest_path, group_column,
     fields = _fields(meta)
     gt, vt = fields[group_column], fields[value_column]
     return blocks, predicates, gt, vt, _arrow_type(spark, gt)
+
+
+def _extremes(vals: np.ndarray, labels: np.ndarray, nb: int):
+    """Per-label (mins, maxs) of ``vals`` over ``nb`` labels; a label
+    without a value keeps the +/- extreme (mask it by label count)."""
+    if vals.dtype.kind == "f":
+        mins, maxs = np.full(nb, np.inf), np.full(nb, -np.inf)
+    else:
+        vals = vals.astype(np.int64)
+        ii = np.iinfo(np.int64)
+        mins = np.full(nb, ii.max, dtype=np.int64)
+        maxs = np.full(nb, ii.min, dtype=np.int64)
+    np.minimum.at(mins, labels, vals)
+    np.maximum.at(maxs, labels, vals)
+    return mins, maxs
+
+
+def _grouped_partials(blocks: DataFrame, predicates: list[Predicate],
+                      group_types: list, group_out_ts: list,
+                      exact_decimal: list[bool], minmax=None) -> DataFrame:
+    """The one grouped-sum reducer, over ``blocks`` projecting N group
+    then M value columns.  A block's group streams joint-code once
+    (mixed-radix composite of ``_group_keys`` labels) and every value
+    column reduces against the same codes: one row per (block,
+    combination present) -> (part_id, __g_0.., __cnt, then per value
+    column j: __nv_j and the __sl_j/__sd_j/__if_j sum lanes, or one
+    exact unscaled __dec_j decimal(38,0) lane where ``exact_decimal[j]``;
+    ``minmax`` (per value column, (Spark type, Arrow type)) adds typed
+    __mn_j/__mx_j)."""
+    ng = len(group_types)
+    fields = ([T.StructField(PART_ID, T.IntegerType(), False)]
+              + [T.StructField(f"__g_{i}", t, True)
+                 for i, t in enumerate(group_types)]
+              + [T.StructField("__cnt", T.LongType(), False)])
+    for j, dec in enumerate(exact_decimal):
+        fields.append(T.StructField(f"__nv_{j}", T.LongType(), False))
+        fields += ([T.StructField(f"__dec_{j}", T.DecimalType(38, 0), True)]
+                   if dec else
+                   [T.StructField(f"__sl_{j}", T.LongType(), False),
+                    T.StructField(f"__sd_{j}", T.DoubleType(), False),
+                    T.StructField(f"__if_{j}", T.BooleanType(), False)])
+        if minmax:
+            fields += [T.StructField(f"__mn_{j}", minmax[j][0], True),
+                       T.StructField(f"__mx_{j}", minmax[j][0], True)]
+    out_schema = T.StructType(fields)
+
+    def per_group(g, acc):
+        keys = [_group_keys(cell, g.n_rows) for cell in g.cells[:ng]]
+        dims = [(len(u) if u is not None else 0) + 1 for u, _ in keys]
+        radix = 1
+        for dd in dims:  # python ints: no wraparound in the check
+            radix *= dd
+        if radix >= 1 << 63:
+            raise ValueError(
+                "composite group code would overflow int64: "
+                f"per-block dictionary sizes {dims} multiply to "
+                f"{radix}; group by fewer/lower-cardinality "
+                "columns or use smaller blocks")
+        comp = keys[0][1].astype(np.int64).copy()
+        for dd, (_u, g1) in zip(dims[1:], keys[1:]):
+            comp *= dd
+            comp += g1
+        sel = g.sel
+        sel_idx = np.nonzero(sel)[0]
+        if not len(sel_idx):
+            return None
+        # slot[row]: the rank of the row's combination among those the
+        # selected rows hold; a code space within a few times the block's
+        # rows ranks by histogram (O(rows)), a wider one by sorting
+        if radix <= 4 * len(comp):
+            hist = np.bincount(comp[sel_idx], minlength=radix)
+            ukeys = np.flatnonzero(hist)
+            slot = (np.cumsum(hist > 0) - 1)[comp]
+        else:
+            ukeys, inv = np.unique(comp[sel_idx], return_inverse=True)
+            slot = np.zeros(len(comp), dtype=np.int64)
+            slot[sel_idx] = inv
+        nk = len(ukeys)
+        # decompose composite keys -> per-dimension group labels
+        rem = ukeys.copy()
+        labels = []
+        for dd in reversed(dims[1:]):
+            labels.append(rem % dd)
+            rem //= dd
+        labels.append(rem)
+        out = ([pa.array(np.full(nk, g.pid, np.int32), pa.int32())]
+               + [_keys_at(u, out_t, lab) for (u, _g1), out_t, lab
+                  in zip(keys, group_out_ts, reversed(labels))]
+               + [pa.array(np.bincount(slot[sel_idx], minlength=nk),
+                           pa.int64())])
+        for j, (cell, dec) in enumerate(zip(g.cells[ng:], exact_decimal)):
+            vfull, vmask = _dense_full(cell, g.n_rows, dec)
+            wv_idx = np.nonzero(vmask & sel)[0]
+            pos = slot[wv_idx]
+            nv = np.bincount(pos, minlength=nk)
+            vv = vfull[wv_idx]
+            out.append(pa.array(nv, pa.int64()))
+            if dec:
+                s = np.zeros(nk, dtype=object)
+                np.add.at(s, pos, vv)
+                out.append(pa.array([Decimal(int(x)) for x in s],
+                                    pa.decimal128(38, 0)))
+                continue
+            is_f = vfull.dtype.kind == "f"
+            s_l = np.zeros(nk, dtype=np.int64)
+            s_d = np.zeros(nk, dtype=np.float64)
+            if is_f:
+                s_d = np.bincount(pos, weights=vv, minlength=nk)
+            else:
+                np.add.at(s_l, pos, vv.astype(np.int64))
+            out += [pa.array(s_l, pa.int64()), pa.array(s_d, pa.float64()),
+                    pa.array(np.full(nk, is_f), pa.bool_())]
+            if minmax:
+                out += [_ranked_arr(m, nv > 0, None, None, minmax[j][1])
+                        for m in _extremes(vv, pos, nk)]
+        return pa.RecordBatch.from_arrays(out, names=out_schema.names)
+
+    return _scan(blocks, predicates, out_schema, per_group)
 
 
 def grouped_sum(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -1369,54 +1388,18 @@ def _gsum_partials(blocks: DataFrame, predicates: list[Predicate],
                    group_type, out_t,
                    exact_decimal: bool = False) -> DataFrame:
     """Per-(block, group) grouped-sum partials -> (part_id, value, cnt,
-    nv, s_l, s_d, is_f).  part_id rides along so incremental consumers
-    (streaming/agg_stream.py) can re-validate partials against the
+    nv, s_l, s_d, is_f): ``_grouped_partials`` projected onto the schema
+    streaming/agg_stream.py persists.  part_id rides along so
+    incremental consumers can re-validate partials against the
     manifest's live pairs.  ``exact_decimal`` replaces the s_l/s_d/is_f
     lanes with one exact unscaled s_dec decimal(38,0) lane."""
-    lanes = ([T.StructField("s_dec", T.DecimalType(38, 0), True)]
-             if exact_decimal else
-             [T.StructField("s_l", T.LongType(), False),
-              T.StructField("s_d", T.DoubleType(), False),
-              T.StructField("is_f", T.BooleanType(), False)])
-    out_schema = T.StructType([
-        T.StructField(PART_ID, T.IntegerType(), False),
-        T.StructField("value", group_type, True),
-        T.StructField("cnt", T.LongType(), False),
-        T.StructField("nv", T.LongType(), False),
-    ] + lanes)
-
-    def per_group(g, acc):
-        uniq, g1, cnt, keep = _grouping(g)
-        if not keep.any():
-            return None
-        vfull, vmask = _dense_full(g.cells[1], g.n_rows, exact_decimal)
-        wv = vmask & g.sel
-        nb = len(cnt)
-        nv = np.bincount(g1[wv], minlength=nb)
-        if exact_decimal:
-            s = np.zeros(nb, dtype=object)
-            np.add.at(s, g1[wv], vfull[wv])
-            sums = [pa.array([Decimal(int(x)) for x in s[keep]],
-                             pa.decimal128(38, 0))]
-        else:
-            is_f = vfull.dtype.kind == "f"
-            s_l = np.zeros(nb, dtype=np.int64)
-            s_d = np.zeros(nb, dtype=np.float64)
-            if is_f:
-                s_d = np.bincount(g1[wv], weights=vfull[wv], minlength=nb)
-            else:
-                np.add.at(s_l, g1[wv], vfull[wv].astype(np.int64))
-            sums = [pa.array(s_l[keep], pa.int64()),
-                    pa.array(s_d[keep], pa.float64()),
-                    pa.array(np.full(int(keep.sum()), is_f), pa.bool_())]
-        return pa.RecordBatch.from_arrays(
-            [pa.array(np.full(int(keep.sum()), g.pid, np.int32), pa.int32()),
-             _keys_at(uniq, out_t, np.nonzero(keep)[0]),
-             pa.array(cnt[keep].astype(np.int64), pa.int64()),
-             pa.array(nv[keep].astype(np.int64), pa.int64())] + sums,
-            names=out_schema.names)
-
-    return _scan(blocks, predicates, out_schema, per_group)
+    lanes = ([F.col("__dec_0").alias("s_dec")] if exact_decimal else
+             [F.col("__sl_0").alias("s_l"), F.col("__sd_0").alias("s_d"),
+              F.col("__if_0").alias("is_f")])
+    return _grouped_partials(blocks, predicates, [group_type], [out_t],
+                             [exact_decimal]).select(
+        PART_ID, F.col("__g_0").alias("value"), F.col("__cnt").alias("cnt"),
+        F.col("__nv_0").alias("nv"), *lanes)
 
 
 def _fold_gsum(partials: DataFrame, scale: int | None = None) -> DataFrame:
@@ -1487,7 +1470,7 @@ def grouped_distinct_approx(spark: SparkSession, blocks_path: str,
     per-(block, group) registers; what crosses the shuffle is
     n_blocks x n_groups x 2^p bytes (p=12 -> 4 KB per group row)
     regardless of value cardinality, and the final fold is one
-    groupBy(value) with a commutative register max-merge.  Groups must
+    groupBy(value).applyInPandas with a commutative register max-merge.  Groups must
     be low-cardinality (the same dict/rle assumption grouped_sum
     makes); values hash per row (splitmix64 for fixed widths; byte
     values hash their per-block dictionary uniques once and gather by
@@ -1507,7 +1490,6 @@ def grouped_distinct_approx(spark: SparkSession, blocks_path: str,
         T.StructField("regs", T.BinaryType(), False),
         T.StructField("cnt", T.LongType(), False),
     ])
-    m = 1 << p
 
     def _value_hashes(blk: bytes | None, n_rows: int):
         """Full-length row hashes of the value block -> (hashes_full
@@ -1515,34 +1497,15 @@ def grouped_distinct_approx(spark: SparkSession, blocks_path: str,
         if blk is None:
             return (np.zeros(n_rows, dtype=np.uint64),
                     np.zeros(n_rows, dtype=bool))
-        payload, validity, meta_b, tag, codec, n_rows = blockmod.open_block(blk)
-        _check_tag(tag, "approx distinct")
-        n_valid = int(validity.sum()) if validity is not None else n_rows
-        if tag == "bytes":
-            if codec == "dict":
-                uniques, codes = dictionary.decode_parts(
-                    payload, meta_b, n_valid, tag)
-                codes = np.asarray(codes, dtype=np.int64)
-            else:
-                vals = blockmod.decode_values(payload, meta_b, n_valid,
-                                              tag, codec)
-                de = strings.to_arrow(vals).dictionary_encode()
-                uniques = strings.from_arrow(
-                    de.dictionary.combine_chunks()
-                    if isinstance(de.dictionary, pa.ChunkedArray)
-                    else de.dictionary)
-                codes = np.asarray(de.indices).astype(np.int64)
+        opened = _open(blk, "approx distinct")
+        _p, validity, _m, tag, *_ = opened
+        if tag == "bytes":  # hash each distinct string once
+            uniques, codes, _v = _coded(opened)
             h = hll.hash_bytes(uniques)[codes]
         else:
-            vals = blockmod.decode_values(payload, meta_b, n_valid, tag, codec)
-            h = hll.hash_fixed(np.asarray(vals))
-        full = np.zeros(n_rows, dtype=np.uint64)
-        if validity is None:
-            full[:] = h
-            return full, np.ones(n_rows, dtype=bool)
-        vmask = validity.astype(bool)
-        full[vmask] = h
-        return full, vmask
+            h = hll.hash_fixed(np.asarray(_dense(opened)))
+        return (_full(h, validity),
+                np.ones(n_rows, bool) if validity is None else validity)
 
     def per_group(g, acc):
         uniq, g1, cnt, keep = _grouping(g)
@@ -1566,41 +1529,23 @@ def grouped_distinct_approx(spark: SparkSession, blocks_path: str,
             names=["value", "regs", "cnt"])
 
     partials = _scan(blocks, predicates, out_schema, per_group)
+    fold_schema = T.StructType([
+        T.StructField("value", gt, True),
+        T.StructField("approx_distinct", T.LongType(), True),
+        T.StructField("cnt", T.LongType(), True),
+    ])
 
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType
+    def fold_group(pdf):
+        import pandas as pd
 
-    # explicit UDF kinds: `from __future__ import annotations` turns the
-    # type hints into strings, which Spark's hint inference rejects
-    @F.pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def _merge_regs(regs_series: pd.Series) -> bytes:
-        acc = hll.empty_registers(p)
-        for blob in regs_series:
-            r = np.frombuffer(blob, dtype=np.uint8)
-            if len(r) != m:
-                raise ValueError("HLL register width mismatch in partial")
-            np.maximum(acc, r, out=acc)
-        return acc.tobytes()
+        regs = hll.empty_registers(p)
+        for blob in pdf["regs"]:
+            _max_into(regs, blob)
+        return pd.DataFrame({"value": [pdf["value"].iloc[0]],
+                             "approx_distinct": [_hll_estimate(regs)],
+                             "cnt": [int(pdf["cnt"].sum())]})
 
-    @F.pandas_udf("long", PandasUDFType.SCALAR)
-    def _estimate(regs_series: pd.Series) -> pd.Series:
-        out = []
-        for blob in regs_series:
-            r = np.frombuffer(blob, dtype=np.uint8)
-            out.append(int(round(hll.estimate(r))) if r.any() else 0)
-        return pd.Series(out, dtype="int64")
-
-    # grouped-agg pandas UDFs cannot mix with JVM aggregates in one
-    # agg, so the row count folds through a pandas sum as well
-    @F.pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def _sum_cnt(cnt_series: pd.Series) -> int:
-        return int(cnt_series.sum())
-
-    folded = partials.groupBy("value").agg(
-        _merge_regs(F.col("regs")).alias("regs"),
-        _sum_cnt(F.col("cnt")).alias("cnt"))
-    return folded.select(
-        "value", _estimate(F.col("regs")).alias("approx_distinct"), "cnt")
+    return partials.groupBy("value").applyInPandas(fold_group, fold_schema)
 
 
 def grouped_quantiles(spark: SparkSession, blocks_path: str,
@@ -1645,19 +1590,15 @@ def grouped_quantiles(spark: SparkSession, blocks_path: str,
         smry_by = {gid: qk.summarize(sv, None, k) for gid, sv in
                    _segments(g1[idx], vfull[idx].astype(np.float64))}
         kept = np.nonzero(keep)[0]
-        vs_arr, ws_arr, nulls_arr = [], [], []
-        for gid, c in zip(kept, cnt[keep]):
-            sm = smry_by.get(int(gid))
-            vs_arr.append([] if sm is None else sm[0].tolist())
-            ws_arr.append([] if sm is None else sm[1].tolist())
-            nulls_arr.append(int(c) - (0 if sm is None
-                                       else int(round(sm[1].sum()))))
+        none = (np.empty(0), np.empty(0))  # a group without a valid value
+        sms = [smry_by.get(int(gid), none) for gid in kept]
         return pa.RecordBatch.from_arrays(
             [_keys_at(uniq, out_t, kept),
-             pa.array(vs_arr, pa.list_(pa.float64())),
-             pa.array(ws_arr, pa.list_(pa.float64())),
+             pa.array([v.tolist() for v, _w in sms], pa.list_(pa.float64())),
+             pa.array([w.tolist() for _v, w in sms], pa.list_(pa.float64())),
              pa.array(cnt[keep].astype(np.int64), pa.int64()),
-             pa.array(nulls_arr, pa.int64())],
+             pa.array([int(c) - int(round(w.sum()))
+                       for c, (_v, w) in zip(cnt[keep], sms)], pa.int64())],
             names=["value", "vs", "ws", "rows", "nulls"])
 
     partials = _scan(blocks, predicates, out_schema, per_group)
@@ -1695,35 +1636,26 @@ def _value_ranks(blk: bytes, sel: np.ndarray, what: str):
     """Order-based grouped reductions (grouped_minmax, grouped_topk):
     the value ranks of one block's valid rows under ``sel`` -> (ranks,
     rows_mask, base, rank_to_idx) with ``ranks`` aligned to the rows
-    ``rows_mask`` marks.  Byte values rank through the dictionary —
-    sorted dict blocks hand the code stream over AS the rank; other
-    codecs rank each block distinct once via sort_indices — so strings
-    never compare row-by-row.  ``base``/``rank_to_idx`` map a rank back
-    to its value (``base.take(rank_to_idx[rank])``); numeric values rank
-    as themselves (base=None)."""
-    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
-    _check_tag(tag, what)
-    n_valid = int(validity.sum()) if validity is not None else n_rows
+    ``rows_mask`` marks.  Byte values rank through the block's coded
+    view (``_coded``): each block distinct ranks once via sort_indices
+    and the code stream maps rows to ranks, so strings never compare
+    row-by-row.  ``base``/``rank_to_idx`` map a rank back to its value
+    (``base.take(rank_to_idx[rank])``); numeric values rank as
+    themselves (base=None)."""
+    opened = _open(blk, what)
+    _p, validity, _m, tag, *_ = opened
     base = rank_to_idx = None
     if tag != "bytes":
-        ranks = np.asarray(blockmod.decode_values(payload, meta, n_valid,
-                                                  tag, codec))
-    elif codec == "dict":
-        uv, vcodes = dictionary.decode_parts(payload, meta, n_valid, tag)
-        ranks, base = vcodes.astype(np.int64), strings.to_arrow(uv)
-        rank_to_idx = np.arange(len(uv), dtype=np.int64)
+        ranks = np.asarray(_dense(opened))
     else:
-        vals = blockmod.decode_values(payload, meta, n_valid, tag, codec)
-        de = strings.to_arrow(vals).dictionary_encode()
-        base = de.dictionary
+        uniques, codes, _v = _coded(opened)
+        base = strings.to_arrow(uniques)
         rank_to_idx = np.asarray(pc.sort_indices(base)).astype(np.int64)
         rank_of = np.empty(len(base), np.int64)
         rank_of[rank_to_idx] = np.arange(len(base))
-        ranks = rank_of[np.asarray(de.indices).astype(np.int64)]
-    if validity is None:
-        return ranks[sel], sel, base, rank_to_idx
-    w = validity & sel
-    return ranks[(np.cumsum(validity) - 1)[w]], w, base, rank_to_idx
+        ranks = rank_of[codes]
+    w = sel if validity is None else validity & sel
+    return _full(ranks, validity)[w], w, base, rank_to_idx
 
 
 def _ranked_arr(reduced, got, base, rank_to_idx, out_t):
@@ -1787,15 +1719,7 @@ def grouped_minmax(spark: SparkSession, blocks_path: str,
                                                     "grouped min/max")
             gw = g1[w]
         nb = len(cnt)
-        if rv.dtype.kind == "f":
-            mins, maxs = np.full(nb, np.inf), np.full(nb, -np.inf)
-        else:
-            rv = rv.astype(np.int64)
-            ii = np.iinfo(np.int64)
-            mins = np.full(nb, ii.max, dtype=np.int64)
-            maxs = np.full(nb, ii.min, dtype=np.int64)
-        np.minimum.at(mins, gw, rv)
-        np.maximum.at(maxs, gw, rv)
+        mins, maxs = _extremes(rv, gw, nb)
         got = np.bincount(gw, minlength=nb)[keep] > 0
         return pa.RecordBatch.from_arrays(
             [_keys_at(uniq, out_tg, np.nonzero(keep)[0]),
@@ -1848,88 +1772,12 @@ def grouped_aggs(spark: SparkSession, blocks_path: str, manifest_path: str,
             raise NotImplementedError(
                 f"grouped_aggs over decimal column {v!r} is not supported; "
                 "use grouped_sum (exact decimal partials) per column")
-    ng = len(gcols)
-    out_ts = [_arrow_type(spark, fields[c]) for c in gcols]
-    v_out_ts = [_arrow_type(spark, fields[v]) for v in vcols]
-    vfields = []
-    for j, v in enumerate(vcols):
-        vfields += [T.StructField(f"__nv_{j}", T.LongType(), False),
-                    T.StructField(f"__sl_{j}", T.LongType(), False),
-                    T.StructField(f"__sd_{j}", T.DoubleType(), False),
-                    T.StructField(f"__if_{j}", T.BooleanType(), False)]
-        if minmax:
-            vfields += [T.StructField(f"__mn_{j}", fields[v], True),
-                        T.StructField(f"__mx_{j}", fields[v], True)]
-    out_schema = T.StructType(
-        [T.StructField(c, fields[c], True) for c in gcols]
-        + [T.StructField("__cnt", T.LongType(), False)] + vfields)
-
-    def per_group(g, acc):
-        keys = [_group_keys(cell, g.n_rows) for cell in g.cells[:ng]]
-        dims = [(len(u) if u is not None else 0) + 1 for u, _ in keys]
-        radix = 1
-        for dd in dims:  # python ints: no wraparound in the check
-            radix *= dd
-        if radix >= 1 << 63:
-            raise ValueError(
-                "composite group code would overflow int64: "
-                f"per-block dictionary sizes {dims} multiply to "
-                f"{radix}; group by fewer/lower-cardinality "
-                "columns or use smaller blocks")
-        comp = keys[0][1].astype(np.int64).copy()
-        for dd, (_u, g1) in zip(dims[1:], keys[1:]):
-            comp *= dd
-            comp += g1
-        sel = g.sel
-        sel_idx = np.nonzero(sel)[0]
-        if not len(sel_idx):
-            return None
-        ukeys, inv = np.unique(comp[sel_idx], return_inverse=True)
-        nk = len(ukeys)
-        cnt = np.bincount(inv, minlength=nk)
-        vout = []
-        for cell, out_tv in zip(g.cells[ng:], v_out_ts):
-            vfull, vmask = _dense_full(cell, g.n_rows)
-            wv_idx = np.nonzero(vmask & sel)[0]
-            pos = np.searchsorted(ukeys, comp[wv_idx])
-            nv = np.bincount(pos, minlength=nk)
-            vv = vfull[wv_idx]
-            is_f = vfull.dtype.kind == "f"
-            s_l = np.zeros(nk, dtype=np.int64)
-            s_d = np.zeros(nk, dtype=np.float64)
-            if is_f:
-                s_d = np.bincount(pos, weights=vv, minlength=nk)
-            else:
-                vv = vv.astype(np.int64)
-                np.add.at(s_l, pos, vv)
-            vout += [pa.array(nv.astype(np.int64), pa.int64()),
-                     pa.array(s_l, pa.int64()), pa.array(s_d, pa.float64()),
-                     pa.array(np.full(nk, is_f), pa.bool_())]
-            if minmax:
-                if is_f:
-                    mins, maxs = np.full(nk, np.inf), np.full(nk, -np.inf)
-                else:
-                    ii = np.iinfo(np.int64)
-                    mins = np.full(nk, ii.max, np.int64)
-                    maxs = np.full(nk, ii.min, np.int64)
-                np.minimum.at(mins, pos, vv)
-                np.maximum.at(maxs, pos, vv)
-                vout += [_ranked_arr(mins, nv > 0, None, None, out_tv),
-                         _ranked_arr(maxs, nv > 0, None, None, out_tv)]
-        # decompose composite keys -> per-dimension group labels
-        rem = ukeys.copy()
-        labels = []
-        for dd in reversed(dims[1:]):
-            labels.append(rem % dd)
-            rem //= dd
-        labels.append(rem)
-        arrs = [_keys_at(u, out_t, lab) for (u, _g1), out_t, lab
-                in zip(keys, out_ts, reversed(labels))]
-        return pa.RecordBatch.from_arrays(
-            arrs + [pa.array(cnt.astype(np.int64), pa.int64())] + vout,
-            names=out_schema.names)
-
-    partials = _scan(blocks, predicates, out_schema, per_group)
+    partials = _grouped_partials(
+        blocks, predicates, [fields[c] for c in gcols],
+        [_arrow_type(spark, fields[c]) for c in gcols], [False] * len(vcols),
+        [(fields[v], _arrow_type(spark, fields[v])) for v in vcols]
+        if minmax else None)
+    gkeys = [f"__g_{i}" for i in range(len(gcols))]
     folds = [F.sum("__cnt").alias("__cnt")]
     for j in range(len(vcols)):
         folds += [F.sum(f"__nv_{j}").alias(f"__nv_{j}"),
@@ -1939,8 +1787,8 @@ def grouped_aggs(spark: SparkSession, blocks_path: str, manifest_path: str,
         if minmax:
             folds += [F.min(f"__mn_{j}").alias(f"__mn_{j}"),
                       F.max(f"__mx_{j}").alias(f"__mx_{j}")]
-    agg = partials.groupBy(*gcols).agg(*folds)
-    outs = list(gcols)
+    agg = partials.groupBy(*gkeys).agg(*folds)
+    outs = [F.col(k).alias(c) for k, c in zip(gkeys, gcols)]
     for j, v in enumerate(vcols):
         s = (F.when(F.col(f"__nv_{j}") == 0, F.lit(None).cast("double"))
              .when(F.col(f"__if_{j}"), F.col(f"__sd_{j}") + F.col(f"__sl_{j}"))

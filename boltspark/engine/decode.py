@@ -373,9 +373,10 @@ def _blocks_proj(spark, blocks_path: str, manifest_path: str,
     valid = manifestmod.valid_pairs_df(spark, manifest_path,
                                        part_ids=part_ids, run_ids=run_ids)
     if part_ids is not None:
-        blocks = blocks.filter(F.col(PART_ID).isin([int(p) for p in part_ids]))
+        blocks = blocks.filter(
+            manifestmod._isin(PART_ID, [int(p) for p in part_ids]))
     if run_ids is not None:
-        blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
+        blocks = blocks.filter(manifestmod._isin("run_id", run_ids))
     if seq_range is not None:
         blocks = blocks.filter((F.col("seq") >= int(seq_range[0]))
                                & (F.col("seq") <= int(seq_range[1])))
@@ -595,7 +596,7 @@ def decode_table(
                  .select(PART_ID, "run_id", "seq", "n_rows"))
         if part_ids is not None:
             gmeta = gmeta.filter(
-                F.col(PART_ID).isin([int(p) for p in part_ids]))
+                manifestmod._isin(PART_ID, [int(p) for p in part_ids]))
         gmeta = manifestmod.join_valid(gmeta, valid0)
         per_part = _part_totals(pair_rows)
         if per_part is None:
@@ -612,7 +613,7 @@ def decode_table(
         seqs_hit = []
         if overlap:
             groups = gmeta.filter(
-                F.col(PART_ID).isin(list(overlap))).collect()
+                manifestmod._isin(PART_ID, overlap)).collect()
             # append order across runs: manifest commit order (run_seq),
             # falling back to lexicographic run_id for pre-round-4 runs
             order = manifestmod.run_order(spark, manifest_path)

@@ -218,7 +218,7 @@ def explain_scan(spark: SparkSession, blocks_path: str, manifest_path: str,
     blocks = (schema_read_blocks(spark, blocks_path, meta["columns"])
               .select(*proj))
     if run_ids is not None:
-        blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
+        blocks = blocks.filter(manifestmod._isin("run_id", run_ids))
     blocks = manifestmod.join_valid(
         blocks, manifestmod.valid_pairs_df(spark, manifest_path,
                                            run_ids=run_ids))

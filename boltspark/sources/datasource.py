@@ -256,10 +256,9 @@ def load(spark, blocks_path: str, manifest_path: str,
          columns: list[str] | None = None):
     """Fresh boltspark relation (registers the source if needed).  Build
     one per query shape — see the sharp-edge note in the module doc."""
-    try:
-        spark.dataSource.register(BoltDataSource)
-    except Exception:
-        pass  # already registered
+    # re-registering the same source is a no-op that returns normally,
+    # so any error here is a real failure
+    spark.dataSource.register(BoltDataSource)
     # runtime SQL conf: required for pushFilters to be honored
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     r = spark.read.format("boltspark").option("manifest", manifest_path)

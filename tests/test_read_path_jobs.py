@@ -78,6 +78,11 @@ def _answers(spark, b, m):
         "column_topk": rows(agg.column_topk(spark, b, m, "k", 5)),
         "row_range": rows(decode_table(spark, b, m, columns=["k"],
                                        row_range=(95, 260))),
+        "decode_runs": rows(decode_table(spark, b, m, columns=["k"],
+                                         run_ids=[QUOTED, "run2"])),
+        "row_range_run": rows(decode_table(spark, b, m, columns=["k"],
+                                           run_ids=[QUOTED],
+                                           row_range=(95, 260))),
     }
 
 
@@ -265,6 +270,36 @@ def test_exists_fails_closed_on_a_corrupt_manifest(spark, tmp_path,
     with pytest.raises(Exception):
         encode_table(_src(spark, 0, 40), str(tmp_path / "b"), str(bad),
                      key_cols=("k",), n_parts=2, resume=True)
+
+
+class _RefusingReader:
+    """A session's ``read`` stand-in: records each parquet read and
+    refuses it."""
+
+    def __init__(self):
+        self.paths = []
+
+    def parquet(self, path):
+        self.paths.append(path)
+        raise RuntimeError("spark read")
+
+
+def test_exists_answers_an_absent_local_path_without_spark(tmp_path,
+                                                          monkeypatch):
+    """A provably local path that does not exist is absent without a
+    Spark read (a fresh table's ``run_exists`` and ``commit``); a path
+    that may not be local still asks Spark, which fails closed."""
+    absent = tmp_path / "fresh" / "m"
+    session = type("Session", (), {})()
+    session.read = _RefusingReader()
+    assert not manifestmod._exists(session, f"file://{absent}")
+    monkeypatch.setattr(manifestmod, "_default_fs_is_local", lambda s: True)
+    assert not manifestmod._exists(session, str(absent))
+    assert session.read.paths == []
+    monkeypatch.setattr(manifestmod, "_default_fs_is_local", lambda s: False)
+    with pytest.raises(RuntimeError, match="spark read"):
+        manifestmod._exists(session, str(absent))
+    assert session.read.paths == [str(absent)]
 
 
 def test_resume_reads_the_done_partitions_on_the_driver(spark, tmp_path,

@@ -138,6 +138,29 @@ def test_boltspark_datasource_reads_blocks(spark, tmp_path):
     assert top["n"] > 0
 
 
+def test_datasource_load_registers_on_every_call(spark, tmp_path,
+                                                monkeypatch):
+    """``load`` registers the source each call: registering it again in
+    the same session is a no-op, and a failing registration raises."""
+    import pytest
+
+    from boltspark.sources import datasource as ds
+
+    d = str(tmp_path)
+    encode_table(spark.range(50).select(F.col("id").alias("k")),
+                 f"{d}/b", f"{d}/m", key_cols=("k",), n_parts=2,
+                 resume=False)
+    assert ds.load(spark, f"{d}/b", f"{d}/m").count() == 50
+    assert ds.load(spark, f"{d}/b", f"{d}/m").count() == 50
+
+    def refuse(self, source):
+        raise RuntimeError("register failed")
+
+    monkeypatch.setattr(type(spark.dataSource), "register", refuse)
+    with pytest.raises(RuntimeError, match="register failed"):
+        ds.load(spark, f"{d}/b", f"{d}/m")
+
+
 def test_boltspark_datasource_schema_evolution(spark, tmp_path):
     from pyspark.sql import functions as F
 
