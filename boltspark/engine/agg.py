@@ -22,13 +22,15 @@ into Python, zone maps answer all/none without opening the block, and
 groups where only SOME rows survive reduce over a late-materialized
 selective decode (only surviving rows are ever decoded).
 
-Every operator runs on one scaffold: ``_plan`` resolves its predicates
-and projects the block leaves it needs through decode's resolver and
-planner (``decode.resolve_predicates``/``decode._blocks_proj``, the
-ones ``decode_table`` uses), and ``_scan`` runs the per-task loop
-(predicate cascade, schema-evolution NULLs, the block-bytes crossing
-into Python, ``trimmed``).  An operator supplies only a per-group
-reducer plus, for per-partition accumulators, a stream-end flush.
+Every operator runs on decode's scaffold: ``_plan`` resolves its
+predicates and projects the block leaves it needs through decode's
+resolver and planner (``decode.resolve_predicates``/
+``decode._blocks_proj``), and ``decode._scan`` runs, under
+``trimmed``, the task loop ``decode_table`` runs too
+(``decode._groups``: predicate cascade, schema-evolution NULLs, the
+block-bytes crossing into Python).  An operator supplies only a
+per-group reducer plus, for per-partition accumulators, a stream-end
+flush.
 
 Reducers read blocks through two views, the only codec dispatch here:
 ``_view`` (values with multiplicities, for single-column reductions)
@@ -55,9 +57,9 @@ from pyspark.sql import types as T
 from ..kernels import block as blockmod
 from ..kernels import dictionary, lists, strings
 from . import manifest as manifestmod
-from .decode import (_block_at, _blocks_proj, arrow_out_type, decode_table,
-                     resolve_mask, resolve_predicates)
-from .filters import Predicate, pred_columns
+from .decode import (_Group, _blocks_proj, _scan, arrow_out_type,
+                     decode_table, resolve_predicates)
+from .filters import Predicate
 from .memutil import trimmed
 from .schema import PART_ID
 
@@ -220,79 +222,6 @@ def _plan(spark: SparkSession, blocks_path: str, manifest_path: str,
     return (_blocks_proj(spark, blocks_path, manifest_path, columns,
                          predicates, run_ids=run_ids, meta=meta),
             predicates, meta)
-
-
-class _Group:
-    """One block group that survived the predicate cascade, as ``_scan``
-    hands it to a reducer.  ``cells`` holds the block bytes of each
-    ``_blocks_proj`` column in order — None where the group predates the
-    column (schema evolution), so every one of its rows reads as NULL.
-    ``mask`` is 'all' or the full-length bool mask of surviving rows."""
-
-    __slots__ = ("pid", "n_rows", "mask", "cells")
-
-    def __init__(self, pid: int, n_rows: int, mask, cells: list):
-        self.pid, self.n_rows, self.mask, self.cells = pid, n_rows, mask, cells
-
-    @property
-    def n_sel(self) -> int:
-        """Surviving row count."""
-        return (self.n_rows if isinstance(self.mask, str)
-                else int(self.mask.sum()))
-
-    @property
-    def sel(self) -> np.ndarray:
-        """Full-length bool mask of the surviving rows."""
-        return (np.ones(self.n_rows, dtype=bool)
-                if isinstance(self.mask, str) else self.mask)
-
-
-def _scan(blocks: DataFrame, predicates: list[Predicate], out_schema,
-          per_group, flush=None) -> DataFrame:
-    """The one task loop behind every compressed-domain aggregate.
-
-    For each block group of a ``_blocks_proj`` frame: resolve the
-    predicate cascade, skip groups it proves empty, cross the surviving
-    group's block bytes into Python once (NULL-column cells become
-    None) and call ``per_group(group, acc)``.  A reducer either returns
-    a partial RecordBatch for that group (or None), or folds into
-    ``acc`` — a per-task dict — which ``flush(acc)`` turns into the
-    task's partial batch at stream end.  ``out_schema`` is a Spark
-    schema, or a pyarrow schema for fixed-width partial lanes.  The
-    generator runs ``trimmed``, so reused workers release task memory."""
-    if isinstance(out_schema, pa.Schema):
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        out_schema = from_arrow_schema(out_schema)
-    pcols = pred_columns(predicates)
-
-    def scan_task(batches):
-        acc: dict = {}
-        for batch in batches:
-            names = batch.schema.names
-            cells = [batch.column(j) for j, n in enumerate(names)
-                     if n.startswith("__blk_")]
-            pids = batch.column(names.index(PART_ID)).to_pylist()
-            grows = batch.column(names.index("n_rows")).to_pylist()
-            blk_cols = {c: batch.column(_block_at(names, c))
-                        for c in pcols}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in pcols}
-            for i in range(batch.num_rows):
-                mask = resolve_mask(predicates, blk_cols, st_cols, i)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                out = per_group(_Group(
-                    pids[i], grows[i], mask,
-                    [c[i].as_py() if c[i].is_valid else None
-                     for c in cells]), acc)
-                if out is not None:
-                    yield out
-        out = flush(acc) if flush is not None else None
-        if out is not None:
-            yield out
-
-    return blocks.mapInArrow(trimmed(scan_task), out_schema)
 
 
 # ---------------------------------------------------------------- sums
@@ -1243,14 +1172,23 @@ def _grouped_blocks(spark, blocks_path, manifest_path, group_column,
 
 def _extremes(vals: np.ndarray, labels: np.ndarray, nb: int):
     """Per-label (mins, maxs) of ``vals`` over ``nb`` labels; a label
-    without a value keeps the +/- extreme (mask it by label count)."""
+    without a value keeps the +/- extreme (mask it by label count).
+    Floats follow Spark's order, NaN above +inf: MIN skips NaN unless
+    every value of the label is NaN, MAX is NaN once the label holds
+    one."""
     if vals.dtype.kind == "f":
         mins, maxs = np.full(nb, np.inf), np.full(nb, -np.inf)
-    else:
-        vals = vals.astype(np.int64)
-        ii = np.iinfo(np.int64)
-        mins = np.full(nb, ii.max, dtype=np.int64)
-        maxs = np.full(nb, ii.min, dtype=np.int64)
+        np.fmin.at(mins, labels, vals)
+        np.fmax.at(maxs, labels, vals)
+        n_nan = np.bincount(labels, np.isnan(vals), nb)
+        only_nan = (n_nan > 0) & (n_nan == np.bincount(labels, minlength=nb))
+        mins[only_nan] = np.nan
+        maxs[n_nan > 0] = np.nan
+        return mins, maxs
+    vals = vals.astype(np.int64)
+    ii = np.iinfo(np.int64)
+    mins = np.full(nb, ii.max, dtype=np.int64)
+    maxs = np.full(nb, ii.min, dtype=np.int64)
     np.minimum.at(mins, labels, vals)
     np.maximum.at(maxs, labels, vals)
     return mins, maxs

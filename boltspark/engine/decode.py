@@ -23,6 +23,13 @@ blocks layout (schema.py) lets parquet itself do the pruning work:
 * no shuffle, ever — each blocks row is a self-contained block group,
   so decode is embarrassingly parallel over scan splits and peak memory
   is one block group per task.
+
+Every block reader walks those rows through one task loop,
+``_groups`` (the row_range window, the predicate cascade, the block
+bytes crossing into Python once per surviving group): ``_scan`` maps
+it over the planned frame for ``decode_table`` (with ``_make_decoder``
+as the per-group step) and every aggregate in agg.py (with their
+reducers), and the DSv2 source walks it per blocks file.
 """
 
 from __future__ import annotations
@@ -332,7 +339,7 @@ def _blocks_proj(spark, blocks_path: str, manifest_path: str,
     of ``columns`` in order as ``__blk_<col>`` (the output cells); the
     ``block`` leaf of each (resolved) predicate column NOT among them as
     ``__pblk_<col>`` — so a column that is both crosses into Python
-    once (``_block_at`` finds either); and each predicate column's
+    once (``_groups`` finds either); and each predicate column's
     ``stats`` leaf as ``__st_<col>``.  Only these leaves are in the
     parquet ReadSchema.
 
@@ -405,69 +412,145 @@ def _part_totals(pair_rows) -> list[tuple[int, int]] | None:
     return sorted(totals.items())
 
 
-def _block_at(names: list[str], c: str) -> int:
-    """Index of column ``c``'s block in a ``_blocks_proj`` batch: its
-    output cell, else its predicate-only block."""
-    return (names.index(f"__blk_{c}") if f"__blk_{c}" in names
-            else names.index(f"__pblk_{c}"))
+class _Group:
+    """One block group that survived the predicate cascade, as
+    ``_groups`` yields it.  ``cells`` holds the block bytes of each
+    ``__blk_`` column in order — None where the group predates the
+    column (schema evolution), so every one of its rows reads as NULL.
+    ``mask`` is 'all' or the full-length bool mask of surviving rows."""
+
+    __slots__ = ("pid", "n_rows", "mask", "cells")
+
+    def __init__(self, pid: int, n_rows: int, mask, cells: list):
+        self.pid, self.n_rows, self.mask, self.cells = pid, n_rows, mask, cells
+
+    @property
+    def n_sel(self) -> int:
+        """Surviving row count."""
+        return (self.n_rows if isinstance(self.mask, str)
+                else int(self.mask.sum()))
+
+    @property
+    def sel(self) -> np.ndarray:
+        """Full-length bool mask of the surviving rows."""
+        return (np.ones(self.n_rows, dtype=bool)
+                if isinstance(self.mask, str) else self.mask)
 
 
-def _make_decoder(meta: dict, fields: list, predicates: list[Predicate],
-                  tz: str, include_part_id: bool = False,
-                  row_window: tuple[int, int, dict] | None = None):
-    """Row-independent decoder of ``_blocks_proj``-shaped batches: every
-    input row is one complete block group (all columns), so there is no
-    regrouping state at all.  Emits the logical ``fields`` (nested
-    columns assembled in the task, ``nest.assemble``).
+def _groups(batches, predicates: list[Predicate],
+            row_window: tuple[int, int, dict] | None = None):
+    """The one task loop of every block reader: ``_blocks_proj``-layout
+    batches -> the ``_Group`` of each block group that may hold a
+    surviving row.  Every input row is one complete block group (all
+    columns), so there is no regrouping state.
 
     ``row_window`` = (start, end, {(part_id, run_id, seq) -> global row
-    offset of the group}) implements the positional slice
-    (the reference positions INSIDE a row group after skipping whole
-    ones, row_group_reader.rs:188-198): boundary groups decode only the
-    overlapping rows via the same late-materialization gather predicates
-    use."""
+    offset of the group}) is ``row_range``'s positional slice (the
+    reference positions INSIDE a row group after skipping whole ones,
+    row_group_reader.rs:188-198): groups outside it are skipped and a
+    boundary group starts the cascade from the mask of its overlapping
+    rows.  The cascade (``resolve_mask``) then skips groups it proves
+    empty, and a surviving group's cells cross into Python once."""
+    pcols = pred_columns(predicates)
+    for batch in batches:
+        names = batch.schema.names
+        cells = [batch.column(j) for j, n in enumerate(names)
+                 if n.startswith("__blk_")]
+        pids = batch.column(PART_ID).to_pylist()
+        grows = batch.column("n_rows").to_pylist()
+        # a predicate column's block: its output cell, else its own
+        blk_cols = {c: batch.column(names.index(
+            f"__blk_{c}" if f"__blk_{c}" in names else f"__pblk_{c}"))
+            for c in pcols}
+        st_cols = {c: batch.column(f"__st_{c}") for c in pcols}
+        if row_window is not None:
+            start, end, offsets = row_window
+            keys = list(zip(pids, batch.column("run_id").to_pylist(),
+                            batch.column("seq").to_pylist()))
+        for i in range(batch.num_rows):
+            n_rows, mask = grows[i], None
+            if row_window is not None:
+                goff = offsets.get(keys[i])
+                if goff is None:
+                    continue  # group outside the slice (orphan/pruned)
+                lo, hi = max(start - goff, 0), min(end - goff, n_rows)
+                if hi <= lo:
+                    continue
+                if lo > 0 or hi < n_rows:  # boundary group: partial rows
+                    mask = np.zeros(n_rows, dtype=bool)
+                    mask[lo:hi] = True
+            mask = resolve_mask(predicates, blk_cols, st_cols, i, mask)
+            if isinstance(mask, str) and mask == "none":
+                continue
+            yield _Group(pids[i], n_rows, mask,
+                         [c[i].as_py() if c[i].is_valid else None
+                          for c in cells])
+
+
+def _scan(blocks, predicates: list[Predicate], out_schema, per_group,
+          flush=None, row_window=None):
+    """``mapInArrow`` of ``_groups`` over a ``_blocks_proj`` frame: the
+    one Spark task of ``decode_table`` and every compressed-domain
+    aggregate.  ``per_group(group, acc)`` either returns a RecordBatch
+    for that group (or None), or folds into ``acc`` — a per-task dict —
+    which ``flush(acc)`` turns into the task's batch at stream end.
+    ``out_schema`` is a Spark schema, or a pyarrow schema for
+    fixed-width partial lanes.  The task runs ``trimmed``, so reused
+    workers release task memory."""
+    if isinstance(out_schema, pa.Schema):
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        out_schema = from_arrow_schema(out_schema)
+
+    def scan_task(batches):
+        acc: dict = {}
+        for g in _groups(batches, predicates, row_window):
+            out = per_group(g, acc)
+            if out is not None:
+                yield out
+        out = flush(acc) if flush is not None else None
+        if out is not None:
+            yield out
+
+    return blocks.mapInArrow(trimmed(scan_task), out_schema)
+
+
+def _make_decoder(meta: dict, fields: list, tz: str,
+                  include_part_id: bool = False):
+    """The per-group decoder of ``decode_table`` and the DSv2 reader:
+    one surviving ``_Group`` whose cells are the leaves of ``fields``
+    -> a RecordBatch of the logical ``fields`` (nested columns
+    assembled in the task, ``nest.assemble``), plus ``part_id`` when
+    ``include_part_id``."""
     flat = {f.name: f.dataType
             for f in T.StructType.fromJson(json.loads(meta["schema_json"])).fields}
     leaves = leaf_columns(fields)
-    leaf_types = {c: arrow_out_type(flat[c], tz) for c in leaves}
+    leaf_types = [arrow_out_type(flat[c], tz) for c in leaves]
     out_types = [arrow_out_type(f.dataType, tz) for f in fields]
     out_fields = [pa.field(f.name, t, True) for f, t in zip(fields, out_types)]
     if include_part_id:
         out_fields.append(pa.field(PART_ID, pa.int64(), False))
     out_schema = pa.schema(out_fields)
-    pcols = pred_columns(predicates)
 
-    def decode_row(blk_cols, st_cols, i: int, part_id: int, n_rows: int,
-                   base_mask: np.ndarray | None = None):
-        mask = resolve_mask(predicates, blk_cols, st_cols, i, base_mask)
-        if isinstance(mask, str):
-            if mask == "none":
-                return None
-            mask = None
+    def decode_group(g: _Group, acc=None):
+        mask = None if isinstance(g.mask, str) else g.mask
+        n_out = g.n_sel
         # late materialization: when few rows survive the cascade, decode
         # only those rows of each output column (fsst random access, dict
         # code gather, byte-slice gather) instead of decode-all + filter
-        late = mask is not None and int(mask.sum()) * 4 < len(mask)
-        n_out = int(mask.sum()) if mask is not None else n_rows
-        if n_out == 0:
-            return None
+        late = mask is not None and n_out * 4 < g.n_rows
         decoded = {}
-        for name in leaves:
-            target = leaf_types[name]
-            blk_scalar = blk_cols[name][i]
-            if not blk_scalar.is_valid:
+        for name, target, blk in zip(leaves, leaf_types, g.cells):
+            if blk is None:
                 # schema evolution: rows from runs that predate this
                 # column read back as nulls
                 arr = pa.nulls(n_out, target)
-            elif late:
-                values, validity, tag, codec, _ = blockmod.decode_block_rows(
-                    blk_scalar.as_py(), mask)
-                arr = _to_arrow_full(values, validity, tag, target)
             else:
-                values, validity, tag, codec, _ = blockmod.decode_block(
-                    blk_scalar.as_py())
+                values, validity, tag, _c, _n = (
+                    blockmod.decode_block_rows(blk, mask) if late
+                    else blockmod.decode_block(blk))
                 arr = _to_arrow_full(values, validity, tag, target)
-                if mask is not None:
+                if mask is not None and not late:
                     arr = arr.filter(pa.array(mask))
             if not arr.type.equals(target):
                 arr = arr.cast(target)
@@ -475,44 +558,10 @@ def _make_decoder(meta: dict, fields: list, predicates: list[Predicate],
         arrays = [nest.assemble(f.name, f.dataType, f.nullable, t, decoded)
                   for f, t in zip(fields, out_types)]
         if include_part_id:
-            arrays.append(pa.array(np.full(n_out, part_id, np.int64)))
+            arrays.append(pa.array(np.full(n_out, g.pid, np.int64)))
         return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
-    def decode_stream(batches):
-        for batch in batches:
-            names = batch.schema.names
-            part_arr = batch.column(names.index(PART_ID))
-            nrows_arr = batch.column(names.index("n_rows"))
-            blk_cols = {c: batch.column(_block_at(names, c))
-                        for c in dict.fromkeys(leaves + pcols)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in pcols}
-            if row_window is not None:
-                run_arr = batch.column(names.index("run_id"))
-                seq_arr = batch.column(names.index("seq"))
-            for i in range(batch.num_rows):
-                n_rows = nrows_arr[i].as_py()
-                base_mask = None
-                if row_window is not None:
-                    start, end, offsets = row_window
-                    goff = offsets.get((part_arr[i].as_py(),
-                                        run_arr[i].as_py(),
-                                        seq_arr[i].as_py()))
-                    if goff is None:
-                        continue  # group outside the slice (orphan/pruned)
-                    lo = max(start - goff, 0)
-                    hi = min(end - goff, n_rows)
-                    if hi <= lo:
-                        continue
-                    if lo > 0 or hi < n_rows:  # boundary group: partial rows
-                        base_mask = np.zeros(n_rows, dtype=bool)
-                        base_mask[lo:hi] = True
-                out = decode_row(blk_cols, st_cols, i, part_arr[i].as_py(),
-                                 n_rows, base_mask)
-                if out is not None:
-                    yield out
-
-    return decode_stream
+    return decode_group
 
 
 def decode_table(
@@ -527,7 +576,6 @@ def decode_table(
     run_ids: list[str] | None = None,
     seq_range: tuple[int, int] | None = None,
     row_range: tuple[int, int] | None = None,
-    shuffle: bool | None = None,  # retained for API compat; decode never shuffles
 ):
     """Reconstruct the encoded table (or a projected, filtered slice).
 
@@ -557,9 +605,8 @@ def decode_table(
     positions even though run ids themselves are random hex.
 
     The wide blocks layout makes every row a complete block group, so
-    decode needs NO shuffle (``shuffle`` is accepted and ignored for
-    back-compat); ``n_tasks`` optionally repartitions for parallelism
-    when the blocks dataset has too few scan splits.
+    decode needs NO shuffle; ``n_tasks`` optionally repartitions for
+    parallelism when the blocks dataset has too few scan splits.
     """
     from pyspark.sql import functions as F
 
@@ -645,7 +692,6 @@ def decode_table(
         [T.StructField(f.name, f.dataType, True) for f in fields]
         + ([T.StructField(PART_ID, T.LongType(), False)]
            if include_part_id else []))
-    return blocks.mapInArrow(
-        trimmed(_make_decoder(meta, fields, predicates, tz, include_part_id,
-                              row_window)),
-        out_schema)
+    return _scan(blocks, predicates, out_schema,
+                 _make_decoder(meta, fields, tz, include_part_id),
+                 row_window=row_window)

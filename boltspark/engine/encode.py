@@ -45,8 +45,8 @@ from .partitioner import (
     num_partitions,
     zorder_column,
 )
-from .schema import (PART_ID, blocks_arrow_schema, blocks_spark_schema,
-                     storage_cast, tag_for_arrow_type)
+from .schema import (PART_ID, _STATS_ARROW, blocks_arrow_schema,
+                     blocks_spark_schema, storage_cast, tag_for_arrow_type)
 
 log = logging.getLogger(__name__)
 
@@ -327,8 +327,6 @@ def _make_encoder(columns: list[str], run_id: str, block_bytes: int,
                     tot[2] += len(blk)
                     tot[3] += dt
                     tot[4] += 1
-                from .schema import _STATS_ARROW
-
                 col_structs.append(pa.StructArray.from_arrays(
                     [
                         pa.array([blk], pa.large_binary()),

@@ -255,6 +255,20 @@ def _widen_type(a, b):
     return None
 
 
+def _merge_field(fields: dict[str, dict], f: dict, what: str) -> None:
+    """Fold one run's field JSON ``f`` into ``fields`` (name -> field,
+    in first-seen order): a new name appends, a differing type widens
+    (``_widen_type``, keeping the wider run's field) or raises."""
+    c = f["name"]
+    old = fields.setdefault(c, f)
+    if old["type"] != f["type"]:
+        wide = _widen_type(old["type"], f["type"])
+        if wide is None:
+            raise ValueError(f"{what} {c!r} type conflict across runs: "
+                             f"{old['type']} vs {f['type']}")
+        fields[c] = dict(f if f["type"] == wide else old)
+
+
 def merge_metas(metas: list[dict]) -> dict:
     """Merge per-run table metas into one table view (schema evolution):
     columns = ordered union across runs (run order = sorted run ids for
@@ -270,52 +284,27 @@ def merge_metas(metas: list[dict]) -> dict:
     if len(n_parts) != 1:
         raise ValueError(f"manifest mixes partition counts {sorted(n_parts)}; "
                          "appended runs must reuse the table's n_parts")
-    columns: list[str] = []
     fields: dict[str, dict] = {}
     for m in metas:
-        schema = json.loads(m["schema_json"])
-        by_name = {f["name"]: f for f in schema["fields"]}
+        by_name = {f["name"]: f for f in json.loads(m["schema_json"])["fields"]}
         for c in m["columns"]:
-            f = by_name[c]
-            if c not in fields:
-                columns.append(c)
-                fields[c] = f
-            elif fields[c]["type"] != f["type"]:
-                wide = _widen_type(fields[c]["type"], f["type"])
-                if wide is None:
-                    raise ValueError(
-                        f"column {c!r} type conflict across runs: "
-                        f"{fields[c]['type']} vs {f['type']}")
-                fields[c] = dict(f if f["type"] == wide else fields[c])
+            _merge_field(fields, by_name[c], "column")
     # merge the logical (pre-flatten) schemas the same way; a run without
     # one contributes its storage schema (they coincide for flat tables)
-    lcolumns: list[str] = []
     lfields: dict[str, dict] = {}
-    any_logical = False
     for m in metas:
-        lj = m.get("logical_schema_json")
-        any_logical = any_logical or bool(lj)
-        lschema = json.loads(lj or m["schema_json"])
+        lschema = json.loads(m.get("logical_schema_json") or m["schema_json"])
         for f in lschema["fields"]:
-            c = f["name"]
-            if c not in lfields:
-                lcolumns.append(c)
-                lfields[c] = f
-            elif lfields[c]["type"] != f["type"]:
-                wide = _widen_type(lfields[c]["type"], f["type"])
-                if wide is None:
-                    raise ValueError(
-                        f"logical column {c!r} type conflict across runs: "
-                        f"{lfields[c]['type']} vs {f['type']}")
-                lfields[c] = dict(f if f["type"] == wide else lfields[c])
+            _merge_field(lfields, f, "logical column")
+    any_logical = any(m.get("logical_schema_json") for m in metas)
     return {
-        "columns": columns,
+        "columns": list(fields),
         "key_cols": metas[0]["key_cols"],
         "n_parts": n_parts.pop(),
         "schema_json": json.dumps(
-            {"type": "struct", "fields": [fields[c] for c in columns]}),
+            {"type": "struct", "fields": list(fields.values())}),
         "logical_schema_json": json.dumps(
-            {"type": "struct", "fields": [lfields[c] for c in lcolumns]}
+            {"type": "struct", "fields": list(lfields.values())}
         ) if any_logical else None,
     }
 

@@ -199,8 +199,6 @@ def encode_values(values, tag: str, codec: str,
 
 def decode_values(payload: bytes, meta: dict, n: int, tag: str, codec: str):
     _, dec = _CODECS[codec]
-    if codec in ("dict", "for", "fsst"):
-        return dec(payload, meta, n, tag)
     return dec(payload, meta, n, tag)
 
 

@@ -21,11 +21,12 @@ for Python, Spark 4.x):
 * column pruning via ``.option("columns", "a,b")`` (the Python DSv2
   API does not yet hand the pruned schema to the reader).
 
-Each file's block groups run through the decoder ``decode_table``
-uses (the same cascade, late materialization and nested-column
-assembly), and the manifest loads through the engine's driver-side
-reader (``manifest.read_local``); only the file listing, the pyarrow
-read and the valid-pair filter are this source's own.  The primary
+Each file's block groups run through the task loop and the decoder
+``decode_table`` uses (``decode._groups``, then ``_make_decoder``: the
+same cascade, late materialization and nested-column assembly), and
+the manifest loads through the engine's driver-side reader
+(``manifest.read_local``); only the file listing, the pyarrow read and
+the valid-pair filter are this source's own.  The primary
 engine path remains ``engine.decode_table``, whose pairs fall back to
 a Spark read for remote or large manifests; this source trades that
 for Spark-native ergonomics and is sized for manifests that fit the
@@ -49,7 +50,7 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader, EqualTo,
                                     LessThan, LessThanOrEqual, Not,
                                     StringContains,
                                     StringEndsWith, StringStartsWith)
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 
 def _to_predicate(f: Filter):
@@ -171,10 +172,10 @@ class BoltReader(DataSourceReader):
         yield from trimmed(self._read)(partition)
 
     def _read(self, partition):
-        """One blocks file -> logical batches, through the decoder
-        ``decode_table`` runs: this file's groups are renamed to the
-        ``_blocks_proj`` frame layout (``__blk_``/``__pblk_``/``__st_``)
-        and fed to it."""
+        """One blocks file -> logical batches, through the task loop
+        and the decoder ``decode_table`` runs: this file's groups are
+        renamed to the ``_blocks_proj`` frame layout (``__blk_``/
+        ``__pblk_``/``__st_``) and walked by ``decode._groups``."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -222,10 +223,10 @@ class BoltReader(DataSourceReader):
                              for c in pcols])
                 yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-        decoder = dec._make_decoder(self.meta, self.fields, self.predicates,
-                                    "UTC")
-        yield from decoder(renamed(pf.iter_batches(
-            batch_size=16, columns=group_cols + leaves)))
+        decode = dec._make_decoder(self.meta, self.fields, "UTC")
+        batches = renamed(pf.iter_batches(
+            batch_size=16, columns=group_cols + leaves))
+        yield from map(decode, dec._groups(batches, self.predicates))
 
 
 class BoltDataSource(DataSource):
@@ -245,7 +246,10 @@ class BoltDataSource(DataSource):
         if not manifest:
             raise ValueError("boltspark source requires .option('manifest', path)")
         meta, _ = manifestmod.read_local(manifest)
-        return StructType(output_fields(meta, self._columns()))
+        # nullable, as decode_table declares them: rows of runs that
+        # predate a column read it as NULL whatever its first run said
+        return StructType([StructField(f.name, f.dataType, True)
+                           for f in output_fields(meta, self._columns())])
 
     def reader(self, schema: StructType) -> BoltReader:
         return BoltReader(self.options["path"], self.options["manifest"],

@@ -275,16 +275,6 @@ def test_multi_predicate_cascade_matches_catalyst(spark, corpus_df, encoded):
     assert ours.exceptAll(theirs).count() + theirs.exceptAll(ours).count() == 0
 
 
-def test_noshuffle_decode_equals_shuffle(spark, corpus_df, encoded):
-    a = decode_table(spark, encoded.out_path, encoded.manifest_path)
-    b = decode_table(spark, encoded.out_path, encoded.manifest_path,
-                     shuffle=False)
-    assert a.count() == b.count() == N_ROWS
-    ah = a.select(F.sha2("content", 256).alias("h")).groupBy("h").count()
-    bh = b.select(F.sha2("content", 256).alias("h")).groupBy("h").count()
-    assert ah.exceptAll(bh).count() + bh.exceptAll(ah).count() == 0
-
-
 def test_array_column_roundtrip(spark, tmp_path):
     """array<float> embeddings ride the engine end to end bit-identical
     (the reference parses nested schema but refuses to read it —

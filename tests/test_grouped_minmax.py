@@ -173,3 +173,38 @@ def test_grouped_topk_filtered_and_all_null_group(spark, gmm_table):
         assert sorted(got[g]) == sorted(exp[g]), g
     # 'Z' group: val is always NULL there -> no rows for Z
     assert "Z" not in got or exp.get("Z")
+
+
+def test_grouped_minmax_nan_follows_spark_order(spark, tmp_path):
+    """Spark orders NaN above +inf: a group's MIN skips NaN unless every
+    value is NaN, its MAX is NaN once the group holds one.
+    grouped_minmax and grouped_aggs(minmax=True) give what Catalyst
+    gives over decode_table, for a mixed and an all-NaN group."""
+    import math
+
+    from boltspark.engine import decode_table
+    from boltspark.engine.agg import grouped_aggs
+
+    nan = float("nan")
+    vals = ([("mixed", v) for v in (1.0, nan, 3.0, -2.5, nan, None)]
+            + [("nan", v) for v in (nan, nan, None, nan)]
+            + [("plain", float(i)) for i in range(5)])
+    sdf = spark.createDataFrame([(i, g, v) for i, (g, v) in enumerate(vals)],
+                                "k long, g string, v double")
+    b, m = str(tmp_path / "b"), str(tmp_path / "m")
+    encode_table(sdf, b, m, key_cols=("k",), n_parts=1, resume=False)
+
+    def norm(x):
+        return "NaN" if isinstance(x, float) and math.isnan(x) else x
+
+    want = {r["g"]: (norm(r["mn"]), norm(r["mx"])) for r in (
+        decode_table(spark, b, m).groupBy("g")
+        .agg(F.min("v").alias("mn"), F.max("v").alias("mx")).collect())}
+    assert want == {"mixed": (-2.5, "NaN"), "nan": ("NaN", "NaN"),
+                    "plain": (0.0, 4.0)}
+    got = {g: (norm(mn), norm(mx)) for g, (mn, mx, _c)
+           in _got(spark, b, m, "g", "v").items()}
+    assert got == want
+    rows = grouped_aggs(spark, b, m, ["g"], ["v"], minmax=True).collect()
+    assert {r["g"]: (norm(r["min_v"]), norm(r["max_v"]))
+            for r in rows} == want

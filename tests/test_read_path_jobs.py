@@ -417,3 +417,44 @@ def test_row_range_falls_back_when_manifest_rows_disagree(spark, evolved,
         spark, b, m, columns=["k"], row_range=(150, 330)).collect()))
     assert got == want
     assert n > 4  # the groupBy job ran
+
+
+@pytest.mark.parametrize("which", ["evolved", "compacted"])
+def test_row_window_predicate_and_part_id_together(spark, evolved, which):
+    """The task loop's three inputs at once: a row_range window, a
+    predicate on w (the column run b2 adds, NULL in a1's groups, which
+    ``null_allowed`` keeps) and include_part_id equal the Catalyst
+    slice then filter.  The DSv2 source under the same predicates
+    returns what decode_table returns."""
+    from boltspark.engine.filters import ConstPredicate, RangePredicate
+    from boltspark.sources import datasource as ds
+
+    b, m = evolved[0] if which == "evolved" else evolved[1]
+    decoded = (decode_table(spark, b, m, include_part_id=True)
+               .withColumn("__run", (F.col("k") >= 300).cast("int")))
+    order = [PART_ID, "__run", "k"]
+    pred = RangePredicate(column="w", lower=1000, upper=1300,
+                          null_allowed=True)
+    keep = F.col("w").isNull() | F.col("w").between(1000, 1300)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for start, end in [(0, 7), (150, 330), (160, 170), (280, 480)]:
+        got = rows(decode_table(spark, b, m, columns=["k", "w"],
+                                row_range=(start, end), predicate=pred,
+                                include_part_id=True))
+        ks = _slice(decoded, order, start, end)
+        want = rows(decoded.filter(F.col("k").isin(ks) & keep)
+                    .select("k", "w", PART_ID))
+        assert got == want, (start, end)
+    for cond, p in (
+            (keep, pred),
+            (F.col("w").between(1000, 1300),
+             RangePredicate(column="w", lower=1000, upper=1300)),
+            (F.col("w").isNull(),
+             ConstPredicate(column="w", accept=False, null_allowed=True))):
+        got = rows(ds.load(spark, b, m, columns=["k", "w"]).filter(cond))
+        assert got == rows(decode_table(spark, b, m, columns=["k", "w"],
+                                        predicate=p))
+        assert got, p
