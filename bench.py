@@ -295,6 +295,8 @@ def main() -> None:
         **extras,
     }))
     spark.stop()
+    shutil.rmtree(warm, ignore_errors=True)
+    shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

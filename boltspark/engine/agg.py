@@ -35,8 +35,16 @@ flush.
 Reducers read blocks through two views, the only codec dispatch here:
 ``_view`` (values with multiplicities, for single-column reductions)
 and ``_coded`` (per-row codes into per-block uniques, for the grouped
-scans).  Every grouped SUM / AVG / COUNT runs on one composite-code
-reducer, ``_grouped_partials``.
+scans).  A None cell (a block group that predates the column) is an
+empty view: every surviving row NULL, so no reducer tests for it.
+
+Every grouped reducer codes its keys through one helper,
+``_group_codes``: N key cells -> the per-row combination slot, the
+surviving rows per slot and one key array per dimension (N = 1 is a
+single-column GROUP BY).  Grouped SUM / AVG / COUNT / MIN / MAX run on
+one reducer, ``_grouped_partials``, whose value columns each pick
+their lanes (int/float sum, exact decimal sum, typed min/max) through
+one per-column spec; ``grouped_minmax`` is a projection of it.
 
 At 100 TB the difference is structural: a GROUP BY over a dictionary-
 coded flag column moves (n_blocks x n_distinct) tiny rows through one
@@ -46,6 +54,7 @@ final shuffle instead of n_rows values.
 from __future__ import annotations
 
 import json as jsonmod
+import math
 from decimal import Decimal
 
 import numpy as np
@@ -84,9 +93,13 @@ def _check_tag(tag: str, what: str, bad=("d128",)):
 
 # ---------------------------------------------------------- block views
 
-def _open(blk: bytes, what: str, bad=("d128",)):
+def _open(blk: bytes | None, what: str, bad=("d128",), n_rows: int = 0):
     """open_block + ``_check_tag`` + the valid count ->
-    (payload, validity, meta, tag, codec, n_rows, n_valid)."""
+    (payload, validity, meta, tag, codec, n_rows, n_valid).  A None
+    block (the group predates the column) opens as ``n_rows`` NULLs
+    without a tag or codec."""
+    if blk is None:
+        return None, np.zeros(n_rows, dtype=bool), None, None, None, n_rows, 0
     payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
     _check_tag(tag, what, bad)
     n_valid = int(validity.sum()) if validity is not None else n_rows
@@ -96,6 +109,8 @@ def _open(blk: bytes, what: str, bad=("d128",)):
 def _dense(opened):
     """Dense (valid-only) values of an ``_open``-ed block."""
     payload, _v, meta, tag, codec, _n, n_valid = opened
+    if codec is None:  # an absent column: no values
+        return np.empty(0, dtype=np.int64)
     return blockmod.decode_values(payload, meta, n_valid, tag, codec)
 
 
@@ -108,7 +123,10 @@ def _view(blk: bytes, mask, what: str, bad=("d128",), weighted=True):
     of a fixed-width tag its runs weighted by length; others decode
     dense.  ``weighted=False`` (reducers over the value set): a dict
     block gives its dictionary alone, the code stream never decoded.
-    d128 word pairs come back as exact Python ints."""
+    d128 word pairs come back as exact Python ints.  A None block (see
+    ``_cell``: its mask is a row mask) is its surviving rows, all NULL."""
+    if blk is None:
+        return np.empty(0, dtype=object), None, None, int(mask.sum()), 0
     if not isinstance(mask, str):
         values, _v, tag, _c, n = blockmod.decode_block_rows(blk, mask)
         _check_tag(tag, what, bad)
@@ -152,6 +170,14 @@ def _coded(opened):
         uniques, codes = np.unique(np.asarray(_dense(opened)),
                                    return_inverse=True)
     return uniques, np.asarray(codes).astype(np.int64, copy=False), validity
+
+
+def _cell(g: _Group, i: int):
+    """(block, mask) of ``g``'s i-th cell for the block views: a None
+    cell (the group predates the column) pairs with the full row mask,
+    so it views as ``g.n_sel`` NULL rows."""
+    blk = g.cells[i]
+    return blk, (g.mask if blk is not None else g.sel)
 
 
 def _d128_ints(pairs) -> np.ndarray:
@@ -255,7 +281,10 @@ def _block_sum(blk: bytes, mask="all", exact_decimal: bool = False):
 def _block_count(blk: bytes, mask) -> tuple[int, int]:
     """(n_rows_or_selected, n_valid) from the block VALIDITY alone —
     open_block parses the header + validity bitmap, values are never
-    decoded, so every tag counts."""
+    decoded, so every tag counts.  A None block counts its surviving
+    rows, all NULL."""
+    if blk is None:
+        return int(mask.sum()), 0
     _p, validity, _m, _t, _c, n_rows = blockmod.open_block(blk)
     if isinstance(mask, str):  # 'all'
         return n_rows, (int(validity.sum()) if validity is not None
@@ -269,16 +298,14 @@ def _new_lanes() -> list:
     return [0, 0.0, False, 0, 0, 0]  # s_l, s_d, is_f, s_dec, rows, nulls
 
 
-def _add_block(a: list, cell, g: _Group, lane: str) -> None:
+def _add_block(a: list, blk, mask, lane: str) -> None:
     """Fold one block into sum lanes ``a`` (see ``_new_lanes``): lane
     'sum' (int64 / float64), 'dec' (exact unscaled decimal) or 'count'
-    (validity only).  A None cell's surviving rows are all NULL."""
-    if cell is None:
-        s, n, nv = 0, g.n_sel, 0
-    elif lane == "count":
-        s, (n, nv) = 0, _block_count(cell, g.mask)
+    (validity only)."""
+    if lane == "count":
+        s, (n, nv) = 0, _block_count(blk, mask)
     else:
-        s, n, nv = _block_sum(cell, g.mask, lane == "dec")
+        s, n, nv = _block_sum(blk, mask, lane == "dec")
     if lane == "dec":
         a[3] += s
     elif isinstance(s, float):
@@ -290,16 +317,19 @@ def _add_block(a: list, cell, g: _Group, lane: str) -> None:
     a[5] += n - nv
 
 
-def _part_lanes(blocks: DataFrame, predicates: list[Predicate], lane: str,
-                schema: pa.Schema, pick) -> DataFrame:
-    """Per-(task, part_id) lane partials of the single projected column:
-    one ``(part_id, *pick(lanes))`` row per partition that kept rows."""
+def _part_lanes(blocks: DataFrame, predicates: list[Predicate],
+                lanes: list[str], schema: pa.Schema, pick) -> DataFrame:
+    """Per-(task, part_id) lane partials of each projected column j,
+    folded by lane ``lanes[j]``: one ``(part_id, *pick(j, lanes))`` row
+    per partition and column that kept rows."""
 
     def per_group(g, acc):
-        _add_block(acc.setdefault(g.pid, _new_lanes()), g.cells[0], g, lane)
+        for j, lane in enumerate(lanes):
+            _add_block(acc.setdefault((g.pid, j), _new_lanes()),
+                       *_cell(g, j), lane)
 
     def flush(acc):
-        return _rows_batch([(pid, *pick(a)) for pid, a in acc.items()
+        return _rows_batch([(pid, *pick(j, a)) for (pid, j), a in acc.items()
                             if a[4]], schema)
 
     return _scan(blocks, predicates, schema, per_group, flush)
@@ -347,8 +377,8 @@ def _sum_partials(blocks: DataFrame, predicates: list[Predicate]) -> DataFrame:
     -> (part_id, s_l, s_d, is_f, rows, nulls).  part_id rides along so
     incremental consumers (streaming/agg_stream.py) can re-validate
     partials against the manifest after compaction."""
-    return _part_lanes(blocks, predicates, "sum", _SUM_LANES,
-                       lambda a: (a[0], a[1], a[2], a[4], a[5]))
+    return _part_lanes(blocks, predicates, ["sum"], _SUM_LANES,
+                       lambda _j, a: (a[0], a[1], a[2], a[4], a[5]))
 
 
 def _fold_sum(partials: DataFrame, column: str) -> DataFrame:
@@ -372,8 +402,8 @@ def _sum_dec_partials(blocks: DataFrame,
     rides along so incremental consumers (streaming/agg_stream.py) can
     re-validate partials against the manifest — the decimal analog of
     ``_sum_partials``."""
-    return _part_lanes(blocks, predicates, "dec", _SUM_DEC_LANES,
-                       lambda a: (Decimal(a[3]), a[4], a[5]))
+    return _part_lanes(blocks, predicates, ["dec"], _SUM_DEC_LANES,
+                       lambda _j, a: (Decimal(a[3]), a[4], a[5]))
 
 
 def _fold_sum_dec(partials: DataFrame, column: str, scale: int) -> DataFrame:
@@ -406,39 +436,28 @@ def column_sums(spark: SparkSession, blocks_path: str, manifest_path: str,
     blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
                                      col_list, predicate)
     fields = _fields(meta)
-    scales = {c: (fields[c].scale if isinstance(fields[c], T.DecimalType)
-                  else None) for c in col_list}
-    lanes = ["dec" if scales[c] is not None else "sum" for c in col_list]
-    schema = pa.schema([("column", pa.string()), ("s_l", pa.int64()),
+    # a decimal column's divisor 10^scale rides its partial rows
+    divs = [float(10 ** fields[c].scale)
+            if isinstance(fields[c], T.DecimalType) else None
+            for c in col_list]
+    schema = pa.schema([(PART_ID, pa.int32()), ("column", pa.string()),
+                        ("div", pa.float64()), ("s_l", pa.int64()),
                         ("s_d", pa.float64()), ("is_f", pa.bool_()),
                         ("s_dec", pa.decimal128(38, 0)),
                         ("rows", pa.int64()), ("nulls", pa.int64())])
-
-    def per_group(g, acc):
-        for c, lane, cell in zip(col_list, lanes, g.cells):
-            _add_block(acc.setdefault(c, _new_lanes()), cell, g, lane)
-
-    def flush(acc):
-        return _rows_batch([(c, a[0], a[1], a[2], Decimal(a[3]), a[4], a[5])
-                            for c, a in acc.items() if a[4]], schema)
-
-    partials = _scan(blocks, predicates, schema, per_group, flush)
+    partials = _part_lanes(
+        blocks, predicates, ["sum" if d is None else "dec" for d in divs],
+        schema, lambda j, a: (col_list[j], divs[j], a[0], a[1], a[2],
+                              Decimal(a[3]), a[4], a[5]))
     agg = partials.groupBy("column").agg(
-        F.sum("s_l").alias("s_l"), F.sum("s_d").alias("s_d"),
-        F.max("is_f").alias("is_f"), F.sum("s_dec").alias("s_dec"),
+        F.max("div").alias("div"), F.sum("s_l").alias("s_l"),
+        F.sum("s_d").alias("s_d"), F.max("is_f").alias("is_f"),
+        F.sum("s_dec").alias("s_dec"),
         F.sum("rows").alias("n_rows"), F.sum("nulls").alias("n_nulls"))
-    # per-column decimal scale: map literal column -> 10^scale (double)
-    dec_cols = [c for c, s in scales.items() if s is not None]
-    sum_col = (F.when(F.col("is_f"), F.col("s_d") + F.col("s_l"))
+    sum_col = (F.when(F.col("div").isNotNull(),
+                      F.col("s_dec").cast("double") / F.col("div"))
+               .when(F.col("is_f"), F.col("s_d") + F.col("s_l"))
                .otherwise(F.col("s_l").cast("double")))
-    if dec_cols:
-        scale_map = F.create_map(*[x for c in dec_cols
-                                   for x in (F.lit(c),
-                                             F.lit(float(10 ** scales[c])))])
-        sum_col = (F.when(F.col("column").isin(dec_cols),
-                          F.col("s_dec").cast("double")
-                          / scale_map[F.col("column")])
-                   .otherwise(sum_col))
     return agg.select("column", sum_col.alias("sum_value"),
                       "n_rows", "n_nulls")
 
@@ -479,8 +498,8 @@ def column_count(spark: SparkSession, blocks_path: str, manifest_path: str,
     and n_rows = COUNT(*) of the surviving selection."""
     blocks, predicates, _ = _plan(spark, blocks_path, manifest_path,
                                   [column], predicate, run_ids)
-    partials = _part_lanes(blocks, predicates, "count", _COUNT_LANES,
-                           lambda a: (a[4], a[5]))
+    partials = _part_lanes(blocks, predicates, ["count"], _COUNT_LANES,
+                           lambda _j, a: (a[4], a[5]))
     return (partials.agg(
         F.sum("rows").alias("n_rows"), F.sum("nulls").alias("n_nulls"))
         .select(F.lit(column).alias("column"),
@@ -543,14 +562,11 @@ def _vc_partials(spark: SparkSession, blocks: DataFrame,
     out_t = _arrow_type(spark, value_type)
 
     def per_group(g, acc):
-        if g.cells[0] is None:  # every surviving row is the NULL value
-            varr, cnt = pa.nulls(1, out_t), np.array([g.n_sel], np.int64)
-        else:
-            u, cnt, n_null = _block_value_counts(g.cells[0], g.mask)
-            varr = _arrow_of(u, out_t)
-            if n_null:
-                varr = pa.concat_arrays([varr, pa.nulls(1, out_t)])
-                cnt = np.append(cnt, n_null)
+        u, cnt, n_null = _block_value_counts(*_cell(g, 0))
+        varr = _arrow_of(u, out_t)
+        if n_null:
+            varr = pa.concat_arrays([varr, pa.nulls(1, out_t)])
+            cnt = np.append(cnt, n_null)
         return pa.RecordBatch.from_arrays(
             [pa.array(np.full(len(varr), g.pid, dtype=np.int32)), varr,
              pa.array(cnt, pa.int64())], names=[PART_ID, "value", "cnt"])
@@ -603,8 +619,7 @@ def column_minmax(spark: SparkSession, blocks_path: str, manifest_path: str,
     ])
 
     def per_group(g, acc):
-        lo, hi, n, nv = ((None, None, g.n_sel, 0) if g.cells[0] is None
-                         else _block_minmax(g.cells[0], g.mask))
+        lo, hi, n, nv = _block_minmax(*_cell(g, 0))
         return pa.RecordBatch.from_arrays(
             [_scalar_arr(lo, out_t), _scalar_arr(hi, out_t),
              pa.array([n], pa.int64()), pa.array([n - nv], pa.int64())],
@@ -646,9 +661,8 @@ def column_distinct(spark: SparkSession, blocks_path: str,
     out_t = _arrow_type(spark, dt)
 
     def per_group(g, acc):
-        # an all-NULL (evolved) block contributes nothing
-        u = None if g.cells[0] is None else _block_distinct(g.cells[0], g.mask)
-        if u is None or not len(u):
+        u = _block_distinct(*_cell(g, 0))
+        if u is None:
             return None
         return pa.RecordBatch.from_arrays([_arrow_of(u, out_t)],
                                           names=["value"])
@@ -694,8 +708,7 @@ def _hll_partials(blocks: DataFrame, predicates: list[Predicate],
 
     def per_group(g, acc):
         a = acc.setdefault(g.pid, [hll.empty_registers(p), 0, 0])
-        h, n, nv = ((None, g.n_sel, 0) if g.cells[0] is None
-                    else _block_hashes(g.cells[0], g.mask))
+        h, n, nv = _block_hashes(*_cell(g, 0))
         a[1] += n
         a[2] += n - nv
         if h is not None:
@@ -809,8 +822,7 @@ def _quantile_partials(blocks: DataFrame, predicates: list[Predicate],
 
     def per_group(g, acc):
         a = acc.setdefault(g.pid, [[], 0, 0])  # summaries, rows, nulls
-        smry, n, nv = ((None, g.n_sel, 0) if g.cells[0] is None
-                       else _block_summary(g.cells[0], g.mask, k))
+        smry, n, nv = _block_summary(*_cell(g, 0), k)
         a[1] += n
         a[2] += n - nv
         if smry is not None:
@@ -952,10 +964,8 @@ def column_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
     out_t = _arrow_type(spark, dt)
 
     def per_group(g, acc):
-        if g.cells[0] is None:
-            return None  # all NULL: never ranks
-        out = _top_k(*_topk_candidates(g.cells[0], g.mask, k, ascending),
-                     k, ascending, out_t)
+        out = _top_k(*_topk_candidates(*_cell(g, 0), k, ascending), k,
+                     ascending, out_t)
         return (pa.RecordBatch.from_arrays([out], names=["value"])
                 if len(out) else None)
 
@@ -1092,56 +1102,108 @@ def topk_rows(spark: SparkSession, blocks_path: str, manifest_path: str,
 
 # ------------------------------------------------------- grouped scans
 
-def _group_keys(blk: bytes | None, n_rows: int):
-    """Per-ROW group labels of one group-column block -> (uniques, g1):
-    g1[row] is 0 for the NULL group and code+1 otherwise, so slot 0 of
-    every per-group array is the NULL group.  A None block (the group
-    predates the column) puts every row in the NULL group.  The labels
-    come from the block's coded view (``_coded``): a dict-coded group
-    column never materializes its values."""
-    if blk is None:
-        return None, np.zeros(n_rows, dtype=np.int64)
-    uniques, codes, validity = _coded(_open(blk, "group-by"))
-    return uniques, _full(codes + 1, validity)
+def _group_codes(g: _Group, cells: list, out_ts: list):
+    """The one group-key coder of every grouped reducer: ``g``'s N key
+    cells -> (slot, cnt, keys).  Each cell's coded view (``_coded``)
+    labels its rows 0 for NULL and code+1 otherwise (a dict-coded
+    column's code stream IS the label, its values never materialize; a
+    None cell puts every row in the NULL group), and the N labels join
+    mixed-radix into one composite code.  ``slot[row]`` ranks the row's
+    combination among those the surviving rows hold (read it only where
+    ``g.sel``), ``cnt`` counts the surviving rows of each slot and
+    ``keys`` holds one Arrow key array per dimension, of type
+    ``out_ts[i]``, so memory scales with the combinations present.
+    N = 1 is a single-column GROUP BY."""
+    coded = [_coded(_open(c, "group-by", n_rows=g.n_rows)) for c in cells]
+    dims = [len(u) + 1 for u, _c, _v in coded]
+    radix = math.prod(dims)  # python ints: no wraparound in the check
+    if radix >= 1 << 63:
+        raise ValueError(
+            "composite group code would overflow int64: "
+            f"per-block dictionary sizes {dims} multiply to "
+            f"{radix}; group by fewer/lower-cardinality "
+            "columns or use smaller blocks")
+    comp = 0
+    for dd, (_u, codes, validity) in zip(dims, coded):
+        comp = comp * dd + _full(codes + 1, validity)
+    sel_idx = np.nonzero(g.sel)[0]
+    # a code space within a few times the block's rows ranks the
+    # combinations by histogram (O(rows)), a wider one by sorting
+    if radix <= 4 * len(comp):
+        hist = np.bincount(comp[sel_idx], minlength=radix)
+        combos = np.flatnonzero(hist)
+        slot = (np.cumsum(hist > 0) - 1)[comp]
+        cnt = hist[combos]
+    else:
+        combos, inv, cnt = np.unique(comp[sel_idx], return_inverse=True,
+                                     return_counts=True)
+        slot = np.zeros(len(comp), dtype=np.int64)
+        slot[sel_idx] = inv
+    # decompose the composite codes, last dimension first
+    keys = []
+    for (u, _c, _v), dd, out_t in reversed(list(zip(coded, dims, out_ts))):
+        combos, labels = np.divmod(combos, dd)
+        base = pa.nulls(1, out_t)
+        if len(u):
+            base = pa.concat_arrays([base, _arrow_of(u, out_t)])
+        keys.insert(0, base.take(pa.array(labels, pa.int64())))
+    return slot, cnt, keys
 
 
-def _keys_at(uniques, out_t: "pa.DataType", labels) -> pa.Array:
-    """Group key array for ``labels`` (``_group_keys`` slots: 0 = the
-    NULL group, code+1 otherwise)."""
-    base = pa.nulls(1, out_t)
-    if uniques is not None and len(uniques):
-        base = pa.concat_arrays([base, _arrow_of(uniques, out_t)])
-    return base.take(pa.array(np.asarray(labels, dtype=np.int64)))
-
-
-def _grouping(g: _Group):
-    """(uniques, g1, cnt, keep) for the group column in ``g.cells[0]``:
-    labels, surviving rows per label, and which labels kept rows."""
-    uniq, g1 = _group_keys(g.cells[0], g.n_rows)
-    nu = len(uniq) if uniq is not None else 0
-    cnt = np.bincount(g1[g.sel], minlength=nu + 1)
-    return uniq, g1, cnt, cnt > 0
-
-
-def _dense_full(blk: bytes | None, n_rows: int, exact_decimal: bool = False):
+def _dense_full(blk: bytes | None, n_rows: int):
     """Numeric block -> (values_full, valid_mask_full).  ``values_full``
     is full block length with garbage (zero) in null slots; mask them
-    with ``valid_mask_full``.  A None block is all NULL.
-    ``exact_decimal`` returns unscaled Python-int objects: int64 low
-    words widen, d128 word pairs combine hi*2^64 + lo_u — both exact."""
-    if blk is None:
-        return (np.zeros(n_rows, dtype=object if exact_decimal else np.int64),
-                np.zeros(n_rows, dtype=bool))
-    opened = _open(blk, "sum",
-                   ("bytes",) if exact_decimal else ("bytes", "d128"))
+    with ``valid_mask_full``."""
+    opened = _open(blk, "sum", ("bytes", "d128"), n_rows)
+    validity = opened[1]
+    return (_full(np.asarray(_dense(opened)), validity),
+            np.ones(n_rows, bool) if validity is None else validity)
+
+
+def _value_ranks(blk: bytes | None, sel: np.ndarray, what: str,
+                 bad=("d128",)):
+    """The value lanes of the grouped reducers: the value ranks of one
+    block's valid rows under ``sel`` -> (ranks, rows_mask, base,
+    rank_to_idx) with ``ranks`` aligned to the rows ``rows_mask``
+    marks.  Byte values rank through the block's coded view
+    (``_coded``): each block distinct ranks once via sort_indices and
+    the code stream maps rows to ranks, so strings never compare
+    row-by-row.  ``base``/``rank_to_idx`` map a rank back to its value
+    (``base.take(rank_to_idx[rank])``); numeric values rank as
+    themselves (base=None), d128 word pairs as exact Python ints."""
+    opened = _open(blk, what, bad, len(sel))
     _p, validity, _m, tag, *_ = opened
-    v = np.asarray(_dense(opened))
-    if tag == "d128":
-        v = _d128_ints(v)
-    elif exact_decimal:
-        v = v.astype(object)
-    return (_full(v, validity),
-            np.ones(len(v), bool) if validity is None else validity)
+    base = rank_to_idx = None
+    if tag != "bytes":
+        ranks = np.asarray(_dense(opened))
+        if tag == "d128":
+            ranks = _d128_ints(ranks)
+    else:
+        uniques, codes, _v = _coded(opened)
+        base = strings.to_arrow(uniques)
+        rank_to_idx = np.asarray(pc.sort_indices(base)).astype(np.int64)
+        rank_of = np.empty(len(base), np.int64)
+        rank_of[rank_to_idx] = np.arange(len(base))
+        ranks = rank_of[codes]
+    w = sel if validity is None else validity & sel
+    return _full(ranks, validity)[w], w, base, rank_to_idx
+
+
+def _ranked_arr(reduced, got, base, rank_to_idx, out_t):
+    """Per-group reduced ranks/values -> typed Arrow array, null where
+    ``got`` is False (the group had no valid value)."""
+    if not got.any():  # also the no-tag ranks of an absent column
+        return pa.nulls(len(got), out_t)
+    if base is not None:  # byte path: rank -> dictionary position
+        arr = base.take(pa.array(
+            [int(rank_to_idx[int(r)]) if ok else None
+             for r, ok in zip(reduced, got)], pa.int64()))
+        return arr if arr.type.equals(out_t) else arr.cast(out_t)
+    if pa.types.is_decimal(out_t):
+        return _dec_arr([int(r) if ok else None
+                         for r, ok in zip(reduced, got)], out_t)
+    arr = pa.array(reduced, mask=~got)
+    return arr if arr.type.equals(out_t) else arr.cast(out_t)
 
 
 def _segments(labels: np.ndarray, values: np.ndarray):
@@ -1185,113 +1247,82 @@ def _extremes(vals: np.ndarray, labels: np.ndarray, nb: int):
         mins[only_nan] = np.nan
         maxs[n_nan > 0] = np.nan
         return mins, maxs
-    vals = vals.astype(np.int64)
-    ii = np.iinfo(np.int64)
-    mins = np.full(nb, ii.max, dtype=np.int64)
-    maxs = np.full(nb, ii.min, dtype=np.int64)
+    if vals.dtype.kind not in "iu":  # bool, or an absent column's ranks
+        vals = vals.astype(np.int64)
+    # the values' own width, so a date's int32 casts back to date32
+    ii = np.iinfo(vals.dtype)
+    mins = np.full(nb, ii.max, dtype=vals.dtype)
+    maxs = np.full(nb, ii.min, dtype=vals.dtype)
     np.minimum.at(mins, labels, vals)
     np.maximum.at(maxs, labels, vals)
     return mins, maxs
 
 
+# per sum lane of a value spec: (the reduction it names, the tags it refuses)
+_SUM_LANE = {"sum": ("sum", ("bytes", "d128")), "dec": ("sum", ("bytes",)),
+             None: ("grouped min/max", ("d128",))}
+
+
 def _grouped_partials(blocks: DataFrame, predicates: list[Predicate],
                       group_types: list, group_out_ts: list,
-                      exact_decimal: list[bool], minmax=None) -> DataFrame:
-    """The one grouped-sum reducer, over ``blocks`` projecting N group
-    then M value columns.  A block's group streams joint-code once
-    (mixed-radix composite of ``_group_keys`` labels) and every value
-    column reduces against the same codes: one row per (block,
-    combination present) -> (part_id, __g_0.., __cnt, then per value
-    column j: __nv_j and the __sl_j/__sd_j/__if_j sum lanes, or one
-    exact unscaled __dec_j decimal(38,0) lane where ``exact_decimal[j]``;
-    ``minmax`` (per value column, (Spark type, Arrow type)) adds typed
-    __mn_j/__mx_j)."""
+                      specs: list) -> DataFrame:
+    """The one grouped reducer, over ``blocks`` projecting N group then
+    M value columns.  A block group's keys code once
+    (``_group_codes``) and every value column reduces against the same
+    slots: one row per (block, combination present) -> (part_id,
+    __g_0.., __cnt, then per value column j its valid count __nv_j and
+    the lanes its spec ``(sum_lane, minmax)`` picks).  ``sum_lane``
+    'sum' adds the __sl_j/__sd_j/__if_j int64/float64 sums, 'dec' one
+    exact unscaled __dec_j decimal(38,0), None neither; ``minmax`` =
+    (Spark type, Arrow type) adds __mn_j/__mx_j typed by the column."""
     ng = len(group_types)
     fields = ([T.StructField(PART_ID, T.IntegerType(), False)]
               + [T.StructField(f"__g_{i}", t, True)
                  for i, t in enumerate(group_types)]
               + [T.StructField("__cnt", T.LongType(), False)])
-    for j, dec in enumerate(exact_decimal):
+    for j, (lane, minmax) in enumerate(specs):
         fields.append(T.StructField(f"__nv_{j}", T.LongType(), False))
-        fields += ([T.StructField(f"__dec_{j}", T.DecimalType(38, 0), True)]
-                   if dec else
-                   [T.StructField(f"__sl_{j}", T.LongType(), False),
-                    T.StructField(f"__sd_{j}", T.DoubleType(), False),
-                    T.StructField(f"__if_{j}", T.BooleanType(), False)])
+        if lane == "dec":
+            fields.append(T.StructField(f"__dec_{j}", T.DecimalType(38, 0),
+                                        True))
+        elif lane == "sum":
+            fields += [T.StructField(f"__sl_{j}", T.LongType(), False),
+                       T.StructField(f"__sd_{j}", T.DoubleType(), False),
+                       T.StructField(f"__if_{j}", T.BooleanType(), False)]
         if minmax:
-            fields += [T.StructField(f"__mn_{j}", minmax[j][0], True),
-                       T.StructField(f"__mx_{j}", minmax[j][0], True)]
+            fields += [T.StructField(f"__mn_{j}", minmax[0], True),
+                       T.StructField(f"__mx_{j}", minmax[0], True)]
     out_schema = T.StructType(fields)
 
     def per_group(g, acc):
-        keys = [_group_keys(cell, g.n_rows) for cell in g.cells[:ng]]
-        dims = [(len(u) if u is not None else 0) + 1 for u, _ in keys]
-        radix = 1
-        for dd in dims:  # python ints: no wraparound in the check
-            radix *= dd
-        if radix >= 1 << 63:
-            raise ValueError(
-                "composite group code would overflow int64: "
-                f"per-block dictionary sizes {dims} multiply to "
-                f"{radix}; group by fewer/lower-cardinality "
-                "columns or use smaller blocks")
-        comp = keys[0][1].astype(np.int64).copy()
-        for dd, (_u, g1) in zip(dims[1:], keys[1:]):
-            comp *= dd
-            comp += g1
-        sel = g.sel
-        sel_idx = np.nonzero(sel)[0]
-        if not len(sel_idx):
-            return None
-        # slot[row]: the rank of the row's combination among those the
-        # selected rows hold; a code space within a few times the block's
-        # rows ranks by histogram (O(rows)), a wider one by sorting
-        if radix <= 4 * len(comp):
-            hist = np.bincount(comp[sel_idx], minlength=radix)
-            ukeys = np.flatnonzero(hist)
-            slot = (np.cumsum(hist > 0) - 1)[comp]
-        else:
-            ukeys, inv = np.unique(comp[sel_idx], return_inverse=True)
-            slot = np.zeros(len(comp), dtype=np.int64)
-            slot[sel_idx] = inv
-        nk = len(ukeys)
-        # decompose composite keys -> per-dimension group labels
-        rem = ukeys.copy()
-        labels = []
-        for dd in reversed(dims[1:]):
-            labels.append(rem % dd)
-            rem //= dd
-        labels.append(rem)
-        out = ([pa.array(np.full(nk, g.pid, np.int32), pa.int32())]
-               + [_keys_at(u, out_t, lab) for (u, _g1), out_t, lab
-                  in zip(keys, group_out_ts, reversed(labels))]
-               + [pa.array(np.bincount(slot[sel_idx], minlength=nk),
-                           pa.int64())])
-        for j, (cell, dec) in enumerate(zip(g.cells[ng:], exact_decimal)):
-            vfull, vmask = _dense_full(cell, g.n_rows, dec)
-            wv_idx = np.nonzero(vmask & sel)[0]
-            pos = slot[wv_idx]
+        slot, cnt, keys = _group_codes(g, g.cells[:ng], group_out_ts)
+        nk = len(cnt)
+        out = [pa.array(np.full(nk, g.pid, np.int32), pa.int32()), *keys,
+               pa.array(cnt, pa.int64())]
+        for cell, (lane, minmax) in zip(g.cells[ng:], specs):
+            rv, w, base, rank_to_idx = _value_ranks(cell, g.sel,
+                                                    *_SUM_LANE[lane])
+            pos = slot[w]
             nv = np.bincount(pos, minlength=nk)
-            vv = vfull[wv_idx]
             out.append(pa.array(nv, pa.int64()))
-            if dec:
+            if lane == "dec":
                 s = np.zeros(nk, dtype=object)
-                np.add.at(s, pos, vv)
+                np.add.at(s, pos, rv.astype(object))
                 out.append(pa.array([Decimal(int(x)) for x in s],
                                     pa.decimal128(38, 0)))
-                continue
-            is_f = vfull.dtype.kind == "f"
-            s_l = np.zeros(nk, dtype=np.int64)
-            s_d = np.zeros(nk, dtype=np.float64)
-            if is_f:
-                s_d = np.bincount(pos, weights=vv, minlength=nk)
-            else:
-                np.add.at(s_l, pos, vv.astype(np.int64))
-            out += [pa.array(s_l, pa.int64()), pa.array(s_d, pa.float64()),
-                    pa.array(np.full(nk, is_f), pa.bool_())]
+            elif lane == "sum":
+                is_f = rv.dtype.kind == "f"
+                s_l = np.zeros(nk, dtype=np.int64)
+                s_d = np.zeros(nk, dtype=np.float64)
+                if is_f:
+                    s_d = np.bincount(pos, weights=rv, minlength=nk)
+                else:
+                    np.add.at(s_l, pos, rv.astype(np.int64))
+                out += [pa.array(s_l, pa.int64()), pa.array(s_d, pa.float64()),
+                        pa.array(np.full(nk, is_f), pa.bool_())]
             if minmax:
-                out += [_ranked_arr(m, nv > 0, None, None, minmax[j][1])
-                        for m in _extremes(vv, pos, nk)]
+                out += [_ranked_arr(m, nv > 0, base, rank_to_idx, minmax[1])
+                        for m in _extremes(rv, pos, nk)]
         return pa.RecordBatch.from_arrays(out, names=out_schema.names)
 
     return _scan(blocks, predicates, out_schema, per_group)
@@ -1334,8 +1365,9 @@ def _gsum_partials(blocks: DataFrame, predicates: list[Predicate],
     lanes = ([F.col("__dec_0").alias("s_dec")] if exact_decimal else
              [F.col("__sl_0").alias("s_l"), F.col("__sd_0").alias("s_d"),
               F.col("__if_0").alias("is_f")])
+    spec = ("dec" if exact_decimal else "sum", None)
     return _grouped_partials(blocks, predicates, [group_type], [out_t],
-                             [exact_decimal]).select(
+                             [spec]).select(
         PART_ID, F.col("__g_0").alias("value"), F.col("__cnt").alias("cnt"),
         F.col("__nv_0").alias("nv"), *lanes)
 
@@ -1408,8 +1440,8 @@ def grouped_distinct_approx(spark: SparkSession, blocks_path: str,
     per-(block, group) registers; what crosses the shuffle is
     n_blocks x n_groups x 2^p bytes (p=12 -> 4 KB per group row)
     regardless of value cardinality, and the final fold is one
-    groupBy(value).applyInPandas with a commutative register max-merge.  Groups must
-    be low-cardinality (the same dict/rle assumption grouped_sum
+    groupBy(value).applyInArrow with a commutative register max-merge.
+    Groups must be low-cardinality (the same dict/rle assumption grouped_sum
     makes); values hash per row (splitmix64 for fixed widths; byte
     values hash their per-block dictionary uniques once and gather by
     code).
@@ -1429,42 +1461,21 @@ def grouped_distinct_approx(spark: SparkSession, blocks_path: str,
         T.StructField("cnt", T.LongType(), False),
     ])
 
-    def _value_hashes(blk: bytes | None, n_rows: int):
-        """Full-length row hashes of the value block -> (hashes_full
-        uint64, valid_mask_full); a None block is all NULL."""
-        if blk is None:
-            return (np.zeros(n_rows, dtype=np.uint64),
-                    np.zeros(n_rows, dtype=bool))
-        opened = _open(blk, "approx distinct")
-        _p, validity, _m, tag, *_ = opened
-        if tag == "bytes":  # hash each distinct string once
-            uniques, codes, _v = _coded(opened)
-            h = hll.hash_bytes(uniques)[codes]
-        else:
-            h = hll.hash_fixed(np.asarray(_dense(opened)))
-        return (_full(h, validity),
-                np.ones(n_rows, bool) if validity is None else validity)
-
     def per_group(g, acc):
-        uniq, g1, cnt, keep = _grouping(g)
-        if not keep.any():
-            return None
-        hfull, vmask = _value_hashes(g.cells[1], g.n_rows)
+        slot, cnt, keys = _group_codes(g, g.cells[:1], [out_t])
+        rv, w, base, rank_to_idx = _value_ranks(g.cells[1], g.sel,
+                                                "approx distinct")
+        # byte values hash each block distinct once
+        h = (hll.hash_fixed(rv) if base is None
+             else hll.hash_bytes(base.to_pylist())[rank_to_idx[rv]])
         # per-group registers: one vectorized update per group SEGMENT
         # of the surviving hash rows
-        regs_by = {}
-        idx = np.nonzero(vmask & g.sel)[0]
-        for gid, hs in _segments(g1[idx], hfull[idx]):
-            regs_by[gid] = hll.empty_registers(p)
-            hll.update(regs_by[gid], hs)
-        kept = np.nonzero(keep)[0]
-        empty = hll.empty_registers(p)
+        regs = [hll.empty_registers(p) for _ in cnt]
+        for gid, hs in _segments(slot[w], h):
+            hll.update(regs[gid], hs)
         return pa.RecordBatch.from_arrays(
-            [_keys_at(uniq, out_t, kept),
-             pa.array([regs_by.get(int(gid), empty).tobytes()
-                       for gid in kept], pa.binary()),
-             pa.array(cnt[keep].astype(np.int64), pa.int64())],
-            names=["value", "regs", "cnt"])
+            [keys[0], pa.array([r.tobytes() for r in regs], pa.binary()),
+             pa.array(cnt, pa.int64())], names=["value", "regs", "cnt"])
 
     partials = _scan(blocks, predicates, out_schema, per_group)
     fold_schema = T.StructType([
@@ -1473,17 +1484,16 @@ def grouped_distinct_approx(spark: SparkSession, blocks_path: str,
         T.StructField("cnt", T.LongType(), True),
     ])
 
-    def fold_group(pdf):
-        import pandas as pd
-
+    def fold_group(tbl):
         regs = hll.empty_registers(p)
-        for blob in pdf["regs"]:
+        for blob in tbl.column("regs").to_pylist():
             _max_into(regs, blob)
-        return pd.DataFrame({"value": [pdf["value"].iloc[0]],
-                             "approx_distinct": [_hll_estimate(regs)],
-                             "cnt": [int(pdf["cnt"].sum())]})
+        return pa.table({
+            "value": tbl.column("value").slice(0, 1),
+            "approx_distinct": pa.array([_hll_estimate(regs)], pa.int64()),
+            "cnt": pa.array([pc.sum(tbl.column("cnt")).as_py()], pa.int64())})
 
-    return partials.groupBy("value").applyInPandas(fold_group, fold_schema)
+    return partials.groupBy("value").applyInArrow(fold_group, fold_schema)
 
 
 def grouped_quantiles(spark: SparkSession, blocks_path: str,
@@ -1496,7 +1506,7 @@ def grouped_quantiles(spark: SparkSession, blocks_path: str,
     emits one equi-depth summary row per (block, group): <= ``k``
     weighted points each (kernels/quantile.py), so the shuffle moves
     O(n_blocks x n_groups x k) tiny rows regardless of row count, and
-    the per-group fold (applyInPandas over the low-cardinality group
+    the per-group fold (applyInArrow over the low-cardinality group
     key) merges summaries losslessly before reading the percentiles.
     Rank error per group ~ N_group/(2k): sub-percent at the default.
 
@@ -1519,24 +1529,20 @@ def grouped_quantiles(spark: SparkSession, blocks_path: str,
     ])
 
     def per_group(g, acc):
-        uniq, g1, cnt, keep = _grouping(g)
-        if not keep.any():
-            return None
+        slot, cnt, keys = _group_codes(g, g.cells[:1], [out_t])
         vfull, vmask = _dense_full(g.cells[1], g.n_rows)
         # per-group summaries over group-sorted valid rows
         idx = np.nonzero(vmask & g.sel)[0]
-        smry_by = {gid: qk.summarize(sv, None, k) for gid, sv in
-                   _segments(g1[idx], vfull[idx].astype(np.float64))}
-        kept = np.nonzero(keep)[0]
-        none = (np.empty(0), np.empty(0))  # a group without a valid value
-        sms = [smry_by.get(int(gid), none) for gid in kept]
+        sms = [(np.empty(0), np.empty(0))] * len(cnt)  # no valid value
+        for gid, sv in _segments(slot[idx], vfull[idx].astype(np.float64)):
+            sms[gid] = qk.summarize(sv, None, k)
         return pa.RecordBatch.from_arrays(
-            [_keys_at(uniq, out_t, kept),
+            [keys[0],
              pa.array([v.tolist() for v, _w in sms], pa.list_(pa.float64())),
              pa.array([w.tolist() for _v, w in sms], pa.list_(pa.float64())),
-             pa.array(cnt[keep].astype(np.int64), pa.int64()),
+             pa.array(cnt, pa.int64()),
              pa.array([int(c) - int(round(w.sum()))
-                       for c, (_v, w) in zip(cnt[keep], sms)], pa.int64())],
+                       for c, (_v, w) in zip(cnt, sms)], pa.int64())],
             names=["value", "vs", "ws", "rows", "nulls"])
 
     partials = _scan(blocks, predicates, out_schema, per_group)
@@ -1548,67 +1554,25 @@ def grouped_quantiles(spark: SparkSession, blocks_path: str,
         T.StructField("n_nulls", T.LongType(), False),
     ])
 
-    def fold_group(pdf):
-        import pandas as pd
-
+    def fold_group(tbl):
         summaries = [(np.asarray(v, dtype=np.float64),
                       np.asarray(w, dtype=np.float64))
-                     for v, w in zip(pdf["vs"], pdf["ws"])]
+                     for v, w in zip(tbl.column("vs").to_pylist(),
+                                     tbl.column("ws").to_pylist())]
         v, w = qk.merge(summaries, k=None)  # lossless final fold
-        rows = int(pdf["rows"].sum())
-        nulls = int(pdf["nulls"].sum())
-        qs = (qk.quantile(v, w, plist) if len(v)
-              else [None] * len(plist))
-        return pd.DataFrame({
-            "value": [pdf["value"].iloc[0]] * len(plist),
-            "p": plist,
-            "q": qs,
-            "n_rows": [rows] * len(plist),
-            "n_nulls": [nulls] * len(plist),
-        })
+        n = len(plist)
+        rows = pc.sum(tbl.column("rows")).as_py()
+        nulls = pc.sum(tbl.column("nulls")).as_py()
+        # an Arrow fold keeps a NaN quantile NaN (pandas would null it)
+        qs = qk.quantile(v, w, plist) if len(v) else [None] * n
+        return pa.table({
+            "value": tbl.column("value").take([0] * n),
+            "p": pa.array(plist, pa.float64()),
+            "q": pa.array(qs, pa.float64()),
+            "n_rows": pa.array([rows] * n, pa.int64()),
+            "n_nulls": pa.array([nulls] * n, pa.int64())})
 
-    return partials.groupBy("value").applyInPandas(fold_group, fold_schema)
-
-
-def _value_ranks(blk: bytes, sel: np.ndarray, what: str):
-    """Order-based grouped reductions (grouped_minmax, grouped_topk):
-    the value ranks of one block's valid rows under ``sel`` -> (ranks,
-    rows_mask, base, rank_to_idx) with ``ranks`` aligned to the rows
-    ``rows_mask`` marks.  Byte values rank through the block's coded
-    view (``_coded``): each block distinct ranks once via sort_indices
-    and the code stream maps rows to ranks, so strings never compare
-    row-by-row.  ``base``/``rank_to_idx`` map a rank back to its value
-    (``base.take(rank_to_idx[rank])``); numeric values rank as
-    themselves (base=None)."""
-    opened = _open(blk, what)
-    _p, validity, _m, tag, *_ = opened
-    base = rank_to_idx = None
-    if tag != "bytes":
-        ranks = np.asarray(_dense(opened))
-    else:
-        uniques, codes, _v = _coded(opened)
-        base = strings.to_arrow(uniques)
-        rank_to_idx = np.asarray(pc.sort_indices(base)).astype(np.int64)
-        rank_of = np.empty(len(base), np.int64)
-        rank_of[rank_to_idx] = np.arange(len(base))
-        ranks = rank_of[codes]
-    w = sel if validity is None else validity & sel
-    return _full(ranks, validity)[w], w, base, rank_to_idx
-
-
-def _ranked_arr(reduced, got, base, rank_to_idx, out_t):
-    """Per-group reduced ranks/values -> typed Arrow array, null where
-    ``got`` is False (the group had no valid value)."""
-    if base is not None:  # byte path: rank -> dictionary position
-        arr = base.take(pa.array(
-            [int(rank_to_idx[int(r)]) if ok else None
-             for r, ok in zip(reduced, got)], pa.int64()))
-        return arr if arr.type.equals(out_t) else arr.cast(out_t)
-    if pa.types.is_decimal(out_t):
-        return _dec_arr([int(r) if ok else None
-                         for r, ok in zip(reduced, got)], out_t)
-    arr = pa.array(reduced, mask=~got)
-    return arr if arr.type.equals(out_t) else arr.cast(out_t)
+    return partials.groupBy("value").applyInArrow(fold_group, fold_schema)
 
 
 def _reject_d128(op: str, dt, alt: str):
@@ -1637,40 +1601,12 @@ def grouped_minmax(spark: SparkSession, blocks_path: str,
         spark, blocks_path, manifest_path, group_column, value_column,
         predicate, run_ids)
     _reject_d128("grouped_minmax", vt, "column_minmax")
-    out_tv = _arrow_type(spark, vt)
-    out_schema = T.StructType([
-        T.StructField("value", gt, True),
-        T.StructField("mn", vt, True),
-        T.StructField("mx", vt, True),
-        T.StructField("cnt", T.LongType(), False),
-    ])
-
-    def per_group(g, acc):
-        uniq, g1, cnt, keep = _grouping(g)
-        if not keep.any():
-            return None
-        base = rank_to_idx = None
-        if g.cells[1] is None:  # all values NULL
-            gw, rv = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-        else:
-            rv, w, base, rank_to_idx = _value_ranks(g.cells[1], g.sel,
-                                                    "grouped min/max")
-            gw = g1[w]
-        nb = len(cnt)
-        mins, maxs = _extremes(rv, gw, nb)
-        got = np.bincount(gw, minlength=nb)[keep] > 0
-        return pa.RecordBatch.from_arrays(
-            [_keys_at(uniq, out_tg, np.nonzero(keep)[0]),
-             _ranked_arr(mins[keep], got, base, rank_to_idx, out_tv),
-             _ranked_arr(maxs[keep], got, base, rank_to_idx, out_tv),
-             pa.array(cnt[keep].astype(np.int64), pa.int64())],
-            names=["value", "mn", "mx", "cnt"])
-
-    partials = _scan(blocks, predicates, out_schema, per_group)
-    return (partials.groupBy("value")
-            .agg(F.min("mn").alias("min_value"),
-                 F.max("mx").alias("max_value"),
-                 F.sum("cnt").alias("cnt")))
+    partials = _grouped_partials(blocks, predicates, [gt], [out_tg],
+                                 [(None, (vt, _arrow_type(spark, vt)))])
+    return (partials.groupBy(F.col("__g_0").alias("value"))
+            .agg(F.min("__mn_0").alias("min_value"),
+                 F.max("__mx_0").alias("max_value"),
+                 F.sum("__cnt").alias("cnt")))
 
 
 def grouped_aggs(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -1712,9 +1648,9 @@ def grouped_aggs(spark: SparkSession, blocks_path: str, manifest_path: str,
                 "use grouped_sum (exact decimal partials) per column")
     partials = _grouped_partials(
         blocks, predicates, [fields[c] for c in gcols],
-        [_arrow_type(spark, fields[c]) for c in gcols], [False] * len(vcols),
-        [(fields[v], _arrow_type(spark, fields[v])) for v in vcols]
-        if minmax else None)
+        [_arrow_type(spark, fields[c]) for c in gcols],
+        [("sum", (fields[v], _arrow_type(spark, fields[v])) if minmax
+          else None) for v in vcols])
     gkeys = [f"__g_{i}" for i in range(len(gcols))]
     folds = [F.sum("__cnt").alias("__cnt")]
     for j in range(len(vcols)):
@@ -1787,24 +1723,21 @@ def grouped_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
     ])
 
     def per_group(g, acc):
-        if g.cells[1] is None:
-            return None  # all values NULL: never rank
-        uniq, g1 = _group_keys(g.cells[0], g.n_rows)
+        slot, _cnt, keys = _group_codes(g, g.cells[:1], [out_tg])
         rv, w, base, rank_to_idx = _value_ranks(g.cells[1], g.sel,
                                                 "grouped topk")
-        gw = g1[w]
-        if not len(gw):
-            return None
         # rank-sorted rows, then per-group slices of the extreme k
         order = np.argsort(rv, kind="stable")
         g_out, r_out = [], []
-        for gid, rs in _segments(gw[order], rv[order]):
+        for gid, rs in _segments(slot[w][order], rv[order]):
             rs = rs[:k] if ascending else rs[-k:]
             g_out.append(np.full(len(rs), gid))
             r_out.append(rs)
+        if not r_out:
+            return None  # no valid value survived: nothing ranks
         r_sel = np.concatenate(r_out)
         return pa.RecordBatch.from_arrays(
-            [_keys_at(uniq, out_tg, np.concatenate(g_out)),
+            [keys[0].take(pa.array(np.concatenate(g_out))),
              _ranked_arr(r_sel, np.ones(len(r_sel), dtype=bool), base,
                          rank_to_idx, out_tv)],
             names=["value", "item"])

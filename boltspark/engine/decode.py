@@ -177,21 +177,22 @@ def _to_arrow_full(values, validity, tag: str, target: pa.DataType | None = None
     return pa.array(full, mask=~validity)
 
 
-def _decode_mask(blk, stats: dict, predicate: Predicate):
+def _decode_mask(cross, stats: dict, predicate: Predicate):
     """Predicate column fast path -> (verdict, mask).
 
     Zone-map stats (a typed struct row, see schema._STATS_ARROW) answer
     without touching payload bytes whenever they can — ``all``/``none``
-    return BEFORE the block is even opened (the reference's uncovered
-    pages are never decompressed, primitive_column_reader.rs:515-521).
-    Dictionary blocks evaluate the predicate once per distinct value and
-    map over codes."""
+    return BEFORE the block's bytes even cross into Python (``cross()``
+    returns them; the reference's uncovered pages are never
+    decompressed, primitive_column_reader.rs:515-521).  Dictionary
+    blocks evaluate the predicate once per distinct value and map over
+    codes."""
     zone = predicate.check_zone(stats)
     if zone == NONE:
         return "none", None
     if zone == ALL:
         return "all", None
-    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
+    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(cross())
     if tag == "d128" and not getattr(predicate, "supports_d128", False):
         raise NotImplementedError(
             "this predicate cannot evaluate decimal(p>18) word pairs — "
@@ -211,12 +212,13 @@ def _decode_mask(blk, stats: dict, predicate: Predicate):
     return "some", mask
 
 
-def eval_group_predicate(pred, blk_of, st_of, i):
+def eval_group_predicate(pred, blk_of, st_of):
     """One predicate over one block group -> (verdict, mask).
 
-    ``blk_of(col, i)`` returns the column's block scalar (None or an
-    invalid scalar = column absent from this group's run — schema
-    evolution) and ``st_of(col, i)`` its zone-stats dict.  Leaves go
+    ``blk_of(col)`` returns None where the column is absent from this
+    group's run (schema evolution), else a callable that crosses its
+    block bytes into Python; ``st_of(col)`` returns its zone-stats
+    dict.  Leaves go
     through ``_decode_mask`` (zone short-circuits, dictionary fast
     path); composite predicates (OrPredicate/AndPredicate) recurse per
     child so every leaf KEEPS those short-circuits — an OR still skips
@@ -227,7 +229,7 @@ def eval_group_predicate(pred, blk_of, st_of, i):
         if pred.combine == "or":
             union = None
             for ch in kids:
-                v, m = eval_group_predicate(ch, blk_of, st_of, i)
+                v, m = eval_group_predicate(ch, blk_of, st_of)
                 if v == "all":
                     return "all", None
                 if v == "none":
@@ -240,7 +242,7 @@ def eval_group_predicate(pred, blk_of, st_of, i):
             return "some", union
         inter = None
         for ch in kids:
-            v, m = eval_group_predicate(ch, blk_of, st_of, i)
+            v, m = eval_group_predicate(ch, blk_of, st_of)
             if v == "none":
                 return "none", None
             if v == "all":
@@ -251,29 +253,27 @@ def eval_group_predicate(pred, blk_of, st_of, i):
         if inter is None:
             return "all", None
         return "some", inter
-    s = blk_of(pred.column, i)
-    if s is None or not s.is_valid:
+    cross = blk_of(pred.column)
+    if cross is None:
         # column absent from this group's run (schema evolution): the
         # whole column is null here — the zone rule for a missing column
         return pred.zone_verdict_cols(lambda c: None), None
-    return _decode_mask(s.as_py(), st_of(pred.column, i), pred)
+    return _decode_mask(cross, st_of(pred.column), pred)
 
 
-def resolve_mask(predicates, blk_cols, st_cols, i: int, mask=None):
+def resolve_mask(predicates, blk_of, st_of, mask=None):
     """The conjunctive cascade of one block group (row_group_reader.rs:
     204-258) -> 'none' | 'all' | full-length bool mask.
 
-    ``blk_cols``/``st_cols`` map each predicate column to its block /
-    zone-stats Arrow column.  Each predicate narrows the surviving
-    ``mask`` in turn (start from a row window's mask, or None for every
-    row); an all-false mask short-circuits the rest.  Composite
-    predicates (OR across columns, NOT) evaluate through
+    ``blk_of``/``st_of`` give a predicate column's lazy block and its
+    zone stats (see ``eval_group_predicate``).  Each predicate narrows
+    the surviving ``mask`` in turn (start from a row window's mask, or
+    None for every row); an all-false mask short-circuits the rest.
+    Composite predicates (OR across columns, NOT) evaluate through
     ``eval_group_predicate``, so their leaves keep the zone/dictionary
     fast paths."""
-    blk_of = lambda c, j: blk_cols[c][j]  # noqa: E731
-    st_of = lambda c, j: st_cols[c][j].as_py()  # noqa: E731
     for pred in predicates:
-        verdict, pmask = eval_group_predicate(pred, blk_of, st_of, i)
+        verdict, pmask = eval_group_predicate(pred, blk_of, st_of)
         if verdict == "none":
             return "none"
         if pmask is not None:
@@ -313,12 +313,17 @@ def resolve_predicates(predicate, meta: dict) -> list[Predicate]:
 
 def output_fields(meta: dict, columns: list[str] | None) -> list:
     """The logical StructFields a read returns: ``columns`` in order, or
-    every column.  Raises KeyError on an unknown name."""
+    every column.  Raises KeyError on an unknown name and ValueError on
+    a repeated one."""
     by_name = {f.name: f for f in _logical(meta).fields}
     names = list(columns or by_name)
     unknown = set(names) - set(by_name)
     if unknown:
         raise KeyError(f"unknown columns {unknown}; encoded: {list(by_name)}")
+    repeated = sorted({c for c in names if names.count(c) > 1})
+    if repeated:
+        raise ValueError(f"duplicate output columns {repeated}: name each "
+                         "column once")
     return [by_name[c] for c in names]
 
 
@@ -450,18 +455,18 @@ def _groups(batches, predicates: list[Predicate],
     row_group_reader.rs:188-198): groups outside it are skipped and a
     boundary group starts the cascade from the mask of its overlapping
     rows.  The cascade (``resolve_mask``) then skips groups it proves
-    empty, and a surviving group's cells cross into Python once."""
+    empty.  A block's bytes cross into Python at most once, and only
+    when read: a predicate block the zone answers never crosses, and a
+    predicate column that is also an output cell shares its crossing."""
     pcols = pred_columns(predicates)
     for batch in batches:
-        names = batch.schema.names
-        cells = [batch.column(j) for j, n in enumerate(names)
-                 if n.startswith("__blk_")]
+        names, cols = batch.schema.names, batch.columns
+        outs = [j for j, n in enumerate(names) if n.startswith("__blk_")]
         pids = batch.column(PART_ID).to_pylist()
         grows = batch.column("n_rows").to_pylist()
         # a predicate column's block: its output cell, else its own
-        blk_cols = {c: batch.column(names.index(
-            f"__blk_{c}" if f"__blk_{c}" in names else f"__pblk_{c}"))
-            for c in pcols}
+        pidx = {c: names.index(f"__blk_{c}" if f"__blk_{c}" in names
+                               else f"__pblk_{c}") for c in pcols}
         st_cols = {c: batch.column(f"__st_{c}") for c in pcols}
         if row_window is not None:
             start, end, offsets = row_window
@@ -479,12 +484,33 @@ def _groups(batches, predicates: list[Predicate],
                 if lo > 0 or hi < n_rows:  # boundary group: partial rows
                     mask = np.zeros(n_rows, dtype=bool)
                     mask[lo:hi] = True
-            mask = resolve_mask(predicates, blk_cols, st_cols, i, mask)
+            cell = _crossing(cols, i)
+
+            def blk_of(c, i=i, cell=cell):
+                j = pidx[c]
+                return (lambda: cell(j)) if cols[j][i].is_valid else None
+
+            mask = resolve_mask(predicates, blk_of,
+                                lambda c, i=i: st_cols[c][i].as_py(), mask)
             if isinstance(mask, str) and mask == "none":
                 continue
-            yield _Group(pids[i], n_rows, mask,
-                         [c[i].as_py() if c[i].is_valid else None
-                          for c in cells])
+            yield _Group(pids[i], n_rows, mask, [cell(j) for j in outs])
+
+
+def _crossing(cols, i: int):
+    """Row ``i``'s block cells of the Arrow columns ``cols`` as
+    ``cell(j)``: column j's block bytes, crossed into Python at most
+    once however many readers ask (the predicate cascade, the output
+    cells), or None where the group predates the column."""
+    crossed: dict = {}
+
+    def cell(j):
+        if j not in crossed:
+            s = cols[j][i]
+            crossed[j] = s.as_py() if s.is_valid else None
+        return crossed[j]
+
+    return cell
 
 
 def _scan(blocks, predicates: list[Predicate], out_schema, per_group,

@@ -4,16 +4,24 @@ SparkContext.addPyFile, so executors can import the kernels anywhere
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
 
 def build_package_zip(dest_dir: str | None = None) -> str:
+    """Zip the boltspark package into ``dest_dir`` -> the zip path.
+    Without ``dest_dir`` the zip goes to a fresh temporary directory,
+    removed when the interpreter exits (a session serves the zip from
+    there until then)."""
     import boltspark
 
     pkg_root = os.path.dirname(os.path.abspath(boltspark.__file__))
-    dest_dir = dest_dir or tempfile.mkdtemp(prefix="boltspark_ship_")
+    if dest_dir is None:
+        dest_dir = tempfile.mkdtemp(prefix="boltspark_ship_")
+        atexit.register(shutil.rmtree, dest_dir, ignore_errors=True)
     zip_path = os.path.join(dest_dir, "boltspark.zip")
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
         for dirpath, _dirnames, filenames in os.walk(pkg_root):

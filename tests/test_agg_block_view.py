@@ -15,6 +15,7 @@ import pyarrow as pa
 import pytest
 
 from boltspark.engine import agg
+from boltspark.engine.decode import _Group
 from boltspark.kernels import block as blockmod
 from boltspark.kernels import hll, strings
 from boltspark.kernels import quantile as qk
@@ -251,15 +252,57 @@ GROUP_CASES = [("i64", "dict"), ("i64", "rle"), ("i64", "plain"),
                ("bytes", "dict"), ("bytes", "plain"), ("bytes", "fsst")]
 
 
+def _coded_rows(blocks, mask):
+    """Per surviving row, the tuple of key values ``agg._group_codes``
+    gives each dimension, and its per-slot counts, checked for one row
+    per slot and ``cnt`` = surviving rows per slot."""
+    sel = np.ones(N, dtype=bool) if isinstance(mask, str) else mask
+    g = _Group(0, N, mask, list(blocks))
+    out_ts = [pa.int64() if b is None else
+              _OUT_T[blockmod.decode_block(b)[2]] for b in blocks]
+    slot, cnt, keys = agg._group_codes(g, list(blocks), out_ts)
+    combos = list(zip(*[k.to_pylist() for k in keys]))
+    assert len(combos) == len(set(combos)) == len(cnt)
+    rows = [combos[s] for s, ok in zip(slot.tolist(), sel) if ok]
+    assert np.bincount(slot[sel], minlength=len(cnt)).tolist() \
+        == np.asarray(cnt).tolist()
+    return rows, sel
+
+
+@pytest.mark.parametrize("mask", list(MASKS))
 @pytest.mark.parametrize("empty", [False, True])
 @pytest.mark.parametrize("tag,codec", GROUP_CASES)
-def test_group_keys_parity(tag, codec, empty):
+def test_group_codes_parity(tag, codec, empty, mask):
     blk = _block(tag, codec, empty)
-    ref = _full_reference(blk)
-    uniques, g1 = agg._group_keys(blk, N)
-    u = _pylist(uniques)
-    assert len(u) == len(set(u))
-    assert [None if c == 0 else u[c - 1] for c in g1.tolist()] == ref
+    rows, sel = _coded_rows([blk], MASKS[mask])
+    assert rows == [(r,) for r, ok in zip(_full_reference(blk), sel) if ok]
+
+
+@pytest.mark.parametrize("mask", list(MASKS))
+@pytest.mark.parametrize("other", ["bytes-dict", "f64-rle", "distinct"])
+def test_group_codes_composite_parity(other, mask):
+    """N = 2: a dict-coded i64 key with a second key; the per-row value
+    pairs are the two columns' rows.  The all-distinct second key makes
+    the code space wider than 4x the rows, so it ranks by sort."""
+    first = _block("i64", "dict")
+    if other == "distinct":
+        second = blockmod.encode_block(np.arange(N, dtype=np.int64) * 7,
+                                       "i64", "plain")
+    else:
+        second = _block(*other.split("-"))
+    rows, sel = _coded_rows([first, second], MASKS[mask])
+    ref = list(zip(_full_reference(first), _full_reference(second)))
+    assert rows == [r for r, ok in zip(ref, sel) if ok]
+
+
+@pytest.mark.parametrize("mask", list(MASKS))
+def test_group_codes_none_cell(mask):
+    """A None cell (the group predates the column) puts every row in
+    the NULL group of its dimension."""
+    blk = _block("bytes", "dict")
+    rows, sel = _coded_rows([None, blk], MASKS[mask])
+    assert rows == [(None, r) for r, ok in zip(_full_reference(blk), sel)
+                    if ok]
 
 
 @pytest.mark.parametrize("tag,codec", [c for c in GROUP_CASES
