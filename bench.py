@@ -110,6 +110,16 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.1
+    # deterministic corpus sized to the scale factor (~2 GB/sf of content)
+    mb = int(os.environ.get("BOLTSPARK_BENCH_MB", max(32, int(4096 * sf))))
+
+    import tempfile
+
+    from perfbench.host import check_free_space
+
+    # the corpus, its blocks, the scratch re-encode and the parquet
+    # reference all land in the temp dir
+    check_free_space(tempfile.gettempdir(), 4 * mb * 10**6)
 
     # host-phase probe BEFORE Spark exists (exclusive CPU): the number
     # that makes this run comparable to other rounds' runs
@@ -125,16 +135,12 @@ def main() -> None:
     spark = get_session("boltspark-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # deterministic corpus sized to the scale factor (~2 GB/sf of content)
-    mb = int(os.environ.get("BOLTSPARK_BENCH_MB", max(32, int(4096 * sf))))
     n_rows = int(mb * 1e6 / 2600)  # mean content length ≈ 2.6 KB
     corpus_path = f"/tmp/boltspark_bench_corpus_{n_rows}.parquet"
     if not os.path.exists(corpus_path):
         corpus.write_parquet(corpus_path, n_rows)
     df = spark.read.parquet(corpus_path)
     df.count()  # warm the scan
-
-    import tempfile
 
     # untimed warmup: start python workers, JIT scan paths
     warm = tempfile.mkdtemp(prefix="boltspark_bench_warm_")

@@ -11,6 +11,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import tempfile
 import time
 
@@ -44,33 +45,38 @@ def main() -> None:
     # untimed warmup: spin up every python worker, JIT the scan path, touch
     # the page cache — the timed run then measures the engine, not startup
     warm = tempfile.mkdtemp(prefix=f"boltspark_warm_{cpus}_", dir=os.environ.get("BOLTSPARK_WORK_DIR"))
-    encode_table(df.limit(4000), f"{warm}/blocks", f"{warm}/manifest",
-                 resume=False, n_parts=cpus)
-
     work = tempfile.mkdtemp(prefix=f"boltspark_scale_{cpus}_", dir=os.environ.get("BOLTSPARK_WORK_DIR"))
-    t0 = time.time()
-    res = encode_table(df, f"{work}/blocks", f"{work}/manifest", resume=False,
-                       n_parts=args.n_parts)
-    t_encode = time.time() - t0
+    try:
+        encode_table(df.limit(4000), f"{warm}/blocks", f"{warm}/manifest",
+                     resume=False, n_parts=cpus)
 
-    t0 = time.time()
-    decoded = decode_table(spark, f"{work}/blocks", f"{work}/manifest",
-                           n_tasks=args.n_parts)
-    n = decoded.count()
-    t_decode = time.time() - t0
+        t0 = time.time()
+        res = encode_table(df, f"{work}/blocks", f"{work}/manifest",
+                           resume=False, n_parts=args.n_parts)
+        t_encode = time.time() - t0
 
-    # correctness spot check rides along
-    mism = (
-        df.select(F.sha2("content", 256).alias("h")).groupBy("h").count()
-        .join(
-            decode_table(spark, f"{work}/blocks", f"{work}/manifest")
-            .select(F.sha2("content", 256).alias("h")).groupBy("h").count()
-            .withColumnRenamed("count", "c2"),
-            "h", "full_outer",
+        t0 = time.time()
+        decoded = decode_table(spark, f"{work}/blocks", f"{work}/manifest",
+                               n_tasks=args.n_parts)
+        n = decoded.count()
+        t_decode = time.time() - t0
+
+        # correctness spot check rides along
+        mism = (
+            df.select(F.sha2("content", 256).alias("h")).groupBy("h").count()
+            .join(
+                decode_table(spark, f"{work}/blocks", f"{work}/manifest")
+                .select(F.sha2("content", 256).alias("h")).groupBy("h").count()
+                .withColumnRenamed("count", "c2"),
+                "h", "full_outer",
+            )
+            .filter(F.col("count").isNull() | F.col("c2").isNull()
+                    | (F.col("count") != F.col("c2"))).count()
         )
-        .filter(F.col("count").isNull() | F.col("c2").isNull()
-                | (F.col("count") != F.col("c2"))).count()
-    )
+    finally:
+        # scaling runs repeat this job: its tables must not pile up
+        shutil.rmtree(warm, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
     out = {
         "cpus": cpus,

@@ -21,6 +21,8 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from perfbench.host import check_free_space  # noqa: E402
+
 
 def run_level_once(cpus: int, rows: int, corpus: str, n_parts: int,
                    zip_path: str) -> dict:
@@ -42,9 +44,17 @@ def run_level_once(cpus: int, rows: int, corpus: str, n_parts: int,
         "--rows", str(rows), "--corpus", corpus, "--json-out", out_json,
         "--n-parts", str(n_parts),
     ]
-    subprocess.run(cmd, check=True, capture_output=True, text=True)
-    with open(out_json) as f:
-        r = json.load(f)
+    # the job's tables: a copy of the raw corpus is ample for the blocks,
+    # the shuffle and the warmup together
+    check_free_space(os.environ.get("BOLTSPARK_WORK_DIR")
+                     or tempfile.gettempdir(), rows * 2600)
+    try:
+        subprocess.run(cmd, check=True, capture_output=True, text=True)
+        with open(out_json) as f:
+            r = json.load(f)
+    finally:
+        if os.path.exists(out_json):
+            os.remove(out_json)
     assert r["sha_mismatches"] == 0, "round-trip broke during bench!"
     return r
 

@@ -7,14 +7,15 @@ parquet_metadata_thrift.rs:657); this module pushes whole aggregations
 into the encoded domain, the classic "compute on compressed data" move
 of column stores:
 
-* ``rle`` blocks aggregate over (run_value, run_length) pairs — O(runs)
-  instead of O(rows), no ``np.repeat`` materialization;
-* ``dict`` blocks aggregate over (dictionary, code histogram) —
-  ``np.bincount`` of the code stream plus one pass over the distinct
-  values, never touching the decoded strings;
+* ``dict`` blocks aggregate over their code stream and dictionary —
+  the codes are the group labels and value ranks, the decoded strings
+  never materialize;
+* for distinct, HLL, quantiles and top-k (the ``_view`` reducers),
+  ``rle`` blocks aggregate over (run_value, run_length) pairs in
+  O(runs) and a dict block's dictionary stands in for its rows;
 * every other codec decodes the block normally but reduces it INSIDE
-  the task, so exactly one partial-aggregate row per block crosses the
-  executor boundary (map-side combine below the row level).
+  the task, so one partial-aggregate row per block (per group present)
+  crosses the executor boundary (map-side combine below the row level).
 
 With a ``predicate``, the same cascade the decoder runs applies first:
 JVM zone prefilters drop provably-dead groups before their bytes cross
@@ -41,10 +42,15 @@ empty view: every surviving row NULL, so no reducer tests for it.
 Every grouped reducer codes its keys through one helper,
 ``_group_codes``: N key cells -> the per-row combination slot, the
 surviving rows per slot and one key array per dimension (N = 1 is a
-single-column GROUP BY).  Grouped SUM / AVG / COUNT / MIN / MAX run on
-one reducer, ``_grouped_partials``, whose value columns each pick
-their lanes (int/float sum, exact decimal sum, typed min/max) through
-one per-column spec; ``grouped_minmax`` is a projection of it.
+single-column GROUP BY).  Every SUM / AVG / COUNT / MIN / MAX, grouped
+or scalar, and ``value_counts`` run on one lane reducer,
+``_grouped_partials``, whose value columns each pick their lanes
+(int/float sum, exact decimal sum, typed min/max, or the validity-only
+count) through one per-column spec: a scalar aggregate is N = 0 keys
+(every surviving row in one slot) and ``value_counts`` is N = 1 with
+no value column.  ``_fold_lanes`` folds the lane rows and
+``_final_sum`` is the one SUM finalization (NULL where no valid value
+contributed, as in Spark).
 
 At 100 TB the difference is structural: a GROUP BY over a dictionary-
 coded flag column moves (n_blocks x n_distinct) tiny rows through one
@@ -55,7 +61,8 @@ from __future__ import annotations
 
 import json as jsonmod
 import math
-from decimal import Decimal
+import re
+from decimal import Context, Decimal
 
 import numpy as np
 import pyarrow as pa
@@ -71,6 +78,10 @@ from .decode import (_Group, _blocks_proj, _scan, arrow_out_type,
 from .filters import Predicate
 from .memutil import trimmed
 from .schema import PART_ID
+
+# rescales decimals of every 128-bit unscaled value exactly (the default
+# context rounds to 28 digits)
+_EXACT = Context(prec=40)
 
 
 def _fields(meta: dict) -> dict:
@@ -200,7 +211,8 @@ def _dec_arr(unscaled_ints, out_t: "pa.DataType"):
     arrow decimal array.  Per-element Decimal construction — callers
     only pass aggregate RESULTS (<= k per block / one per group), never
     row streams."""
-    py = [None if x is None else Decimal(int(x)).scaleb(-out_t.scale)
+    py = [None if x is None
+          else Decimal(int(x)).scaleb(-out_t.scale, _EXACT)
           for x in unscaled_ints]
     return pa.array(py, out_t)
 
@@ -218,17 +230,6 @@ def _arrow_of(values, out_t: "pa.DataType"):
     else:
         arr = pa.array(np.asarray(values))
     return arr if arr.type.equals(out_t) else arr.cast(out_t)
-
-
-def _scalar_arr(v, out_t: "pa.DataType"):
-    """One reduced value (or None) -> 1-element Arrow array."""
-    if pa.types.is_decimal(out_t):
-        return _dec_arr([v], out_t)
-    if v is None:
-        return pa.nulls(1, out_t)
-    arr = (pa.array([v]) if isinstance(v, (bytes, str))
-           else pa.array(np.asarray([v])))
-    return arr.cast(out_t)
 
 
 def _rows_batch(rows: list[tuple], schema: pa.Schema):
@@ -250,111 +251,40 @@ def _plan(spark: SparkSession, blocks_path: str, manifest_path: str,
             predicates, meta)
 
 
-# ---------------------------------------------------------------- sums
+# ------------------------------------------------------ scalar aggregates
+# ``_grouped_partials`` with N = 0 key cells: one lane row per block
+# group that kept rows, folded into one row by ``_fold_lanes``.
 
-def _reduce_sum(v: np.ndarray, weights: np.ndarray | None = None):
-    acc = np.float64 if v.dtype.kind == "f" else np.int64
-    v = v.astype(acc)
-    s = v.sum() if weights is None else np.dot(v, weights.astype(acc))
-    return float(s) if acc is np.float64 else int(s)
-
-
-def _block_sum(blk: bytes, mask="all", exact_decimal: bool = False):
-    """(sum_of_non_null, n_rows_or_selected, n_valid) for one numeric
-    block under ``mask`` ('all' or a full-length bool row mask).
-
-    Unmasked, rle sums run_value * run_length (O(runs)) and dict sums
-    dictionary[code] via the code histogram (O(distinct + codes)); other
-    codecs decode-and-reduce in the task.  A row mask decodes ONLY the
-    surviving rows (late materialization).  ``exact_decimal`` sums the
-    unscaled integers of a decimal column exactly as a Python int: int64
-    low words for p<=18, (lo, hi) word pairs for the d128 storage."""
-    values, weights, tag, n, n_valid = _view(
-        blk, mask, "sum", ("bytes",) if exact_decimal else ("bytes", "d128"))
-    v = np.asarray(values)
-    if tag == "d128":  # exact Python ints, never weighted (plain only)
-        return int(v.sum()), n, n_valid
-    s = _reduce_sum(v, weights)
-    return (int(s) if exact_decimal else s), n, n_valid
+def _n(lane: str):
+    """A folded count lane, 0 over an empty selection."""
+    return F.coalesce(F.col(lane), F.lit(0))
 
 
-def _block_count(blk: bytes, mask) -> tuple[int, int]:
-    """(n_rows_or_selected, n_valid) from the block VALIDITY alone —
-    open_block parses the header + validity bitmap, values are never
-    decoded, so every tag counts.  A None block counts its surviving
-    rows, all NULL."""
-    if blk is None:
-        return int(mask.sum()), 0
-    _p, validity, _m, _t, _c, n_rows = blockmod.open_block(blk)
-    if isinstance(mask, str):  # 'all'
-        return n_rows, (int(validity.sum()) if validity is not None
-                        else n_rows)
-    n_sel = int(mask.sum())
-    return n_sel, (int(validity[mask].sum()) if validity is not None
-                   else n_sel)
-
-
-def _new_lanes() -> list:
-    return [0, 0.0, False, 0, 0, 0]  # s_l, s_d, is_f, s_dec, rows, nulls
-
-
-def _add_block(a: list, blk, mask, lane: str) -> None:
-    """Fold one block into sum lanes ``a`` (see ``_new_lanes``): lane
-    'sum' (int64 / float64), 'dec' (exact unscaled decimal) or 'count'
-    (validity only)."""
-    if lane == "count":
-        s, (n, nv) = 0, _block_count(blk, mask)
-    else:
-        s, n, nv = _block_sum(blk, mask, lane == "dec")
-    if lane == "dec":
-        a[3] += s
-    elif isinstance(s, float):
-        a[1] += s
-        a[2] = True
-    else:
-        a[0] += s
-    a[4] += n
-    a[5] += n - nv
-
-
-def _part_lanes(blocks: DataFrame, predicates: list[Predicate],
-                lanes: list[str], schema: pa.Schema, pick) -> DataFrame:
-    """Per-(task, part_id) lane partials of each projected column j,
-    folded by lane ``lanes[j]``: one ``(part_id, *pick(j, lanes))`` row
-    per partition and column that kept rows."""
-
-    def per_group(g, acc):
-        for j, lane in enumerate(lanes):
-            _add_block(acc.setdefault((g.pid, j), _new_lanes()),
-                       *_cell(g, j), lane)
-
-    def flush(acc):
-        return _rows_batch([(pid, *pick(j, a)) for (pid, j), a in acc.items()
-                            if a[4]], schema)
-
-    return _scan(blocks, predicates, schema, per_group, flush)
-
-
-_SUM_LANES = pa.schema([(PART_ID, pa.int32()), ("s_l", pa.int64()),
-                        ("s_d", pa.float64()), ("is_f", pa.bool_()),
-                        ("rows", pa.int64()), ("nulls", pa.int64())])
-_SUM_DEC_LANES = pa.schema([(PART_ID, pa.int32()),
-                            ("s_dec", pa.decimal128(38, 0)),
-                            ("rows", pa.int64()), ("nulls", pa.int64())])
-_COUNT_LANES = pa.schema([(PART_ID, pa.int32()), ("rows", pa.int64()),
-                          ("nulls", pa.int64())])
+def _sum_lanes(blocks: DataFrame, predicates: list[Predicate],
+               exact_decimal: bool) -> DataFrame:
+    """Per-block SUM lanes of one projected column on the pinned partial
+    names -> (part_id, s_l, s_d, is_f, rows, nulls), or (part_id, s_dec,
+    rows, nulls) with ``exact_decimal``: the N = 0 projection of
+    ``_grouped_partials``."""
+    lanes = ["s_dec"] if exact_decimal else ["s_l", "s_d", "is_f"]
+    spec = ("dec" if exact_decimal else "sum", None)
+    return _grouped_partials(blocks, predicates, [], [], [spec]).select(
+        PART_ID, *[F.col(f"__{n}_0").alias(n) for n in lanes],
+        F.col("__cnt").alias("rows"),
+        (F.col("__cnt") - F.col("__nv_0")).alias("nulls"))
 
 
 def column_sum(spark: SparkSession, blocks_path: str, manifest_path: str,
                column: str, predicate=None,
                run_ids: list[str] | None = None) -> DataFrame:
     """One-row DataFrame (column, sum_value, n_rows, n_nulls) computed in
-    the compressed domain: each task reduces its blocks to one partial
-    row; Spark's final aggregation folds the partials (exact int64 for
-    integer storage, float64 for floats).  ``predicate`` (one or a list,
-    ANDed) restricts the aggregate to surviving rows — zone maps answer
-    all/none without opening blocks; partially-surviving groups reduce a
-    selective decode of only the surviving rows.
+    the compressed domain: each block group reduces to one lane row;
+    Spark's final aggregation folds them (exact int64 for integer
+    storage, float64 for floats).  ``predicate`` (one or a list, ANDed)
+    restricts the aggregate to surviving rows — zone maps answer
+    all/none without opening blocks; partially-surviving groups reduce
+    only the surviving rows.  SQL semantics: the sum of a selection
+    without a valid value is NULL.
 
     Decimal columns sum EXACTLY in the unscaled-integer domain (int64
     low words for p<=18, (lo,hi) word-pair arithmetic in arbitrary-
@@ -363,61 +293,41 @@ def column_sum(spark: SparkSession, blocks_path: str, manifest_path: str,
     blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
                                      [column], predicate, run_ids)
     dt = _fields(meta)[column]
-    if isinstance(dt, T.DecimalType):
-        # per-task exact unscaled sums ride as decimal(38,0) partials
-        # (loud overflow past 38 digits at the Arrow boundary — never
-        # silent); the final fold divides by 10^scale as a decimal
-        return _fold_sum_dec(_sum_dec_partials(blocks, predicates), column,
-                             dt.scale)
-    return _fold_sum(_sum_partials(blocks, predicates), column)
+    # exact unscaled sums ride as decimal(38,0) partials (loud overflow
+    # past 38 digits at the Arrow boundary — never silent)
+    scale = dt.scale if isinstance(dt, T.DecimalType) else None
+    return _fold_sum(_sum_lanes(blocks, predicates, scale is not None),
+                     column, scale)
 
 
 def _sum_partials(blocks: DataFrame, predicates: list[Predicate]) -> DataFrame:
-    """Per-(task, part_id) partial sums over one projected blocks frame
-    -> (part_id, s_l, s_d, is_f, rows, nulls).  part_id rides along so
-    incremental consumers (streaming/agg_stream.py) can re-validate
-    partials against the manifest after compaction."""
-    return _part_lanes(blocks, predicates, ["sum"], _SUM_LANES,
-                       lambda _j, a: (a[0], a[1], a[2], a[4], a[5]))
-
-
-def _fold_sum(partials: DataFrame, column: str) -> DataFrame:
-    """Fold (part_id, s_l, s_d, is_f, rows, nulls) partials into the
-    one-row column_sum result."""
-    return (partials.agg(
-        F.sum("s_l").alias("s_l"), F.sum("s_d").alias("s_d"),
-        F.max("is_f").alias("is_f"), F.sum("rows").alias("n_rows"),
-        F.sum("nulls").alias("n_nulls"))
-        .select(F.lit(column).alias("column"),
-                F.when(F.col("is_f"), F.col("s_d") + F.col("s_l"))
-                .otherwise(F.col("s_l").cast("double")).alias("sum_value"),
-                F.coalesce(F.col("n_rows"), F.lit(0)).alias("n_rows"),
-                F.coalesce(F.col("n_nulls"), F.lit(0)).alias("n_nulls")))
+    """Per-part_id partial sums over one projected blocks frame ->
+    (part_id, s_l, s_d, is_f, rows, nulls): the per-block lanes folded
+    by part_id, so a streaming sink keeps at most one row per task and
+    part.  part_id rides along so incremental consumers
+    (streaming/agg_stream.py) can re-validate partials against the
+    manifest after compaction."""
+    return _fold_lanes(_sum_lanes(blocks, predicates, False), PART_ID)
 
 
 def _sum_dec_partials(blocks: DataFrame,
                       predicates: list[Predicate]) -> DataFrame:
-    """Per-(task, part_id) exact unscaled decimal partials over one
-    projected blocks frame -> (part_id, s_dec, rows, nulls).  part_id
-    rides along so incremental consumers (streaming/agg_stream.py) can
-    re-validate partials against the manifest — the decimal analog of
-    ``_sum_partials``."""
-    return _part_lanes(blocks, predicates, ["dec"], _SUM_DEC_LANES,
-                       lambda _j, a: (Decimal(a[3]), a[4], a[5]))
+    """Per-part_id exact unscaled decimal partials over one projected
+    blocks frame -> (part_id, s_dec, rows, nulls) — the decimal analog
+    of ``_sum_partials``."""
+    return _fold_lanes(_sum_lanes(blocks, predicates, True), PART_ID)
 
 
-def _fold_sum_dec(partials: DataFrame, column: str, scale: int) -> DataFrame:
-    """Fold (part_id, s_dec, rows, nulls) partials into the one-row
-    column_sum result for decimal storage (decimal-domain rescale)."""
-    divisor = F.lit(10 ** scale).cast(T.DecimalType(scale + 1, 0))
-    return (partials.agg(
-        F.sum("s_dec").alias("s_dec"), F.sum("rows").alias("n_rows"),
-        F.sum("nulls").alias("n_nulls"))
-        .select(F.lit(column).alias("column"),
-                (F.col("s_dec") / divisor)
-                .cast(T.DecimalType(38, scale)).alias("sum_value"),
-                F.coalesce(F.col("n_rows"), F.lit(0)).alias("n_rows"),
-                F.coalesce(F.col("n_nulls"), F.lit(0)).alias("n_nulls")))
+def _fold_sum(partials: DataFrame, column: str,
+              scale: int | None = None) -> DataFrame:
+    """Fold (part_id, s_l, s_d, is_f | s_dec, rows, nulls) partials into
+    the one-row column_sum result; ``scale`` folds exact s_dec partials
+    into decimal(38, scale)."""
+    return _fold_lanes(partials).select(
+        F.lit(column).alias("column"),
+        _final_sum(F.col("rows") - F.col("nulls"), F.col, scale)
+        .alias("sum_value"),
+        _n("rows").alias("n_rows"), _n("nulls").alias("n_nulls"))
 
 
 def column_sums(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -427,39 +337,29 @@ def column_sums(spark: SparkSession, blocks_path: str, manifest_path: str,
     column_sum calls would re-read the table N times.  The predicate
     mask resolves once per block group and is shared by every column.
     Returns one row per column: (column, sum_value double, n_rows,
-    n_nulls).  Decimal columns fold exactly in the unscaled decimal
-    domain and rescale at the end (use column_sum for a decimal(38,s)
-    result type); bytes/list columns raise."""
+    n_nulls); a column without a valid value sums NULL.  Decimal
+    columns fold exactly in the unscaled decimal domain and rescale at
+    the end (use column_sum for a decimal(38,s) result type); bytes/list
+    columns raise."""
     if not columns:
         raise ValueError("columns must be non-empty")
     col_list = list(columns)
     blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
                                      col_list, predicate)
     fields = _fields(meta)
-    # a decimal column's divisor 10^scale rides its partial rows
-    divs = [float(10 ** fields[c].scale)
-            if isinstance(fields[c], T.DecimalType) else None
-            for c in col_list]
-    schema = pa.schema([(PART_ID, pa.int32()), ("column", pa.string()),
-                        ("div", pa.float64()), ("s_l", pa.int64()),
-                        ("s_d", pa.float64()), ("is_f", pa.bool_()),
-                        ("s_dec", pa.decimal128(38, 0)),
-                        ("rows", pa.int64()), ("nulls", pa.int64())])
-    partials = _part_lanes(
-        blocks, predicates, ["sum" if d is None else "dec" for d in divs],
-        schema, lambda j, a: (col_list[j], divs[j], a[0], a[1], a[2],
-                              Decimal(a[3]), a[4], a[5]))
-    agg = partials.groupBy("column").agg(
-        F.max("div").alias("div"), F.sum("s_l").alias("s_l"),
-        F.sum("s_d").alias("s_d"), F.max("is_f").alias("is_f"),
-        F.sum("s_dec").alias("s_dec"),
-        F.sum("rows").alias("n_rows"), F.sum("nulls").alias("n_nulls"))
-    sum_col = (F.when(F.col("div").isNotNull(),
-                      F.col("s_dec").cast("double") / F.col("div"))
-               .when(F.col("is_f"), F.col("s_d") + F.col("s_l"))
-               .otherwise(F.col("s_l").cast("double")))
-    return agg.select("column", sum_col.alias("sum_value"),
-                      "n_rows", "n_nulls")
+    scales = [fields[c].scale if isinstance(fields[c], T.DecimalType)
+              else None for c in col_list]
+    folded = _fold_lanes(_grouped_partials(
+        blocks, predicates, [], [],
+        [("sum" if s is None else "dec", None) for s in scales]))
+    rows = [F.struct(
+        F.lit(c).alias("column"),
+        _final_sum(F.col(f"__nv_{j}"), lambda n, j=j: F.col(f"__{n}_{j}"),
+                   scale).cast("double").alias("sum_value"),
+        _n("__cnt").alias("n_rows"),
+        (_n("__cnt") - _n(f"__nv_{j}")).alias("n_nulls"))
+        for j, (c, scale) in enumerate(zip(col_list, scales))]
+    return folded.select(F.inline(F.array(*rows)))
 
 
 def column_avg(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -468,12 +368,11 @@ def column_avg(spark: SparkSession, blocks_path: str, manifest_path: str,
     """AVG(``column``) in the compressed domain with SQL null semantics:
     nulls leave both the numerator and the denominator (AVG over an
     all-null selection is NULL, never 0/0).  Built on ``column_sum``'s
-    partials, so the shuffle shape is identical (one partial row per
-    task).  Decimal columns sum exactly in the unscaled domain first
-    and divide once at the end (the quotient itself is a float64 —
-    document consumers that need digit-exact division should divide
-    ``column_sum`` themselves).  Returns one row:
-    (column, avg_value double, n_rows, n_nulls)."""
+    lanes, so the shuffle shape is identical.  Decimal columns sum
+    exactly in the unscaled domain first and divide once at the end
+    (the quotient itself is a float64 — document consumers that need
+    digit-exact division should divide ``column_sum`` themselves).
+    Returns one row: (column, avg_value double, n_rows, n_nulls)."""
     s = column_sum(spark, blocks_path, manifest_path, column,
                    predicate=predicate, run_ids=run_ids)
     n_valid = F.col("n_rows") - F.col("n_nulls")
@@ -488,115 +387,48 @@ def column_avg(spark: SparkSession, blocks_path: str, manifest_path: str,
 def column_count(spark: SparkSession, blocks_path: str, manifest_path: str,
                  column: str, predicate=None,
                  run_ids: list[str] | None = None) -> DataFrame:
-    """COUNT(``column``) / COUNT(*) in the compressed domain: each task
-    reads only block VALIDITY (open_block parses the header + validity
-    bitmap; values are never decoded), so the operator works for every
-    tag — including byte/list columns that ``column_sum`` refuses.
-    Under a predicate, partially-surviving blocks count
-    ``validity[mask]``.  Returns one row:
+    """COUNT(``column``) / COUNT(*) in the compressed domain: the
+    count-only lane reads block VALIDITY alone (open_block parses the
+    header + validity bitmap; values are never decoded), so the operator
+    works for every tag — including byte/list columns that
+    ``column_sum`` refuses.  Returns one row:
     (column, n_values, n_rows, n_nulls) where n_values = COUNT(column)
     and n_rows = COUNT(*) of the surviving selection."""
     blocks, predicates, _ = _plan(spark, blocks_path, manifest_path,
                                   [column], predicate, run_ids)
-    partials = _part_lanes(blocks, predicates, ["count"], _COUNT_LANES,
-                           lambda _j, a: (a[4], a[5]))
-    return (partials.agg(
-        F.sum("rows").alias("n_rows"), F.sum("nulls").alias("n_nulls"))
-        .select(F.lit(column).alias("column"),
-                (F.coalesce(F.col("n_rows"), F.lit(0))
-                 - F.coalesce(F.col("n_nulls"), F.lit(0))).alias("n_values"),
-                F.coalesce(F.col("n_rows"), F.lit(0)).alias("n_rows"),
-                F.coalesce(F.col("n_nulls"), F.lit(0)).alias("n_nulls")))
-
-
-# ------------------------------------------------ single-column scans
-
-def _block_value_counts(blk: bytes, mask="all"):
-    """(values, counts, n_null) for one block — values stay in their
-    kernel representation (StringColumn for bytes, ndarray otherwise),
-    counts int64, nulls reported separately (SQL GROUP BY semantics).
-    A row mask counts a selective decode of the surviving rows."""
-    values, weights, tag, n, n_valid = _view(blk, mask, "value_counts")
-    if weights is not None and tag == "bytes":  # a dictionary: distinct
-        return values, weights, n - n_valid
-    if tag == "bytes":
-        vc = pc.value_counts(strings.to_arrow(values))
-        varr = vc.field("values")
-        if isinstance(varr, pa.ChunkedArray):
-            varr = varr.combine_chunks()
-        return (strings.from_arrow(varr),
-                np.asarray(vc.field("counts")).astype(np.int64), n - n_valid)
-    if weights is None:
-        u, cnt = np.unique(np.asarray(values), return_counts=True)
-    else:
-        u, inv = np.unique(np.asarray(values), return_inverse=True)
-        cnt = np.bincount(inv, weights, minlength=len(u))
-    return u, cnt.astype(np.int64), n - n_valid
+    return _fold_lanes(_grouped_partials(
+        blocks, predicates, [], [], [(None, None)])).select(
+        F.lit(column).alias("column"), _n("__nv_0").alias("n_values"),
+        _n("__cnt").alias("n_rows"),
+        (_n("__cnt") - _n("__nv_0")).alias("n_nulls"))
 
 
 def value_counts(spark: SparkSession, blocks_path: str, manifest_path: str,
                  column: str, predicate=None,
                  run_ids: list[str] | None = None) -> DataFrame:
-    """GROUP BY ``column`` -> COUNT(*) in the compressed domain: dict
-    blocks contribute (dictionary value, code-histogram count) rows, rle
-    blocks (run value, summed lengths), others reduce with np.unique —
-    only per-block distinct values ride the final (tiny) shuffle.  A
-    NULL group row is emitted when the column has nulls (SQL GROUP BY
-    semantics).  ``predicate`` restricts counting to surviving rows.
-    Returns (value, cnt); value typed by the table schema."""
+    """GROUP BY ``column`` -> COUNT(*) in the compressed domain: the
+    column is the one key of ``_grouped_partials`` (N = 1, no value
+    columns), so a dict block counts its code stream without
+    materializing values and only per-block distinct values ride the
+    final (tiny) shuffle.  A NULL group row is emitted when the column
+    has nulls (SQL GROUP BY semantics).  ``predicate`` restricts
+    counting to surviving rows.  Returns (value, cnt); value typed by
+    the table schema."""
     blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
                                      [column], predicate, run_ids)
-    partials = _vc_partials(spark, blocks, predicates, _fields(meta)[column])
-    return (partials.groupBy("value").agg(F.sum("cnt").alias("cnt")))
+    return _fold_lanes(_vc_partials(spark, blocks, predicates,
+                                    _fields(meta)[column]), "value")
 
 
 def _vc_partials(spark: SparkSession, blocks: DataFrame,
                  predicates: list[Predicate], value_type) -> DataFrame:
     """Per-block (part_id, value, cnt) partial histograms over one
-    projected blocks frame; fold with groupBy(value).sum(cnt)."""
-    out_schema = T.StructType([
-        T.StructField(PART_ID, T.IntegerType(), False),
-        T.StructField("value", value_type, True),
-        T.StructField("cnt", T.LongType(), False),
-    ])
-    out_t = _arrow_type(spark, value_type)
-
-    def per_group(g, acc):
-        u, cnt, n_null = _block_value_counts(*_cell(g, 0))
-        varr = _arrow_of(u, out_t)
-        if n_null:
-            varr = pa.concat_arrays([varr, pa.nulls(1, out_t)])
-            cnt = np.append(cnt, n_null)
-        return pa.RecordBatch.from_arrays(
-            [pa.array(np.full(len(varr), g.pid, dtype=np.int32)), varr,
-             pa.array(cnt, pa.int64())], names=[PART_ID, "value", "cnt"])
-
-    return _scan(blocks, predicates, out_schema, per_group)
-
-
-def _minmax_of(values, tag: str):
-    if not len(values):
-        return None, None
-    if tag == "bytes":
-        mm = pc.min_max(strings.to_arrow(values))
-        return mm["min"].as_py(), mm["max"].as_py()
-    v = np.asarray(values)
-    nan = np.isnan(v) if v.dtype.kind == "f" else None
-    if nan is not None and nan.any():  # Spark order: NaN above +inf
-        return (v[nan][0] if nan.all() else v[~nan].min()), v[nan][0]
-    return v.min(), v.max()
-
-
-def _block_minmax(blk: bytes, mask="all"):
-    """(vmin, vmax, n_rows_or_selected, n_valid) for one block,
-    value-exact (unlike the float64 zone stats): dict blocks reduce
-    their dictionary, rle blocks their run values (O(runs)), everything
-    else decodes dense (a row mask: only the surviving rows).  Floats
-    follow Spark's order (NaN is the largest value).  Returns numpy
-    scalars / bytes; d128 blocks return exact Python ints (unscaled)."""
-    values, _w, tag, n, n_valid = _view(blk, mask, "min/max", (),
-                                        weighted=False)
-    return (*_minmax_of(values, tag), n, n_valid)
+    projected blocks frame: ``_grouped_partials`` keyed by the column
+    alone; fold with groupBy(value).sum(cnt)."""
+    return _grouped_partials(
+        blocks, predicates, [value_type],
+        [_arrow_type(spark, value_type)], []).select(
+        PART_ID, F.col("__g_0").alias("value"), F.col("__cnt").alias("cnt"))
 
 
 def column_minmax(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -604,34 +436,22 @@ def column_minmax(spark: SparkSession, blocks_path: str, manifest_path: str,
                   run_ids: list[str] | None = None) -> DataFrame:
     """One-row (column, vmin, vmax, n_rows, n_nulls), value-exact and
     predicate-aware — the companion to stats.column_minmax (which reads
-    only float64 zone leaves and can't filter).  Sorted dictionaries
-    answer min/max in O(1); the result is typed by the table schema, so
-    int64 beyond 2^53 and byte strings stay exact."""
+    only float64 zone leaves and can't filter).  The min/max lanes of
+    ``_grouped_partials`` are typed by the table schema, so int64
+    beyond 2^53, d128 decimals and byte strings stay exact; floats
+    follow Spark's order (NaN is the largest value)."""
     blocks, predicates, meta = _plan(spark, blocks_path, manifest_path,
                                      [column], predicate, run_ids)
     dt = _fields(meta)[column]
-    out_t = _arrow_type(spark, dt)
-    out_schema = T.StructType([
-        T.StructField("vmin", dt, True),
-        T.StructField("vmax", dt, True),
-        T.StructField("rows", T.LongType(), False),
-        T.StructField("nulls", T.LongType(), False),
-    ])
+    return _fold_lanes(_grouped_partials(
+        blocks, predicates, [], [],
+        [(None, (dt, _arrow_type(spark, dt)))])).select(
+        F.lit(column).alias("column"), F.col("__mn_0").alias("vmin"),
+        F.col("__mx_0").alias("vmax"), _n("__cnt").alias("n_rows"),
+        (_n("__cnt") - _n("__nv_0")).alias("n_nulls"))
 
-    def per_group(g, acc):
-        lo, hi, n, nv = _block_minmax(*_cell(g, 0))
-        return pa.RecordBatch.from_arrays(
-            [_scalar_arr(lo, out_t), _scalar_arr(hi, out_t),
-             pa.array([n], pa.int64()), pa.array([n - nv], pa.int64())],
-            names=["vmin", "vmax", "rows", "nulls"])
 
-    partials = _scan(blocks, predicates, out_schema, per_group)
-    return partials.agg(
-        F.min("vmin").alias("vmin"), F.max("vmax").alias("vmax"),
-        F.coalesce(F.sum("rows"), F.lit(0)).alias("n_rows"),
-        F.coalesce(F.sum("nulls"), F.lit(0)).alias("n_nulls")).select(
-        F.lit(column).alias("column"), "vmin", "vmax", "n_rows", "n_nulls")
-
+# ------------------------------------------------ single-column scans
 
 def _block_distinct(blk: bytes, mask):
     """Distinct non-null values of one block (None when it has none):
@@ -1004,7 +824,7 @@ def _threshold_pred(column: str, dt, bound, ascending: bool,
                           RangePredicate)
 
     if isinstance(dt, T.DecimalType):
-        b = int(bound.scaleb(dt.scale))
+        b = int(bound.scaleb(dt.scale, _EXACT))
         cls = Decimal128RangePredicate if dt.precision > 18 else RangePredicate
     elif dt.typeName() in ("string", "binary"):
         b = bound.encode() if isinstance(bound, str) else bound
@@ -1113,7 +933,12 @@ def _group_codes(g: _Group, cells: list, out_ts: list):
     ``g.sel``), ``cnt`` counts the surviving rows of each slot and
     ``keys`` holds one Arrow key array per dimension, of type
     ``out_ts[i]``, so memory scales with the combinations present.
-    N = 1 is a single-column GROUP BY."""
+    N = 1 is a single-column GROUP BY; N = 0 (a scalar aggregate) puts
+    every surviving row in slot 0."""
+    if not cells:
+        n = g.n_sel
+        return (np.zeros(g.n_rows, dtype=np.int64),
+                np.array([n] if n else [], dtype=np.int64), [])
     coded = [_coded(_open(c, "group-by", n_rows=g.n_rows)) for c in cells]
     dims = [len(u) + 1 for u, _c, _v in coded]
     radix = math.prod(dims)  # python ints: no wraparound in the check
@@ -1126,19 +951,19 @@ def _group_codes(g: _Group, cells: list, out_ts: list):
     comp = 0
     for dd, (_u, codes, validity) in zip(dims, coded):
         comp = comp * dd + _full(codes + 1, validity)
-    sel_idx = np.nonzero(g.sel)[0]
+    surviving = comp if isinstance(g.mask, str) else comp[g.mask]
     # a code space within a few times the block's rows ranks the
     # combinations by histogram (O(rows)), a wider one by sorting
     if radix <= 4 * len(comp):
-        hist = np.bincount(comp[sel_idx], minlength=radix)
+        hist = np.bincount(surviving, minlength=radix)
         combos = np.flatnonzero(hist)
         slot = (np.cumsum(hist > 0) - 1)[comp]
         cnt = hist[combos]
     else:
-        combos, inv, cnt = np.unique(comp[sel_idx], return_inverse=True,
+        combos, inv, cnt = np.unique(surviving, return_inverse=True,
                                      return_counts=True)
         slot = np.zeros(len(comp), dtype=np.int64)
-        slot[sel_idx] = inv
+        slot[g.sel] = inv
     # decompose the composite codes, last dimension first
     keys = []
     for (u, _c, _v), dd, out_t in reversed(list(zip(coded, dims, out_ts))):
@@ -1170,11 +995,16 @@ def _value_ranks(blk: bytes | None, sel: np.ndarray, what: str,
     the code stream maps rows to ranks, so strings never compare
     row-by-row.  ``base``/``rank_to_idx`` map a rank back to its value
     (``base.take(rank_to_idx[rank])``); numeric values rank as
-    themselves (base=None), d128 word pairs as exact Python ints."""
+    themselves (base=None), d128 word pairs as exact Python ints, and a
+    dict or rle block gathers its uniques by code, never decoding
+    dense."""
     opened = _open(blk, what, bad, len(sel))
-    _p, validity, _m, tag, *_ = opened
+    _p, validity, _m, tag, codec, *_ = opened
     base = rank_to_idx = None
-    if tag != "bytes":
+    if tag != "bytes" and codec in ("dict", "rle"):
+        uniques, codes, _v = _coded(opened)
+        ranks = np.asarray(uniques)[codes]
+    elif tag != "bytes":
         ranks = np.asarray(_dense(opened))
         if tag == "d128":
             ranks = _d128_ints(ranks)
@@ -1185,8 +1015,10 @@ def _value_ranks(blk: bytes | None, sel: np.ndarray, what: str,
         rank_of = np.empty(len(base), np.int64)
         rank_of[rank_to_idx] = np.arange(len(base))
         ranks = rank_of[codes]
-    w = sel if validity is None else validity & sel
-    return _full(ranks, validity)[w], w, base, rank_to_idx
+    # ranks hold the valid rows: keep those that survive ``sel``
+    keep = sel if validity is None else sel[validity]
+    return ((ranks if keep.all() else ranks[keep]),
+            (sel if validity is None else validity & sel), base, rank_to_idx)
 
 
 def _ranked_arr(reduced, got, base, rank_to_idx, out_t):
@@ -1237,7 +1069,7 @@ def _extremes(vals: np.ndarray, labels: np.ndarray, nb: int):
     without a value keeps the +/- extreme (mask it by label count).
     Floats follow Spark's order, NaN above +inf: MIN skips NaN unless
     every value of the label is NaN, MAX is NaN once the label holds
-    one."""
+    one.  d128 values reduce as exact Python ints."""
     if vals.dtype.kind == "f":
         mins, maxs = np.full(nb, np.inf), np.full(nb, -np.inf)
         np.fmin.at(mins, labels, vals)
@@ -1247,85 +1079,137 @@ def _extremes(vals: np.ndarray, labels: np.ndarray, nb: int):
         mins[only_nan] = np.nan
         maxs[n_nan > 0] = np.nan
         return mins, maxs
-    if vals.dtype.kind not in "iu":  # bool, or an absent column's ranks
-        vals = vals.astype(np.int64)
-    # the values' own width, so a date's int32 casts back to date32
-    ii = np.iinfo(vals.dtype)
-    mins = np.full(nb, ii.max, dtype=vals.dtype)
-    maxs = np.full(nb, ii.min, dtype=vals.dtype)
+    if vals.dtype.kind == "O":  # d128: bounds past every 128-bit value
+        mins, maxs = np.full(nb, 1 << 128, object), np.full(nb, -1 << 128,
+                                                             object)
+    else:
+        if vals.dtype.kind not in "iu":  # bool, or an absent column's ranks
+            vals = vals.astype(np.int64)
+        # the values' own width, so a date's int32 casts back to date32
+        ii = np.iinfo(vals.dtype)
+        mins = np.full(nb, ii.max, dtype=vals.dtype)
+        maxs = np.full(nb, ii.min, dtype=vals.dtype)
     np.minimum.at(mins, labels, vals)
     np.maximum.at(maxs, labels, vals)
     return mins, maxs
 
 
-# per sum lane of a value spec: (the reduction it names, the tags it refuses)
-_SUM_LANE = {"sum": ("sum", ("bytes", "d128")), "dec": ("sum", ("bytes",)),
-             None: ("grouped min/max", ("d128",))}
+# per sum lane of a value spec: (the reduction it names, the tags it
+# refuses, its lane columns); (None, None) is the count-only lane
+_LANES = {"sum": ("sum", ("bytes", "d128"),
+                  [("s_l", T.LongType()), ("s_d", T.DoubleType()),
+                   ("is_f", T.BooleanType())]),
+          "dec": ("sum", ("bytes",), [("s_dec", T.DecimalType(38, 0))]),
+          None: ("min/max", (), [])}
+
+
+def _group_lanes(g: _Group, group_out_ts: list, specs: list):
+    """The per-group step of ``_grouped_partials``: the first N cells of
+    ``g`` are its keys (``group_out_ts`` their Arrow types), the rest
+    its value columns -> one RecordBatch row per key combination the
+    surviving rows hold (N = 0: one row when any row survives)."""
+    ng = len(group_out_ts)
+    slot, cnt, keys = _group_codes(g, g.cells[:ng], group_out_ts)
+    nk = len(cnt)
+    out = {PART_ID: pa.array(np.full(nk, g.pid, np.int32), pa.int32()),
+           **{f"__g_{i}": k for i, k in enumerate(keys)},
+           "__cnt": pa.array(cnt, pa.int64())}
+    for j, (cell, (lane, minmax)) in enumerate(zip(g.cells[ng:], specs)):
+        if lane is None and not minmax:  # COUNT: validity alone, any tag
+            valid = (np.zeros(g.n_rows, bool) if cell is None
+                     else blockmod.open_block(cell)[1])
+            pos = slot[g.sel if valid is None else g.sel & valid]
+        else:
+            rv, w, base, rank_to_idx = _value_ranks(cell, g.sel,
+                                                    *_LANES[lane][:2])
+            pos = slot[w]
+        nv = np.bincount(pos, minlength=nk)
+        out[f"__nv_{j}"] = pa.array(nv, pa.int64())
+        if lane == "dec":
+            s = np.zeros(nk, dtype=object)
+            np.add.at(s, pos, rv.astype(object))
+            out[f"__s_dec_{j}"] = pa.array([Decimal(int(x)) for x in s],
+                                           pa.decimal128(38, 0))
+        elif lane == "sum":
+            is_f = rv.dtype.kind == "f"
+            s_l = np.zeros(nk, dtype=np.int64)
+            s_d = np.zeros(nk, dtype=np.float64)
+            if is_f:
+                s_d = np.bincount(pos, weights=rv, minlength=nk)
+            else:
+                np.add.at(s_l, pos, rv.astype(np.int64, copy=False))
+            out[f"__s_l_{j}"] = pa.array(s_l, pa.int64())
+            out[f"__s_d_{j}"] = pa.array(s_d, pa.float64())
+            out[f"__is_f_{j}"] = pa.array(np.full(nk, is_f), pa.bool_())
+        if minmax:
+            for name, m in zip(("mn", "mx"), _extremes(rv, pos, nk)):
+                out[f"__{name}_{j}"] = _ranked_arr(m, nv > 0, base,
+                                                   rank_to_idx, minmax[1])
+    return pa.RecordBatch.from_pydict(out)
 
 
 def _grouped_partials(blocks: DataFrame, predicates: list[Predicate],
                       group_types: list, group_out_ts: list,
                       specs: list) -> DataFrame:
-    """The one grouped reducer, over ``blocks`` projecting N group then
-    M value columns.  A block group's keys code once
-    (``_group_codes``) and every value column reduces against the same
-    slots: one row per (block, combination present) -> (part_id,
-    __g_0.., __cnt, then per value column j its valid count __nv_j and
-    the lanes its spec ``(sum_lane, minmax)`` picks).  ``sum_lane``
-    'sum' adds the __sl_j/__sd_j/__if_j int64/float64 sums, 'dec' one
-    exact unscaled __dec_j decimal(38,0), None neither; ``minmax`` =
-    (Spark type, Arrow type) adds __mn_j/__mx_j typed by the column."""
-    ng = len(group_types)
+    """The one lane reducer of every grouped and scalar aggregate, over
+    ``blocks`` projecting N group then M value columns.  A block
+    group's keys code once (``_group_codes``; N = 0 for a scalar
+    aggregate) and every value column reduces against the same slots:
+    one row per (block, combination present) -> (part_id, __g_0..,
+    __cnt, then per value column j its valid count __nv_j and the lanes
+    its spec ``(sum_lane, minmax)`` picks).  ``sum_lane`` 'sum' adds the
+    __s_l_j/__s_d_j/__is_f_j int64/float64 sums, 'dec' one exact
+    unscaled __s_dec_j decimal(38,0), None neither; ``minmax`` = (Spark
+    type, Arrow type) adds __mn_j/__mx_j typed by the column.  The spec
+    (None, None) counts valid values from the validity alone, so it
+    serves every tag.  Fold the rows with ``_fold_lanes``."""
     fields = ([T.StructField(PART_ID, T.IntegerType(), False)]
               + [T.StructField(f"__g_{i}", t, True)
                  for i, t in enumerate(group_types)]
               + [T.StructField("__cnt", T.LongType(), False)])
     for j, (lane, minmax) in enumerate(specs):
         fields.append(T.StructField(f"__nv_{j}", T.LongType(), False))
-        if lane == "dec":
-            fields.append(T.StructField(f"__dec_{j}", T.DecimalType(38, 0),
-                                        True))
-        elif lane == "sum":
-            fields += [T.StructField(f"__sl_{j}", T.LongType(), False),
-                       T.StructField(f"__sd_{j}", T.DoubleType(), False),
-                       T.StructField(f"__if_{j}", T.BooleanType(), False)]
+        fields += [T.StructField(f"__{n}_{j}", t, n == "s_dec")
+                   for n, t in _LANES[lane][2]]
         if minmax:
-            fields += [T.StructField(f"__mn_{j}", minmax[0], True),
-                       T.StructField(f"__mx_{j}", minmax[0], True)]
-    out_schema = T.StructType(fields)
+            fields += [T.StructField(f"__{n}_{j}", minmax[0], True)
+                       for n in ("mn", "mx")]
+    return _scan(blocks, predicates, T.StructType(fields),
+                 lambda g, acc: _group_lanes(g, group_out_ts, specs))
 
-    def per_group(g, acc):
-        slot, cnt, keys = _group_codes(g, g.cells[:ng], group_out_ts)
-        nk = len(cnt)
-        out = [pa.array(np.full(nk, g.pid, np.int32), pa.int32()), *keys,
-               pa.array(cnt, pa.int64())]
-        for cell, (lane, minmax) in zip(g.cells[ng:], specs):
-            rv, w, base, rank_to_idx = _value_ranks(cell, g.sel,
-                                                    *_SUM_LANE[lane])
-            pos = slot[w]
-            nv = np.bincount(pos, minlength=nk)
-            out.append(pa.array(nv, pa.int64()))
-            if lane == "dec":
-                s = np.zeros(nk, dtype=object)
-                np.add.at(s, pos, rv.astype(object))
-                out.append(pa.array([Decimal(int(x)) for x in s],
-                                    pa.decimal128(38, 0)))
-            elif lane == "sum":
-                is_f = rv.dtype.kind == "f"
-                s_l = np.zeros(nk, dtype=np.int64)
-                s_d = np.zeros(nk, dtype=np.float64)
-                if is_f:
-                    s_d = np.bincount(pos, weights=rv, minlength=nk)
-                else:
-                    np.add.at(s_l, pos, rv.astype(np.int64))
-                out += [pa.array(s_l, pa.int64()), pa.array(s_d, pa.float64()),
-                        pa.array(np.full(nk, is_f), pa.bool_())]
-            if minmax:
-                out += [_ranked_arr(m, nv > 0, base, rank_to_idx, minmax[1])
-                        for m in _extremes(rv, pos, nk)]
-        return pa.RecordBatch.from_arrays(out, names=out_schema.names)
 
-    return _scan(blocks, predicates, out_schema, per_group)
+# how each lane folds across partial rows, by lane name: pinned partial
+# columns carry it bare (s_l), ``_grouped_partials`` rows as __s_l_<j>
+_FOLDS = {"cnt": F.sum, "nv": F.sum, "rows": F.sum, "nulls": F.sum,
+          "s_l": F.sum, "s_d": F.sum, "is_f": F.max, "s_dec": F.sum,
+          "mn": F.min, "mx": F.max}
+
+
+def _fold_lanes(partials: DataFrame, *keys: str) -> DataFrame:
+    """Fold lane partials by ``keys`` (none: into one row), each lane
+    column by its rule in ``_FOLDS``; other columns (part_id, run_id)
+    drop out."""
+    folds = [_FOLDS[lane](c).alias(c) for c in partials.columns
+             if c not in keys
+             and (lane := re.sub(r"^__|_\d+$", "", c)) in _FOLDS]
+    return partials.groupBy(*keys).agg(*folds)
+
+
+def _final_sum(nv, lane, scale: int | None = None):
+    """The one SUM finalization over folded lanes, ``lane(name)`` giving
+    the Column of lane ``name``: NULL when no valid value contributed
+    (``nv == 0``, SQL SUM), else the exact ``s_dec / 10^scale`` as
+    decimal(38, scale) when ``scale`` is given, else ``s_d + s_l`` once
+    a float lane contributed and ``s_l`` as a double otherwise."""
+    if scale is None:
+        t = T.DoubleType()
+        s = (F.when(lane("is_f"), lane("s_d") + lane("s_l"))
+             .otherwise(lane("s_l").cast(t)))
+    else:
+        t = T.DecimalType(38, scale)
+        divisor = F.lit(10 ** scale).cast(T.DecimalType(scale + 1, 0))
+        s = (lane("s_dec") / divisor).cast(t)
+    return F.when(nv == 0, F.lit(None).cast(t)).otherwise(s)
 
 
 def grouped_sum(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -1362,36 +1246,21 @@ def _gsum_partials(blocks: DataFrame, predicates: list[Predicate],
     incremental consumers can re-validate partials against the
     manifest's live pairs.  ``exact_decimal`` replaces the s_l/s_d/is_f
     lanes with one exact unscaled s_dec decimal(38,0) lane."""
-    lanes = ([F.col("__dec_0").alias("s_dec")] if exact_decimal else
-             [F.col("__sl_0").alias("s_l"), F.col("__sd_0").alias("s_d"),
-              F.col("__if_0").alias("is_f")])
+    lanes = ["s_dec"] if exact_decimal else ["s_l", "s_d", "is_f"]
     spec = ("dec" if exact_decimal else "sum", None)
     return _grouped_partials(blocks, predicates, [group_type], [out_t],
                              [spec]).select(
         PART_ID, F.col("__g_0").alias("value"), F.col("__cnt").alias("cnt"),
-        F.col("__nv_0").alias("nv"), *lanes)
+        F.col("__nv_0").alias("nv"),
+        *[F.col(f"__{n}_0").alias(n) for n in lanes])
 
 
 def _fold_gsum(partials: DataFrame, scale: int | None = None) -> DataFrame:
     """Fold grouped-sum partials into the (value, sum_value, cnt)
     result with SQL null semantics (all-null group sums NULL);
     ``scale`` folds exact s_dec partials into decimal(38, scale)."""
-    if scale is None:
-        lanes = [F.sum("s_l").alias("s_l"), F.sum("s_d").alias("s_d"),
-                 F.max("is_f").alias("is_f")]
-        s, null_t = (F.when(F.col("is_f"), F.col("s_d") + F.col("s_l"))
-                     .otherwise(F.col("s_l").cast("double"))), "double"
-    else:
-        null_t = T.DecimalType(38, scale)
-        lanes = [F.sum("s_dec").alias("s_dec")]
-        divisor = F.lit(10 ** scale).cast(T.DecimalType(scale + 1, 0))
-        s = (F.col("s_dec") / divisor).cast(null_t)
-    agg = partials.groupBy("value").agg(
-        F.sum("cnt").alias("cnt"), F.sum("nv").alias("nv"), *lanes)
-    return agg.select(
-        "value",
-        F.when(F.col("nv") == 0, F.lit(None).cast(null_t)).otherwise(s)
-        .alias("sum_value"),
+    return _fold_lanes(partials, "value").select(
+        "value", _final_sum(F.col("nv"), F.col, scale).alias("sum_value"),
         "cnt")
 
 
@@ -1603,10 +1472,9 @@ def grouped_minmax(spark: SparkSession, blocks_path: str,
     _reject_d128("grouped_minmax", vt, "column_minmax")
     partials = _grouped_partials(blocks, predicates, [gt], [out_tg],
                                  [(None, (vt, _arrow_type(spark, vt)))])
-    return (partials.groupBy(F.col("__g_0").alias("value"))
-            .agg(F.min("__mn_0").alias("min_value"),
-                 F.max("__mx_0").alias("max_value"),
-                 F.sum("__cnt").alias("cnt")))
+    return _fold_lanes(partials, "__g_0").select(
+        F.col("__g_0").alias("value"), F.col("__mn_0").alias("min_value"),
+        F.col("__mx_0").alias("max_value"), F.col("__cnt").alias("cnt"))
 
 
 def grouped_aggs(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -1652,29 +1520,17 @@ def grouped_aggs(spark: SparkSession, blocks_path: str, manifest_path: str,
         [("sum", (fields[v], _arrow_type(spark, fields[v])) if minmax
           else None) for v in vcols])
     gkeys = [f"__g_{i}" for i in range(len(gcols))]
-    folds = [F.sum("__cnt").alias("__cnt")]
-    for j in range(len(vcols)):
-        folds += [F.sum(f"__nv_{j}").alias(f"__nv_{j}"),
-                  F.sum(f"__sl_{j}").alias(f"__sl_{j}"),
-                  F.sum(f"__sd_{j}").alias(f"__sd_{j}"),
-                  F.max(f"__if_{j}").alias(f"__if_{j}")]
-        if minmax:
-            folds += [F.min(f"__mn_{j}").alias(f"__mn_{j}"),
-                      F.max(f"__mx_{j}").alias(f"__mx_{j}")]
-    agg = partials.groupBy(*gkeys).agg(*folds)
     outs = [F.col(k).alias(c) for k, c in zip(gkeys, gcols)]
     for j, v in enumerate(vcols):
-        s = (F.when(F.col(f"__nv_{j}") == 0, F.lit(None).cast("double"))
-             .when(F.col(f"__if_{j}"), F.col(f"__sd_{j}") + F.col(f"__sl_{j}"))
-             .otherwise(F.col(f"__sl_{j}").cast("double")))
-        outs.append(s.alias(f"sum_{v}"))
-        outs.append((s / F.col(f"__nv_{j}")).alias(f"avg_{v}"))
-        outs.append(F.col(f"__nv_{j}").alias(f"n_{v}"))
+        nv = F.col(f"__nv_{j}")
+        s = _final_sum(nv, lambda n, j=j: F.col(f"__{n}_{j}"))
+        outs += [s.alias(f"sum_{v}"), (s / nv).alias(f"avg_{v}"),
+                 nv.alias(f"n_{v}")]
         if minmax:
             outs += [F.col(f"__mn_{j}").alias(f"min_{v}"),
                      F.col(f"__mx_{j}").alias(f"max_{v}")]
     outs.append(F.col("__cnt").alias("cnt"))
-    return agg.select(*outs)
+    return _fold_lanes(partials, *gkeys).select(*outs)
 
 
 def grouped_avg(spark: SparkSession, blocks_path: str, manifest_path: str,

@@ -36,8 +36,18 @@ def build_package_zip(dest_dir: str | None = None) -> str:
     return zip_path
 
 
+# applicationId -> the zip its SparkContext was given
+_shipped: dict[str, str] = {}
+
+
 def ship_package(spark) -> str:
-    """addPyFile the package zip to a live session; returns the zip path."""
-    zip_path = build_package_zip()
-    spark.sparkContext.addPyFile(zip_path)
-    return zip_path
+    """addPyFile the package zip to a live session, once per SparkContext
+    (a second addPyFile of the same name with other bytes fails every
+    later task); returns the zip path.  A stopped and recreated context
+    has a new applicationId, so it ships again."""
+    sc = spark.sparkContext
+    if sc.applicationId not in _shipped:
+        zip_path = build_package_zip()
+        sc.addPyFile(zip_path)
+        _shipped[sc.applicationId] = zip_path
+    return _shipped[sc.applicationId]

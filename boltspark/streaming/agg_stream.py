@@ -24,7 +24,7 @@ at the compacted table rather than expecting in-place supersede.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..engine import agg as aggmod
 from ..engine import manifest as manifestmod
@@ -105,14 +105,14 @@ def read_sum(spark, out_path: str, manifest_path: str,
     partials = spark.read.parquet(out_path)
     live = manifestmod.join_valid(
         partials, manifestmod.valid_pairs_df(spark, manifest_path))
+    scale = None
     if "s_dec" in partials.columns:
         scale = _decimal_scale(spark, manifest_path, column)
         if scale is None:
             raise TypeError(
                 f"sink at {out_path} holds decimal partials but {column} "
                 "is not a decimal column in the manifest schema")
-        return aggmod._fold_sum_dec(live, column, scale)
-    return aggmod._fold_sum(live, column)
+    return aggmod._fold_sum(live, column, scale)
 
 
 def value_counts_stream(
@@ -143,7 +143,7 @@ def read_value_counts(spark, out_path: str, manifest_path: str) -> DataFrame:
     partials = spark.read.parquet(out_path)
     live = manifestmod.join_valid(
         partials, manifestmod.valid_pairs_df(spark, manifest_path))
-    return live.groupBy("value").agg(F.sum("cnt").alias("cnt"))
+    return aggmod._fold_lanes(live, "value")
 
 
 def _start(man, handle, checkpoint_path: str, trigger_seconds: int | None):

@@ -83,7 +83,17 @@ def test_agg_fast_paths_are_exercised(spark, agg_table):
 
 
 def test_block_sum_kernel_fast_paths(rng):
-    from boltspark.engine.agg import _block_sum, _block_value_counts
+    """The per-group lane reducer on an rle block with nulls (an exact
+    int sum, and value counts as the N = 1 key) and on a dict block of
+    byte values (counts; SUM refuses the tag)."""
+    import pyarrow as pa
+
+    from boltspark.engine.agg import _group_lanes
+    from boltspark.engine.decode import _Group
+
+    def lanes(blk, n, key_ts, specs):
+        return _group_lanes(_Group(0, n, "all", [blk]), key_ts,
+                            specs).to_pylist()
 
     # rle: run-heavy ints with nulls
     v = np.repeat(rng.integers(-50, 50, 40), 100).astype(np.int64)
@@ -91,13 +101,14 @@ def test_block_sum_kernel_fast_paths(rng):
     dense = v[validity]
     blk = blockmod.encode_block(dense, "i64", "rle", validity=validity,
                                 outer="zstd")
-    s, n_rows, n_valid = _block_sum(blk)
-    assert (s, n_rows, n_valid) == (int(dense.sum()), len(v), int(validity.sum()))
-    u, cnt, n_null = _block_value_counts(blk)
-    assert n_null == len(v) - int(validity.sum())
+    (row,) = lanes(blk, len(v), [], [("sum", None)])
+    assert (row["__s_l_0"], row["__cnt"], row["__nv_0"]) == \
+        (int(dense.sum()), len(v), int(validity.sum()))
+    got = {r["__g_0"]: r["__cnt"] for r in lanes(blk, len(v), [pa.int64()],
+                                                 [])}
     expect = dict(zip(*np.unique(dense, return_counts=True)))
-    assert dict(zip(u.tolist(), cnt.tolist())) == {int(k): int(c)
-                                                   for k, c in expect.items()}
+    assert got == {**{int(k): int(c) for k, c in expect.items()},
+                   None: len(v) - int(validity.sum())}
 
     # dict over byte values
     langs = [b"en", b"de", b"fr", b"en", b"en", b"zh"] * 500
@@ -105,11 +116,91 @@ def test_block_sum_kernel_fast_paths(rng):
 
     col = strings.from_pylist(langs)
     blkd = blockmod.encode_block(col, "bytes", "dict", outer="zstd")
-    u2, cnt2, _ = _block_value_counts(blkd)
-    got = dict(zip(u2.to_pylist(), cnt2.tolist()))
+    got = {r["__g_0"]: r["__cnt"]
+           for r in lanes(blkd, len(langs), [pa.large_binary()], [])}
     assert got == {b"en": 1500, b"de": 500, b"fr": 500, b"zh": 500}
     with pytest.raises(TypeError):
-        _block_sum(blkd)
+        lanes(blkd, len(langs), [], [("sum", None)])
+
+
+@pytest.fixture(scope="module")
+def null_sel_table(spark, tmp_path_factory):
+    """400 rows whose double, decimal(12,2) and d128 decimal(38,2)
+    values are NULL on every 5th key."""
+    d = tmp_path_factory.mktemp("nullsel")
+    k = F.col("id")
+    valid = k % 5 != 0
+    df = spark.range(400).select(
+        k.alias("k"), F.when(valid, k / 4.0).alias("v"),
+        F.when(valid, (k / 8).cast("decimal(12,2)")).alias("d"),
+        F.when(valid, F.expr("CAST(id AS DECIMAL(38,2)) * 1e20")
+               .cast("decimal(38,2)")).alias("big"))
+    b, m = str(d / "b"), str(d / "m")
+    encode_table(df, b, m, key_cols=("k",), n_parts=2, resume=False)
+    return b, m
+
+
+def test_sum_over_all_null_selection_is_null(spark, null_sel_table):
+    """SUM over a selection whose every value is NULL is NULL, as in
+    Spark and grouped_sum: column_sum (double and decimal(38,s)),
+    column_sums and the fold read_sum applies to sink partials."""
+    from boltspark.engine import agg
+    from boltspark.engine.filters import InPredicate
+
+    b, m = null_sel_table
+    pred = InPredicate(column="k", values=(0, 5, 10, 15))
+    cols = ["v", "d", "big"]
+    for c in cols:
+        got = agg.column_sum(spark, b, m, c, predicate=pred).collect()[0]
+        assert (got["sum_value"], got["n_rows"], got["n_nulls"]) == \
+            (None, 4, 4), c
+        assert agg.column_avg(spark, b, m, c, predicate=pred).collect()[0][
+            "avg_value"] is None, c
+    got = {r["column"]: r for r in
+           agg.column_sums(spark, b, m, cols, predicate=pred).collect()}
+    assert {c: (r["sum_value"], r["n_rows"], r["n_nulls"])
+            for c, r in got.items()} == {c: (None, 4, 4) for c in cols}
+    blocks, preds, _ = agg._plan(spark, b, m, ["v"], pred)
+    folded = agg._fold_sum(agg._sum_partials(blocks, preds), "v").collect()
+    assert folded[0]["sum_value"] is None
+    # a selection with a valid value still sums it
+    keep = InPredicate(column="k", values=(0, 6))
+    assert agg.column_sum(spark, b, m, "v", predicate=keep).collect()[0][
+        "sum_value"] == 1.5
+
+
+def test_sum_partials_keep_one_row_per_part(spark, agg_table):
+    """The SUM partials a streaming sink writes fold the per-block lane
+    rows by part_id: one row per part, however many blocks it holds."""
+    from boltspark.engine import agg
+
+    _, out, man = agg_table
+    for col, build in (("val", agg._sum_partials),
+                       ("k", agg._sum_dec_partials)):
+        blocks, preds, _ = agg._plan(spark, out, man, [col], None)
+        pids = [r[0] for r in build(blocks, preds).select("part_id")
+                .collect()]
+        assert len(pids) == len(set(pids)) < blocks.count(), col
+
+
+def test_decimal_rescale_is_exact_past_28_digits():
+    """Decimal results and top-k thresholds rescale a 38-digit unscaled
+    value exactly (Python's default decimal context keeps 28 digits)."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from boltspark.engine import agg
+
+    big = -(10**37) - 123456789
+    assert agg._dec_arr([big], pa.decimal128(38, 2)).to_pylist() == \
+        [Decimal(big).scaleb(-2, agg._EXACT)]
+    assert int(agg._dec_arr([big], pa.decimal128(38, 0))[0].as_py()) == big
+    pred = agg._threshold_pred("c", T.DecimalType(38, 2),
+                               Decimal(big).scaleb(-2, agg._EXACT), True,
+                               False)
+    assert pred.upper == big
 
 
 def test_decode_rle_runs_matches_full_decode(rng):
@@ -380,6 +471,22 @@ def test_decimal_sum_filtered(spark, tmp_path):
                    F.count(F.lit(1)).alias("n")).collect()[0]
     assert got["sum_value"] == exp["s"]
     assert got["n_rows"] == exp["n"]
+
+
+def test_decimal_sum_exact_past_int64(spark, tmp_path):
+    """decimal(18,0) storage is int64 words: a block whose sum passes
+    2^63 still sums exactly (no int64 wraparound inside the block)."""
+    from boltspark.engine.agg import column_sum
+
+    df = spark.range(20).select(
+        F.col("id").alias("k"),
+        F.lit(9 * 10**17).cast("decimal(18,0)").alias("big"))
+    d = str(tmp_path)
+    encode_table(df, f"{d}/b", f"{d}/m", key_cols=("k",), n_parts=1,
+                 resume=False)
+    got = column_sum(spark, f"{d}/b", f"{d}/m", "big").collect()[0]
+    assert got["sum_value"] == df.agg(F.sum("big")).collect()[0][0] \
+        == 18 * 10**18
 
 
 def test_grouped_sum_decimal_exact(spark, tmp_path):

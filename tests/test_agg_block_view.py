@@ -1,10 +1,12 @@
 """Per-codec parity of the compressed-domain block reducers in
-engine/agg.py: every single-column reducer (sum, value counts, min/max,
-distinct, HLL hashes, quantile summary, top-k candidates) and the
-grouped scans' per-row views must give the answer a plain
-``decode_block`` gives, for every codec the selector emits, under no
-mask, a partial row mask, and on a block without a valid value.  The
-dict and rle fast paths must answer without a dense decode."""
+engine/agg.py: the one lane reducer's per-group step
+(``_group_lanes``: sum, value counts as the N = 1 key, min/max and the
+count-only lane), every single-column view reducer (distinct, HLL
+hashes, quantile summary, top-k candidates) and the grouped scans'
+per-row views must give the answer a plain ``decode_block`` gives, for
+every codec the selector emits, under no mask, a partial row mask, and
+on a block without a valid value.  The dict and rle fast paths must
+answer without a dense decode."""
 
 from __future__ import annotations
 
@@ -31,6 +33,8 @@ CODECS = {
 # which reducer is defined over which tag
 SUMMABLE = ("i64", "f64", "bool")
 QUANTILE = ("i64", "f64")
+_OUT_T = {"i64": pa.int64(), "f64": pa.float64(), "bool": pa.bool_(),
+          "bytes": pa.large_binary()}
 WORDS = [b"alpha", b"beta", b"gamma", b"delta-delta", b"epsilon",
          b"zeta", b"eta-eta-eta", b"theta"]
 
@@ -90,34 +94,112 @@ def _params(tags):
             for t, c in _cases(tags) for m in MASKS for e in (False, True)]
 
 
+def _lanes(blocks, mask, specs, key_ts=(), n=N) -> list[dict]:
+    """The rows ``agg._group_lanes`` gives one block group of ``n`` rows
+    under ``mask``: the first ``len(key_ts)`` blocks are its keys, the
+    rest the value columns ``specs`` reduce."""
+    return agg._group_lanes(_Group(0, n, mask, list(blocks)), list(key_ts),
+                            specs).to_pylist()
+
+
+def _counts(rows) -> dict:
+    """{key: count} of N = 1 lane rows, checked for one row per key."""
+    got = {r["__g_0"]: r["__cnt"] for r in rows}
+    assert len(got) == len(rows)
+    return got
+
+
 @pytest.mark.parametrize("tag,codec,mask,empty", _params(SUMMABLE))
 def test_block_sum_parity(tag, codec, mask, empty):
     blk = _block(tag, codec, empty)
     ref, n = _reference(blk, MASKS[mask])
-    s, got_n, nv = agg._block_sum(blk, MASKS[mask])
-    assert (got_n, nv) == (n, len(ref))
-    assert s == pytest.approx(sum(ref), rel=1e-12)
+    (row,) = _lanes([blk], MASKS[mask], [("sum", None)])
+    assert (row["__cnt"], row["__nv_0"]) == (n, len(ref))
+    assert row["__s_l_0"] + row["__s_d_0"] == pytest.approx(sum(ref),
+                                                            rel=1e-12)
 
 
 @pytest.mark.parametrize("tag,codec,mask,empty", _params(CODECS))
 def test_block_value_counts_parity(tag, codec, mask, empty):
     blk = _block(tag, codec, empty)
     ref, n = _reference(blk, MASKS[mask])
-    u, cnt, n_null = agg._block_value_counts(blk, MASKS[mask])
-    assert dict(zip(_pylist(u), np.asarray(cnt).tolist())) == Counter(ref)
-    assert n_null == n - len(ref)
+    want = Counter(ref)
+    if n > len(ref):
+        want[None] = n - len(ref)
+    assert _counts(_lanes([blk], MASKS[mask], [], [_OUT_T[tag]])) == want
 
 
 @pytest.mark.parametrize("tag,codec,mask,empty", _params(CODECS))
 def test_block_minmax_parity(tag, codec, mask, empty):
     blk = _block(tag, codec, empty)
     ref, n = _reference(blk, MASKS[mask])
-    lo, hi, got_n, nv = agg._block_minmax(blk, MASKS[mask])
-    assert (got_n, nv) == (n, len(ref))
+    (row,) = _lanes([blk], MASKS[mask], [(None, (None, _OUT_T[tag]))])
+    assert (row["__cnt"], row["__nv_0"]) == (n, len(ref))
     if ref:
-        assert (lo, hi) == (min(ref), max(ref))
+        assert (row["__mn_0"], row["__mx_0"]) == (min(ref), max(ref))
     else:
-        assert (lo, hi) == (None, None)
+        assert (row["__mn_0"], row["__mx_0"]) == (None, None)
+
+
+def _d128_block(validity) -> tuple[bytes, list]:
+    """A d128 block of (lo, hi) word pairs and its exact values."""
+    rng = np.random.default_rng(3)
+    pairs = rng.integers(-2**40, 2**40, (int(validity.sum()), 2))
+    blk = blockmod.encode_block(pairs, "d128", "plain", validity=validity)
+    return blk, [int(hi) * 2**64 + (int(lo) % 2**64) for lo, hi in pairs]
+
+
+@pytest.mark.parametrize("mask", list(MASKS))
+def test_d128_minmax_and_sum_lanes(mask):
+    """d128 values reduce as exact 128-bit ints in the min/max and the
+    exact-decimal sum lanes."""
+    blk, dense = _d128_block(null_mask(N))
+    sel = np.ones(N, bool) if isinstance(MASKS[mask], str) else MASKS[mask]
+    keep = sel[np.nonzero(null_mask(N))[0]]
+    ref = [v for v, k in zip(dense, keep) if k]
+    (row,) = _lanes([blk, blk], MASKS[mask],
+                    [(None, (None, pa.decimal128(38, 0))), ("dec", None)])
+    assert row["__nv_0"] == row["__nv_1"] == len(ref)
+    assert (int(row["__mn_0"]), int(row["__mx_0"])) == (min(ref), max(ref))
+    assert int(row["__s_dec_1"]) == sum(ref)
+
+
+def _list_block(validity) -> bytes:
+    from boltspark.kernels import lists
+
+    lens = np.arange(int(validity.sum()), dtype=np.int64) % 4
+    offs = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
+    col = lists.ListColumn(offs, np.arange(int(lens.sum()), dtype=np.int64))
+    return blockmod.encode_block(col, "li64", "list", validity=validity)
+
+
+@pytest.mark.parametrize("mask", list(MASKS))
+@pytest.mark.parametrize("case", ["i64-for", "bytes-fsst", "bool-rle",
+                                  "li64-list", "d128-plain", "absent"])
+def test_count_lane_reads_validity_alone(monkeypatch, case, mask):
+    """The count-only lane (None, None) counts valid values from the
+    block validity alone, so every tag counts (lists and d128 too), no
+    value ever decodes, and a None cell counts its rows as NULL."""
+    validity = null_mask(N)
+    if case == "li64-list":
+        blk = _list_block(validity)
+    elif case == "d128-plain":
+        blk = _d128_block(validity)[0]
+    elif case == "absent":
+        blk, validity = None, np.zeros(N, dtype=bool)
+    else:
+        blk = _block(*case.split("-"))
+
+    def refuse(*a, **kw):
+        raise AssertionError("the count lane decoded values")
+
+    for name in ("decode_values", "decode_block", "decode_block_rows"):
+        monkeypatch.setattr(blockmod, name, refuse)
+    sel = np.ones(N, bool) if isinstance(MASKS[mask], str) else MASKS[mask]
+    (row,) = _lanes([blk], MASKS[mask], [(None, None)])
+    assert (row["__cnt"], row["__nv_0"]) == (int(sel.sum()),
+                                             int((sel & validity).sum()))
 
 
 @pytest.mark.parametrize("tag,codec,mask,empty", _params(CODECS))
@@ -174,16 +256,13 @@ def test_block_minmax_float_nan_order(codec, mask):
     blk = blockmod.encode_block(dense, "f64", codec, validity=validity,
                                 outer="zstd")
     ref, _n = _reference(blk, MASKS[mask])
-    lo, hi, _n, _nv = agg._block_minmax(blk, MASKS[mask])
-    assert lo == min(v for v in ref if v == v)
-    assert np.isnan(hi)
+    spec = [(None, (None, pa.float64()))]
+    (row,) = _lanes([blk], MASKS[mask], spec)
+    assert row["__mn_0"] == min(v for v in ref if v == v)
+    assert np.isnan(row["__mx_0"])
     all_nan = blockmod.encode_block(np.full(40, np.nan), "f64", codec)
-    lo, hi, _n, _nv = agg._block_minmax(all_nan)
-    assert np.isnan(lo) and np.isnan(hi)
-
-
-_OUT_T = {"i64": pa.int64(), "f64": pa.float64(), "bool": pa.bool_(),
-          "bytes": pa.large_binary()}
+    (row,) = _lanes([all_nan], "all", spec, n=40)
+    assert np.isnan(row["__mn_0"]) and np.isnan(row["__mx_0"])
 
 
 @pytest.mark.parametrize("ascending", [True, False])
@@ -223,14 +302,15 @@ def test_fast_paths_skip_dense_decode(monkeypatch, tag, codec):
         raise AssertionError("dense decode on a dict/rle fast path")
 
     monkeypatch.setattr(blockmod, "decode_values", refuse)
-    u, cnt, _ = agg._block_value_counts(blk)
-    assert dict(zip(_pylist(u), np.asarray(cnt).tolist())) \
-        == want["value_counts"]
-    assert agg._block_minmax(blk)[:2] == want["minmax"]
+    assert _counts(_lanes([blk], "all", [], [_OUT_T[tag]])) \
+        == {**want["value_counts"], None: n - len(ref)}
+    (mm,) = _lanes([blk], "all", [(None, (None, _OUT_T[tag]))])
+    assert (mm["__mn_0"], mm["__mx_0"]) == want["minmax"]
     assert set(_pylist(agg._block_distinct(blk, "all"))) == want["distinct"]
     assert set(_pylist(agg._block_hashes(blk, "all")[0])) == want["hashes"]
     if tag != "bytes":
-        assert agg._block_sum(blk)[0] == pytest.approx(want["sum"])
+        (s,) = _lanes([blk], "all", [("sum", None)])
+        assert s["__s_l_0"] + s["__s_d_0"] == pytest.approx(want["sum"])
         smry = agg._block_summary(blk, "all", 8)[0]
         np.testing.assert_array_equal(smry[0], want["summary"][0])
         np.testing.assert_array_equal(smry[1], want["summary"][1])

@@ -1,14 +1,16 @@
-"""Every grouped aggregate against Catalyst over ``decode_table`` on
-the inputs that break group coders and value lanes at once: a group
-column the first run predates (its rows all fall in the NULL group),
-explicit NULL group keys, a second group column for the composite
-code, a double value column holding NULLs and NaNs (including a group
-whose every value is NaN), a date value column and a binary value
-column the first run predates.  Spark orders NaN above +inf: SUM and
-AVG of a group holding a NaN are NaN, MIN skips NaN unless every value
-is NaN, MAX is NaN, and COUNT(DISTINCT) counts NaN once.  Each operator
-runs with no predicate, a key range that cuts block groups partially,
-and a range on the NaN-bearing value column itself."""
+"""Every grouped aggregate, and every scalar one (the N = 0 case of the
+same lane reducer, value_counts its N = 1 key), against Catalyst over
+``decode_table`` on the inputs that break group coders and value lanes
+at once: a group column the first run predates (its rows all fall in
+the NULL group), explicit NULL group keys, a second group column for
+the composite code, a double value column holding NULLs and NaNs
+(including a group whose every value is NaN), a date value column and
+a binary value column the first run predates.  Spark orders NaN above
++inf: SUM and AVG of a group holding a NaN are NaN, MIN skips NaN
+unless every value is NaN, MAX is NaN, and COUNT(DISTINCT) counts NaN
+once.  Each operator runs with no predicate, a key range that cuts
+block groups partially, and a range on the NaN-bearing value column
+itself."""
 
 from __future__ import annotations
 
@@ -231,7 +233,91 @@ def _check_grouped_topk_rows(spark, b, m, ref, pred):
         sorted((r["g"] or "", r["rnk"], r["k"]) for r in exp)
 
 
+# scalar aggregates over the NaN/NULL double, the date, the binary a run
+# predates, the key and the string a run predates
+SUMMED = ("v", "k")
+COLUMNS = ("v", "d", "bn", "k", "g")
+
+
+def _key(x):
+    """A hashable, NaN-stable form of a collected value."""
+    if isinstance(x, float) and math.isnan(x):
+        return "NaN"
+    return bytes(x) if isinstance(x, bytearray) else x
+
+
+def _check_column_sum(spark, b, m, ref, pred):
+    for c in SUMMED:
+        got = agg.column_sum(spark, b, m, c, predicate=pred).collect()[0]
+        exp = ref.agg(F.sum(c).alias("s"), F.count(F.lit(1)).alias("n"),
+                      F.count(c).alias("nv")).collect()[0]
+        assert (got["n_rows"], got["n_nulls"]) == \
+            (exp["n"], exp["n"] - exp["nv"]), c
+        assert _same(got["sum_value"], exp["s"]), c
+
+
+def _check_column_sums(spark, b, m, ref, pred):
+    got = _by(agg.column_sums(spark, b, m, list(SUMMED), predicate=pred)
+              .collect(), "column")
+    exp = ref.agg(F.count(F.lit(1)).alias("n"),
+                  *[F.sum(c).alias(f"s_{c}") for c in SUMMED],
+                  *[F.count(c).alias(f"nv_{c}") for c in SUMMED]).collect()[0]
+    assert set(got) == {(c,) for c in SUMMED}
+    for c in SUMMED:
+        r = got[(c,)]
+        assert (r["n_rows"], r["n_nulls"]) == \
+            (exp["n"], exp["n"] - exp[f"nv_{c}"]), c
+        assert _same(r["sum_value"], exp[f"s_{c}"]), c
+
+
+def _check_column_avg(spark, b, m, ref, pred):
+    for c in SUMMED:
+        got = agg.column_avg(spark, b, m, c, predicate=pred).collect()[0]
+        exp = ref.agg(F.avg(c).alias("a"), F.count(F.lit(1)).alias("n"),
+                      F.count(c).alias("nv")).collect()[0]
+        assert (got["n_rows"], got["n_nulls"]) == \
+            (exp["n"], exp["n"] - exp["nv"]), c
+        assert _same(got["avg_value"], exp["a"]), c
+
+
+def _check_column_count(spark, b, m, ref, pred):
+    for c in COLUMNS:
+        got = agg.column_count(spark, b, m, c, predicate=pred).collect()[0]
+        exp = ref.agg(F.count(F.lit(1)).alias("n"),
+                      F.count(c).alias("nv")).collect()[0]
+        assert (got["n_values"], got["n_rows"], got["n_nulls"]) == \
+            (exp["nv"], exp["n"], exp["n"] - exp["nv"]), c
+
+
+def _check_column_minmax(spark, b, m, ref, pred):
+    for c in COLUMNS:
+        got = agg.column_minmax(spark, b, m, c, predicate=pred).collect()[0]
+        exp = ref.agg(F.min(c).alias("lo"), F.max(c).alias("hi"),
+                      F.count(F.lit(1)).alias("n"),
+                      F.count(c).alias("nv")).collect()[0]
+        assert (got["n_rows"], got["n_nulls"]) == \
+            (exp["n"], exp["n"] - exp["nv"]), c
+        assert _same(got["vmin"], exp["lo"]), c
+        assert _same(got["vmax"], exp["hi"]), c
+
+
+def _check_value_counts(spark, b, m, ref, pred):
+    for c in COLUMNS:
+        got = agg.value_counts(spark, b, m, c, predicate=pred).collect()
+        exp = ref.groupBy(F.col(c).alias("value")).agg(
+            F.count(F.lit(1)).alias("cnt")).collect()
+        assert len({_key(r["value"]) for r in got}) == len(got), c
+        assert {_key(r["value"]): r["cnt"] for r in got} == \
+            {_key(r["value"]): r["cnt"] for r in exp}, c
+
+
 CHECKS = {
+    "column_sum": _check_column_sum,
+    "column_sums": _check_column_sums,
+    "column_avg": _check_column_avg,
+    "column_count": _check_column_count,
+    "column_minmax": _check_column_minmax,
+    "value_counts": _check_value_counts,
     "grouped_sum": _check_grouped_sum,
     "grouped_sum_multi": _check_grouped_sum_multi,
     "grouped_aggs": _check_grouped_aggs,
