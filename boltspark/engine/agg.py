@@ -1126,8 +1126,15 @@ def _group_lanes(g: _Group, group_out_ts: list, specs: list):
         nv = np.bincount(pos, minlength=nk)
         out[f"__nv_{j}"] = pa.array(nv, pa.int64())
         if lane == "dec":
-            s = np.zeros(nk, dtype=object)
-            np.add.at(s, pos, rv.astype(object))
+            if rv.dtype.kind == "O":  # d128: exact Python ints
+                s = np.zeros(nk, dtype=object)
+                np.add.at(s, pos, rv)
+            else:  # int64 words: two int64 halves sum exactly per block
+                rv = rv.astype(np.int64, copy=False)
+                hi, lo = np.zeros(nk, np.int64), np.zeros(nk, np.int64)
+                np.add.at(hi, pos, rv >> 32)
+                np.add.at(lo, pos, rv & 0xFFFFFFFF)
+                s = [(int(h) << 32) + int(v) for h, v in zip(hi, lo)]
             out[f"__s_dec_{j}"] = pa.array([Decimal(int(x)) for x in s],
                                            pa.decimal128(38, 0))
         elif lane == "sum":

@@ -180,11 +180,16 @@ def gc_orphans(
     n_groups = sum(r["n_groups"] for r in per_file)
     total = sum(r["sz"] for r in per_file)
     if delete:
-        for r in per_file:
-            p = r["__fp"]
-            local = p[len("file:"):] if p.startswith("file:") else p
-            local = "/" + local.lstrip("/")
-            os.remove(local)
+        # resolve every path before the first delete: a non-local one
+        # raises with nothing removed
+        local = [manifestmod._local_file(r["__fp"], spark) for r in per_file]
+        if None in local:
+            raise ValueError(
+                f"gc_orphans deletes local files only; "
+                f"{per_file[local.index(None)]['__fp']} is not provably "
+                "local (nothing was deleted)")
+        for p in local:
+            os.remove(p)
     return {"orphan_files": len(per_file), "orphan_groups": int(n_groups),
             "bytes": int(total)}
 

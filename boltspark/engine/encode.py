@@ -21,7 +21,6 @@ way the reference's StreamingByteBuffer bounds its read window
 
 from __future__ import annotations
 
-import json
 import logging
 import time
 import uuid
@@ -29,23 +28,18 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import functions as F, types as T
 
 from ..kernels import block as blockmod
 from ..kernels import fsst, lists, selector, strings
 from . import manifest as manifestmod
 from . import nest
 from .memutil import trimmed
-from .partitioner import (
-    DEFAULT_TARGET_PARTITION_BYTES,
-    PART_COL,
-    assign_partition_id,
-    bytes_below,
-    cluster_partitions,
-    estimate_bytes_fast,
-    num_partitions,
-    zorder_column,
-)
-from .schema import (PART_ID, _STATS_ARROW, blocks_arrow_schema,
+from .partitioner import (DEFAULT_TARGET_PARTITION_BYTES, PART_COL, SHUF_COL,
+                          assign_partition_id, cluster_partitions, input_size,
+                          num_partitions, zorder_column)
+from .schema import (_STATS_ARROW, blocks_arrow_schema,
                      blocks_spark_schema, storage_cast, tag_for_arrow_type)
 
 log = logging.getLogger(__name__)
@@ -85,8 +79,6 @@ def _column_stats(values, tag: str, validity) -> dict:
         # (filters._zone is the reader side)
         n = len(values)
         if n:
-            import pyarrow.compute as pc
-
             from ..kernels import bloom
 
             arr = strings.to_arrow(values)
@@ -150,8 +142,6 @@ def _to_kernel(arr: pa.Array, tag: str):
     if tag == "bytes":
         return strings.from_arrow(arr), validity
     if tag in lists.LIST_TAGS:
-        import pyarrow.compute as pc
-
         flat = arr.flatten()
         lens = pc.list_value_length(arr).to_numpy(zero_copy_only=False).astype(np.int64)
         offsets = np.zeros(len(arr) + 1, dtype=np.int64)
@@ -184,12 +174,8 @@ def _split_points(batch: pa.RecordBatch, columns: list[str], block_bytes: int) -
         arr = batch.column(batch.schema.get_field_index(name))
         t = arr.type
         if pa.types.is_string(t) or pa.types.is_binary(t) or pa.types.is_large_string(t) or pa.types.is_large_binary(t):
-            import pyarrow.compute as pc
-
             weight += pc.binary_length(arr).fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64) + 4
         elif pa.types.is_list(t) or pa.types.is_large_list(t):
-            import pyarrow.compute as pc
-
             vt = t.value_type
             if (pa.types.is_string(vt) or pa.types.is_large_string(vt)
                     or pa.types.is_binary(vt) or pa.types.is_large_binary(vt)):
@@ -376,92 +362,62 @@ def _make_encoder(columns: list[str], run_id: str, block_bytes: int,
     return encode_stream
 
 
-# rows sampled driver-side for the one-shot FSST table build; content
-# rows are ~KB each, so this comfortably covers fsst._DEFAULT_SAMPLE
-# (32 KB) for prose/code columns while staying a trivial collect.
-# KNOWN BIAS: limit() takes the HEAD of the scan — a source whose first
-# file is unrepresentative (metadata-ish short rows ahead of long
-# prose) can mis-gate fsst for the run; 1024 rows widens the window
-# without a shuffle (an order-randomizing sample would scan the full
-# source — wrong trade at 100 TB for a codec the selector treats as
-# marginal anyway; wrongly EXCLUDING fsst costs at most the few % of
-# ratio fsst wins over plain+zstd, never correctness)
-_FSST_SAMPLE_ROWS = 1024
-
-# below this estimated table size the driver-side FSST table prebuild is
-# skipped outright (fsst drops out of the selector trials): building the
-# tables costs ~0.4 s of pure-Python CPU per byte column, which dwarfs
-# the entire encode of a few-MB table, while the few % of ratio fsst can
-# win over plain+zstd is noise at that size.  codec_override='fsst'
-# columns always get a table regardless.
+# below this size of the input's byte columns the driver-side FSST
+# table prebuild is skipped outright (fsst drops out of the selector
+# trials): building the tables costs ~0.4 s of pure-Python CPU per byte
+# column, which dwarfs the entire encode of a few-MB table, while the
+# few % of ratio fsst can win over plain+zstd is noise at that size.
+# codec_override='fsst' columns always get a table regardless.
 _FSST_PREBUILD_MIN_BYTES = 64 << 20
 
 
 def _prebuild_fsst_tables(df_sel, columns: list[str],
                           codec_override: dict[str, str] | None,
-                          total_bytes: int | None) -> dict:
-    """Build FSST symbol tables ONCE on the driver from a bounded sample
-    and ship them in the encoder closure — instead of once per task,
-    where the pure-Python greedy construction measured 77% of encode
-    CPU (profile in BENCH/BASELINE.md round 4).  Per byte column: one
-    ``limit(N)`` sample, the selector's own candidate gate (avg_len /
-    entropy) decides whether fsst is even plausible, and only then is a
-    table built.  Columns with no table here have fsst excluded from
-    executor-side trials; ``codec_override='fsst'`` columns always get
-    a table.  The codec CHOICE stays per-partition — only the symbol
-    table is shared, which the per-task cache already assumed was safe
-    across partitions of one column (same distribution)."""
-    from pyspark.sql import types as T
-
-    from ..kernels import fsst, strings
-
+                          size: tuple[dict, pa.Table] | None) -> dict:
+    """Build FSST symbol tables ONCE on the driver from the encode's one
+    input sample and ship them in the encoder closure — instead of once
+    per task, where the pure-Python greedy construction measured 77% of
+    encode CPU (profile in BENCH/BASELINE.md round 4).  ``size`` is the
+    ``partitioner.input_size`` that set n_parts; None (explicit n_parts,
+    resume, streaming) sizes the byte columns here, counting rows only
+    up to the gate.  One gate: byte columns holding fewer than
+    ``_FSST_PREBUILD_MIN_BYTES`` get tables only when pinned with
+    ``codec_override='fsst'``.  Per byte column the selector's own
+    candidate gate (avg_len / entropy) decides whether fsst is even
+    plausible, and only then is a table built, from values taken in
+    turn from each sampled file slice.  Columns with no table here have
+    fsst excluded from executor-side trials.  The codec CHOICE stays
+    per-partition — only the symbol table is shared, which the per-task
+    cache already assumed was safe across partitions of one column
+    (same distribution)."""
+    override = codec_override or {}
     byte_cols = [f.name for f in df_sel.schema.fields
                  if f.name in set(columns)
                  and isinstance(f.dataType, (T.StringType, T.BinaryType))]
-    # small table: fsst can't pay for its table builds — keep only
-    # columns explicitly pinned to fsst
-    pinned = [c for c in byte_cols
-              if codec_override and codec_override.get(c) == "fsst"]
-    if total_bytes is not None and total_bytes < _FSST_PREBUILD_MIN_BYTES:
-        byte_cols = pinned
-    if not byte_cols:
+    # a column pinned to another codec: a table is dead weight
+    wanted = [c for c in byte_cols if override.get(c, "fsst") == "fsst"]
+    if not wanted:
         return {}
-    rows = df_sel.select(*byte_cols).limit(_FSST_SAMPLE_ROWS).collect()
-    if (total_bytes is None and byte_cols != pinned
-            and bytes_below(df_sel, byte_cols, _FSST_PREBUILD_MIN_BYTES,
-                            rows, _FSST_SAMPLE_ROWS)):
-        # explicit n_parts, resume or streaming: no partition-sizing
-        # estimate ran, so gate on the byte columns (the only ones fsst
-        # codes), sized from this sample
-        byte_cols = pinned
+    col_bytes, sample = size or input_size(df_sel, byte_cols,
+                                           _FSST_PREBUILD_MIN_BYTES)
+    if sum(col_bytes[c] for c in byte_cols) < _FSST_PREBUILD_MIN_BYTES:
+        wanted = [c for c in wanted if c in override]
     jobs: dict[str, bytes] = {}
-    for c in byte_cols:
-        override = codec_override.get(c) if codec_override else None
-        if override is not None and override != "fsst":
-            continue  # column pinned to another codec: a table is dead weight
-        vals: list[bytes] = []
-        total = 0
-        for r in rows:
-            v = r[c]
-            if v is None:
-                continue
-            b = v.encode("utf-8") if isinstance(v, str) else bytes(v)
-            vals.append(b)
-            total += len(b)
-            if total >= fsst._DEFAULT_SAMPLE:
-                break
-        if not vals:
+    for c in wanted:
+        col = sample.column(c).drop_null()
+        # values in turn from each sampled slice (file), up to fsst's
+        # sample size, so no one file fills the table's sample
+        turn = np.argsort(np.concatenate(
+            [np.arange(len(ch)) for ch in col.chunks] or [[]]), kind="stable")
+        vals = col.take(turn).combine_chunks()
+        cum = np.cumsum(pc.binary_length(vals).to_numpy())
+        sc = strings.from_arrow(vals.slice(
+            0, int(np.searchsorted(cum, fsst._DEFAULT_SAMPLE)) + 1))
+        if not len(sc) or (c not in override and "fsst" not in
+                           selector.candidate_codecs(selector.compute_stats(
+                               sc, "bytes"), "bytes")):
             continue
-        blob = b"".join(vals)[: fsst._DEFAULT_SAMPLE]
-        if override != "fsst":
-            lens = np.array([len(b) for b in vals], dtype=np.int64)
-            offs = np.zeros(len(vals) + 1, dtype=np.int64)
-            np.cumsum(lens, out=offs[1:])
-            sc = strings.StringColumn(offs, b"".join(vals))
-            stats = selector.compute_stats(sc, "bytes")
-            if "fsst" not in selector.candidate_codecs(stats, "bytes"):
-                continue
-        jobs[c] = blob
+        jobs[c] = bytes(sc.data[: fsst._DEFAULT_SAMPLE])
     if not jobs:
         return {}
     if len(jobs) == 1:
@@ -537,8 +493,6 @@ def encode_table(
     if any(nest.SEP in c for c in list(columns) + list(key_cols)):
         raise ValueError(r"column names may not contain \x1f (reserved for"
                          " struct-leaf flattening)")
-    from .partitioner import SHUF_COL
-
     reserved = {PART_COL, SHUF_COL} & set(list(columns) + list(key_cols))
     if reserved:
         raise ValueError(f"column names {sorted(reserved)} are reserved for "
@@ -557,17 +511,10 @@ def encode_table(
             # partition assignment must be the pure function of the data
             # it was on the first run: reuse the recorded partition count
             n_parts = int(manifestmod.table_meta(spark, manifest_path)["n_parts"])
-    total_bytes = None
-    if n_parts is None:
-        total_bytes = estimate_bytes_fast(df, columns)
-        n_parts = num_partitions(total_bytes, target_partition_bytes,
-                                 min_parts=spark.sparkContext.defaultParallelism)
 
     # struct columns flatten to \x1f-joined leaf columns (one select,
     # JVM-side) and reassemble at decode — engine/nest.py; the manifest
     # records BOTH the flat storage schema and the logical schema
-    from pyspark.sql import types as T
-
     logical_schema = df.select(*columns).schema
     storage_schema_json = logical_schema.json()
     logical_schema_json = None
@@ -578,22 +525,26 @@ def encode_table(
                 raise TypeError(f"struct column {k!r} cannot be a key column")
         flat_exprs, flat_schema = nest.flatten_exprs(logical_schema)
         extra_keys = [k for k in key_cols if k not in columns]
-        from pyspark.sql import functions as F
-
         df_sel = df_sel.select(*([F.col(k) for k in extra_keys] + flat_exprs))
         columns = [f.name for f in flat_schema.fields]
         storage_schema_json = flat_schema.json()
         logical_schema_json = logical_schema.json()
 
+    # the one input sizing: n_parts from its total, and the FSST gate and
+    # tables from the same sample
+    size = None
+    if n_parts is None:
+        size = input_size(df_sel, columns)
+        n_parts = num_partitions(sum(size[0].values()), target_partition_bytes,
+                                 min_parts=spark.sparkContext.defaultParallelism)
+
     if zorder_cols:
         if sort_cols:
             raise ValueError("sort_cols and zorder_cols are mutually "
                              "exclusive — pick one clustering")
-        from pyspark.sql import types as T2
-
         for c in zorder_cols:
             t = df_sel.schema[c].dataType
-            if not isinstance(t, T2.NumericType):
+            if not isinstance(t, T.NumericType):
                 raise TypeError(f"zorder_cols are numeric-only; {c} is "
                                 f"{t.simpleString()} (use sort_cols)")
         sort_cols = (zorder_column(df_sel, tuple(zorder_cols)),)
@@ -606,9 +557,9 @@ def encode_table(
     n_planned = n_parts - n_done
 
     # no partitions to encode (idempotent resume replay): skip the
-    # sample job + driver-side table builds outright
+    # sizing + driver-side table builds outright
     prebuilt_fsst = (_prebuild_fsst_tables(df_sel, columns, codec_override,
-                                           total_bytes)
+                                           size)
                      if n_planned > 0 else {})
     # fresh per call: the tasks' manifest rows for THIS run only
     part_rows = spark.sparkContext.accumulator([], manifestmod.PartRows())

@@ -38,6 +38,7 @@ import logging
 import re
 from collections import Counter
 from typing import Callable
+from urllib.parse import unquote
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -336,6 +337,12 @@ def _local_path(path: str, spark: SparkSession | None = None) -> str | None:
     if "://" in path or not _default_fs_is_local(spark):
         return None
     return path
+
+
+def _local_file(uri: str, spark: SparkSession | None = None) -> str | None:
+    """``_local_path`` of a file URI Spark reports (``df.inputFiles()``,
+    ``_metadata.file_path``), which percent-encodes its path."""
+    return _local_path(unquote(uri), spark)
 
 
 def _local_dir(path: str, spark: SparkSession | None = None) -> str | None:

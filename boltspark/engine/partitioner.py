@@ -12,11 +12,17 @@ columns mod P), so resume lineage is stable across runs.
 from __future__ import annotations
 
 import logging
+import math
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JError
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, functions as F
+
+from .manifest import _local_file
 
 log = logging.getLogger(__name__)
 
@@ -28,149 +34,141 @@ DEFAULT_TARGET_PARTITION_BYTES = 64 << 20
 _PREIMAGE_LITERAL_MAX = 65536
 
 
-def estimate_bytes_fast(df: DataFrame, columns: list[str],
-                        sample_rows: int = 4096) -> int:
-    """Partition-sizing estimate without a full scan: exact row count
-    (metadata-only for parquet sources) x mean row bytes from a bounded
-    sample.  At 100 TB a full pre-scan just to size partitions would
-    double the job's IO; a +-20% estimate only shifts partition sizes by
-    the same factor, which the 64 MB target tolerates.
-
-    The sample is spread over up to 8 evenly spaced input files (first
-    row-group slice of each, read via the parquet footer on the driver)
-    so time-ordered corpora with drifting row sizes don't bias the
-    estimate the way a head-of-table ``limit()`` would.  Non-parquet
-    inputs fall back to the prefix sample.
-    """
-    n = df.count()
-    if n == 0:
-        return 0
-    per_row = _per_row_bytes_from_files(
-        _local_parquet_files(_input_files(df)), columns, sample_rows)
-    if per_row is None:
-        sample = df.limit(sample_rows)
-        per_row = estimate_bytes(sample, columns) / min(n, sample_rows)
-    return int(n * per_row)
+# rows of an encode's one input sample: it sizes the input and feeds the
+# FSST table builds (encode._prebuild_fsst_tables)
+SAMPLE_ROWS = 4096
 
 
-def bytes_below(df: DataFrame, columns: list[str], limit_bytes: int,
-                head: list, head_rows: int) -> bool:
-    """Whether the string/binary ``columns`` of ``df`` hold fewer than
-    ``limit_bytes`` bytes, decided without a full count — the size gate
-    of encodes that run no ``estimate_bytes_fast`` (explicit n_parts,
-    resume, streaming).  ``head`` is the caller's ``limit(head_rows)``
-    sample of ``columns``; a shorter one is the whole input.  Otherwise
-    mean row bytes come from the evenly spaced file slices
-    ``estimate_bytes_fast`` reads (the head when ``df`` is not a parquet
-    scan), and rows are counted only until they reach the limit: from
-    the input files' footers on the driver for a local parquet scan (an
-    upper bound when ``df`` filters rows), else by a ``limit`` count."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def estimate_bytes_fast(df: DataFrame, columns: list[str]) -> int:
+    """Estimated logical bytes of ``columns`` of ``df`` (input_size)."""
+    return sum(input_size(df, columns)[0].values())
 
-    head_bytes = sum(len(v.encode("utf-8")) if isinstance(v, str) else len(v)
-                     for r in head for v in r if v is not None)
-    if len(head) < head_rows:
-        return head_bytes < limit_bytes
-    files = _input_files(df)
-    paths = _local_parquet_files(files)
-    per_row = _per_row_bytes_from_files(paths, columns, head_rows)
-    if per_row is None:
-        per_row = head_bytes / len(head)
-    if per_row <= 0:
-        return True
-    need = int(limit_bytes // per_row) + 1
-    if paths and len(paths) == len(files):
-        rows = 0
+
+def input_size(df: DataFrame, columns: list[str],
+               limit_bytes: int | None = None) -> tuple[dict, pa.Table]:
+    """The one input sizer of an encode, from one row count and one
+    sample without a full scan: (estimated logical bytes per column of
+    ``columns`` — value bytes of a string/binary, Arrow bytes of any
+    other type — and the sample, an Arrow table of ``columns`` whose
+    chunks are its read slices).  At 100 TB a full pre-scan would
+    double the job's IO; a +-20% estimate shifts partition sizes by the
+    same factor, which the 64 MB target tolerates.
+
+    On a plain local parquet scan (``_scan_files``) the driver reads
+    both with pyarrow: the first rows of up to 8 evenly spaced files
+    (so a time-ordered corpus with drifting row sizes does not bias the
+    sample the way a head-of-scan ``limit`` would) and the row count
+    from the footers — no Spark job.  Otherwise the sample is
+    ``df.limit``, a short one being the whole input, and ``df.count()``
+    counts the rows.  With ``limit_bytes`` the count stops once the
+    columns reach it (the estimate is then a lower bound past it).  An
+    unreadable footer or slice logs one warning and sizes through
+    Spark."""
+    paths = _scan_files(df, columns)
+    if paths:
         try:
-            for p in paths:
-                rows += pq.ParquetFile(p).metadata.num_rows
-                if rows >= need:
-                    return False
-            return True
-        except (OSError, pa.ArrowException) as e:
-            log.warning("input footer unreadable (%s: %s); counting rows "
-                        "through Spark", type(e).__name__, e)
-    return df.limit(need).count() < need
+            size = _size_files(paths, columns, limit_bytes)
+            if size:
+                return size
+        except (OSError, KeyError, ValueError, pa.ArrowException) as e:
+            log.warning("input file footer or slice unreadable (%s: %s); "
+                        "sizing through Spark", type(e).__name__, e)
+    sample = df.select(*columns).limit(SAMPLE_ROWS).toArrow()
+    n, need = sample.num_rows, _rows_needed(sample, limit_bytes)
+    if n == SAMPLE_ROWS and need > n:
+        # a limit past int32 counts them all
+        n = df.count() if need >= 1 << 31 else df.limit(need).count()
+    return _scaled(sample, n), sample
 
 
-def _input_files(df: DataFrame) -> list[str]:
-    """``df.inputFiles()``, or [] when Spark cannot list them (logged:
-    the caller then sizes from a sample and counts through Spark)."""
+def _size_files(paths: list[str], columns: list[str],
+                limit_bytes: int | None) -> tuple[dict, pa.Table] | None:
+    """``input_size`` of a plain local parquet scan: the first rows of up
+    to 8 evenly spaced ``paths`` (one chunk per file, ``SAMPLE_ROWS`` in
+    all), then the footers' row counts; None when the sampled files hold
+    no rows (Spark then sizes it: one job for an empty input)."""
+    picks = paths[:: max(1, len(paths) // 8)][:8]
+    per_file = max(64, SAMPLE_ROWS // len(picks))
+    batches = []
+    for p in picks:
+        with pq.ParquetFile(p) as pf:
+            b = next(pf.iter_batches(batch_size=per_file, columns=columns),
+                     None)
+        if b is not None:
+            batches.append(b.select(columns))
+    if not batches:
+        return None
+    sample = pa.Table.from_batches(batches)
+    need, n = _rows_needed(sample, limit_bytes), 0
+    for p in paths:
+        if n >= need:
+            break
+        n += pq.read_metadata(p).num_rows
+    return _scaled(sample, n), sample
+
+
+def _scaled(sample: pa.Table, n: int) -> dict[str, int]:
+    """Logical bytes of each ``sample`` column scaled to ``n`` rows:
+    value bytes of a string/binary, Arrow bytes of any other type."""
+    out = {}
+    for c in sample.column_names:
+        col = sample.column(c)
+        if col.type in (pa.string(), pa.binary(), pa.large_string(),
+                        pa.large_binary()):
+            b = pc.sum(pc.binary_length(col)).as_py() or 0
+        else:
+            b = col.nbytes
+        out[c] = n * b // max(sample.num_rows, 1)
+    return out
+
+
+def _rows_needed(sample: pa.Table, limit_bytes: int | None):
+    """Rows past which a count may stop: where rows like ``sample``'s
+    reach ``limit_bytes`` (inf: count them all; 0: rows weigh
+    nothing)."""
+    total = sum(_scaled(sample, sample.num_rows).values())
+    if not total:
+        return 0
+    if limit_bytes is None:
+        return math.inf
+    return limit_bytes * sample.num_rows // total + 1
+
+
+def _scan_files(df: DataFrame, columns: list[str]) -> list[str] | None:
+    """The sorted local paths of ``df``'s input files when ``df`` is a
+    plain local parquet scan of ``columns``, else None: every input
+    file is local parquet (``manifest._local_file``) and the optimized
+    plan is only projections of attributes over one parquet relation
+    whose files hold ``columns`` — no filter, limit, union or computed
+    column, so the files' rows are ``df``'s rows.  A listing or plan
+    Spark cannot give is logged."""
     try:
-        return list(df.inputFiles())
+        files = list(df.inputFiles())
     except (Py4JError, PySparkException) as e:
         log.warning("input files of the encode source not listable (%s: %s);"
-                    " sizing without them", type(e).__name__, e)
-        return []
-
-
-def _local_parquet_files(files: list[str]) -> list[str]:
-    """The local parquet files among ``files`` (``df.inputFiles()``),
-    sorted, as plain paths."""
-    paths = []
-    for f in sorted(f for f in files if f.endswith(".parquet")):
-        if f.startswith("file:"):
-            paths.append("/" + f.split(":", 1)[1].lstrip("/"))
-        elif "://" not in f:
-            paths.append(f)
-    return paths
-
-
-def _per_row_bytes_from_files(paths: list[str], columns: list[str],
-                              sample_rows: int) -> float | None:
-    """Mean logical row bytes from bounded slices of evenly spaced local
-    parquet input ``paths``; None when there are none, or they lack
-    ``columns`` or cannot be read (logged)."""
-    if not paths:
+                    " sizing through Spark", type(e).__name__, e)
         return None
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    picks = paths[:: max(1, len(paths) // 8)][:8]
-    rows = 0
-    nbytes = 0
-    per_file = max(64, sample_rows // len(picks))
+    paths = [_local_file(f, df.sparkSession) for f in files
+             if f.endswith(".parquet")]
+    if not paths or len(paths) < len(files) or None in paths:
+        return None
     try:
-        for p in picks:
-            pf = pq.ParquetFile(p)
-            cols = [c for c in pf.schema_arrow.names if c in columns]
-            if not cols:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        while plan.nodeName() == "Project":
+            exprs = plan.projectList()
+            if any(exprs.apply(i).getClass().getSimpleName()
+                   != "AttributeReference" for i in range(exprs.size())):
                 return None
-            batch = next(pf.iter_batches(batch_size=per_file, columns=cols), None)
-            if batch is None:
-                continue
-            rows += batch.num_rows
-            nbytes += sum(a.nbytes for a in batch.columns)
-    except (OSError, pa.ArrowException) as e:
-        log.warning("input file sample unreadable (%s: %s); sizing from "
-                    "the head sample", type(e).__name__, e)
+            plan = plan.child()
+        if (plan.nodeName() != "LogicalRelation"
+                or plan.relation().fileFormat().toString() != "Parquet"):
+            return None
+        names = set(plan.relation().dataSchema().fieldNames())
+    except (Py4JError, PySparkException, AttributeError) as e:
+        log.warning("encode source plan unreadable (%s: %s); sizing "
+                    "through Spark", type(e).__name__, e)
         return None
-    if not rows:
-        return None
-    return nbytes / rows
-
-
-def estimate_bytes(df: DataFrame, columns: list[str]) -> int:
-    """Logical byte size of the selected columns (strings: octet length;
-    fixed types: type width)."""
-    exprs = []
-    for field in df.schema.fields:
-        if field.name not in columns:
-            continue
-        t = field.dataType.typeName()
-        if t in ("string", "binary"):
-            exprs.append(F.sum(F.coalesce(F.octet_length(F.col(field.name)), F.lit(0))))
-        elif t in ("long", "double", "timestamp"):
-            exprs.append(F.count(F.col(field.name)) * 8)
-        elif t in ("integer", "float", "date"):
-            exprs.append(F.count(F.col(field.name)) * 4)
-        elif t == "boolean":
-            exprs.append(F.count(F.col(field.name)) * 1)
-        else:
-            exprs.append(F.count(F.col(field.name)) * 8)
-    row = df.select(sum(exprs[1:], exprs[0]).alias("b")).collect()[0]
-    return int(row["b"] or 0)
+    return sorted(paths) if names.issuperset(columns) else None
 
 
 def num_partitions(total_bytes: int, target_bytes: int, min_parts: int = 1) -> int:

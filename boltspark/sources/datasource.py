@@ -41,7 +41,6 @@ fresh ``.load()`` per query shape is always correct).  Use the
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql.datasource import (DataSource, DataSourceReader, EqualTo,
@@ -161,10 +160,16 @@ class BoltReader(DataSourceReader):
                 yield f  # unsupported: Spark evaluates it post-scan
 
     def partitions(self):
-        files = sorted(glob.glob(os.path.join(self.blocks_path, "*.parquet")))
-        if not files:
+        from ..engine.manifest import _local_dir
+
+        # listdir, not glob, by manifest._exists' rule: a file: URI or a
+        # path with glob metacharacters still lists its files
+        local = _local_dir(self.blocks_path)
+        names = sorted(n for n in os.listdir(local) if n.endswith(".parquet")
+                       and not n.startswith(("_", "."))) if local else []
+        if not names:
             raise FileNotFoundError(f"no blocks at {self.blocks_path}")
-        return [InputPartition(f) for f in files]
+        return [InputPartition(os.path.join(local, n)) for n in names]
 
     def read(self, partition):
         from ..engine.memutil import trimmed

@@ -489,6 +489,34 @@ def test_decimal_sum_exact_past_int64(spark, tmp_path):
         == 18 * 10**18
 
 
+def test_grouped_decimal_sum_exact_mixed_signs_near_int64(spark, tmp_path):
+    """decimal(18,0) words near +-9e17 sum exactly per group: one group
+    past +2^63, one below -2^63, one alternating in sign; checked
+    against exact Python sums, and the scalar SUM against their total."""
+    from decimal import Decimal
+
+    from boltspark.engine.agg import grouped_sum
+
+    def value(i):
+        mag = 9 * 10**17 - 7 * i
+        return (mag if i % 3 == 0 else -mag if i % 3 == 2
+                else mag * (-1) ** (i // 3))
+
+    rows = [(i, i % 3, Decimal(value(i))) for i in range(90)]
+    df = spark.createDataFrame(rows, "k long, g long, v decimal(18,0)")
+    d = str(tmp_path)
+    encode_table(df, f"{d}/b", f"{d}/m", key_cols=("k",), n_parts=2,
+                 resume=False)
+    want = {g: sum(value(i) for i in range(90) if i % 3 == g)
+            for g in range(3)}
+    assert want[0] > 2**63 and want[2] < -(2**63)
+    got = {r["value"]: r["sum_value"] for r in
+           grouped_sum(spark, f"{d}/b", f"{d}/m", "g", "v").collect()}
+    assert got == {g: Decimal(s) for g, s in want.items()}
+    total = column_sum(spark, f"{d}/b", f"{d}/m", "v").collect()[0]
+    assert total["sum_value"] == sum(want.values())
+
+
 def test_grouped_sum_decimal_exact(spark, tmp_path):
     """GROUP BY flag -> SUM(decimal): exact unscaled-domain arithmetic
     for both int64 low-word (p<=18) and d128 word-pair storage, result

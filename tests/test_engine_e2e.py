@@ -945,6 +945,44 @@ def test_gc_orphans_removes_only_uncommitted_runs(spark, tmp_path):
     assert decode_table(spark, f"{d}/b", f"{d}/m").count() == n
 
 
+def test_gc_orphans_deletes_nothing_when_a_path_is_not_local(
+        spark, tmp_path, monkeypatch):
+    """gc_orphans(delete=True) resolves every orphan file to a local path
+    before it deletes any: one path that is not provably local raises
+    with every file still in place."""
+    import os
+
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from boltspark.engine import encode_table
+    from boltspark.engine import manifest as manifestmod
+    from boltspark.engine.compact import gc_orphans
+
+    d = str(tmp_path)
+    encode_table(spark.range(400).select(F.col("id").alias("k")),
+                 f"{d}/b", f"{d}/m", key_cols=("k",), n_parts=4,
+                 resume=False, run_id="good")
+    spark.read.parquet(f"{d}/b").withColumn("run_id", F.lit("deadrun")) \
+        .write.mode("append").option("compression", "none").parquet(f"{d}/b")
+    before = sorted(os.listdir(f"{d}/b"))
+    assert gc_orphans(spark, f"{d}/b", f"{d}/m",
+                      min_age_seconds=0)["orphan_files"] >= 2
+    real, seen = manifestmod._local_path, []
+
+    def second_file_not_local(path, spark=None):
+        if path.endswith(".parquet"):
+            seen.append(path)
+            if len(seen) == 2:
+                return None
+        return real(path, spark)
+
+    monkeypatch.setattr(manifestmod, "_local_path", second_file_not_local)
+    with _pytest.raises(ValueError, match="nothing was deleted"):
+        gc_orphans(spark, f"{d}/b", f"{d}/m", delete=True, min_age_seconds=0)
+    assert sorted(os.listdir(f"{d}/b")) == before
+
+
 def test_struct_containing_map_roundtrip(spark, tmp_path):
     """Nested combo: struct<a:int, m:map<string,long>> flattens through
     both the struct and map legs of engine/nest.py."""

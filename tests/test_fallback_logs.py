@@ -1,67 +1,69 @@
 """Fallbacks are logged, not swallowed: each fallback of the encode
 sizing (input listing, sample read, footer count) and the encoder's
-stale codec choice emits exactly one log record when it fires."""
+stale codec choice emits exactly one log record when it fires, and a
+sizing fallback gives the same answer through Spark."""
 
 from __future__ import annotations
 
 import logging
 
 import pyarrow as pa
+import pytest
 from py4j.protocol import Py4JError
+from pyspark.sql import functions as F
 
 from boltspark.engine import partitioner
 from boltspark.engine.encode import _make_encoder
-
-
-class _Source:
-    """The DataFrame surface ``bytes_below`` touches."""
-
-    def __init__(self, files=None):
-        self.files = files
-
-    def inputFiles(self):
-        if self.files is None:
-            raise Py4JError("listing failed")
-        return self.files
-
-    def limit(self, n):
-        return self
-
-    def count(self):
-        return 0
-
-
-HEAD = [("x" * 10,)] * 4
 
 
 def _records(caplog, logger):
     return [r.getMessage() for r in caplog.records if r.name == logger]
 
 
-def test_unlistable_input_logs_once(caplog):
-    with caplog.at_level(logging.INFO, logger=partitioner.log.name):
-        assert partitioner.bytes_below(_Source(), ["s"], 100, HEAD, 4)
-    msgs = _records(caplog, partitioner.log.name)
-    assert len(msgs) == 1 and "not listable" in msgs[0], msgs
-
-
-def test_unreadable_input_file_logs_once_per_fallback(caplog, tmp_path):
-    bad = tmp_path / "part-0.parquet"
-    bad.write_bytes(b"not parquet")
-    with caplog.at_level(logging.INFO, logger=partitioner.log.name):
-        assert partitioner._per_row_bytes_from_files(
-            [str(bad)], ["s"], 64) is None
-    msgs = _records(caplog, partitioner.log.name)
-    assert len(msgs) == 1 and "sample unreadable" in msgs[0], msgs
+def _sized_logging(caplog, df):
     caplog.clear()
-    # bytes_below hits both: the sample read, then the footer count
     with caplog.at_level(logging.INFO, logger=partitioner.log.name):
-        assert partitioner.bytes_below(_Source([str(bad)]), ["s"], 100,
-                                       HEAD, 4)
-    msgs = _records(caplog, partitioner.log.name)
-    assert len(msgs) == 2, msgs
-    assert sum("sample unreadable" in m for m in msgs) == 1
-    assert sum("footer unreadable" in m for m in msgs) == 1
+        sized = partitioner.input_size(df, ["s"])[0]
+    return sized, _records(caplog, partitioner.log.name)
+
+
+@pytest.fixture
+def files(spark, tmp_path):
+    """A plain local parquet scan of 3 files of 100 short strings."""
+    spark.range(300, numPartitions=3).select(
+        F.concat(F.lit("row-"), F.col("id").cast("string")).alias("s")
+    ).write.parquet(str(tmp_path / "src"))
+    return spark.read.parquet(str(tmp_path / "src"))
+
+
+def test_unlistable_input_logs_once(caplog, monkeypatch, files):
+    exact, msgs = _sized_logging(caplog, files)
+    assert msgs == []
+
+    def unlistable(self):
+        raise Py4JError("listing failed")
+
+    monkeypatch.setattr(type(files), "inputFiles", unlistable)
+    sized, msgs = _sized_logging(caplog, files)
+    assert len(msgs) == 1 and "not listable" in msgs[0], msgs
+    assert sized == exact
+
+
+@pytest.mark.parametrize("reader", ["ParquetFile", "read_metadata"])
+def test_unreadable_slice_or_footer_logs_once(caplog, monkeypatch, files,
+                                              reader):
+    """An input file pyarrow cannot read (its slice, or its footer for
+    the row count) gives one warning, the Spark path and the same
+    answer."""
+    exact, _ = _sized_logging(caplog, files)
+
+    def unreadable(*a, **kw):
+        raise OSError("unreadable")
+
+    monkeypatch.setattr(partitioner.pq, reader, unreadable)
+    sized, msgs = _sized_logging(caplog, files)
+    assert len(msgs) == 1 and "footer or slice unreadable" in msgs[0], msgs
+    assert sized == exact
 
 
 def test_stale_codec_choice_logs_once(caplog):

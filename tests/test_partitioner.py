@@ -117,33 +117,89 @@ def test_shuffle_preimages_bounded_when_a_residue_is_never_hit(
     assert len(records) == 1 and records[0].levelno == logging.WARNING
 
 
-def test_bytes_below_counts_footers_then_stops_at_the_limit(spark, tmp_path):
-    """The size gate of encodes without a partition-sizing estimate:
-    over a local parquet scan it sizes the input from file footers on
-    the driver (no Spark job); over any other plan a ``limit`` count
-    bounded at the limit gives the same answers.  A head shorter than
-    its cap is the whole input."""
+def _jobs(spark, fn):
+    """(result of fn, number of Spark jobs fn ran)."""
     import uuid
 
-    from boltspark.engine.partitioner import bytes_below
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "sizing job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_input_size_counts_footers_then_stops_at_the_limit(spark, tmp_path):
+    """A plain local parquet scan sizes from its files on the driver (no
+    Spark job): the slices of 3 files of 1,000 rows are the whole input,
+    so the estimate is exact, and a limit stops the footer count once
+    the rows reach it.  Any other plan sizes through Spark: a sample
+    shorter than requested is the whole input (exact UTF-8 bytes, no
+    count), and a longer input's count stops at the limit."""
+    from boltspark.engine.partitioner import SAMPLE_ROWS, input_size
 
     mem = spark.range(3000, numPartitions=3).select(
         F.concat(F.lit("é-row-"), F.col("id").cast("string")).alias("s"))
     mem.write.parquet(str(tmp_path / "src"))
     files = spark.read.parquet(str(tmp_path / "src"))
-    sc = spark.sparkContext
-    for df, jobs in ((files, 0), (mem, None)):
-        head = df.limit(1024).collect()
-        group = f"gate-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "bytes_below")
-        try:
-            assert bytes_below(df, ["s"], 1 << 30, head, 1024)
-            assert not bytes_below(df, ["s"], 20_000, head, 1024)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        if jobs is not None:
-            assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
-    head = mem.limit(5000).collect()  # the whole input: 3000 rows
-    utf8 = sum(len(r["s"].encode("utf-8")) for r in head)
-    assert bytes_below(mem, ["s"], utf8 + 1, head, 5000)
-    assert not bytes_below(mem, ["s"], utf8, head, 5000)
+    utf8 = sum(len(r["s"].encode("utf-8")) for r in mem.collect())
+    for df, jobs in ((files, 0), (mem, 1)):
+        (sized, sample), n_jobs = _jobs(spark, lambda: input_size(df, ["s"]))
+        assert sized == {"s": utf8} and sample.num_rows == 3000
+        assert n_jobs == jobs
+    # footers stop after the file that reaches the limit: 2 of 3
+    (sized, _), n_jobs = _jobs(spark,
+                               lambda: input_size(files, ["s"], 20_000))
+    assert n_jobs == 0 and sized["s"] == utf8 * 2 // 3
+    big = spark.range(3 * SAMPLE_ROWS).select(
+        F.lpad(F.col("id").cast("string"), 10, "0").alias("s"))
+    assert input_size(big, ["s"])[0] == {"s": 30 * SAMPLE_ROWS}
+    # a limit past the sample: the Spark count stops at 50_001 bytes
+    assert input_size(big, ["s"], 50_000)[0] == {"s": 50_010}
+
+
+def _fixed_rows(spark, n):
+    """k: int64 (8 bytes a row), s: 20-byte strings."""
+    return spark.range(n, numPartitions=4).select(
+        F.col("id").alias("k"),
+        F.lpad(F.col("id").cast("string"), 20, "0").alias("s"))
+
+
+@pytest.mark.parametrize("n_parts", [None, 4])
+def test_local_parquet_encode_takes_three_jobs(spark, tmp_path, n_parts):
+    """A plain local parquet encode sizes its input on the driver: the
+    write (shuffle stage + result) and the commit are its only jobs,
+    with n_parts sized from the input (12,000 rows x 28 bytes over a
+    25 KB target) or given."""
+    from boltspark.engine import decode_table, encode_table
+
+    _fixed_rows(spark, 12_000).write.parquet(str(tmp_path / "src"))
+    df = spark.read.parquet(str(tmp_path / "src"))
+    d = str(tmp_path)
+    res, n_jobs = _jobs(spark, lambda: encode_table(
+        df, f"{d}/b", f"{d}/m", key_cols=("k",), resume=False,
+        n_parts=n_parts, target_partition_bytes=25_000))
+    assert n_jobs <= 3
+    assert res.n_partitions == (n_parts or 14)
+    assert decode_table(spark, f"{d}/b", f"{d}/m").count() == 12_000
+
+
+def test_non_plain_inputs_size_through_spark(spark, tmp_path):
+    """A filtered parquet frame (its footers count rows the filter
+    drops) and a ``spark.range`` frame (no files) size through Spark:
+    their n_parts is the count-based figure, 6,000 rows x 28 bytes over
+    a 25 KB target, where the footers would give 14."""
+    from boltspark.engine import encode_table
+
+    _fixed_rows(spark, 12_000).write.parquet(str(tmp_path / "src"))
+    files = spark.read.parquet(str(tmp_path / "src"))
+    d = str(tmp_path)
+    for i, df in enumerate((files.filter(F.col("k") % 2 == 0),
+                            _fixed_rows(spark, 6_000))):
+        assert df.count() == 6_000
+        res, n_jobs = _jobs(spark, lambda: encode_table(
+            df, f"{d}/b{i}", f"{d}/m{i}", key_cols=("k",), resume=False,
+            target_partition_bytes=25_000))
+        assert res.n_partitions == 7 and n_jobs > 3

@@ -161,6 +161,30 @@ def test_datasource_load_registers_on_every_call(spark, tmp_path,
         ds.load(spark, f"{d}/b", f"{d}/m")
 
 
+def test_datasource_lists_blocks_at_uri_and_glob_paths(spark, tmp_path):
+    """The reader lists a blocks directory as files, not as a glob: a
+    path holding glob metacharacters and the same path as a ``file:``
+    URI both find every blocks file and read every row."""
+    import os
+    import shutil
+
+    from boltspark.sources import datasource as ds
+
+    plain = tmp_path / "plain"
+    encode_table(spark.range(60).select(F.col("id").alias("k")),
+                 str(plain / "b"), str(plain / "m"), key_cols=("k",),
+                 n_parts=2, resume=False)
+    weird = tmp_path / "t[1]"
+    shutil.move(str(plain), str(weird))
+    b, m = str(weird / "b"), str(weird / "m")
+    files = sorted(os.path.join(b, n) for n in os.listdir(b)
+                   if n.endswith(".parquet"))
+    for path in (b, "file://" + b):
+        parts = ds.BoltReader(path, m, None).partitions()
+        assert [p.value for p in parts] == files
+        assert ds.load(spark, path, m).count() == 60
+
+
 def test_boltspark_datasource_schema_evolution(spark, tmp_path):
     from pyspark.sql import functions as F
 
