@@ -44,6 +44,7 @@ from ..kernels import block as blockmod
 from ..kernels import bitpack, dictionary, lists, strings
 from . import manifest as manifestmod
 from . import nest
+from .manifest import _in_sql, _sql_lit, _sql_name
 from .memutil import trimmed
 from .filters import ALL, NONE, Predicate, pred_columns, replace_predicate
 from .schema import PART_ID, read_blocks as schema_read_blocks
@@ -351,7 +352,8 @@ def _blocks_proj(spark, blocks_path: str, manifest_path: str,
     ``part_ids`` (point queries; prunes row groups on part_id min/max
     stats), ``run_ids`` (incremental reads; pushed string filter) and
     ``seq_range`` (inclusive seq interval; tasks write groups in seq
-    order) are scan-level filters.  JVM zone prefilters then drop
+    order) are scan-level filters.  The ANDed JVM zone prefilters
+    (``Predicate.jvm_zone_keep``) then drop
     groups that provably cannot match before their block bytes cross
     the JVM->Python boundary (Python re-checks zones for the rest;
     null stats pass), and the manifest's valid (part_id, run_id) pairs
@@ -359,9 +361,13 @@ def _blocks_proj(spark, blocks_path: str, manifest_path: str,
     pairs are a cross product of runs and parts, a filter fused into
     the scan stage and pushed to parquet, so a decode is one Spark job;
     otherwise a broadcast join — no shuffle of the block data either
-    way."""
-    from pyspark.sql import functions as F
+    way.
 
+    The plan is SQL text — the scan filters, one ``selectExpr`` and the
+    prefilters — whose literals come from ``manifest._sql_lit`` and
+    names from ``manifest._sql_name``: a handful of Py4J calls however
+    many columns and predicates, where Column expressions cost ~10 per
+    node."""
     if meta is None:
         meta = manifestmod.table_meta(spark, manifest_path)
     pcols = pred_columns(predicates)
@@ -370,34 +376,34 @@ def _blocks_proj(spark, blocks_path: str, manifest_path: str,
         if c not in known:
             raise KeyError(f"unknown column {c}; encoded: {meta['columns']}")
 
-    def leaf(c, name):
-        return F.col("cols").getField(c).getField(name)
+    def leaf(c, name, alias):
+        return f"{_sql_name('cols', c, name)} AS {_sql_name(alias + c)}"
 
-    proj = [F.col(PART_ID), F.col("run_id"), F.col("seq"), F.col("n_rows")]
-    proj += [leaf(c, "block").alias(f"__blk_{c}") for c in columns]
-    proj += [leaf(c, "block").alias(f"__pblk_{c}")
-             for c in pcols if c not in columns]
-    proj += [leaf(c, "stats").alias(f"__st_{c}") for c in pcols]
+    proj = [_sql_name(c) for c in (PART_ID, "run_id", "seq", "n_rows")]
+    proj += [leaf(c, "block", "__blk_") for c in columns]
+    proj += [leaf(c, "block", "__pblk_") for c in pcols if c not in columns]
+    proj += [leaf(c, "stats", "__st_") for c in pcols]
+    scan = []
+    if part_ids is not None:
+        scan.append(_in_sql(PART_ID, [int(p) for p in part_ids]))
+    if run_ids is not None:
+        scan.append(_in_sql("run_id", run_ids))
+    if seq_range is not None:
+        seq, (lo, hi) = _sql_name("seq"), map(_sql_lit, map(int, seq_range))
+        scan.append(f"{seq} >= {lo} AND {seq} <= {hi}")
+    keeps = [k for k in (p.jvm_zone_keep(lambda c: _sql_name(f"__st_{c}"))
+                         for p in predicates) if k is not None]
     # schema from the manifest's merged column list: groups from runs
     # that predate a column read its struct leaves as null (schema
     # evolution), without a per-call footer-merge job
     blocks = schema_read_blocks(spark, blocks_path, meta["columns"])
-    valid = manifestmod.valid_pairs_df(spark, manifest_path,
-                                       part_ids=part_ids, run_ids=run_ids)
-    if part_ids is not None:
-        blocks = blocks.filter(
-            manifestmod._isin(PART_ID, [int(p) for p in part_ids]))
-    if run_ids is not None:
-        blocks = blocks.filter(manifestmod._isin("run_id", run_ids))
-    if seq_range is not None:
-        blocks = blocks.filter((F.col("seq") >= int(seq_range[0]))
-                               & (F.col("seq") <= int(seq_range[1])))
-    blocks = blocks.select(*proj)
-    for p in predicates:
-        keep = p.jvm_zone_keep_cols(lambda c: F.col(f"__st_{c}"))
-        if keep is not None:
-            blocks = blocks.filter(keep)
-    return manifestmod.join_valid(blocks, valid)
+    if scan:
+        blocks = blocks.filter(" AND ".join(scan))
+    blocks = blocks.selectExpr(*proj)
+    if keeps:
+        blocks = blocks.filter(" AND ".join(f"({k})" for k in keeps))
+    return manifestmod.join_valid(blocks, manifestmod.valid_pairs_df(
+        spark, manifest_path, part_ids=part_ids, run_ids=run_ids))
 
 
 def _part_totals(pair_rows) -> list[tuple[int, int]] | None:
@@ -663,14 +669,10 @@ def decode_table(
         #      (seq/n_rows leaves, part_id pruned).
         # With run_ids the offsets are RUN-RELATIVE (positions among
         # the named runs' rows), matching the scan filter below.
-        valid0, pair_rows = manifestmod.valid_pairs(
-            spark, manifest_path, part_ids=part_ids, run_ids=run_ids)
-        gmeta = (schema_read_blocks(spark, blocks_path, meta["columns"])
-                 .select(PART_ID, "run_id", "seq", "n_rows"))
-        if part_ids is not None:
-            gmeta = gmeta.filter(
-                manifestmod._isin(PART_ID, [int(p) for p in part_ids]))
-        gmeta = manifestmod.join_valid(gmeta, valid0)
+        pair_rows = manifestmod.valid_pairs(
+            spark, manifest_path, part_ids=part_ids, run_ids=run_ids)[1]
+        gmeta = _blocks_proj(spark, blocks_path, manifest_path, [], [],
+                             run_ids=run_ids, meta=meta, part_ids=part_ids)
         per_part = _part_totals(pair_rows)
         if per_part is None:
             per_part = [(int(r[PART_ID]), int(r["p_rows"])) for r in (
@@ -685,8 +687,7 @@ def decode_table(
         offsets = {}
         seqs_hit = []
         if overlap:
-            groups = gmeta.filter(
-                manifestmod._isin(PART_ID, overlap)).collect()
+            groups = gmeta.filter(_in_sql(PART_ID, overlap)).collect()
             # append order across runs: manifest commit order (run_seq),
             # falling back to lexicographic run_id for pre-round-4 runs
             order = manifestmod.run_order(spark, manifest_path)

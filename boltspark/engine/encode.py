@@ -516,6 +516,14 @@ def encode_table(
     # JVM-side) and reassemble at decode — engine/nest.py; the manifest
     # records BOTH the flat storage schema and the logical schema
     logical_schema = df.select(*columns).schema
+    # Spark's parquet writer expands ${...} in field names through the
+    # Hadoop conf, and its SQL parser does inside backticks: such a name
+    # would store under another one and read back as NULLs
+    subst = sorted({leaf.replace(nest.SEP, ".") for f in logical_schema.fields
+                    for leaf in nest.leaf_names(f.name, f.dataType, f.nullable)
+                    if "${" in leaf} | {k for k in key_cols if "${" in k})
+    if subst:
+        raise ValueError(f"column names may not contain '${{': {subst}")
     storage_schema_json = logical_schema.json()
     logical_schema_json = None
     df_sel = df.select(*dict.fromkeys(list(key_cols) + columns))

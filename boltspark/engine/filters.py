@@ -42,6 +42,14 @@ rounded (a double column meets the rounded literal in numpy and
 Catalyst), and only a verdict both agree on stands.  JVM legs compare
 against the rounded double and stay non-strict (``vmax >= lo``): a
 strict leg drops a live group once rounding moves the bound up.
+
+``jvm_zone_keep`` is SQL text, as is every blocks read plan
+(``decode._blocks_proj``): the text holds only literals from
+``manifest._sql_lit`` (bytes as ``X'..'``, doubles cast from their
+round-trip repr) and backtick-quoted names from ``manifest._sql_name``,
+so one Py4J call parses it whatever its size.  Column forms
+(``_spark_value``/``to_spark_condition``) serve only as the Catalyst
+oracle the tests compare against.
 """
 
 from __future__ import annotations
@@ -59,6 +67,7 @@ from pyspark.sql import functions as F
 
 from ..kernels import bloom
 from ..kernels.strings import StringColumn, to_arrow
+from .manifest import _sql_lit, _sql_name
 
 ALL = "all"
 NONE = "none"
@@ -169,11 +178,12 @@ def _jvm_num_leg(st, lo, lo_inc, hi, hi_inc):
     """Keep unless the numeric zone provably misses the interval —
     non-strict against the rounded double literal whatever the ends."""
     legs = []
-    for b, field, op in ((lo, "vmax", operator.ge), (hi, "vmin", operator.le)):
+    for b, field, op in ((lo, "vmax", ">="), (hi, "vmin", "<=")):
         if b is not None:
-            s = st.getField(field)
-            legs.append(s.isNull() | F.isnan(s) | op(s, F.lit(float(b))))
-    return functools.reduce(operator.and_, legs)
+            s = f"{st}.{_sql_name(field)}"
+            legs.append(f"({s} IS NULL OR isnan({s}) OR "
+                        f"{s} {op} {_sql_lit(float(b))})")
+    return " AND ".join(legs)
 
 
 def _jvm_bytes_leg(st, lo, lo_inc, hi, hi_inc):
@@ -182,15 +192,15 @@ def _jvm_bytes_leg(st, lo, lo_inc, hi, hi_inc):
     v > p AND NOT startswith(v, p)."""
     legs = []
     if lo is not None:
-        v, pmax = F.lit(lo), st.getField("vmax_pfx")
-        exact = F.coalesce(st.getField("vmax_exact"), F.lit(False))
-        below = F.when(exact, (v > pmax) if lo_inc else (v >= pmax)) \
-            .otherwise((v > pmax) & ~v.startswith(pmax))
-        legs.append(pmax.isNull() | ~below)
+        v, pmax = _sql_lit(lo), f"{st}.{_sql_name('vmax_pfx')}"
+        exact = f"coalesce({st}.{_sql_name('vmax_exact')}, false)"
+        legs.append(f"({pmax} IS NULL OR NOT CASE WHEN {exact} THEN {v} "
+                    f"{'>' if lo_inc else '>='} {pmax} ELSE {v} > {pmax} "
+                    f"AND NOT startswith({v}, {pmax}) END)")
     if hi is not None:
-        v, pmin = F.lit(hi), st.getField("vmin_pfx")
-        legs.append(pmin.isNull() | ((pmin <= v) if hi_inc else (pmin < v)))
-    return functools.reduce(operator.and_, legs)
+        v, pmin = _sql_lit(hi), f"{st}.{_sql_name('vmin_pfx')}"
+        legs.append(f"({pmin} IS NULL OR {pmin} {'<=' if hi_inc else '<'} {v})")
+    return " AND ".join(legs)
 
 
 class Predicate:
@@ -269,20 +279,21 @@ class Predicate:
             umask = self.check(uniques)
         return self._scatter(umask[codes], validity)
 
-    def jvm_zone_keep(self, st):
-        """JVM-side zone prefilter: a Column over the typed stats struct
-        ``st`` that is False only for groups this predicate can PROVABLY
-        never match (null stats pass, Python re-checks everything that
-        remains).  None = no JVM prefilter."""
+    def jvm_zone_keep(self, st_for):
+        """JVM-side zone prefilter: SQL text over the typed stats struct
+        ``st_for(column)`` (SQL text naming it) that is false only for
+        groups this predicate can PROVABLY never match (null stats
+        pass, Python re-checks everything that remains).  None = no JVM
+        prefilter."""
         vs = self.value_set()
         if vs is None or len(vs[1]) > _JVM_MAX_LEGS or any(
                 lo is None and hi is None for lo, _, hi, _ in vs[1]):
             return None
+        st = st_for(self.column)
         leg = _jvm_bytes_leg if vs[0] == "bytes" else _jvm_num_leg
-        legs = [leg(st, *iv) for iv in vs[1]]
-        keep = functools.reduce(operator.or_, legs) if legs else F.lit(False)
+        keep = " OR ".join(f"({leg(st, *iv)})" for iv in vs[1]) or "false"
         if self.null_allowed:
-            keep = keep | F.coalesce(st.getField("has_null"), F.lit(True))
+            keep = f"({keep}) OR coalesce({st}.{_sql_name('has_null')}, true)"
         return keep
 
     def _spark_value(self, c):
@@ -304,11 +315,6 @@ class Predicate:
         """Rebuild with ``fn`` applied to every column-bearing leaf —
         used to resolve dotted struct paths to flat leaf names."""
         return fn(self)
-
-    def jvm_zone_keep_cols(self, st_for):
-        """``jvm_zone_keep`` generalized to composites: ``st_for(col)``
-        yields the typed stats struct Column for any leaf column."""
-        return self.jvm_zone_keep(st_for(self.column))
 
     def zone_verdict_cols(self, st_for) -> str:
         """``check_zone`` generalized to composites: ``st_for(col)``
@@ -753,14 +759,14 @@ class _CompositePredicate(Predicate):
                 out = SOME
         return out
 
-    def jvm_zone_keep_cols(self, st_for):
-        keeps = [ch.jvm_zone_keep_cols(st_for) for ch in self.children]
+    def jvm_zone_keep(self, st_for):
+        keeps = [ch.jvm_zone_keep(st_for) for ch in self.children]
         if self.combine == "or":
             if any(k is None for k in keeps):
                 return None  # one child can never prune -> the union can't
-            return functools.reduce(operator.or_, keeps)
+            return " OR ".join(f"({k})" for k in keeps)
         keeps = [k for k in keeps if k is not None]
-        return functools.reduce(operator.and_, keeps) if keeps else None
+        return " AND ".join(f"({k})" for k in keeps) or None
 
     def to_spark_condition(self):
         op = operator.or_ if self.combine == "or" else operator.and_

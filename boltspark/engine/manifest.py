@@ -35,6 +35,8 @@ from __future__ import annotations
 
 import json
 import logging
+import math
+import numbers
 import re
 from collections import Counter
 from typing import Callable
@@ -117,12 +119,11 @@ def completed_partitions(spark: SparkSession, manifest_path: str,
     entries at 100 TB) never rides through the driver."""
     if not _exists(spark, manifest_path):
         return 0, lambda df: df
-    pairs, rows = valid_pairs(spark, manifest_path)
+    pairs, rows = _pairs(spark, manifest_path, None, None)
     if rows is not None:
         done = sorted(pc.unique(rows.column(PART_ID)).to_pylist())
         return len(done), lambda df: (
-            df.filter(F.expr(f"NOT {_in_sql(part_col, done)}")) if done
-            else df)
+            df.filter(f"NOT {_in_sql(part_col, done)}") if done else df)
     done_df = pairs.select(F.col(PART_ID).alias(part_col)).distinct()
     return done_df.count(), lambda df: df.join(
         F.broadcast(done_df), part_col, "left_anti")
@@ -470,30 +471,45 @@ _PLAIN = re.compile(r"[\w.:-]*", re.ASCII)
 
 
 def _sql_lit(v) -> str:
-    """SQL text of an int or str literal that no quoting or escape rule
-    of the parser can alter: a string with other characters than
-    ``[A-Za-z0-9_.:-]`` travels as its UTF-8 bytes in hex."""
-    if isinstance(v, int):
-        return f"{v}L"
-    if _PLAIN.fullmatch(v):
-        return f"'{v}'"
-    return f"CAST(X'{v.encode().hex()}' AS STRING)"
+    """The engine's one SQL literal: the text of an int, float, str or
+    bytes value that parses back to exactly ``v`` and that no quoting,
+    escape or ``${}`` substitution rule of the parser can alter.  Bytes
+    travel as ``X'<hex>'``, a str with other characters than
+    ``[A-Za-z0-9_.:-]`` as its UTF-8 bytes cast back to a string.  An
+    int types as ``F.lit`` types it (INT within 32 bits, else BIGINT);
+    a float is a double cast from its round-trip repr, NaN and the
+    infinities spelled out."""
+    if isinstance(v, bytes):
+        return f"X'{v.hex()}'"
+    if isinstance(v, str):
+        return (f"'{v}'" if _PLAIN.fullmatch(v)
+                else f"CAST({_sql_lit(v.encode())} AS STRING)")
+    if isinstance(v, numbers.Integral):
+        v = int(v)
+        return str(v) if -(1 << 31) <= v < (1 << 31) else f"{v}L"
+    v = float(v)
+    text = ("NaN" if v != v else repr(v) if abs(v) != math.inf
+            else "Infinity" if v > 0 else "-Infinity")
+    return f"CAST('{text}' AS DOUBLE)"
+
+
+def _sql_name(*parts: str) -> str:
+    """The engine's one SQL identifier: a column (``parts`` = its path
+    through struct fields) backtick-quoted, a backtick inside doubled.
+    ``encode_table`` refuses names holding ``${``, which the parser
+    would substitute even inside backticks."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
 
 
 def _in_sql(col: str, values) -> str:
-    """``col IN (values)`` as SQL text, so ``F.expr`` builds it in one
-    Py4J call; ``Column.isin`` makes ~3 per literal (4,096 literals:
-    2.2 s to build on a 4-vCPU host, against 7 ms to parse the text).
-    No values keep no row."""
+    """``col IN (values)`` as SQL text, so one Py4J call builds it;
+    ``Column.isin`` makes ~3 per literal (4,096 literals: 2.2 s to build
+    on a 4-vCPU host, against 7 ms to parse the text).  No values keep
+    no row."""
     values = list(values)
     if not values:
         return "false"
-    return f"`{col}` IN ({', '.join(map(_sql_lit, values))})"
-
-
-def _isin(col: str, values) -> Column:
-    """``_in_sql`` as a filter Column, built in one ``F.expr`` call."""
-    return F.expr(_in_sql(col, values))
+    return f"{_sql_name(col)} IN ({', '.join(map(_sql_lit, values))})"
 
 
 def _pairs_relation(spark: SparkSession, pairs) -> DataFrame:
@@ -508,11 +524,11 @@ def _pairs_relation(spark: SparkSession, pairs) -> DataFrame:
                      + where)
 
 
-def _local_pairs(spark: SparkSession, rows: pa.Table) -> Column | DataFrame:
+def _local_pairs(spark: SparkSession, rows: pa.Table) -> str | DataFrame:
     """The driver-read pairs as ``join_valid`` applies them.  When they
     are every (part, run) of their runs and parts — one run, or runs
-    that all wrote the same partitions: the usual table — a filter
-    ``run_id IN (runs) AND part_id IN (parts)``, which Catalyst fuses
+    that all wrote the same partitions: the usual table — the SQL text
+    ``run_id IN (runs) AND part_id IN (parts)``, a filter Catalyst fuses
     into the blocks scan's stage and pushes to parquet (no join, no
     job).  Any other set is an inline table joined as a broadcast: a
     filter's analysis grows with its literals, and an exact one per
@@ -520,12 +536,35 @@ def _local_pairs(spark: SparkSession, rows: pa.Table) -> Column | DataFrame:
     runs = sorted(pc.unique(rows.column("run_id")).to_pylist())
     parts = sorted(pc.unique(rows.column(PART_ID)).to_pylist())
     if not rows.num_rows:
-        return F.lit(False)
+        return "false"
     if len(runs) * len(parts) == rows.num_rows:
-        return F.expr(f"{_in_sql('run_id', runs)} AND "
-                      f"{_in_sql(PART_ID, parts)}")
+        return f"{_in_sql('run_id', runs)} AND {_in_sql(PART_ID, parts)}"
     return _pairs_relation(spark, zip(rows.column(PART_ID).to_pylist(),
                                       rows.column("run_id").to_pylist()))
+
+
+def _pairs(spark: SparkSession, manifest_path: str, part_ids,
+           run_ids) -> tuple[str | DataFrame, pa.Table | None]:
+    """``valid_pairs`` with a driver-side filter as SQL text."""
+    where = pads.field("column") != META_KEY
+    if part_ids is not None:
+        where &= pads.field(PART_ID).isin([int(p) for p in part_ids])
+    if run_ids is not None:
+        where &= pads.field("run_id").isin(list(run_ids))
+    t = _local_table(spark, manifest_path, [PART_ID, "run_id", "n_rows"],
+                     where)
+    if t is not None:
+        rows = t.group_by(_PAIR_KEYS).aggregate(
+            [("n_rows", "min"), ("n_rows", "max")])
+        if rows.num_rows <= _LOCAL_PAIRS_MAX:
+            return _local_pairs(spark, rows), rows
+    scope = [f"{_sql_name('column')} != {_sql_lit(META_KEY)}"]
+    if part_ids is not None:
+        scope.append(_in_sql(PART_ID, [int(p) for p in part_ids]))
+    if run_ids is not None:
+        scope.append(_in_sql("run_id", run_ids))
+    return (spark.read.parquet(manifest_path).filter(" AND ".join(scope))
+            .select(*_PAIR_KEYS).distinct(), None)
 
 
 def valid_pairs(spark: SparkSession, manifest_path: str, *,
@@ -544,45 +583,30 @@ def valid_pairs(spark: SparkSession, manifest_path: str, *,
     consistent manifest).  Otherwise — non-local or unreadable manifest,
     or more pairs — a Spark read + ``distinct`` and None.
     """
-    where = pads.field("column") != META_KEY
-    if part_ids is not None:
-        where &= pads.field(PART_ID).isin([int(p) for p in part_ids])
-    if run_ids is not None:
-        where &= pads.field("run_id").isin(list(run_ids))
-    t = _local_table(spark, manifest_path, [PART_ID, "run_id", "n_rows"],
-                     where)
-    if t is not None:
-        rows = t.group_by(_PAIR_KEYS).aggregate(
-            [("n_rows", "min"), ("n_rows", "max")])
-        if rows.num_rows <= _LOCAL_PAIRS_MAX:
-            return _local_pairs(spark, rows), rows
-    df = (spark.read.parquet(manifest_path)
-          .filter(F.col("column") != META_KEY))
-    if part_ids is not None:
-        df = df.filter(_isin(PART_ID, [int(p) for p in part_ids]))
-    if run_ids is not None:
-        df = df.filter(_isin("run_id", run_ids))
-    return df.select(*_PAIR_KEYS).distinct(), None
+    pairs, rows = _pairs(spark, manifest_path, part_ids, run_ids)
+    return (F.expr(pairs) if isinstance(pairs, str) else pairs), rows
 
 
 def valid_pairs_df(spark: SparkSession, manifest_path: str, *,
-                   part_ids=None, run_ids=None) -> Column | DataFrame:
-    """``valid_pairs``' pairs alone, for ``join_valid``; never collected."""
-    return valid_pairs(spark, manifest_path, part_ids=part_ids,
-                       run_ids=run_ids)[0]
+                   part_ids=None, run_ids=None) -> str | DataFrame:
+    """``valid_pairs``' pairs alone, for ``join_valid``, a filter as SQL
+    text; never collected."""
+    return _pairs(spark, manifest_path, part_ids, run_ids)[0]
 
 
-def join_valid(df: DataFrame, valid: Column | DataFrame, *,
+def join_valid(df: DataFrame, valid: str | Column | DataFrame, *,
                mark: str | None = None) -> DataFrame:
     """The rows of ``df`` whose (part_id, run_id) is in ``valid`` (a
-    ``valid_pairs_df`` value): a filter Column as a plain filter, which
-    Catalyst fuses into the scan and pushes to parquet, a pairs
-    DataFrame by a broadcast hash join — no shuffle of ``df`` either
-    way.  With ``mark``, every row is kept and the boolean column
-    ``mark`` added: true for a valid pair, null otherwise."""
-    if isinstance(valid, Column):
-        return (df.filter(valid) if mark is None
-                else df.withColumn(mark, F.when(valid, F.lit(True))))
+    ``valid_pairs`` value): a filter (SQL text or Column) as a plain
+    filter, which Catalyst fuses into the scan and pushes to parquet, a
+    pairs DataFrame by a broadcast hash join — no shuffle of ``df``
+    either way.  With ``mark``, every row is kept and the boolean
+    column ``mark`` added: true for a valid pair, null otherwise."""
+    if not isinstance(valid, DataFrame):
+        if mark is None:
+            return df.filter(valid)
+        cond = F.expr(valid) if isinstance(valid, str) else valid
+        return df.withColumn(mark, F.when(cond, F.lit(True)))
     if mark is None:
         return df.join(F.broadcast(valid), _PAIR_KEYS, "inner")
     return df.join(F.broadcast(valid.withColumn(mark, F.lit(True))),

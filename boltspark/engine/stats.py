@@ -20,7 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import manifest as manifestmod
+from .manifest import _in_sql, _sql_lit, _sql_name
 from .schema import PART_ID, read_blocks as schema_read_blocks
+
+_KEY = [_sql_name(c) for c in (PART_ID, "run_id", "seq")]  # group identity
 
 
 def validate_table(
@@ -95,13 +98,11 @@ def validate_table(
         # capped the sample at n_groups cells and systematically
         # under-sampled small tables.  Deterministic regardless of scan
         # partitioning: the rank is a pure function of cell identity.
+        cells = ", ".join(_sql_lit(i) for i in range(len(cols)))
         ranked = (
-            blocks.select(PART_ID, "run_id", "seq")
-            .withColumn("__ci", F.explode(F.array(
-                *[F.lit(i) for i in range(len(cols))])))
-            .withColumn("__rk", F.xxhash64(
-                F.col(PART_ID), F.col("run_id"), F.col("seq"),
-                F.col("__ci"), F.lit(int(crc_seed))))
+            blocks.selectExpr(*_KEY, f"explode(array({cells})) AS `__ci`")
+            .selectExpr(*_KEY, "`__ci`", f"xxhash64({', '.join(_KEY)}, "
+                        f"`__ci`, {_sql_lit(int(crc_seed))}) AS `__rk`")
             .orderBy("__rk")
             .limit(int(crc_sample))
             .collect()
@@ -112,13 +113,14 @@ def validate_table(
             # phase 2: one job reading ONLY the sampled groups' blocks
             # (part_id row-group stats prune most files)
             want_cols = sorted({c for *_, c in picks})
-            keyset = sorted({f"{p}|{r}|{s}" for p, r, s, _ in picks})
-            kexpr = F.concat_ws("|", F.col(PART_ID).cast("string"),
-                                F.col("run_id"), F.col("seq").cast("string"))
-            rows = (blocks.filter(kexpr.isin(keyset))
-                    .select(PART_ID, "run_id", "seq",
-                            *[F.col("cols").getField(c).getField("block")
-                              .alias(c) for c in want_cols])
+            keyset = sorted({tuple(k) for *k, _ in picks})
+            rows = (blocks.filter(" OR ".join(
+                        "(" + " AND ".join(f"{n} = {_sql_lit(v)}" for n, v
+                                           in zip(_KEY, k)) + ")"
+                        for k in keyset))
+                    .selectExpr(*_KEY, *[
+                        f"{_sql_name('cols', c, 'block')} AS {_sql_name(c)}"
+                        for c in want_cols])
                     .collect())
             by_key = {(r[PART_ID], r["run_id"], r["seq"]): r for r in rows}
             for p, rid, s, c in picks:
@@ -155,20 +157,14 @@ def column_minmax(
         raise KeyError(f"unknown columns {unknown}; encoded: {all_cols}")
     blocks = schema_read_blocks(spark, blocks_path, all_cols)
     valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    melt = F.explode(F.array(*[
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("cols").getField(c).getField("stats").getField("vmin").alias("vmin"),
-            F.col("cols").getField(c).getField("stats").getField("vmax").alias("vmax"),
-            F.col("cols").getField(c).getField("stats").getField("has_null")
-            .alias("has_null"),
-        )
-        for c in cols
-    ])).alias("m")
+    melt = ", ".join(
+        f"named_struct({_sql_lit('column')}, {_sql_lit(c)}, " + ", ".join(
+            f"{_sql_lit(f)}, {_sql_name('cols', c, 'stats', f)}"
+            for f in ("vmin", "vmax", "has_null")) + ")"
+        for c in cols)
     return (
         manifestmod.join_valid(blocks, valid)
-        .select(F.col("n_rows"), melt)
-        .select("n_rows", "m.*")
+        .selectExpr("`n_rows`", f"inline(array({melt}))")
         .groupBy("column")
         .agg(
             F.min("vmin").alias("vmin"),
@@ -211,17 +207,14 @@ def explain_scan(spark: SparkSession, blocks_path: str, manifest_path: str,
     # the decode it predicts accepts
     predicates = resolve_predicates(predicate, meta)
     cols = pred_columns(predicates)
-    proj = [F.col(PART_ID), F.col("run_id"), F.col("n_rows")]
-    for c in cols:
-        proj.append(F.col("cols").getField(c).getField("stats")
-                    .alias(f"__st_{c}"))
-    blocks = (schema_read_blocks(spark, blocks_path, meta["columns"])
-              .select(*proj))
+    blocks = schema_read_blocks(spark, blocks_path, meta["columns"])
     if run_ids is not None:
-        blocks = blocks.filter(manifestmod._isin("run_id", run_ids))
-    blocks = manifestmod.join_valid(
-        blocks, manifestmod.valid_pairs_df(spark, manifest_path,
-                                           run_ids=run_ids))
+        blocks = blocks.filter(_in_sql("run_id", run_ids))
+    blocks = manifestmod.join_valid(blocks.selectExpr(
+        *map(_sql_name, (PART_ID, "run_id", "n_rows")),
+        *[f"{_sql_name('cols', c, 'stats')} AS {_sql_name('__st_' + c)}"
+          for c in cols]),
+        manifestmod.valid_pairs_df(spark, manifest_path, run_ids=run_ids))
 
     out_schema = T.StructType([
         T.StructField("verdict", T.StringType(), False),

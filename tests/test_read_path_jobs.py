@@ -10,6 +10,7 @@ way."""
 
 from __future__ import annotations
 
+import gc
 import shutil
 import uuid
 
@@ -44,6 +45,28 @@ def _jobs(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _round_trips(spark, fn):
+    """(result of fn, number of Py4J commands fn sent), memory deletes
+    (``m\\n``) aside; ``gc`` is off while fn runs, so a collection
+    cannot add to the count."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, n = client.send_command, [0]
+
+    def counted(command, *args, **kw):
+        n[0] += not command.startswith("m\n")
+        return send(command, *args, **kw)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counted
+    try:
+        out = fn()
+    finally:
+        del client.send_command
+        gc.enable()
+    return out, n[0]
 
 
 @pytest.fixture(scope="module")
@@ -101,6 +124,39 @@ def test_local_manifest_job_counts(spark, table):
     _, n = _jobs(spark, lambda: decode_table(
         spark, b, m, columns=["k"], row_range=(95, 260)).collect())
     assert n <= 2, n
+
+
+def test_plan_build_round_trips(spark, table):
+    """Building a read plan is a handful of Py4J calls — SQL text for
+    the projection, scan filters and zone prefilters — that does not
+    grow with the number of predicates: <= 100 for a decode with one
+    predicate or a cascade of two, <= 200 for a filtered value_counts
+    (~650, ~1,110 and ~750 as Column expressions)."""
+    from boltspark.engine.filters import (BytesEqPredicate,
+                                          BytesPrefixPredicate,
+                                          RangePredicate)
+
+    b, m = table
+    eq = BytesEqPredicate(column="s", value=b"s3")
+    cascade = [eq, BytesPrefixPredicate(column="s", prefix=b"s"),
+               RangePredicate(column="v", lower=1, upper=5)]
+    counts = {}
+    for name, bound, call in (
+            ("one", 100, lambda: decode_table(spark, b, m, predicate=eq)),
+            ("two", 100, lambda: decode_table(spark, b, m,
+                                              predicate=cascade[:2])),
+            ("three", 100, lambda: decode_table(spark, b, m,
+                                                predicate=cascade)),
+            ("value_counts", 200,
+             lambda: agg.value_counts(spark, b, m, "s", predicate=eq))):
+        call()  # warm: first-use class loading is not the plan's cost
+        df, counts[name] = _round_trips(spark, call)
+        assert counts[name] <= bound, (name, counts[name])
+    assert counts["three"] - counts["one"] <= 6, counts
+    assert sorted(tuple(r) for r in decode_table(
+        spark, b, m, predicate=cascade).collect()) == sorted(
+        tuple(r) for r in decode_table(spark, b, m).collect()
+        if r["s"] == "s3" and 1 <= r["v"] <= 5)
 
 
 def _plan(df) -> str:

@@ -188,8 +188,8 @@ def test_jvm_zone_keep_covers_every_live_zone(spark, case):
     rows = [_stats(kind, cells) for cells in blocks]
     schema = T.StructType([T.StructField("st", _STATS_SPARK)])
     df = spark.createDataFrame([(s,) for s in rows], schema=schema)
-    keeps = [p.jvm_zone_keep(F.col("st")) for p in preds]
-    cols = [(F.lit(True) if k is None else k).alias(f"k{j}")
+    keeps = [p.jvm_zone_keep(lambda c: "st") for p in preds]
+    cols = [(F.lit(True) if k is None else F.expr(k)).alias(f"k{j}")
             for j, k in enumerate(keeps)]
     got = df.select(*cols).collect()
     for s, r, cells in zip(rows, got, blocks):
